@@ -11,10 +11,15 @@ does not ship it — SURVEY.md §7).
 Scale notes:
 - append/overwrite go straight through the DataFrame writer with
   optional ``partitionBy`` — no driver materialization ever.
-- merge without Delta is a staged rewrite: merged relation written to a
+- merge without Delta is a staged rewrite: the merged relation, one full
+  outer join of target and source on the merge keys (the target is
+  scanned once; both sides shuffle on the keys, so the rewrite spreads
+  over every core and AQE sizes the output files), is written to a
   staging dir, then promoted with a metadata-only rename. At 100 TB the
   right backend is Delta/Iceberg (file-level rewrite); the staged
   rewrite is the dependency-free fallback with identical semantics.
+  A target that holds data but cannot be read fails the merge; only an
+  absent or data-less target is bootstrapped by a plain write.
 - streaming uses the file-source + availableNow trigger (OSS equivalent
   of Auto Loader's incremental listing, framework.py:177-209) with a
   schema registry for evolution.
@@ -22,6 +27,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from python_tool_setup_spark.config import IngestionConfig, IngestionError
 from python_tool_setup_spark.operators.merge import merge_upsert
 from python_tool_setup_spark.sources.files import read_batch
-from python_tool_setup_spark.sources.fs import path_exists, replace_dir
+from python_tool_setup_spark.sources.fs import has_data_files, replace_dir
 
 try:  # optional Delta backend (not installed in the build env)
     from delta.tables import DeltaTable  # type: ignore
@@ -38,6 +44,8 @@ try:  # optional Delta backend (not installed in the build env)
 except Exception:  # noqa: BLE001
     DeltaTable = None
     _HAS_DELTA = False
+
+_log = logging.getLogger(__name__)
 
 
 class IngestionPipeline:
@@ -109,14 +117,15 @@ class IngestionPipeline:
 
     # ----------------------------------------------------------- merge --
     def _target_df(self) -> DataFrame | None:
+        """The merge target, or None when there is none yet: a missing
+        table, or a path that holds no data files. A target with data
+        that cannot be read raises — bootstrapping over it would
+        replace the table with the source batch."""
         cfg = self.cfg
         if cfg.target_path:
-            if not path_exists(self.spark, cfg.target_path):
+            if not has_data_files(self.spark, cfg.target_path):
                 return None
-            try:
-                return self.spark.read.format(cfg.target_format).load(cfg.target_path)
-            except Exception:  # noqa: BLE001 — empty/uninitialized dir
-                return None
+            return self.spark.read.format(cfg.target_format).load(cfg.target_path)
         if self.spark.catalog.tableExists(cfg.full_table_name):
             return self.spark.table(cfg.full_table_name)
         return None
@@ -134,19 +143,12 @@ class IngestionPipeline:
             self.write_initial(source)
             return
         # schema evolution: new source columns appear, old rows get nulls
-        for col in source.columns:
-            if col not in target.columns:
-                from pyspark.sql import functions as F
-
-                target = target.withColumn(
-                    col, F.lit(None).cast(source.schema[col].dataType)
-                )
-        source = source.select(*target.columns)
         merged = merge_upsert(
             target,
             source,
             keys=cfg.merge_keys,
             source_dedup_order=cfg.dedup_order,
+            evolve_schema=True,
         )
         self._staged_overwrite(merged)
 
@@ -286,4 +288,4 @@ class IngestionPipeline:
                 partition_by=self.cfg.partition_by,
             )
         except Exception as exc:  # noqa: BLE001
-            print(f"warning: post-write optimize failed: {exc}")
+            _log.warning("post-write optimize failed: %s", exc)

@@ -5,9 +5,8 @@ Parity target: the reference's Delta merge —
 AND-joined key-equality condition (reference ``framework.py:211-231``,
 ``:226-231``). Semantics reproduced here without requiring delta-spark:
 
-  result = (target rows with no source key match)       -- kept as-is
-         ∪ (matched target rows ⋈ source values)        -- update all
-         ∪ (source rows with no target key match)       -- insert
+  result = target FULL OUTER JOIN source USING (keys), each non-key
+           column the source value if the key matched, else the target's
 
 "update all" replaces every column of EACH matched target row with the
 source row — duplicate-key target rows each survive as one updated
@@ -17,10 +16,11 @@ Delta raises on multiple source rows matching one target row; we expose
 ``source_dedup_order`` to make the source unique per key first
 (deterministically), or raise like Delta when duplicates remain.
 
-Scale: one shuffle each side on the merge keys (anti-join + union);
-no full materialization of either side on the driver. Null-key source
-rows never match (SQL equality), so like Delta they fall through to the
-insert branch; null-key target rows are always kept.
+Scale: one full outer join scans the target once and shuffles both
+sides once on the merge keys, spreading the rewrite over every core
+whatever the target's file layout; AQE sizes the output partitions.
+Null keys never match (SQL equality), so like Delta null-key source
+rows are inserted and null-key target rows are kept.
 """
 
 from __future__ import annotations
@@ -70,37 +70,35 @@ def merge_upsert(
                 f"schema evolution requires the source to carry every "
                 f"target column; missing {missing}"
             )
-        for field in source.schema.fields:
-            if field.name not in target.columns:
-                target = target.withColumn(
-                    field.name, F.lit(None).cast(field.dataType)
-                )
-    source = source.select(*target.columns)  # align column order/schema
+        target = target.withColumns({
+            f.name: F.lit(None).cast(f.dataType)
+            for f in source.schema.fields if f.name not in target.columns
+        })
 
     if source_dedup_order is not None:
         source = dedup_by_keys(source, keys, source_dedup_order)
     elif check_duplicate_source_keys:
-        dup = (
-            source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup:
+        if source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count():
             raise MergeKeyError(
                 f"source has multiple rows per merge key {keys}; "
                 "pass source_dedup_order or pre-aggregate"
             )
 
-    # Null-safe NOT: plain anti-join already treats null keys as
-    # non-matching, matching SQL MERGE ON equality semantics.
-    untouched_target = target.join(source.select(*keys), on=keys, how="left_anti")
-    # "update all" rewrites EVERY matched target row with its source
-    # row — duplicate-key target rows each survive as one updated copy
-    # (Delta/SQL MERGE preserves target multiplicity; only duplicate
-    # SOURCE keys are an error, handled above)
-    updated = target.select(*keys).join(source, on=keys, how="inner").select(
-        *target.columns
+    # Source values ride under names with the marker's prefix, which no
+    # target column starts with, so nothing on the joined row collides.
+    marker = "__merge_src"
+    while any(c.lower().startswith(marker) for c in target.columns):
+        marker += "_"
+    vals = {c: f"{marker}{i}" for i, c in enumerate(target.columns) if c not in keys}
+    src = source.select(
+        *keys, *[F.col(c).alias(v) for c, v in vals.items()], F.lit(True).alias(marker)
     )
-    inserts = source.join(target.select(*keys), on=keys, how="left_anti")
-    return untouched_target.unionByName(updated).unionByName(inserts)
+    # A matched NULL source value still overwrites (no coalesce).
+    return target.join(src, on=keys, how="full_outer").select(*[
+        F.when(F.col(marker), F.col(vals[c])).otherwise(F.col(c)).alias(c)
+        if c in vals else c
+        for c in target.columns
+    ])
 
 
 # ------------------------------------------- partition-pruned merge ----
@@ -249,9 +247,9 @@ def merge_apply_cdc(
     :func:`merge_upsert`, and deletes REMOVE matching target rows —
     the whenMatchedDelete arm a plain upsert merge lacks.
 
-    One window (if compaction is needed) + the same two hash joins as
-    merge_upsert: anti-join keeps target rows whose key has no change,
-    surviving upserts append. O(target + changes) with shuffles only
+    One window (if compaction is needed) + one anti-join and a union:
+    the anti-join keeps target rows whose key has no change, surviving
+    upserts append. O(target + changes) with shuffles only
     on the merge key — CDC volume, not table size, drives the cost of
     a typical incremental apply.
 

@@ -39,6 +39,25 @@ def delete_path(spark: SparkSession, path: str) -> bool:
     return hadoop_fs(spark, path).delete(_jpath(spark, path), True)
 
 
+def has_data_files(spark: SparkSession, path: str) -> bool:
+    """True if ``path`` is a file or a directory tree holding a file a
+    Spark reader would read. Like Spark's file index, names starting
+    with ``_`` or ``.`` are skipped (``_SUCCESS``, ``.crc``,
+    ``_spark_metadata/``) unless they are ``k=v`` partition dirs."""
+    fs, root = hadoop_fs(spark, path), _jpath(spark, path)
+    if not fs.exists(root):
+        return False
+    base = fs.makeQualified(root).toUri().getPath().rstrip("/")
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        rel = files.next().getPath().toUri().getPath()[len(base):]
+        if not any(
+            p.startswith(("_", ".")) and "=" not in p for p in rel.split("/")
+        ):
+            return True
+    return False
+
+
 def replace_dir(spark: SparkSession, staging: str, final: str) -> None:
     """Atomically-ish promote ``staging`` to ``final``: delete final,
     rename staging. Metadata-only; no data rewrite."""

@@ -207,6 +207,67 @@ def test_merge_schema_evolution_adds_column(spark, src_dir, tmp_path):
     assert got == {1: None, 2: 0.5}
 
 
+def _tree_bytes(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def test_merge_into_unreadable_target_raises_and_keeps_it(spark, src_dir, tmp_path):
+    # Fault injection: a target whose only Parquet file has a truncated
+    # footer must fail the merge, not be bootstrapped over by the source.
+    target = str(tmp_path / "corrupt")
+    spark.createDataFrame(
+        [(i, "t1", float(i)) for i in range(100)],
+        "device_id long, reading_ts string, temp double",
+    ).coalesce(1).write.parquet(target)
+    (data,) = [f for f in os.listdir(target) if f.endswith(".parquet")]
+    with open(os.path.join(target, data), "r+b") as fh:
+        fh.truncate(os.path.getsize(os.path.join(target, data)) - 12)
+    before = _tree_bytes(target)
+    write_json(f"{src_dir}/b1.json", [{"device_id": 1, "reading_ts": "t1", "temp": 9.0}])
+    with pytest.raises(Exception):
+        make_ingestion(spark, _merge_cfg(src_dir, target)).run()
+    assert _tree_bytes(target) == before
+
+
+def test_merge_bootstraps_target_without_data_files(spark, src_dir, tmp_path):
+    # A target dir holding only bookkeeping files is empty, not corrupt.
+    target = tmp_path / "empty"
+    target.mkdir()
+    (target / "_SUCCESS").write_bytes(b"")
+    write_json(f"{src_dir}/b1.json", [{"device_id": 1, "reading_ts": "t1", "temp": 9.0}])
+    make_ingestion(spark, _merge_cfg(src_dir, str(target))).run()
+    assert spark.read.parquet(str(target)).count() == 1
+
+
+def test_post_write_optimize_failure_logs_warning(
+    spark, src_dir, tmp_path, monkeypatch, caplog
+):
+    import logging
+
+    import python_tool_setup_spark.ingestion.maintenance as maintenance
+
+    def boom(*a, **kw):
+        raise RuntimeError("layout exploded")
+
+    monkeypatch.setattr(maintenance, "optimize_layout", boom)
+    write_json(f"{src_dir}/b1.json", [{"device_id": 1, "reading_ts": "t1", "temp": 9.0}])
+    cfg = IngestionConfig(
+        source_path=src_dir,
+        source_format="json",
+        target_path=str(tmp_path / "opt"),
+        optimize_after_write=True,
+    )
+    with caplog.at_level(logging.WARNING, logger="python_tool_setup_spark.ingestion.base"):
+        make_ingestion(spark, cfg).run()
+    (rec,) = [r for r in caplog.records if "post-write optimize failed" in r.getMessage()]
+    assert rec.levelno == logging.WARNING and "layout exploded" in rec.getMessage()
+
+
 def test_merge_managed_table(spark, src_dir):
     spark.sql("DROP TABLE IF EXISTS mergedb.readings")
     write_json(f"{src_dir}/b1.json", [{"device_id": 1, "reading_ts": "t1", "temp": 1.0}])

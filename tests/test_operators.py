@@ -70,6 +70,42 @@ def test_merge_duplicate_source_dedup_order(spark):
     assert rows(out) == [(1, "new", 2)]
 
 
+def test_merge_null_source_value_overwrites(spark):
+    # "update all" copies the source row as it is: a NULL source value
+    # replaces a non-null target value (a coalesce-based merge keeps it).
+    schema = "k int, v string, n int"
+    target = spark.createDataFrame([(1, "a", 10), (2, "b", 20)], schema)
+    source = spark.createDataFrame([(1, None, None), (2, "B", None)], schema)
+    out = ops.merge_upsert(target, source, keys=["k"])
+    assert rows(out) == [(1, None, None), (2, "B", None)]
+
+
+def test_merge_target_column_named_like_marker(spark):
+    # Target columns that look like the implementation's internal
+    # names (any case) must merge as ordinary data columns.
+    schema = "k int, __merge_src string, __Merge_Src0 string, v string"
+    target = spark.createDataFrame([(1, "m", "z", "a"), (2, "n", "y", "b")], schema)
+    source = spark.createDataFrame([(2, "N", None, "B"), (3, "o", "x", "c")], schema)
+    out = ops.merge_upsert(target, source, keys=["k"])
+    assert out.columns == ["k", "__merge_src", "__Merge_Src0", "v"]
+    assert rows(out) == [(1, "m", "z", "a"), (2, "N", None, "B"), (3, "o", "x", "c")]
+
+
+def test_merge_scans_target_once(spark, tmp_path):
+    import re
+
+    path = str(tmp_path / "target")
+    base = spark.createDataFrame([(i, str(i)) for i in range(10)], "k int, v string")
+    base.write.parquet(path)
+    source = spark.createDataFrame([(2, "B"), (30, "C")], "k int, v string")
+    out = ops.merge_upsert(spark.read.parquet(path), source, keys=["k"])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"Relation \[[^\]]*\] parquet", plan)) == 1, plan
+    assert rows(out) == sorted(
+        [(i, str(i)) for i in range(10) if i != 2] + [(2, "B"), (30, "C")], key=repr
+    )
+
+
 def test_merge_idempotent(spark):
     # merge(merge(T,S),S) == merge(T,S)  (property from SURVEY.md §5.4)
     target = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")

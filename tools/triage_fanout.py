@@ -10,10 +10,10 @@ Usage: python tools/triage_fanout.py <plan_dir> [--json out.json]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
-import sys
 
 
 def gate_stats(path: str) -> dict:
@@ -39,10 +39,11 @@ def gate_stats(path: str) -> dict:
 
 
 def main() -> None:
-    plan_dir = sys.argv[1]
-    out_json = None
-    if "--json" in sys.argv:
-        out_json = sys.argv[sys.argv.index("--json") + 1]
+    ap = argparse.ArgumentParser(description="Rank a captured plan corpus by fan-out.")
+    ap.add_argument("plan_dir", help="directory of <gate>.txt plans")
+    ap.add_argument("--json", dest="out_json", help="also write per-gate stats here")
+    args = ap.parse_args()
+    plan_dir, out_json = args.plan_dir, args.out_json
     floors = {}
     fp = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_floors.json"
