@@ -12,8 +12,10 @@ representations can't diverge.
 from __future__ import annotations
 
 import glob
+import importlib
 import json
 import os
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -80,228 +82,40 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
-# The 50 gates the driver's CORRECTNESS sample covered in rounds 1-2
-# (the sample takes the first 50 registry entries). all_queries() orders
-# these LAST so the sample reaches the never-officially-sampled gates
-# first; all 150 remain registered and locally verified either way.
-_DRIVER_SAMPLED_R1_R2 = frozenset({
-    "q01_pricing_summary", "q02_projection", "q03_filter_predicates",
-    "q04_join_star", "q05_outer_join", "q06_semi_join", "q07_anti_join",
-    "q08_agg_distinct", "q09_rollup", "q10_cube", "q11_grouping_sets",
-    "q12_window_topk", "q13_window_analytics", "q14_sort_topk",
-    "q15_dedup_keys", "q16_set_ops", "q17_string_funcs",
-    "q18_datetime_funcs", "q19_conditional", "q20_json_funcs",
-    "q21_explode_tokens", "q22_asof_join", "q23_range_join",
-    "q24_merge_upsert", "q25_argmax_latest", "q26_window_tumbling",
-    "q31_dedup_exact", "q32_text_quality", "q33_language_id",
-    "q34_token_count", "q35_fingerprint", "q36_minhash_lsh_neardup",
-    "q37_cosine_topk", "q38_embedding_neardup", "q39_ngram_jaccard",
-    "q40_simhash_neardup", "q41_ann_lsh", "q42_ivf_ann",
-    "q43_multimodal_metadata", "q44_multimodal_decode",
-    "q100_frame_sampling", "q102_filtered_search", "q104_hybrid_retrieval",
-    "q27_stream_tumbling_agg", "q52_stream_session_window",
-    "q53_stream_late_data", "q54_stream_stateful", "q65_stream_merge",
-    "q66_stream_stream_join", "q28_stream_dedup",
-})
+# The named (non-batch) gate modules, in registration order; every
+# ``batchN`` module follows them, discovered from the package and
+# imported in ascending N. Registration order is the order of
+# ``_REGISTRY``, so a new ``batchN.py`` registers without edits here.
+_NAMED_MODULES = (
+    "relational", "llm", "streaming", "ingestion", "extras", "udfs",
+    "maintenance", "pipeline", "versioned", "quality", "cleaning",
+    "analytics", "corpus",
+)
+
+
+def _import_gate_modules() -> None:
+    batches = sorted(
+        (int(m.name[5:]), m.name)
+        for m in pkgutil.iter_modules(__path__)
+        if m.name.startswith("batch") and m.name[5:].isdigit()
+    )
+    for mod in (*_NAMED_MODULES, *(name for _, name in batches)):
+        importlib.import_module(f"{__name__}.{mod}")
 
 
 def all_queries() -> dict[str, Query]:
-    # Import side-effect modules exactly once.
-    from python_tool_setup_spark.queries import (  # noqa: F401
-        relational,
-        llm,
-        streaming,
-        ingestion,
-        extras,
-        udfs,
-        maintenance,
-        pipeline,
-        versioned,
-        quality,
-        cleaning,
-        analytics,
-        corpus,
-        batch3,
-        batch4,
-        batch5,
-        batch6,
-        batch7,
-        batch8,
-        batch9,
-        batch10,
-        batch11,
-        batch12,
-        batch13,
-        batch14,
-        batch15,
-        batch16,
-        batch17,
-        batch18,
-        batch19,
-        batch20,
-        batch21,
-        batch22,
-        batch23,
-        batch24,
-        batch25,
-        batch26,
-        batch27,
-        batch28,
-        batch29,
-        batch30,
-        batch31,
-        batch32,
-        batch33,
-        batch34,
-        batch35,
-        batch36,
-        batch37,
-        batch38,
-        batch39,
-        batch40,
-        batch41,
-        batch42,
-        batch43,
-        batch44,
-        batch45,
-        batch46,
-        batch47,
-        batch48,
-        batch49,
-        batch50,
-        batch51,
-        batch52,
-        batch53,
-        batch54,
-        batch55,
-        batch56,
-        batch57,
-        batch58,
-        batch59,
-        batch60,
-        batch61,
-        batch62,
-        batch63,
-        batch64,
-        batch65,
-        batch66,
-        batch67,
-        batch68,
-        batch69,
-        batch70,
-        batch71,
-        batch72,
-        batch73,
-        batch74,
-        batch75,
-        batch76,
-        batch77,
-        batch78,
-        batch79,
-        batch80,
-        batch81,
-        batch82,
-        batch83,
-        batch84,
-        batch85,
-        batch86,
-        batch87,
-        batch88,
-        batch89,
-        batch90,
-        batch91,
-        batch92,
-        batch93,
-        batch94,
-        batch95,
-        batch96,
-        batch97,
-        batch98,
-        batch99,
-        batch100,
-        batch101,
-        batch102,
-        batch103,
-        batch104,
-        batch105,
-        batch106,
-        batch107,
-        batch108,
-        batch109,
-        batch110,
-        batch111,
-        batch112,
-        batch113,
-        batch114,
-        batch115,
-        batch116,
-        batch117,
-        batch118,
-        batch119,
-        batch120,
-        batch121,
-        batch122,
-        batch123,
-        batch124,
-        batch125,
-        batch126,
-        batch127,
-        batch128,
-        batch129,
-        batch130,
-        batch131,
-        batch132,
-        batch133,
-        batch134,
-        batch135,
-        batch136,
-        batch137,
-        batch138,
-        batch139,
-        batch140,
-        batch141,
-        batch142,
-        batch143,
-        batch144,
-        batch145,
-        batch146,
-        batch147,
-        batch148,
-        batch149,
-        batch150,
-        batch151,
-        batch152,
-        batch153,
-        batch154,
-        batch155,
-        batch156,
-        batch157,
-        batch158,
-        batch159,
-        batch160,
-        batch161,
-        batch162,
-        batch163,
-        batch164,
-        batch165,
-        batch166,
-        batch167,
-        batch168,
-    )
+    """Every registered gate, in sample-rotation order.
 
-    # Self-maintaining rotation for the driver's 50-entry CORRECTNESS
-    # sample (it takes the FIRST 50 registry entries), priority order:
-    #   1. gates whose LATEST official row is a fail (needs a green row
-    #      to flip the driver ledger — e.g. q59 failed in r1, fixed in
-    #      r2, but was never re-sampled),
-    #   2. gates never sampled in any recorded CORRECTNESS_r*.json (in
-    #      registration order, newest batches last),
-    #   3. already-green gates (registration order).
-    # Each round the driver records 50 more official rows, so the front
-    # of the registry automatically becomes whatever still lacks
-    # driver-verified green signal.  Every query remains registered and
-    # locally oracle-verified regardless of position.
-    sampled_ever = set(_DRIVER_SAMPLED_R1_R2)
+    The official CORRECTNESS sample takes the FIRST 50 entries, so the
+    order surfaces whatever still lacks an official green row:
+      1. gates whose LATEST official row is a fail,
+      2. gates never sampled in any recorded ``CORRECTNESS_r*.json``,
+      3. already-green gates,
+    each tier in registration order. Every query stays registered and
+    locally oracle-verified regardless of position.
+    """
+    _import_gate_modules()
+    sampled_ever: set[str] = set()
     latest_row: dict[str, dict] = {}
     repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
     for path in sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
@@ -329,76 +143,9 @@ def all_queries() -> dict[str, Query]:
         if k in latest_row and not _is_green(latest_row[k])
     }
     fresh = {k: v for k, v in _REGISTRY.items() if k not in sampled_ever}
-    # Within the never-sampled tier, surface the highest-value gate
-    # families first so they earn official rows before long-tail
-    # utility gates.  Round-5 tier (r3 tier — TPC-H + stream-join
-    # matrix — is fully sampled): LLM-pipeline flagships (provenance,
-    # leakage, DSIR, dedup/ANN variants, corpus e2e), eval metrics,
-    # exact-similarity + scale-pattern gates.
-    _PRIORITY_PREFIXES = (
-        # LLM corpus-pipeline flagships
-        "q242_", "q243_", "q251_", "q252_", "q256_", "q257_", "q258_",
-        "q259_", "q262_", "q267_", "q268_", "q269_", "q270_", "q271_",
-        # eval-metric family
-        "q302_", "q305_", "q308_", "q309_", "q310_", "q311_",
-        # exact-similarity join + warehouse/scale patterns
-        "q333_", "q283_", "q284_", "q285_", "q287_", "q263_",
-        "q224_", "q228_", "q273_", "q313_", "q282_",
-        # round-5 flagships (encoding/planning advisors, lakehouse
-        # ops, governance, inference, sketches)
-        "q475_", "q478_", "q485_", "q490_", "q492_", "q499_",
-        "q505_", "q507_", "q513_", "q517_", "q521_", "q526_",
-        "q528_",
-        # round-6 tier: the four newly driver-visible SURVEY §2
-        # surfaces + the 3-level catalog gate, the RFM/PMI perf
-        # rewrites, and the stats gates whose shared expressions
-        # moved to the double path — each should earn an official
-        # CORRECTNESS row on its post-round-6 form
-        "q549_", "q550_", "q551_", "q552_", "q553_",
-        "q323_", "q322_", "q533_", "q534_", "q535_", "q536_",
-        "q529_",
-        # round-7 tier: the three latent decimal-final-schema gates
-        # the r6 judge sweep flagged (q404 vw_sum, q481 cents_sum,
-        # q522 pair counts) — repaired to BIGINT/string finals in r7
-        # alongside the two red rows (q521/q533, which sit in the
-        # stale_fail tier and sample first automatically); each needs
-        # an official green row on its repaired form
-        "q404_", "q481_", "q522_",
-        # plus the three the r7 ORACLE-side lint found beyond the
-        # judge's Spark-side sweep: DuckDB SUM(BIGINT) finals are
-        # HUGEINT, which the driver's pandas fetch coerces to float64
-        # while Spark's BIGINT stays int64 — same hash divergence,
-        # repaired with final BIGINT casts in the oracle SQL
-        "q406_", "q415_", "q477_",
-        # and the one the full driver-faithful sweep found: a NULLABLE
-        # date final renders None (Spark toPandas) vs NaT (DuckDB
-        # datetime64 fetch) — repaired to string gap brackets
-        "q345_",
-    )
-    priority = {
-        k: v for k, v in fresh.items() if k.startswith(_PRIORITY_PREFIXES)
-    }
-    fresh_rest = {k: v for k, v in fresh.items() if k not in priority}
-    # Round-9: the round-8 re-sample tier is retired. Every gate whose
-    # math changed in r7/r8 now carries verified signal on its current
-    # form: 50 drew into the official r8 driver sample (CORRECTNESS_r08
-    # 50/50 green) and the judge independently re-verified the other 83
-    # changed gates plus 40 random never-sampled ones against the DuckDB
-    # oracle on the driver's vanilla session shape (VERDICT.md r8:
-    # "123 ran, 123 matched, 0 failures"). Per the r8 verdict (next-round
-    # item 2), the sample window now points at the never-officially-
-    # sampled set — ~247 gates registered before CORRECTNESS files
-    # recorded them — so each round's 50 official rows convert
-    # judge-spot-checked gates into driver-ledger greens. With zero
-    # engine-math changes this round, ordering is:
-    #   stale_fail (latest official row red; empty as of r8)
-    #   -> priority ∩ never-sampled -> never-sampled rest -> green.
-    resample: dict[str, Query] = {}
     green = {
         k: v
         for k, v in _REGISTRY.items()
-        if k in sampled_ever and k not in stale_fail and k not in resample
+        if k in sampled_ever and k not in stale_fail
     }
-    fresh_rest = {k: v for k, v in fresh_rest.items() if k not in resample}
-    priority = {k: v for k, v in priority.items() if k not in resample}
-    return {**stale_fail, **resample, **priority, **fresh_rest, **green}
+    return {**stale_fail, **fresh, **green}

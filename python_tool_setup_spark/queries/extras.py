@@ -14,8 +14,8 @@ Scale notes (100 TB design):
   percentiles parallelize per key and oracle-check exactly;
 - correlated subqueries decorrelate in Catalyst to joins (EXISTS →
   left-semi, NOT EXISTS → left-anti, scalar → aggregate + equi-join),
-  so they scale like the joins they become — verified via explain in
-  tools/explain_audit.py;
+  so they scale like the joins they become — visible in the plans
+  ``tools/gate_plans.py capture`` writes;
 - sliding windows expand each row to window/slide buckets (here 2) —
   cost is a constant small multiple of the input, then one shuffle;
 - session windows are Spark-native ``session_window`` (merge-sort per

@@ -57,6 +57,52 @@ def test_driver_sample_window_draws_never_sampled_gates():
     )
 
 
+def test_rotation_is_stale_fail_then_never_sampled_then_green():
+    """all_queries() is exactly three tiers — latest official row red,
+    never sampled, green — each in registration (_REGISTRY) order."""
+    from python_tool_setup_spark.queries import _REGISTRY, all_queries
+
+    order = list(all_queries())
+    sampled: set[str] = set()
+    latest: dict[str, dict] = {}
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+        rows = json.load(open(path))
+        sampled.update(rows)
+        latest.update({k: v for k, v in rows.items() if isinstance(v, dict)})
+
+    def red(name: str) -> bool:
+        row = latest.get(name)
+        return row is not None and not (
+            row.get("rows_match")
+            and row.get("schema_match", True)
+            and row.get("hash_match") is not False
+            and not row.get("err")
+        )
+
+    stale_fail = [n for n in _REGISTRY if red(n)]
+    fresh = [n for n in _REGISTRY if n not in sampled]
+    green = [n for n in _REGISTRY if n in sampled and not red(n)]
+    assert order == stale_fail + fresh + green
+
+
+def test_every_query_module_is_imported():
+    """Module discovery leaves no file in the queries package orphaned:
+    after all_queries(), every queries/*.py stem is imported."""
+    from python_tool_setup_spark import queries
+
+    queries.all_queries()
+    pkg_dir = os.path.dirname(queries.__file__)
+    orphans = [
+        stem
+        for stem in (
+            os.path.basename(p)[:-3]
+            for p in glob.glob(os.path.join(pkg_dir, "*.py"))
+        )
+        if stem != "__init__" and f"{queries.__name__}.{stem}" not in sys.modules
+    ]
+    assert orphans == []
+
+
 def test_bench_floors_file_matches_registry():
     """The pinned floors must cover the registry exactly (a renamed or
     added gate without a floor silently loses its retry trigger) and
