@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from python_tool_setup_spark.config import IngestionConfig, IngestionError
 from python_tool_setup_spark.operators.merge import merge_upsert
+from python_tool_setup_spark.operators.relational import dedup_by_keys
 from python_tool_setup_spark.sources.files import read_batch
 from python_tool_setup_spark.sources.fs import has_data_files, replace_dir
 
@@ -132,8 +133,12 @@ class IngestionPipeline:
 
     def _merge_into(self, source: DataFrame) -> None:
         """Upsert semantics of Delta ``whenMatchedUpdateAll /
-        whenNotMatchedInsertAll`` (reference framework.py:211-231)."""
+        whenNotMatchedInsertAll`` (reference framework.py:211-231).
+        ``cfg.dedup_order`` makes the source unique per key on every
+        path, the bootstrap write included."""
         cfg = self.cfg
+        if cfg.dedup_order:
+            source = dedup_by_keys(source, cfg.merge_keys, cfg.dedup_order)
         if _HAS_DELTA and cfg.target_format == "delta":
             self._merge_delta(source)
             return
@@ -144,11 +149,7 @@ class IngestionPipeline:
             return
         # schema evolution: new source columns appear, old rows get nulls
         merged = merge_upsert(
-            target,
-            source,
-            keys=cfg.merge_keys,
-            source_dedup_order=cfg.dedup_order,
-            evolve_schema=True,
+            target, source, keys=cfg.merge_keys, evolve_schema=True
         )
         self._staged_overwrite(merged)
 
@@ -193,7 +194,8 @@ class IngestionPipeline:
                 writer = writer.partitionBy(*cfg.partition_by)
             writer.save(staging)
             replace_dir(self.spark, staging, cfg.target_path)
-            self.spark.catalog.clearCache()
+            # re-read cached plans of the target only; other caches stay
+            self.spark.catalog.refreshByPath(cfg.target_path)
             if cfg.table:
                 # external table metadata may cache old files
                 self.spark.sql(f"REFRESH TABLE {cfg.full_table_name}")

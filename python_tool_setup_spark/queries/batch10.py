@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_rank
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.staging import staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -398,11 +399,7 @@ def q181_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cent-quantized per row - order-free exact sum
             F.round(
                 F.sum(
-                    F.round(
-                        100
-                        * F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                    ).cast("long")
+                    cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
                 ).cast("double")
                 / 100,
                 2,
@@ -460,11 +457,7 @@ def q182_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cent-quantized per row - order-free exact sum
             F.round(
                 F.sum(
-                    F.round(
-                        100
-                        * F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                    ).cast("long")
+                    cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
                 ).cast("double")
                 / 100,
                 2,

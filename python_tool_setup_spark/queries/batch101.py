@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _ACC = 1000  # percentile_approx accuracy -> rank error <= n/_ACC
@@ -76,11 +77,7 @@ def q406_hierarchical_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name", "n_name")
         .agg(
             F.sum(
-                F.round(
-                    100
-                    * F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                ).cast("long")
+                cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
             ).alias("cents")
         )
     )

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _BUDGET = 10_000
@@ -178,11 +179,11 @@ def q411_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q412_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     strata = o.groupBy("o_orderpriority").agg(
         F.count("*").alias("nh"),
-        F.sum(cents).alias("s"),
-        F.sum(cents.cast("decimal(38,0)") * cents).alias("ss"),
+        F.sum(cents_col).alias("s"),
+        F.sum(cents_col.cast("decimal(38,0)") * cents_col).alias("ss"),
     )
     mean = F.col("s").cast("double") / F.col("nh")
     var = F.col("ss").cast("double") / F.col("nh") - mean * mean

@@ -22,6 +22,7 @@ from python_tool_setup_spark.queries.batch90 import (
     _spark_shingles,
     _SLICE,
 )
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # (bands, rows_per_band) splits of the k=16 signature
@@ -256,9 +257,7 @@ def q415_partition_invariance_audit(
 ) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.round(
-        100 * F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    ).cast("long")
+    cents_col = cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
 
     def run(n_part: int):
         dd = (
@@ -269,7 +268,7 @@ def q415_partition_invariance_audit(
         )
         cs = (
             li.repartition(n_part)
-            .agg(F.sum(cents).alias("c"))
+            .agg(F.sum(cents_col).alias("c"))
             .collect()[0]["c"]
         )
         return dd, int(cs)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -261,7 +262,7 @@ def q420_catalog_dead_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "p_brand",
         F.when(F.col("l_partkey").isNull(), 1).otherwise(0).alias("dead"),
-        F.round(100 * F.col("p_retailprice")).cast("long").alias("cents"),
+        cents(F.col("p_retailprice")).alias("cents"),
     )
     return (
         flagged.groupBy("p_brand")

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck
 from python_tool_setup_spark.tables import load_table
 
 # per-stratum md5 sampling rates out of 100 (priority 1..5 by prefix)
@@ -192,9 +192,9 @@ def q427_horvitz_thompson_audit(
         ).cast("long")
         % 100
     )
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     base = o.select(
-        rate.alias("rate"), cents.alias("cents"), bucket.alias("bucket")
+        rate.alias("rate"), cents_col.alias("cents"), bucket.alias("bucket")
     )
     in_s = F.col("bucket") < F.col("rate")
     agg = base.agg(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _MIN_SEG = 30  # segments shorter than this are boilerplate noise
@@ -143,16 +144,13 @@ def q429_header_line_reconciliation(
 ) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    line_cents = F.round(
-        100
-        * F.col("l_extendedprice")
-        * (1 - F.col("l_discount"))
-        * (1 + F.col("l_tax"))
-    ).cast("long")
+    line_cents = cents(
+        F.col("l_extendedprice"), 1 - F.col("l_discount"), 1 + F.col("l_tax")
+    )
     lines = li.groupBy("l_orderkey").agg(
         F.sum(line_cents).alias("line_cents")
     )
-    hdr = F.round(100 * F.col("o_totalprice")).cast("long")
+    hdr = cents(F.col("o_totalprice"))
     recon = o.join(lines, lines.l_orderkey == o.o_orderkey, "left").select(
         hdr.alias("hdr_cents"),
         F.coalesce(F.col("line_cents"), F.lit(0)).alias("line_cents"),

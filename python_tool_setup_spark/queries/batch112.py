@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck
 from python_tool_setup_spark.tables import load_table
 
 _AGES = [(0, 30, "a_0_30"), (31, 90, "b_31_90"), (91, 10**6, "c_91_plus")]
@@ -68,7 +68,7 @@ def q432_order_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.datediff(F.col("d"), F.col("o_orderdate").cast("date")).alias(
                 "age_days"
             ),
-            F.round(100 * F.col("o_totalprice")).cast("long").alias("cents"),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     bucket = F.when(F.lit(False), None)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _WINDOW_DAYS = 7
@@ -63,7 +64,7 @@ def q434_duplicate_payment_detection(
     o2 = o.select(
         "o_orderkey",
         "o_custkey",
-        F.round(100 * F.col("o_totalprice")).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.col("o_orderdate").cast("date").alias("d"),
     )
     a = o2.select(
@@ -152,7 +153,7 @@ def q435_new_vs_repeat_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("is_new"),
-        F.round(100 * F.col("o_totalprice")).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     new_c = F.sum(F.when(F.col("is_new") == 1, F.col("cents")).otherwise(0))
     rep_c = F.sum(F.when(F.col("is_new") == 0, F.col("cents")).otherwise(0))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _BIN_CENTS = 10_000  # 100-dollar EMD bins
@@ -78,9 +79,7 @@ _TARGETS_MB = [64, 128, 256]
 def q436_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     binned = o.select(
-        F.floor(
-            F.round(100 * F.col("o_totalprice")).cast("long") / _BIN_CENTS
-        ).alias("b"),
+        F.floor(cents(F.col("o_totalprice")) / _BIN_CENTS).alias("b"),
         F.when(F.col("o_orderkey") % 2 == 1, 1).otherwise(0).alias("is_new"),
     )
     # Bin histogram read by the totals AND the prefix machinery: pin

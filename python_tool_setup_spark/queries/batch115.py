@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _K = 20
@@ -53,7 +54,7 @@ def q439_distributed_topk_audit(
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey",
-        F.round(100 * F.col("o_totalprice")).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     # straight global top-k (TakeOrdered)
     direct = base.orderBy(
@@ -118,13 +119,13 @@ def q439_distributed_topk_audit(
 )
 def q440_mergeable_stats_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     # base feeds THREE separate actions (per-half partials, the
     # distinct merge, the full-table truth): pin the narrow projection
     # so orders is scanned once.
     base = pin(
         o.select(
-            cents.alias("c"),
+            cents_col.alias("c"),
             "o_custkey",
             (F.col("o_orderkey") % 2).alias("half"),
         )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents_sql
 from python_tool_setup_spark.staging import staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -58,11 +59,11 @@ def q189_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ELSE 0.0 END"
     )
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n,
-               ROUND(CAST(SUM(CAST(ROUND(100 * gross(o_totalprice))
-                     AS BIGINT)) AS DOUBLE) / 100, 2) AS gross_total,
+               ROUND(CAST(SUM({cents_sql("gross(o_totalprice)")})
+                     AS DOUBLE) / 100, 2) AS gross_total,
                ROUND(10000 * AVG(is_big(o_totalprice))) / 10000.0
                    AS big_share
         FROM orders

@@ -18,6 +18,7 @@ from python_tool_setup_spark.operators.percentiles import (
     grouped_exact_percentiles,
 )
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # release-gate thresholds (parts per million)
@@ -75,7 +76,7 @@ def q461_median_heterogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
         .select(
             "n_name",
-            F.round(100 * F.col("o_totalprice")).cast("long").alias("cents"),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     med = grouped_exact_percentiles(
@@ -176,15 +177,14 @@ def q462_release_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lines = li.groupBy("l_orderkey").agg(
         F.sum(
-            F.round(
-                100
-                * F.col("l_extendedprice")
-                * (1 - F.col("l_discount"))
-                * (1 + F.col("l_tax"))
-            ).cast("long")
+            cents(
+                F.col("l_extendedprice"),
+                1 - F.col("l_discount"),
+                1 + F.col("l_tax"),
+            )
         ).alias("lc")
     )
-    hdr = F.round(100 * F.col("o_totalprice")).cast("long")
+    hdr = cents(F.col("o_totalprice"))
     recon = (
         o.join(lines, lines.l_orderkey == o.o_orderkey, "left")
         .select(

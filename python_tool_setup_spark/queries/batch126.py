@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # Deterministic pseudo-IPv4 per user: Knuth multiplicative hash into
@@ -86,7 +87,7 @@ def q463_ip_lpm_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     addr = e.select(
         ((F.col("user_id") * _IP_MULT) % _IP_SPACE).alias("ip"),
         "user_id",
-        F.round(100 * F.col("value")).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     routed = (
         addr.join(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -66,7 +67,7 @@ def q467_jackknife_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
         .select(
             "n_name",
-            F.round(100 * F.col("o_totalprice")).cast("long").alias("cents"),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     grp = per_order.groupBy("n_name").agg(

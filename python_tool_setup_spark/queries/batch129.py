@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # q469: replicate count and the deterministic relabeling hash
@@ -95,7 +96,7 @@ def q469_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
     base = o.select(
         F.col("o_orderkey").alias("k"),
-        F.round(100 * F.col("o_totalprice")).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.when(
             F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
         )

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.staging import local_rows_df, staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -195,7 +196,7 @@ def q193_aqe_runtime_replan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.sum(F.round(100 * F.col("l_extendedprice")).cast("long")).cast("double") / 100, 2).alias("total_price"),
+            F.round(F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100, 2).alias("total_price"),
         )
     )
     # One probe execution yields the final adaptive plan; the main
@@ -328,7 +329,7 @@ def q195_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert fewer, f"layout not prunable: {n_target} of {n_all} files"
     return filtered.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total_price"),
+        F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total_price"),
         F.lit(pruned).alias("partition_pruned"),
         F.lit(fewer).alias("fewer_files_read"),
     )

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import prefix_rank
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck
 from python_tool_setup_spark.tables import load_table
 
 _ZIPF_MIN = 5  # tokens below this frequency are dropped from the fit
@@ -182,9 +182,7 @@ def q472_theil_decomposition(
     dec = "decimal(38,0)"
     base = c.join(F.broadcast(n), n.n_nationkey == c.c_nationkey).select(
         F.col("n_name").alias("grp"),
-        (F.round(100 * F.col("c_acctbal")).cast("long") + 1000000).alias(
-            "v"
-        ),
+        (cents(F.col("c_acctbal")) + 1000000).alias("v"),
     )
     g = base.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_g"),

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_rank
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # Columns audited for RLE in stored (o_orderkey) order. Run header
@@ -279,15 +280,11 @@ def q476_benjamini_hochberg_fdr(
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
-    cents = (
-        F.round(100 * F.col("o_totalprice"))
-        .cast("long")
-        .cast("decimal(38,0)")
-    )
+    cents_col = cents(F.col("o_totalprice")).cast("decimal(38,0)")
     per_order = (
         o.join(F.broadcast(c), c.c_custkey == o.o_custkey)
         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
-        .select("n_name", cents.alias("cents"))
+        .select("n_name", cents_col.alias("cents"))
     )
     grp = per_order.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_j"),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # chi-square critical value at df=8, alpha=0.05, in nanos.
@@ -101,9 +102,7 @@ def q477_benford_first_digit(
     obs = (
         o.select(
             F.substring(
-                F.round(100 * F.col("o_totalprice"))
-                .cast("long")
-                .cast("string"),
+                cents(F.col("o_totalprice")).cast("string"),
                 1,
                 1,
             )

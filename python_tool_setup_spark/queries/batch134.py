@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # EWMA kernel alpha=0.3 truncated at 12 lags, weights micro-quantized
@@ -103,7 +104,7 @@ def q479_ewma_control_chart(
             F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
         ).alias("idx")
     ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("long"))
+        F.sum(cents(F.col("o_totalprice")))
         .cast("decimal(38,0)")
         .alias("cents")
     )

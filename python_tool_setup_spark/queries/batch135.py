@@ -22,6 +22,7 @@ from python_tool_setup_spark.operators.percentiles import (
 )
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # Base/delta split point for the incremental-maintenance gate: rows
@@ -75,10 +76,7 @@ def q481_incremental_agg_maintenance(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderdate",
-        F.round(100 * F.col("o_totalprice"))
-        .cast("long")
-        .cast("decimal(38,0)")
-        .alias("cents"),
+        cents(F.col("o_totalprice")).cast("decimal(38,0)").alias("cents"),
     )
 
     def partial(df: DataFrame) -> DataFrame:
@@ -198,9 +196,7 @@ def q482_grouped_mad_outliers(
     x = pin(
         load_table(spark, sf_dir, "orders").select(
             F.col("o_orderpriority").alias("grp"),
-            F.round(100 * F.col("o_totalprice"))
-            .cast("long")
-            .alias("cents"),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     med = pin(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # Forgotten set for the cascade audit: customers whose key is
@@ -234,10 +235,10 @@ def q486_snapshot_diff_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     v1 = o.filter(F.col("o_orderkey") % 103 != 0).select(
         F.col("o_orderkey").alias("k"),
-        cents.alias("o_totalprice_cents"),
+        cents_col.alias("o_totalprice_cents"),
         "o_orderstatus",
         "o_orderpriority",
     )
@@ -247,7 +248,7 @@ def q486_snapshot_diff_report(
             F.col("o_orderkey") % 97 == 0,
             F.round(101 * F.col("o_totalprice")).cast("long"),
         )
-        .otherwise(cents)
+        .otherwise(cents_col)
         .alias("o_totalprice_cents"),
         F.when(F.col("o_orderkey") % 89 == 0, F.lit("X"))
         .otherwise(F.col("o_orderstatus"))

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # deviation buckets in ppm of the recomputed total
@@ -87,7 +88,7 @@ def q487_derived_column_consistency(
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     contrib = (
-        F.round(100 * F.col("l_extendedprice")).cast("long")
+        cents(F.col("l_extendedprice"))
         * (10000 + F.round(F.col("l_tax") * 10000).cast("long"))
         * (10000 - F.round(F.col("l_discount") * 10000).cast("long"))
     )
@@ -102,11 +103,7 @@ def q487_derived_column_consistency(
     )
     dev = o.join(per_order, o.o_orderkey == per_order.k).select(
         F.round(
-            (
-                F.round(100 * F.col("o_totalprice")).cast("long")
-                - F.col("exp_cents")
-            )
-            * 1000000.0
+            (cents(F.col("o_totalprice")) - F.col("exp_cents")) * 1000000.0
             / F.col("exp_cents")
         )
         .cast("long")

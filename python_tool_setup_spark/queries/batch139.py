@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck
 from python_tool_setup_spark.tables import load_table
 
 # LOCF fill window: one calendar month of daily per-nation revenue.
@@ -96,9 +96,7 @@ def q489_locf_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_name", F.col("o_orderdate").cast("date").alias("d")
         )
         .agg(
-            F.sum(
-                F.round(100 * F.col("o_totalprice")).cast("long")
-            ).alias("cents")
+            F.sum(cents(F.col("o_totalprice"))).alias("cents")
         )
     )
     days = spark.sql(
@@ -221,9 +219,7 @@ def q490_cusum_changepoint(
             F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
         ).alias("idx")
     ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).alias(
-            "cents"
-        )
+        F.sum(cents(F.col("o_totalprice"))).alias("cents")
     )
     suff = m.agg(
         F.count(F.lit(1)).alias("n"),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.staging import staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -203,9 +204,7 @@ def q198_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n"),
         # integer cents: see the oracle comment
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).alias(
-            "total_c"
-        ),
+        F.sum(cents(F.col("o_totalprice"))).alias("total_c"),
     )
     high = agg.filter(F.col("n") >= 12).agg(
         F.lit("high").alias("bucket"),

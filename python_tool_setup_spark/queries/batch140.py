@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import prefix_agg
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -68,9 +69,7 @@ def q491_grouped_weighted_median(
     li = load_table(spark, sf_dir, "lineitem")
     h = li.groupBy(
         F.col("l_returnflag").alias("grp"),
-        F.round(100 * F.col("l_extendedprice"))
-        .cast("long")
-        .alias("cents"),
+        cents(F.col("l_extendedprice")).alias("cents"),
     ).agg(F.sum(F.round("l_quantity").cast("long")).alias("w"))
     wgrp = Window.partitionBy("grp")
     wcum = wgrp.orderBy("cents").rowsBetween(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _K_ANON = 5
@@ -67,11 +68,7 @@ def q495_k_anonymity_audit(
     qi = c.groupBy(
         "c_nationkey",
         "c_mktsegment",
-        F.floor(
-            F.round(100 * F.col("c_acctbal")).cast("long")
-            * 1.0
-            / _BAND_CENTS
-        )
+        F.floor(cents(F.col("c_acctbal")) * 1.0 / _BAND_CENTS)
         .cast("long")
         .alias("bal_band"),
     ).agg(F.count(F.lit(1)).alias("grp_n"))
@@ -150,11 +147,7 @@ def q496_l_diversity_audit(
     qi = c.groupBy("c_nationkey", "c_mktsegment").agg(
         F.count(F.lit(1)).alias("grp_n"),
         F.countDistinct(
-            F.floor(
-                F.round(100 * F.col("c_acctbal")).cast("long")
-                * 1.0
-                / 100000
-            ).cast("long")
+            F.floor(cents(F.col("c_acctbal")) * 1.0 / 100000).cast("long")
         ).alias("n_sensitive"),
     )
     tot = qi.agg(F.sum("grp_n").alias("n"))

@@ -23,6 +23,7 @@ from python_tool_setup_spark.operators.percentiles import (
 )
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _CONF_LEVEL = 0.9
@@ -120,9 +121,7 @@ def q497_conformal_calibration(
     c = load_table(spark, sf_dir, "customer")
     base = o.join(F.broadcast(c), c.c_custkey == o.o_custkey).select(
         F.col("c_mktsegment").alias("seg"),
-        F.round(100 * F.col("o_totalprice")).cast("long").alias(
-            "cents"
-        ),
+        cents(F.col("o_totalprice")).alias("cents"),
         (F.col("o_custkey") % 2 == 0).alias("is_cal"),
     )
     # Pin the labeled base: the calibration/test split is two passes

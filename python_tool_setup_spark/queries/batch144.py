@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _DID_REGION = "AMERICA"
@@ -131,9 +132,7 @@ def q499_diff_in_differences(
             (F.col("o_orderdate") >= F.lit(_DID_CUTOFF))
             .cast("int")
             .alias("post"),
-            F.round(100 * F.col("o_totalprice"))
-            .cast("long")
-            .alias("cents"),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     cells = base.groupBy("treated", "post").agg(
@@ -254,9 +253,7 @@ def q500_keyset_pagination(
         F.col("o_orderdate").cast("date").alias("o_orderdate"),
         F.col("o_orderkey").cast("long").alias("o_orderkey"),
         "o_orderpriority",
-        F.round(100 * F.col("o_totalprice"))
-        .cast("long")
-        .alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     cursor = (
         o.orderBy("o_orderdate", "o_orderkey")

@@ -26,7 +26,7 @@ from python_tool_setup_spark.tables import load_table
 # correctly-rounded conversion (exactcast.py — DuckDB's native
 # HUGEINT->DOUBLE cast mis-rounds ~1.4% of >2^53 values; multi-seed
 # catch #6, seed 2468, flipped this gate's var_ratio_micro).
-from python_tool_setup_spark.queries.exactcast import dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck, dd_spark
 
 
 def _ratio_expr(dd) -> str:
@@ -92,9 +92,7 @@ def q505_ratio_metric_delta_method(
 ) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).alias(
-            "x"
-        ),
+        F.sum(cents(F.col("o_totalprice"))).alias("x"),
         F.count(F.lit(1)).alias("y"),
     )
     s = per_cust.agg(
@@ -193,16 +191,16 @@ def q506_cuped_variance_reduction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     per_cust = o.groupBy("o_custkey").agg(
         F.sum(
             F.when(
-                F.col("o_orderdate") < F.lit(_CUPED_CUTOFF), cents
+                F.col("o_orderdate") < F.lit(_CUPED_CUTOFF), cents_col
             ).otherwise(0)
         ).alias("x"),
         F.sum(
             F.when(
-                F.col("o_orderdate") >= F.lit(_CUPED_CUTOFF), cents
+                F.col("o_orderdate") >= F.lit(_CUPED_CUTOFF), cents_col
             ).otherwise(0)
         ).alias("y"),
     )

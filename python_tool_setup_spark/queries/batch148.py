@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # Four looks: cumulative snapshots across the fixture's
@@ -123,9 +124,7 @@ def q507_group_sequential_obf(
     base = o.select(
         (F.col("o_custkey") % 2 == 0).alias("treat"),
         F.col("o_orderdate").cast("date").alias("d"),
-        F.round(100 * F.col("o_totalprice")).cast("long").alias(
-            "cents"
-        ),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     looks = spark.createDataFrame(
         [
@@ -287,9 +286,7 @@ def q508_expected_loss_decision(
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
         (F.col("o_custkey") % 2 == 0).alias("treat"),
-        F.round(100 * F.col("o_totalprice")).cast("long").alias(
-            "cents"
-        ),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     cells = base.groupBy("treat").agg(
         F.count(F.lit(1)).alias("n"),

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _NRR_MAX_AGE = 3
@@ -84,9 +85,7 @@ def q517_revenue_cohort_nrr(
         o.join(F.broadcast(first_q), "o_custkey")
         .groupBy("cq", (q - F.col("cq")).alias("age"))
         .agg(
-            F.sum(
-                F.round(100 * F.col("o_totalprice")).cast("long")
-            ).alias("cents")
+            F.sum(cents(F.col("o_totalprice"))).alias("cents")
         )
     )
     base = rev.filter(F.col("age") == 0).select(

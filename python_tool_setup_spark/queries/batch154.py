@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -85,9 +86,7 @@ def q519_seasonal_decomposition(
         ).alias("idx"),
         F.month("o_orderdate").alias("moy"),
     ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).alias(
-            "cents"
-        )
+        F.sum(cents(F.col("o_totalprice"))).alias("cents")
     )
     off = spark.range(-5, 7).select(
         F.col("id").cast("int").alias("off")

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck, dd_spark
 from python_tool_setup_spark.tables import load_table
 
 # CvM critical value at alpha=0.05 (asymptotic): T > 0.461 rejects.
@@ -113,9 +113,7 @@ def q521_cramer_von_mises(
     o = load_table(spark, sf_dir, "orders")
     pooled = o.select(
         (F.col("o_custkey") % 2 == 0).alias("is_a"),
-        F.round(100 * F.col("o_totalprice")).cast("long").alias(
-            "cents"
-        ),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.col("o_orderkey").alias("k"),
     )
     pre = prefix_agg(

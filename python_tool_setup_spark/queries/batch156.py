@@ -23,6 +23,7 @@ from python_tool_setup_spark.operators.percentiles import (
 )
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -260,11 +261,9 @@ def q524_nested_percentiles(
     # exact-rational interpolation over integer cents: see the oracle
     # comment. half-up of num/b = floor((num + b//2) / b); the doubles
     # below are exact (num is a small integer).
-    cents = e.select(
-        "user_id", F.round(100 * F.col("value")).cast("long").alias("c")
-    )
+    cents_df = e.select("user_id", cents(F.col("value")).alias("c"))
     per_user = grouped_exact_percentiles_frac(
-        cents, ["user_id"], "c", {"p95": (19, 20)}
+        cents_df, ["user_id"], "c", {"p95": (19, 20)}
     ).select(
         "user_id",
         # 20*p95_cents -> p95_milli = num/2, half-up
@@ -285,7 +284,7 @@ def q524_nested_percentiles(
         .alias("p95_of_p95_milli"),
     )
     gp = grouped_exact_percentiles_frac(
-        cents.select(F.lit(1).alias("one"), "c"),
+        cents_df.select(F.lit(1).alias("one"), "c"),
         ["one"],
         "c",
         {"p95": (19, 20)},

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 _RATE_LIMIT = 3  # events per user-minute
@@ -171,9 +172,7 @@ def q526_qini_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "c_custkey",
             (F.col("c_custkey") % 2 == 0).alias("treat"),
-            F.round(100 * F.col("c_acctbal"))
-            .cast("long")
-            .alias("score"),
+            cents(F.col("c_acctbal")).alias("score"),
         )
         .agg(
             F.max(

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck, dd_spark
 from python_tool_setup_spark.tables import load_table
 
 _RC_WINDOW = 12
@@ -100,7 +100,7 @@ def q527_rolling_correlation(
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     m = (
         o.join(F.broadcast(c), c.c_custkey == o.o_custkey)
         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
@@ -115,11 +115,11 @@ def q527_rolling_correlation(
         )
         .agg(
             F.sum(
-                F.when(F.col("r_name") == _RC_REGION_A, cents)
+                F.when(F.col("r_name") == _RC_REGION_A, cents_col)
                 .otherwise(0)
             ).alias("a"),
             F.sum(
-                F.when(F.col("r_name") == _RC_REGION_B, cents)
+                F.when(F.col("r_name") == _RC_REGION_B, cents_col)
                 .otherwise(0)
             ).alias("b"),
         )
@@ -224,9 +224,7 @@ def q528_monetary_unit_sampling(
         o.select(
             "o_orderkey",
             "o_orderpriority",
-            F.round(100 * F.col("o_totalprice")).cast("long").alias(
-                "cents"
-            ),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     tot = x.agg(F.sum("cents").alias("t"))

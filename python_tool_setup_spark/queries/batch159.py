@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents_sql
 from python_tool_setup_spark.tables import load_table
 
 _G_MOD = 97
@@ -151,8 +152,7 @@ _PROFILE_COLS = [
     ("o_orderkey", "CAST(o_orderkey AS STRING)"),
     ("o_custkey", "CAST(o_custkey AS STRING)"),
     ("o_orderstatus", "CAST(o_orderstatus AS STRING)"),
-    ("o_totalprice",
-     "CAST(CAST(ROUND(100 * o_totalprice) AS BIGINT) AS STRING)"),
+    ("o_totalprice", f"CAST({cents_sql('o_totalprice')} AS STRING)"),
     ("o_orderdate", "CAST(CAST(o_orderdate AS DATE) AS STRING)"),
     ("o_orderpriority", "CAST(o_orderpriority AS STRING)"),
 ]

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck, dd_spark
 from python_tool_setup_spark.tables import load_table
 
 # two-sample t at a split, micro-quantized from exact integer
@@ -99,9 +99,7 @@ def q531_binary_segmentation(
             F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
         ).alias("idx")
     ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).alias(
-            "cents"
-        )
+        F.sum(cents(F.col("o_totalprice"))).alias("cents")
     )
     # bounded-domain: idx is a calendar-month index (~tens of rows at
     # any data size); same for the row_number below
@@ -242,7 +240,7 @@ def q532_wilcoxon_signed_rank(
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     m = (
         o.join(F.broadcast(c), c.c_custkey == o.o_custkey)
         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
@@ -259,12 +257,12 @@ def q532_wilcoxon_signed_rank(
             (
                 F.sum(
                     F.when(
-                        F.col("r_name") == _WSR_REGION_A, cents
+                        F.col("r_name") == _WSR_REGION_A, cents_col
                     ).otherwise(0)
                 )
                 - F.sum(
                     F.when(
-                        F.col("r_name") == _WSR_REGION_B, cents
+                        F.col("r_name") == _WSR_REGION_B, cents_col
                     ).otherwise(0)
                 )
             ).alias("d")

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck, dd_spark
 from python_tool_setup_spark.tables import load_table
 
 # z for doubled-rank U: U2 = 2U, E[U2] = n1*n2, Var[U2] scales by 4:
@@ -86,9 +86,7 @@ def q533_mann_whitney_u(
     o = load_table(spark, sf_dir, "orders")
     pooled = o.select(
         (F.col("o_custkey") % 2 == 0).alias("is_a"),
-        F.round(100 * F.col("o_totalprice")).cast("long").alias(
-            "cents"
-        ),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     # cents are near-distinct, so the histogram is close to
     # table-sized: the prefix runs through the block-offset
@@ -228,9 +226,7 @@ def q534_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
         ).alias("idx")
     ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).alias(
-            "cents"
-        )
+        F.sum(cents(F.col("o_totalprice"))).alias("cents")
     )
     med = grouped_exact_percentiles(
         m.withColumn("one", F.lit(1)), ["one"], "cents", {"p50": 0.5}

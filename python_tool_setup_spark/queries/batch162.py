@@ -16,7 +16,7 @@ from pyspark.sql.window import Window
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck, dd_spark
 from python_tool_setup_spark.tables import load_table
 
 _FRIED_K = 5  # regions
@@ -109,9 +109,7 @@ def q535_friedman_test(
             "r_name",
         )
         .agg(
-            F.sum(
-                F.round(100 * F.col("o_totalprice")).cast("long")
-            ).alias("cents")
+            F.sum(cents(F.col("o_totalprice"))).alias("cents")
         )
     )
     # Pin the per-(month, region) matrix once (O(months × regions)
@@ -254,9 +252,7 @@ def q536_kruskal_wallis(
     o = load_table(spark, sf_dir, "orders")
     pooled = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(100 * F.col("o_totalprice")).cast("long").alias(
-            "cents"
-        ),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     # cents are near-distinct (histogram ~ table-sized): block-offset
     # prefix, no single-task global window. Pin the histogram ONCE —

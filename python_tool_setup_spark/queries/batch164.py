@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 # p-chart 3-sigma limit, ppm-quantized from exact integers (pbar and
@@ -195,9 +196,7 @@ def q540_xbar_r_chart(
     daily = o.groupBy(
         F.col("o_orderdate").cast("date").alias("d")
     ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).alias(
-            "cents"
-        )
+        F.sum(cents(F.col("o_totalprice"))).alias("cents")
     )
     sub = (
         daily.groupBy(

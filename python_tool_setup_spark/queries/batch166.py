@@ -17,7 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import (
+    cents,
+    cents_sql,
+    dd_duck,
+    dd_spark,
+)
 from python_tool_setup_spark.tables import load_table
 
 # Pearson r between a pair, from exact integer moments (n, sums,
@@ -108,9 +113,7 @@ def q543_partial_correlation(
     li = load_table(spark, sf_dir, "lineitem")
     v = li.select(
         F.round("l_quantity").cast("long").alias("x"),
-        F.round(100 * F.col("l_extendedprice"))
-        .cast("long")
-        .alias("y"),
+        cents(F.col("l_extendedprice")).alias("y"),
         F.round(F.col("l_discount") * 10000).cast("long").alias("z"),
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")
@@ -157,7 +160,7 @@ def _smd_expr(dd) -> str:
     )
 
 _SMD_COVS = [
-    ("acctbal_cents", "CAST(ROUND(100 * c_acctbal) AS BIGINT)"),
+    ("acctbal_cents", cents_sql("c_acctbal")),
     ("nationkey", "CAST(c_nationkey AS BIGINT)"),
     (
         "segment_is_building",

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck, dd_spark
 from python_tool_setup_spark.tables import load_table
 
 # Pearson r between half-means from exact integer moments.
@@ -79,15 +79,15 @@ def q545_split_half_reliability(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     halves = o.groupBy("o_custkey").agg(
         F.round(
-            F.avg(F.when(F.col("o_orderkey") % 2 == 1, cents))
+            F.avg(F.when(F.col("o_orderkey") % 2 == 1, cents_col))
         )
         .cast("long")
         .alias("a"),
         F.round(
-            F.avg(F.when(F.col("o_orderkey") % 2 == 0, cents))
+            F.avg(F.when(F.col("o_orderkey") % 2 == 0, cents_col))
         )
         .cast("long")
         .alias("b"),
@@ -194,11 +194,11 @@ def q546_intraclass_correlation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     per_cust = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("nj"),
-        F.sum(cents).alias("sj"),
-        F.sum(cents.cast("decimal(38,0)") * cents).alias("qj"),
+        F.sum(cents_col).alias("sj"),
+        F.sum(cents_col.cast("decimal(38,0)") * cents_col).alias("qj"),
     )
     s = per_cust.agg(
         F.count(F.lit(1)).alias("g"),

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck
 from python_tool_setup_spark.tables import load_table
 
 _ALPHA_K = 4
@@ -99,9 +99,7 @@ def q547_cronbach_alpha(
     o = load_table(spark, sf_dir, "orders")
     ranked = o.select(
         "o_custkey",
-        F.round(100 * F.col("o_totalprice")).cast("long").alias(
-            "cents"
-        ),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.row_number()
         .over(
             Window.partitionBy("o_custkey").orderBy(
@@ -229,15 +227,15 @@ def q548_bland_altman(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(100 * F.col("o_totalprice")).cast("long")
+    cents_col = cents(F.col("o_totalprice"))
     halves = o.groupBy("o_custkey").agg(
         F.round(
-            F.avg(F.when(F.col("o_orderkey") % 2 == 1, cents))
+            F.avg(F.when(F.col("o_orderkey") % 2 == 1, cents_col))
         )
         .cast("long")
         .alias("a"),
         F.round(
-            F.avg(F.when(F.col("o_orderkey") % 2 == 0, cents))
+            F.avg(F.when(F.col("o_orderkey") % 2 == 0, cents_col))
         )
         .cast("long")
         .alias("b"),

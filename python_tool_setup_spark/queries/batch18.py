@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -220,11 +221,7 @@ def q210_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             # oracle comment)
             F.round(
                 F.sum(
-                    F.round(
-                        100
-                        * F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                    ).cast("long")
+                    cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
                 ).cast("double")
                 / 100,
                 2,
@@ -282,9 +279,7 @@ def q211_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     pt = p.agg(F.min("p_type").alias("ptype"))
     pf = p.crossJoin(F.broadcast(pt)).filter(F.col("p_type") == F.col("ptype"))
     # integer-cent volumes + scale-first round: see the oracle comment
-    vol = F.round(
-        100 * (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    ).cast("long")
+    vol = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(F.broadcast(pf), li["l_partkey"] == p["p_partkey"])
         .join(o, li["l_orderkey"] == o["o_orderkey"])
@@ -358,13 +353,10 @@ def q212_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cent-quantized per row: row-local doubles are bit-identical
     # across engines; only the SUM order isn't — integer cents make
     # the aggregate order-free (see the oracle comment).
-    cents = F.round(
-        100
-        * (
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            - 0.5 * F.col("p_retailprice") * F.col("l_quantity")
-        )
-    ).cast("long")
+    cents_col = cents(
+        F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        - 0.5 * F.col("p_retailprice") * F.col("l_quantity")
+    )
     return (
         li.join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
         .join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
@@ -375,7 +367,7 @@ def q212_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
         .agg(
-            F.round(F.sum(cents).cast("double") / 100, 2).alias(
+            F.round(F.sum(cents_col).cast("double") / 100, 2).alias(
                 "profit"
             )
         )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -50,9 +51,7 @@ def q214_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = load_table(spark, sf_dir, "part")
     # integer-cent revenues + scale-first round: see the oracle comment
-    rev_c = F.round(
-        100 * (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    ).cast("long")
+    rev_c = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .agg(
@@ -115,9 +114,7 @@ def q215_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tie and the final round order-free (q212 recipe)
     revenue = li.groupBy("l_suppkey").agg(
         F.sum(
-            F.round(
-                100 * F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).cast("long")
+            cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
         ).alias("rev_c")
     )
     mx = revenue.agg(F.max("rev_c").alias("mx"))
@@ -185,12 +182,7 @@ def q216_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             # recipes)
             (
                 F.round(
-                    F.sum(
-                        F.round(100 * F.col("l_extendedprice")).cast(
-                            "long"
-                        )
-                    ).cast("double")
-                    / 7.0
+                    F.sum(cents(F.col("l_extendedprice"))).cast("double") / 7.0
                 )
                 / 100.0
             ).alias("avg_yearly")
@@ -301,11 +293,7 @@ def q218_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cent-quantized per row - order-free exact sum
             F.round(
                 F.sum(
-                    F.round(
-                        100
-                        * F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                    ).cast("long")
+                    cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
                 ).cast("double")
                 / 100,
                 2,

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.staging import staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -81,7 +82,7 @@ def q224_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     assert dpp, f"dynamic partition pruning did not engage: {plan[:400]}"
     return (
         joined.groupBy("l_year")
-        .agg(F.round(F.sum(F.round(100 * F.col("l_extendedprice")).cast("long")).cast("double") / 100, 2).alias("revenue"))
+        .agg(F.round(F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100, 2).alias("revenue"))
         .select("l_year", "revenue", F.lit(dpp).alias("dpp_engaged"))
     )
 

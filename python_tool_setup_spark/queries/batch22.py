@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (kept for parity with sibling batches)
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents_sql
 from python_tool_setup_spark.tables import load_table
 
 
@@ -100,10 +101,10 @@ def q227_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     spark.sql("DECLARE OR REPLACE stmt STRING")
     spark.sql(
-        """SET VAR stmt =
+        f"""SET VAR stmt =
            'SELECT o_orderpriority,
                    CAST(COUNT(*) AS BIGINT) AS n,
-                   ROUND(CAST(SUM(CAST(ROUND(100 * o_totalprice) AS BIGINT))
+                   ROUND(CAST(SUM({cents_sql("o_totalprice")})
                       AS DOUBLE) / 100, 2) AS total
             FROM orders WHERE o_totalprice > ?
             GROUP BY o_orderpriority ORDER BY o_orderpriority'"""

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -105,7 +106,7 @@ def q228_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.set(c, v)
     return joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum(F.round(100 * F.col("l_extendedprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+        F.round(F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100, 2).alias("total"),
     ).select("n", "total", F.lit(skewed).alias("skew_split_applied"))
 
 

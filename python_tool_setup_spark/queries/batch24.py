@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.staging import staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -77,7 +78,7 @@ def q230_global_sorted_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(staged)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
         )
         .select("n_rows", "total", F.lit(disjoint).alias("ranges_disjoint"))
     )

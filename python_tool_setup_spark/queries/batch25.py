@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -125,7 +126,7 @@ def q235_join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.round(100 * F.col("l_extendedprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100, 2).alias("total"),
         )
         .select(
             "o_orderpriority", "n", "total",

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents, cents_sql
 from python_tool_setup_spark.staging import staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -160,7 +161,7 @@ def q245_late_arriving_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         final.groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
         )
         .select(
             "c_mktsegment",
@@ -428,13 +429,13 @@ def q249_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "q249_lineitem"
     )
+    revenue_c = cents_sql("l_extendedprice", "(1 - l_discount)")
     return spark.sql(
-        """
+        f"""
         FROM q249_lineitem
         |> WHERE l_quantity > 25
         |> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n,
-                     ROUND(CAST(SUM(CAST(ROUND(100 * l_extendedprice
-                         * (1 - l_discount)) AS BIGINT)) AS DOUBLE)
+                     ROUND(CAST(SUM({revenue_c}) AS DOUBLE)
                          / 100, 2) AS revenue
            GROUP BY l_returnflag
         |> WHERE n > 100
@@ -479,9 +480,9 @@ def q249_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q250_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("q250_orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
-               ROUND(AVG(CAST(ROUND(100 * o_totalprice) AS BIGINT)))
+               ROUND(AVG({cents_sql("o_totalprice")}))
                    / 100.0 AS avg_price,
                ROUND(100 * (avg_price * 1.1)) / 100.0 AS with_uplift,
                ROUND(100 * (with_uplift - avg_price)) / 100.0

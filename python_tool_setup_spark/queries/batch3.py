@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from python_tool_setup_spark.operators.graph import pagerank, pagerank_oracle_sql
 from python_tool_setup_spark.operators.zonemap import build_zone_map, pruned_read
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 from python_tool_setup_spark.staging import staging_dir
 
@@ -92,11 +93,7 @@ def q116_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cent-quantized per row — order-free exact sum
         F.round(
             F.sum(
-                F.round(
-                    100
-                    * F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                ).cast("long")
+                cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
             ).cast("double")
             / 100,
             2,

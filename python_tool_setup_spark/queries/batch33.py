@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.staging import staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -386,7 +387,7 @@ def q267_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
         )
         .orderBy("status")
     )

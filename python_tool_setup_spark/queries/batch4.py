@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 from python_tool_setup_spark.staging import staging_dir
 
@@ -227,7 +228,7 @@ def q129_rolling_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
-        F.round(100 * F.col("value")).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
         F.unix_millis("ts").alias("ts_ms"),
     )
     w = (

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.staging import local_rows_df, staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -86,12 +87,10 @@ def q285_file_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cent-quantized per row (q212 recipe): the per-key revenue sum
         # is order-free integer cents, so it can't flip on a .005
         # knife edge between engines.
-        cents = F.round(
-            100 * (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        ).cast("long")
+        cents_col = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(cents).cast("double") / 100, 2).alias("rev"),
+            F.round(F.sum(cents_col).cast("double") / 100, 2).alias("rev"),
         ).collect()[0]
         out.append(
             (key, int(row["n"]), float(row["rev"]), files_read < files_total)

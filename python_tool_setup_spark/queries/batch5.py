@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents, cents_sql
 from python_tool_setup_spark.tables import load_table
 from python_tool_setup_spark.staging import staging_dir
 
@@ -84,10 +85,10 @@ def q130_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- q131
-_HINT_AGG_SQL = """
+_HINT_AGG_SQL = f"""
     SELECT n.n_name,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           ROUND(CAST(SUM(CAST(ROUND(100 * o.o_totalprice) AS BIGINT))
+           ROUND(CAST(SUM({cents_sql("o.o_totalprice")})
                       AS DOUBLE) / 100, 2) AS total_price
     FROM orders o
     JOIN customer c ON c.c_custkey = o.o_custkey
@@ -127,7 +128,7 @@ def q131_join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("n_name")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total_price"),
+                F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total_price"),
             )
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
@@ -264,7 +265,7 @@ def q134_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = observed.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum(F.round(100 * F.col("l_extendedprice")).cast("long")).cast("double") / 100, 2).alias("revenue"),
+        F.round(F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100, 2).alias("revenue"),
     )
     rows = agg.collect()  # one action: fills the result AND the metrics
     m = obs.get

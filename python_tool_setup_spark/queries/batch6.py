@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
-from python_tool_setup_spark.queries.exactcast import dd_duck
+from python_tool_setup_spark.queries.exactcast import cents, dd_duck
 from python_tool_setup_spark.tables import load_table
 from python_tool_setup_spark.staging import staging_dir
 
@@ -261,8 +261,8 @@ def q140_grouped_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact integer moments mirroring the oracle op-for-op: see the
     # oracle comment (decimal(38,0) plays DuckDB's HUGEINT)
     q = F.col("l_quantity").cast("long")
-    c = F.round(100 * F.col("l_extendedprice")).cast("long")
-    d = F.round(100 * F.col("l_discount")).cast("long")
+    c = cents(F.col("l_extendedprice"))
+    d = cents(F.col("l_discount"))
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(q).alias("sq"),
@@ -442,13 +442,7 @@ def q143_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_clipped_high"),
         # exact integer units + scale-first: see the oracle comment
         (
-            F.round(
-                100
-                * F.avg(
-                    F.round(100 * F.col("l_extendedprice")).cast("long")
-                )
-            )
-            / 10000.0
+            F.round(100 * F.avg(cents(F.col("l_extendedprice")))) / 10000.0
         ).alias("mean_raw"),
         (F.round(F.avg(F.round(10000 * clip).cast("long"))) / 10000.0).alias(
             "mean_winsorized"
@@ -562,7 +556,7 @@ def q145_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     live = read_with_deletion_vector(spark, base + "/t", dv_read)
     return live.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_live"),
-        F.round(F.sum(F.round(100 * F.col("l_extendedprice")).cast("long")).cast("double") / 100, 2).alias("live_price"),
+        F.round(F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100, 2).alias("live_price"),
     ).select(
         "l_returnflag",
         "n_live",

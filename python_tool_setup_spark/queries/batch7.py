@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.staging import staging_dir
 from python_tool_setup_spark.tables import load_table
 
@@ -203,7 +204,7 @@ def q155_auto_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(fact, dim, ["join_key"], auto=True)
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum(F.round(100 * F.col("l_extendedprice")).cast("long")).cast("double") / 100, 2).alias("total_price"),
+        F.round(F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100, 2).alias("total_price"),
     )
 
 

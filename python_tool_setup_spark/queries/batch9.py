@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -375,7 +376,7 @@ def q174_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping_id().cast("bigint").alias("gid"),
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
         )
         .select(
             F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 
@@ -85,9 +86,7 @@ def q402_spearman_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(o, o.o_custkey == c.c_custkey)
         .groupBy("c_custkey", "c_acctbal")
         .agg(
-            F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).alias(
-                "y"
-            )
+            F.sum(cents(F.col("o_totalprice"))).alias("y")
         )
         .select(F.col("c_acctbal").alias("x"), "y")
     )

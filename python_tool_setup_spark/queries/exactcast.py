@@ -29,12 +29,22 @@ change a value that was already correct.
 Dialect note: integer division spells `//` in DuckDB and `DIV` in
 Spark SQL; everything else is shared text.
 
+The module also owns the Spark side of the exact-cents rule the
+oracles write as ``CAST(ROUND(100 * a * b) AS BIGINT)``: multiply by
+100 first, then by each factor left to right, round half-up at scale
+0, cast to BIGINT. ``cents`` builds that Column, ``cents_sql`` the
+Spark SQL text; both keep the oracle's evaluation order, so the
+double that gets rounded is bit-identical on both sides.
+
 Pinned in tests/test_exactcast.py, which also holds the census of
 converted sites (test_no_native_double_cast_of_hugeint_columns, the
-anti-reversion lint).
+anti-reversion lint) and of exact-cents sites outside this module.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 K = 281474976710656  # 2^48
 
@@ -55,3 +65,21 @@ def dd_spark(x: str) -> str:
         f"(CAST(({x}) DIV {K} AS DOUBLE) * {K}e0"
         f" + CAST(({x}) % {K} AS DOUBLE))"
     )
+
+
+def cents(*factors) -> Column:
+    """``F.round(100 * f1 * f2 ...).cast("long")``, built left to right.
+
+    Pass the factors as the oracle writes them: ``cents(x, 1 - d)`` is
+    ``100 * x * (1 - d)``, which is a different double from
+    ``cents(x * (1 - d))`` = ``100 * (x * (1 - d))``.
+    """
+    x = 100
+    for f in factors:
+        x = x * f
+    return F.round(x).cast("long")
+
+
+def cents_sql(*factors: str) -> str:
+    """Spark SQL text of ``cents``: ``CAST(ROUND(100 * f1 ...) AS BIGINT)``."""
+    return f"CAST(ROUND({' * '.join(('100', *factors))}) AS BIGINT)"

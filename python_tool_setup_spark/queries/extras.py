@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -67,7 +68,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q45_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").withColumn(
         # cents + scale-first: see the oracle comment
-        "cents", F.round(100 * F.col("o_totalprice")).cast("long")
+        "cents", cents(F.col("o_totalprice"))
     )
     pivoted = (
         o.groupBy("o_orderpriority")

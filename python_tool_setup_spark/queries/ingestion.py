@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from python_tool_setup_spark.config import IngestionConfig
 from python_tool_setup_spark.ingestion import make_ingestion
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table, table_path
 from python_tool_setup_spark.staging import staging_dir
 
@@ -46,7 +47,7 @@ def q29_ingest_batch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
         )
         .orderBy("o_orderstatus")
     )
@@ -87,7 +88,7 @@ def q58_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
         )
     )
 
@@ -321,11 +322,7 @@ def q86_tpch_q5ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("n_name").agg(
         F.round(
             F.sum(
-                F.round(
-                    100
-                    * F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                ).cast("long")
+                cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
             ).cast("double")
             / 100,
             2,
@@ -519,7 +516,7 @@ def q106_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+        F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
     )
 
 

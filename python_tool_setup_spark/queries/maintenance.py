@@ -21,6 +21,7 @@ from python_tool_setup_spark.operators.skew import (
     salted_join,
 )
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 from python_tool_setup_spark.staging import staging_dir
 
@@ -67,7 +68,7 @@ def q61_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.round(100 * F.col("l_extendedprice")).cast("long")).cast("double") / 100, 2).alias("total_price"),
+            F.round(F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100, 2).alias("total_price"),
         )
     )
 
@@ -96,7 +97,7 @@ def q62_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_custkey").between(1000, 2000))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
             F.countDistinct("o_custkey").alias("n_custs"),
         )
     )
@@ -126,7 +127,7 @@ def q63_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(orders, cust, ["custkey"], salt_buckets=8)
     return joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+        F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
     )
 
 
@@ -184,12 +185,10 @@ def q64_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = bucketed_join(spark, lt, rt, ["o_orderkey"])
     # cent-quantized per row (the q212 recipe): integer cents make the
     # aggregate order-free — see the oracle comment.
-    cents = F.round(
-        100 * F.col("o_totalprice") * (1 - F.col("l_discount"))
-    ).cast("long")
+    cents_col = cents(F.col("o_totalprice"), 1 - F.col("l_discount"))
     return joined.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(cents).cast("double") / 100, 2).alias("net"),
+        F.round(F.sum(cents_col).cast("double") / 100, 2).alias("net"),
     )
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents, cents_sql
 from python_tool_setup_spark.tables import load_table
 from python_tool_setup_spark import operators as ops
 
@@ -78,17 +79,12 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     # cent-quantized per row (order-free exact sums) + scale-first
     # rounds for the scale-4 averages — see the oracle comments.
-    price_c = F.round(100 * F.col("l_extendedprice")).cast("long")
-    disc_c = F.round(
-        100 * F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    ).cast("long")
-    charge_c = F.round(
-        100
-        * F.col("l_extendedprice")
-        * (1 - F.col("l_discount"))
-        * (1 + F.col("l_tax"))
-    ).cast("long")
-    dpct_c = F.round(100 * F.col("l_discount")).cast("long")
+    price_c = cents(F.col("l_extendedprice"))
+    disc_c = cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
+    charge_c = cents(
+        F.col("l_extendedprice"), 1 - F.col("l_discount"), 1 + F.col("l_tax")
+    )
+    dpct_c = cents(F.col("l_discount"))
     cnt = F.count(F.lit(1))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
@@ -212,11 +208,7 @@ def q04_join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cent-quantized per row — order-free exact sum
             F.round(
                 F.sum(
-                    F.round(
-                        100
-                        * F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                    ).cast("long")
+                    cents(F.col("l_extendedprice"), 1 - F.col("l_discount"))
                 ).cast("double")
                 / 100,
                 2,
@@ -248,7 +240,7 @@ def q05_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.round(F.coalesce(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")), F.lit(0)).cast("double") / 100, 2).alias(
+            F.round(F.coalesce(F.sum(cents(F.col("o_totalprice"))), F.lit(0)).cast("double") / 100, 2).alias(
                 "total_spent"
             ),
         )
@@ -344,7 +336,7 @@ def q09_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "orders")
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(
-            F.round(F.sum(F.round(100 * F.col("o_totalprice")).cast("long")).cast("double") / 100, 2).alias("total"),
+            F.round(F.sum(cents(F.col("o_totalprice"))).cast("double") / 100, 2).alias("total"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -387,10 +379,10 @@ def q10_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q11_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderstatus, o_orderpriority,
                COUNT(*) AS n,
-               ROUND(CAST(SUM(CAST(ROUND(100 * o_totalprice) AS BIGINT))
+               ROUND(CAST(SUM({cents_sql("o_totalprice")})
                       AS DOUBLE) / 100, 2) AS total
         FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
@@ -638,13 +630,12 @@ def q19_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(
                     100
                     * F.avg(
-                        F.round(
-                            100
-                            * F.coalesce(
+                        cents(
+                            F.coalesce(
                                 F.nullif(F.col("c_acctbal"), F.lit(0.0)),
                                 F.lit(0.0),
                             )
-                        ).cast("long")
+                        )
                     )
                 )
                 / 10000.0

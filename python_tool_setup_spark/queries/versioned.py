@@ -15,6 +15,7 @@ from python_tool_setup_spark.ingestion.versioned import (
     write_version,
 )
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 from python_tool_setup_spark.staging import staging_dir
 
@@ -141,9 +142,7 @@ def q75_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # merged sum is bit-identical no matter how increments arrive
         return df.groupBy("l_returnflag").agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.sum(
-                F.round(100 * F.col("l_extendedprice")).cast("long")
-            ).alias("sum_price"),
+            F.sum(cents(F.col("l_extendedprice"))).alias("sum_price"),
             F.sum("l_quantity").alias("sum_qty"),
         )
 

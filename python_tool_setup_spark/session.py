@@ -12,6 +12,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else two thirds of physical
+    memory in whole GiB (at least 1g), capped at 32g."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32, max(1, phys * 2 // 3 // 2**30))}g"
+
 # Defaults that matter at scale. On a 1000-executor cluster the user
 # overrides shuffle partitions (or lets AQE coalesce), but the *shape* of
 # these settings — AQE, skew-join splitting, partial-aggregation pushdown,
@@ -34,11 +44,24 @@ _SCALE_DEFAULTS: dict[str, str] = {
     # Local-mode JVM heap: without this the driver (== all executors in
     # local mode) runs on Spark's 1g default and big-side joins die with
     # notEnoughMemoryToBuildAndBroadcastTable long before the machine is
-    # actually full. Only effective at JVM launch (first get_spark call);
-    # on a real cluster the deployment overrides it.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    # actually full, while a heap larger than the machine gets the
+    # process killed instead. Only effective at JVM launch (first
+    # get_spark call); on a real cluster the deployment overrides it.
+    "spark.driver.memory": _driver_memory(),
     "spark.driver.maxResultSize": "4g",
 }
+
+
+def resolve_master(master: str | None = None) -> str:
+    """Explicit arg > SPARK_MASTER env > ``local[$SPARK_GRAFT_CPUS]`` >
+    ``local[*]``. On a real cluster the deployment sets the master and
+    these local fallbacks never trigger."""
+    if master is None:
+        master = os.environ.get("SPARK_MASTER")
+    if master is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS")
+        master = f"local[{cpus}]" if cpus else "local[*]"
+    return master
 
 
 def get_spark(
@@ -46,19 +69,11 @@ def get_spark(
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-aware defaults.
-
-    ``master`` resolution order: explicit arg > SPARK_MASTER env >
-    ``local[$SPARK_GRAFT_CPUS]`` > ``local[*]``. On a real cluster the
-    deployment sets the master and these local fallbacks never trigger.
-    """
-    if master is None:
-        master = os.environ.get("SPARK_MASTER")
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
-
-    builder = SparkSession.builder.appName(app_name).master(master)
+    """Build (or reuse) a SparkSession with scale-aware defaults on the
+    master ``resolve_master(master)`` picks."""
+    builder = SparkSession.builder.appName(app_name).master(
+        resolve_master(master)
+    )
     conf = dict(_SCALE_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)

@@ -76,47 +76,32 @@ def load_or_evolve_schema(spark: SparkSession, cfg: IngestionConfig) -> StructTy
 
 
 def _merge_microbatch(cfg: IngestionConfig):
-    """foreachBatch body for streaming upsert: each micro-batch merges
-    into the path-backed target via the staged-rewrite merge_upsert.
+    """foreachBatch body for streaming upsert: each micro-batch runs the
+    batch pipeline's merge (bootstrap of an absent or data-less target,
+    schema evolution, staged rewrite).
 
     foreachBatch is at-least-once; replaying the SAME micro-batch
-    through merge_upsert is a fixpoint (matched rows are replaced with
+    through the merge is a fixpoint (matched rows are replaced with
     identical values), so the sink is effectively idempotent as long as
     merge keys are unique per batch (enforce with cfg.dedup_order)."""
-    from python_tool_setup_spark.operators.merge import merge_upsert
-    from python_tool_setup_spark.operators.relational import dedup_by_keys
-    from python_tool_setup_spark.sources.fs import replace_dir
+    from python_tool_setup_spark.ingestion.base import IngestionPipeline
+    from python_tool_setup_spark.operators.merge import merge_upsert_bucketed
 
     def apply(batch_df, batch_id: int) -> None:
-        import uuid
-
         spark = batch_df.sparkSession
-        tgt = cfg.target_path
-        if cfg.dedup_order:
-            batch_df = dedup_by_keys(batch_df, cfg.merge_keys, cfg.dedup_order)
         if cfg.merge_bucket_count:
             # O(touched buckets) per micro-batch instead of O(table)
-            from python_tool_setup_spark.operators.merge import (
-                merge_upsert_bucketed,
-            )
-
             merge_upsert_bucketed(
                 spark,
-                tgt,
+                cfg.target_path,
                 batch_df,
                 cfg.merge_keys,
                 cfg.merge_bucket_count,
                 fmt=cfg.target_format,
+                source_dedup_order=cfg.dedup_order,
             )
             return
-        if path_exists(spark, tgt):
-            target = spark.read.format(cfg.target_format).load(tgt)
-            merged = merge_upsert(target, batch_df, cfg.merge_keys)
-        else:
-            merged = batch_df
-        staging = f"{tgt.rstrip('/')}__merge_{uuid.uuid4().hex[:8]}"
-        merged.write.format(cfg.target_format).mode("overwrite").save(staging)
-        replace_dir(spark, staging, tgt)
+        IngestionPipeline(spark, cfg)._merge_into(batch_df)
 
     return apply
 

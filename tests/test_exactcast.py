@@ -17,19 +17,32 @@ These tests pin:
    integers (both sign, both engines' dialect semantics);
 3. the anti-reversion census: no oracle may cast a HUGEINT-defined
    column to DOUBLE natively — every such name must go through the
-   two-limb text (or stay in integer/comparison contexts).
+   two-limb text (or stay in integer/comparison contexts);
+4. the exact-cents helpers: ``cents`` / ``cents_sql`` build exactly the
+   inline expression, and no Spark-side site writes the rule out
+   outside exactcast.py.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import random
 import re
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
+import python_tool_setup_spark
 from python_tool_setup_spark.queries import all_queries
-from python_tool_setup_spark.queries.exactcast import K, dd_duck, dd_spark
+from python_tool_setup_spark.queries.exactcast import (
+    K,
+    cents,
+    cents_sql,
+    dd_duck,
+    dd_spark,
+)
 from tools.knife_edge_audit import _balanced
 
 # the value from the seed-2468 q505 dataset whose native cast is 1 ulp
@@ -404,3 +417,109 @@ def test_implicit_hugeint_sum_census_is_pinned():
     }
     gone = {g: c for g, c in gone.items() if c}
     assert gone == {}, f"stale waiver entries (prune the snapshot): {gone}"
+
+
+# ----------------------------------------------------------- exact cents
+def test_cents_is_the_inline_expression(spark):
+    x, d, t = F.col("x"), F.col("d"), F.col("t")
+    pairs = [
+        (cents(x), F.round(100 * x).cast("long")),
+        (cents(x, 1 - d), F.round(100 * x * (1 - d)).cast("long")),
+        (
+            cents(x, 1 - d, 1 + t),
+            F.round(100 * x * (1 - d) * (1 + t)).cast("long"),
+        ),
+        (cents(x * 1.1), F.round(100 * (x * 1.1)).cast("long")),
+        (cents(x, 1.1), F.round(100 * x * 1.1).cast("long")),
+    ]
+    for got, want in pairs:
+        assert str(got) == str(want)
+    # merging factors is a different double, so a different tree
+    assert str(cents(x * (1 - d))) != str(cents(x, 1 - d))
+
+
+def test_cents_sql_is_the_inline_text():
+    assert cents_sql("x") == "CAST(ROUND(100 * x) AS BIGINT)"
+    assert (
+        cents_sql("x", "(1 - d)")
+        == "CAST(ROUND(100 * x * (1 - d)) AS BIGINT)"
+    )
+    assert (
+        cents_sql("x", "(1 - d)", "(1 + t)")
+        == "CAST(ROUND(100 * x * (1 - d) * (1 + t)) AS BIGINT)"
+    )
+    assert cents_sql("x", "1.1") == "CAST(ROUND(100 * x * 1.1) AS BIGINT)"
+
+
+def test_cents_and_cents_sql_agree(spark):
+    # half-cent ties and values whose 100 * x lands just off a tie
+    df = spark.createDataFrame(
+        [(0.005, 0.05), (1.115, 0.1), (2.675, 0.0), (-0.125, 0.07),
+         (104949.5, 0.03), (None, 0.0)],
+        "x double, d double",
+    )
+    got = df.select(
+        cents(F.col("x"), 1 - F.col("d")).alias("a"),
+        F.expr(cents_sql("x", "(1 - d)")).alias("b"),
+    ).collect()
+    assert [r["a"] for r in got] == [r["b"] for r in got]
+
+
+def _is_cents_product(node: ast.AST) -> bool:
+    """``100 * f1 * f2 ...``: a left-nested product headed by 100."""
+    while isinstance(node, ast.BinOp) and isinstance(node.op, ast.Mult):
+        node = node.left
+        if isinstance(node, ast.Constant) and node.value == 100:
+            return True
+    return False
+
+
+def _oracle_nodes(tree: ast.AST) -> set[int]:
+    """ids of every node inside the oracle argument of ``register(...)``."""
+    out: set[int] = set()
+    for n in ast.walk(tree):
+        if (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Name)
+            and n.func.id == "register"
+        ):
+            args = n.args[1:2] + [k.value for k in n.keywords if k.arg == "oracle"]
+            for a in args:
+                out.update(id(m) for m in ast.walk(a))
+    return out
+
+
+def test_no_exact_cents_site_outside_exactcast():
+    """Every Spark-side exact-cents site goes through ``cents`` /
+    ``cents_sql``: no ``F.round(100 * ...).cast(...)`` and no
+    ``CAST(ROUND(100 *`` text outside exactcast.py, except the DuckDB
+    oracles (the reference the gates are checked against)."""
+    root = pathlib.Path(python_tool_setup_spark.__file__).parent
+    py_sites, sql_sites = [], []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "exactcast.py":
+            continue
+        tree = ast.parse(path.read_text())
+        oracle = _oracle_nodes(tree)
+        rel = path.relative_to(root)
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "cast"
+                and isinstance(n.func.value, ast.Call)
+                and isinstance(n.func.value.func, ast.Attribute)
+                and n.func.value.func.attr == "round"
+                and n.func.value.args
+                and _is_cents_product(n.func.value.args[0])
+            ):
+                py_sites.append(f"{rel}:{n.lineno}")
+            if (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and "CAST(ROUND(100 *" in n.value
+                and id(n) not in oracle
+            ):
+                sql_sites.append(f"{rel}:{n.lineno}")
+    assert py_sites == [], py_sites
+    assert sql_sites == [], sql_sites

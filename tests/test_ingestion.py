@@ -244,6 +244,30 @@ def test_merge_bootstraps_target_without_data_files(spark, src_dir, tmp_path):
     assert spark.read.parquet(str(target)).count() == 1
 
 
+def test_merge_keeps_unrelated_cache_and_refreshes_target(spark, src_dir, tmp_path):
+    target = str(tmp_path / "cached")
+    write_json(
+        f"{src_dir}/b1.json",
+        [{"device_id": i, "reading_ts": "t1", "temp": 1.0} for i in range(5)],
+    )
+    make_ingestion(spark, _merge_cfg(src_dir, target)).run()
+    dim = spark.range(3)
+    dim.createOrReplaceTempView("dim")
+    spark.catalog.cacheTable("dim")
+    cached_target = spark.read.parquet(target).cache()
+    assert cached_target.count() == 5
+    try:
+        src2 = str(tmp_path / "src2")
+        write_json(f"{src2}/b2.json", [{"device_id": 9, "reading_ts": "t1", "temp": 2.0}])
+        make_ingestion(spark, _merge_cfg(src2, target)).run()
+        assert spark.catalog.isCached("dim")
+        assert spark.read.parquet(target).count() == 6
+    finally:
+        spark.catalog.uncacheTable("dim")
+        cached_target.unpersist()
+        spark.catalog.dropTempView("dim")
+
+
 def test_post_write_optimize_failure_logs_warning(
     spark, src_dir, tmp_path, monkeypatch, caplog
 ):

@@ -230,10 +230,10 @@ def test_converted_gates_keep_the_recipe_on_both_sides():
     EXPECT = {
         # r7/r8 cents conversions (representatives of each shape)
         "q212_product_profit": ("SUM(cents)", "cents"),
-        "q64_bucketed_join": ("ROUND(100 *", "cents = F.round("),
+        "q64_bucketed_join": ("ROUND(100 *", "cents_col = cents("),
         "q01_pricing_summary": ("ROUND(100 *", "100"),
-        "q09_rollup": ("ROUND(100 * o_totalprice)", "F.round(100"),
-        "q75_incremental_agg": ("ROUND(100 * l_extendedprice)", "F.round(100"),
+        "q09_rollup": ("ROUND(100 * o_totalprice)", "cents(F.col("),
+        "q75_incremental_agg": ("ROUND(100 * l_extendedprice)", "cents(F.col("),
         "q198_exchange_reuse": ("total_c", "total_c"),
         "q127_cogrouped_pandas": ("total_price_c", "astype"),
         # exact integer moments

@@ -293,6 +293,48 @@ def test_streaming_merge_dedups_within_batch(spark, tmp_path):
     assert got == [(1, "new")]
 
 
+def test_streaming_merge_into_empty_target_dir(spark, tmp_path):
+    # a pre-created target dir with no data files is bootstrapped, as
+    # in the batch merge, instead of failing every micro-batch
+    src = str(tmp_path / "me_in")
+    target = tmp_path / "me_out"
+    target.mkdir()
+    write_json(f"{src}/f1.json", [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}])
+    cfg = _stream_cfg(
+        src,
+        str(target),
+        str(tmp_path / "me_ckpt"),
+        write_mode="merge",
+        merge_keys=["k"],
+        schema="k long, v string",
+    )
+    make_ingestion(spark, cfg).run()
+    got = {(r["k"], r["v"]) for r in spark.read.parquet(str(target)).collect()}
+    assert got == {(1, "a"), (2, "b")}
+
+
+def test_streaming_merge_keeps_new_column(spark, tmp_path):
+    # the schema registry widens the stream; the merge must widen the
+    # target with it (old rows get nulls)
+    src = str(tmp_path / "mc_in")
+    target = str(tmp_path / "mc_out")
+    cfg = _stream_cfg(
+        src,
+        target,
+        str(tmp_path / "mc_ckpt"),
+        write_mode="merge",
+        merge_keys=["id"],
+    )
+    write_json(f"{src}/f1.json", [{"id": 1, "v": "a"}])
+    make_ingestion(spark, cfg).run()
+    write_json(f"{src}/f2.json", [{"id": 2, "v": "b", "extra": "x"}])
+    make_ingestion(spark, cfg).run()
+    back = spark.read.parquet(target)
+    assert back.columns == ["id", "v", "extra"]
+    got = {r["id"]: r["extra"] for r in back.collect()}
+    assert got == {1: None, 2: "x"}
+
+
 def test_streaming_merge_bucketed_target(spark, tmp_path):
     from python_tool_setup_spark.operators.merge import read_bucketed_target
 

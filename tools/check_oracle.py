@@ -4,10 +4,12 @@ Runs every registered query on Spark and its oracle on DuckDB at the
 given sf dir, compares row count, sorted-column-name schema, and an
 order-insensitive value comparison. Usage:
 
-    python tools/check_oracle.py [--vanilla] [sf_dir] [query_name ...]
+    python tools/check_oracle.py [--vanilla] <sf_dir> [query_name ...]
 
 ``--vanilla`` runs on a bare SparkSession (the driver's own session
-shape) — use it FIRST when reproducing a driver red.
+shape, on the master ``session.resolve_master`` picks: SPARK_MASTER,
+else ``local[$SPARK_GRAFT_CPUS]``, else ``local[*]``) — use it FIRST
+when reproducing a driver red.
 
 The comparison semantics live in ``python_tool_setup_spark.testing``
 (shared with tests/test_oracle_parity.py): both engines fetched via
@@ -20,6 +22,7 @@ violations even when values happen to compare equal.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -28,22 +31,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from python_tool_setup_spark.operators.blockrank import release_pins
 from python_tool_setup_spark.queries import all_queries
-from python_tool_setup_spark.session import get_spark
+from python_tool_setup_spark.session import get_spark, resolve_master
 from python_tool_setup_spark.testing import compare_query, oracle_connection
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--vanilla"]
-    vanilla = "--vanilla" in sys.argv[1:]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
-    if vanilla:
+    ap = argparse.ArgumentParser(description="Spark vs DuckDB-oracle parity.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("gates", nargs="*")
+    ap.add_argument("--vanilla", action="store_true",
+                    help="bare SparkSession, no engine configs")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
+    only = set(args.gates)
+    if args.vanilla:
         # the driver's own session shape: no engine configs at all —
         # reproduce driver-side divergences with THIS first (the
         # engine session can mask session-conf-dependent behavior)
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[16]").getOrCreate()
+        spark = SparkSession.builder.master(resolve_master()).getOrCreate()
     else:
         spark = get_spark("oracle-check")
     con = oracle_connection(sf_dir)
@@ -60,10 +67,6 @@ def main() -> int:
             failures.append(name)
             continue
         finally:
-            # harness-side eager cleanup for persist-mode pins (the
-            # gate adapter defers release to the NEXT registry call);
-            # compare_query has collected by now, so this fires after
-            # materialization. No-op under default localCheckpoint.
             release_pins()
         if mismatch is not None:
             print(f"FAIL {name}: {mismatch}")
