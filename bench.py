@@ -53,7 +53,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from python_tool_setup_spark.operators.blockrank import release_pins
 from python_tool_setup_spark.queries import all_queries
 from python_tool_setup_spark.session import get_spark
 
@@ -173,10 +172,7 @@ def main() -> None:
         # 2-3x in round 3 (driver bench) while the same gates run 2-4x
         # faster in a fresh session (PLANS.md variance table). Dropping
         # caches per gate and nudging the JVM every 40 gates keeps the
-        # per-gate numbers close to their isolated cost. release_pins
-        # is the harness-side eager cleanup the deferred-release gate
-        # adapter relies on (no-op under default localCheckpoint mode).
-        release_pins()
+        # per-gate numbers close to their isolated cost.
         spark.catalog.clearCache()
         if (i + 1) % 40 == 0:
             spark._jvm.System.gc()
@@ -221,7 +217,6 @@ def main() -> None:
                 continue
             timings[name] = min(timings[name], settled)
             second_pass.append(name)
-            release_pins()
             spark.catalog.clearCache()
         probes.append(probe(spark))
 

@@ -26,11 +26,10 @@ strategies:
   can change it. Blocks are equal-width in the value domain, not
   equal-count; a skewed leading key degrades balance but never
   correctness (every current caller's leading key is near-uniform or
-  histogram-bounded; a caller with a hot leading value opts into the
-  pinned range layout below via ``persist=True``, whose partitioner
-  keys on the FULL sort tuple and therefore splits the hot value by
-  the tiebreakers — both properties are pinned by planted-skew tests
-  in tests/test_blockrank.py). NULL leading keys go to the
+  histogram-bounded; the pinned range layout below keys its
+  partitioner on the FULL sort tuple and therefore splits a hot value
+  by the tiebreakers — both properties are pinned by planted-skew
+  tests in tests/test_blockrank.py). NULL leading keys go to the
   first block under ``asc`` (Spark sorts NULLS FIRST ascending) and
   the last block under ``desc`` (NULLS LAST); NaN float/double keys
   go to the opposite end (Spark sorts NaN greater than any value).
@@ -65,19 +64,9 @@ default and ``cache_input=True``). Pass ``cache_input=False`` only
 when the caller has already materialized the input some other way or
 accepts trivial-scan re-reads; ``True`` forces pinning a trivial scan.
 
-Pin strategy: eager ``localCheckpoint`` by default (ContextCleaner
-reclaims it on GC — no CacheManager leak), which is NOT recomputable:
-executor loss / dynamic-allocation decommission fails the job. Set
-``spark.python_tool_setup.blockrank.pin=persist`` on such clusters to
-use replicated disk persistence instead — BUT note that persist is
-recomputable BY DESIGN, so a pin whose purpose is to freeze
-nondeterministic rows (rand()/sample/range-exchange sampling) cannot
-safely use it: those pins upgrade to a RELIABLE checkpoint when a
-checkpoint dir is configured, else warn and keep localCheckpoint
-(fails loudly instead of silently corrupting prefixes — see
-:func:`pin`). Persisted pins are tracked; call :func:`release_pins`
-after materializing results to free the CacheManager across chained
-calls.
+Every pin is an eager ``localCheckpoint`` (see :func:`pin`). Each
+:func:`prefix_agg` call logs its input-pin decision and the reason at
+DEBUG level.
 
 Exactness: sums here are over integers (the repo's engine-exact
 posture quantizes before summing), so regrouping the addition is
@@ -95,7 +84,7 @@ caller plausibly owns).
 
 from __future__ import annotations
 
-import warnings
+import logging
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -117,6 +106,8 @@ _NUMERIC_TYPES = (
 )
 
 _FLOAT_TYPES = (T.FloatType, T.DoubleType)
+
+_log = logging.getLogger(__name__)
 
 # Analyzed-plan node names whose re-execution is cheap AND
 # deterministic: a pruned scan plus row-local transforms. Anything
@@ -218,31 +209,20 @@ def _plan_text(df: DataFrame) -> str | None:
         return None
 
 
-def _has_nondeterminism(df: DataFrame) -> bool:
-    """True when the analyzed plan contains a nondeterministic
-    expression (or can't be inspected): re-executing such a plan can
-    yield DIFFERENT rows, so its pin must be non-recomputable."""
+def _pin_reason(df: DataFrame) -> str | None:
+    """Why the width path must pin ``df``, or None when every node of
+    the analyzed plan is a deterministic, cheap-to-re-execute
+    scan/filter/project shape AND no expression in the plan is
+    nondeterministic (a Project over rand()/uuid()/... is node-trivial
+    but NOT re-execution-safe). On any doubt (unparseable plan, unknown
+    node) returns a reason so the caller pins — wrong answer in that
+    direction only costs one materialization, never correctness."""
     plan = _plan_text(df)
     if plan is None:
-        return True
-    lowered = plan.lower()
-    return any(tok in lowered for tok in _NONDETERMINISTIC_TOKENS)
-
-
-def _is_trivial(df: DataFrame) -> bool:
-    """True when every node of the analyzed plan is a deterministic,
-    cheap-to-re-execute scan/filter/project shape AND no expression in
-    the plan is nondeterministic (a Project over rand()/uuid()/... is
-    node-trivial but NOT re-execution-safe). On any doubt (unparseable
-    plan, unknown node) returns False so the caller pins — wrong
-    answer in that direction only costs one materialization, never
-    correctness."""
-    plan = _plan_text(df)
-    if plan is None:
-        return False
+        return "uninspectable plan"
     lowered = plan.lower()
     if any(tok in lowered for tok in _NONDETERMINISTIC_TOKENS):
-        return False
+        return "nondeterministic plan"
     for line in plan.splitlines():
         stripped = line.lstrip(" +-:")
         if not stripped:
@@ -251,134 +231,42 @@ def _is_trivial(df: DataFrame) -> bool:
         if not node:
             continue
         if not any(node == t or node.startswith(t) for t in _TRIVIAL_NODES):
-            return False
-    return True
+            return f"non-trivial plan: {node}"
+    return None
 
 
-# DataFrames pinned via persist mode, awaiting release_pins(). (local
-# checkpoints need no tracking: the ContextCleaner reclaims them on GC.)
-_PERSISTED_PINS: list[DataFrame] = []
-
-_PIN_CONF = "spark.python_tool_setup.blockrank.pin"
-_PIN_MODES = ("localCheckpoint", "persist")
-
-
-def pin(df: DataFrame, nondeterministic: bool | None = None) -> DataFrame:
-    """Materialize ONCE and truncate lineage.
-
-    Default strategy — RDD-backed eager ``localCheckpoint``: storage
-    is dropped by the ContextCleaner when the result is garbage-
-    collected (unlike ``Dataset.persist``, which leaks in the
-    CacheManager until an explicit unpersist). CAVEAT: a local
-    checkpoint lives ONLY on its executors and is NOT recomputable —
-    executor loss or dynamic-allocation decommission fails the job (a
-    documented Spark restriction). On clusters with dynamic allocation
-    or preemptible executors set
-    ``spark.python_tool_setup.blockrank.pin=persist`` to use replicated
-    disk persistence instead (executor-loss-tolerant, tracked for
-    :func:`release_pins`).
-
-    ``nondeterministic=True`` declares that the pin exists to FREEZE a
-    plan whose re-execution can yield different rows (rand()/sample/
-    range-exchange sampling). The default (``None``) auto-detects by
-    inspecting the analyzed plan (:func:`_has_nondeterminism`) — the
-    same safety the prefix machinery applies internally — so a direct
-    caller pinning a rand()/sample-derived plan under the persist conf
-    cannot silently opt into a recomputable pin (ADVICE r10). The
-    inspection only runs under persist mode (localCheckpoint pins are
-    never recomputable, so the distinction is moot there and the
-    plan-text round-trip is skipped). Persist cannot honor that
-    contract —
-    it is recomputable by design, so a 2-replica loss silently
-    re-derives DIFFERENT rows — therefore such pins upgrade to a
-    RELIABLE checkpoint when ``sparkContext.setCheckpointDir`` has
-    been called (recomputation-free AND loss-tolerant), else warn and
-    keep localCheckpoint: failing loudly on executor loss beats
-    silently corrupting prefixes.
-
-    Any value of the conf other than ``localCheckpoint``/``persist``
-    raises (a typo must not silently defeat the operator on the very
-    clusters that set it)."""
-    mode = "localCheckpoint"
-    try:
-        mode = df.sparkSession.conf.get(_PIN_CONF, "localCheckpoint")
-    except Exception:
-        pass
-    if mode not in _PIN_MODES:
-        raise ValueError(
-            f"{_PIN_CONF}={mode!r}: expected one of {_PIN_MODES} "
-            "(case-sensitive)"
-        )
-    if mode == "persist":
-        if nondeterministic is None:
-            nondeterministic = _has_nondeterminism(df)
-        if nondeterministic:
-            ckpt_dir = None
-            try:
-                ckpt_dir = df.sparkSession.sparkContext.getCheckpointDir()
-            except Exception:
-                pass
-            if ckpt_dir:
-                return df.checkpoint(eager=True)
-            warnings.warn(
-                f"{_PIN_CONF}=persist requested, but this pin freezes a "
-                "NONDETERMINISTIC plan and persist is recomputable "
-                "(block loss would silently re-derive different rows); "
-                "no checkpoint dir is set, falling back to "
-                "localCheckpoint (fails loudly on executor loss). Call "
-                "sparkContext.setCheckpointDir() to get a reliable, "
-                "loss-tolerant pin instead.",
-                stacklevel=2,
-            )
-            return df.localCheckpoint(eager=True)
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY_2)
-        out.count()  # eager, like localCheckpoint(eager=True)
-        _PERSISTED_PINS.append(out)
-        return out
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ONCE and truncate lineage with an eager
+    ``localCheckpoint``. Its storage is RDD-backed, so the
+    ContextCleaner drops it when the result is garbage-collected
+    (``Dataset.persist`` would sit in the CacheManager until an
+    explicit unpersist). A local checkpoint lives only on its executors
+    and is NOT recomputable: executor loss or dynamic-allocation
+    decommission fails the job (a documented Spark restriction)."""
     return df.localCheckpoint(eager=True)
 
 
 def release_pins() -> int:
-    """Unpersist every persist-mode pin created so far and return how
-    many were released. Call after the downstream result is
-    materialized (e.g. between chained prefix_agg gates) so persist
-    mode doesn't grow the CacheManager across a long sweep."""
-    n = 0
-    while _PERSISTED_PINS:
-        df = _PERSISTED_PINS.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-# Backwards-compatible internal alias (pre-round-8 name).
-_pin = pin
+    """Release nothing and return 0. Pins are local checkpoints, which
+    the ContextCleaner reclaims, so no pin is ever tracked; the
+    function stays because ``perfbench/gates.py`` still calls it."""
+    return 0
 
 
 def _range_blocked(df: DataFrame, sort: list, n_blocks: int) -> DataFrame:
     """Pinned range layout: equal-count blocks from the sampled range
     exchange, pinned because the sampling is NOT stable across
     physical executions (and exchange reuse has been observed to miss
-    intermittently under AQE, silently corrupting the prefixes) —
-    i.e. this pin is ALWAYS nondeterminism-triggered, so persist mode
-    is never allowed to serve it (see :func:`pin`).
+    intermittently under AQE, silently corrupting the prefixes).
 
     Skew note: the range partitioner keys on the FULL sort tuple, so a
     hot LEADING value (one key owning most rows) is still split across
-    blocks by the tiebreaker columns — this path (``persist=True``) is
-    the opt-in remedy when the width-bucket default would put most
-    rows in one block (guide §2.5; planted-skew property tests in
-    tests/test_blockrank.py)."""
+    blocks by the tiebreaker columns (guide §2.5; planted-skew property
+    tests in tests/test_blockrank.py)."""
     return pin(
         df.repartitionByRange(n_blocks, *sort).withColumn(
             "_blk", F.spark_partition_id()
-        ),
-        nondeterministic=True,
+        )
     )
 
 
@@ -387,7 +275,6 @@ def prefix_agg(
     order: list[tuple],
     aggs: dict[str, tuple],
     n_blocks: int = 32,
-    persist: bool = False,
     cache_input: bool | None = None,
 ) -> DataFrame:
     """Attach EXCLUSIVE ordered-prefix aggregates to every row.
@@ -402,10 +289,6 @@ def prefix_agg(
     row in the order: sum/count give 0 on an empty prefix, min/max give
     NULL (matching ``rowsBetween(unboundedPreceding, -1)``).
 
-    ``persist=True`` forces the pinned-range-layout path even for
-    numeric leading keys (useful when equal-count blocks matter more
-    than avoiding the materialization).
-
     ``cache_input``: lineage contract — see the module docstring.
     None (default) pins non-trivial inputs once via eager
     localCheckpoint; True always pins; False never does (caller
@@ -415,16 +298,26 @@ def prefix_agg(
     column names.
     """
     sort = _sort_exprs(order)
-    proxy = None if persist else _proxy(df, order)
-    if proxy is not None and not _is_persisted(df) and (
-        cache_input is True
-        or (cache_input is None and not _is_trivial(df))
-    ):
-        # width path reads the input three times (bounds, totals,
-        # join-back) — pin it once. The pinned-range path below reads
-        # it exactly ONCE into the checkpointed blocked layout, so
-        # pinning there would be a pure second materialization.
-        df = pin(df, nondeterministic=_has_nondeterminism(df))
+    proxy = _proxy(df, order)
+    # The width path reads the input three times (bounds, totals,
+    # join-back) — pin it once. The pinned-range path reads it exactly
+    # ONCE into the checkpointed blocked layout, so pinning there would
+    # be a pure second materialization.
+    if proxy is None:
+        decision, reason = "range layout", "leading key has no numeric proxy"
+    elif _is_persisted(df):
+        decision, reason = "skipped", "input already persisted"
+    elif cache_input is False:
+        decision, reason = "skipped", "cache_input=False"
+    elif cache_input is True:
+        decision, reason = "pinned", "cache_input=True"
+    else:
+        reason = _pin_reason(df)
+        decision = "pinned" if reason else "skipped"
+        reason = reason or "trivial scan"
+    _log.debug("prefix_agg: %s (%s)", decision, reason)
+    if decision == "pinned":
+        df = pin(df)
     if proxy is not None:
         # Deterministic width buckets: _blk is a pure expression of
         # the row against a broadcast min/max — immune to exchange
@@ -517,7 +410,6 @@ def prefix_rank(
     order: list[tuple],
     alias: str = "rk",
     n_blocks: int = 32,
-    persist: bool = False,
     cache_input: bool | None = None,
 ) -> DataFrame:
     """1-based ``ROW_NUMBER() OVER (ORDER BY ...)`` equivalent under a
@@ -525,11 +417,6 @@ def prefix_rank(
     See :func:`prefix_agg` for the block-assignment determinism and
     input-lineage (``cache_input``) contracts."""
     out = prefix_agg(
-        df,
-        order,
-        {alias: ("count", None)},
-        n_blocks,
-        persist=persist,
-        cache_input=cache_input,
+        df, order, {alias: ("count", None)}, n_blocks, cache_input=cache_input
     )
     return out.withColumn(alias, (F.col(alias) + 1).cast("long"))

@@ -33,50 +33,11 @@ class Query:
 _REGISTRY: dict[str, Query] = {}
 
 
-def _released(fn: Callable[[SparkSession, str], DataFrame]):
-    """Release persist-mode blockrank pins from the PREVIOUS gate at
-    entry to the next one (deferred release).
-
-    Under ``spark.python_tool_setup.blockrank.pin=persist`` every pin
-    lands in the CacheManager and stays there until an explicit
-    ``release_pins()``; a chained caller that forgets leaks cache
-    across a long sweep (r8 ADVICE). The r8 fix released in a finally
-    at gate RETURN — but that fires before the returned DataFrame is
-    ever materialized, so under persist mode every gate paid the eager
-    pin cost and then recomputed the pinned subplan (up to ~4^k for k
-    chained prefix links — the q323 incident class) at action time
-    (r9 ADVICE). Deferring the release to the NEXT registry call keeps
-    gate N's pins cached through gate N's materialization, which
-    harnesses perform between registry calls, while still bounding the
-    CacheManager to one gate's pins across a 551-gate sweep. Harnesses
-    wanting eager cleanup after their own action call ``release_pins()``
-    directly (bench.py does, per gate). Value-safe either way by the
-    pin contract: persist-tracked pins are always DETERMINISTIC plans
-    (nondeterministic pins upgrade to a reliable checkpoint or
-    localCheckpoint inside ``blockrank.pin``), so a post-release read
-    recomputes the same rows. Under the default localCheckpoint mode
-    both the deferred release and the bound are no-ops (nothing is
-    tracked; the ContextCleaner reclaims checkpoints on GC).
-    """
-    import functools
-
-    from python_tool_setup_spark.operators.blockrank import release_pins
-
-    @functools.wraps(fn)
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        release_pins()  # previous gate's pins — materialized by now
-        return fn(spark, sf_dir)
-
-    return run
-
-
 def register(name: str, oracle: str | None, doc: str = ""):
     """Decorator: register a (spark, sf_dir) -> DataFrame callable."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
-        _REGISTRY[name] = Query(
-            name=name, spark_fn=_released(fn), oracle=oracle, doc=doc
-        )
+        _REGISTRY[name] = Query(name=name, spark_fn=fn, oracle=oracle, doc=doc)
         return fn
 
     return wrap

@@ -93,6 +93,7 @@ def q406_hierarchical_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents")
             .over(Window.partitionBy("r_name"))
             .alias("r_cents"),
+            # bounded-domain: rev table: one row per nation
             F.sum("cents")
             .over(Window.partitionBy(F.lit(1)))
             .alias("g_cents"),

@@ -83,6 +83,7 @@ def q454_ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second daily instantiation), then pin: c0 and both lag sides
     # re-reference centered, and unpinned each re-ran the events scan
     # + groupBy (14 Exchange / 7 scans in the r10-before plan).
+    # bounded-domain: daily table: one row per event day
     wall = Window.partitionBy(F.lit(1))
     centered = pin(
         daily.select(

@@ -306,6 +306,7 @@ def q476_benjamini_hochberg_fdr(
     # global totals as window sums over the ≤|nations|-row grp table
     # (q294 shape): the old tot aggregate re-ran the 3-table join a
     # second time (14 Exchange in the r10-before plan)
+    # bounded-domain: grp table: one row per nation
     wall = Window.partitionBy(F.lit(1))
     z = grp.select(
         "*",

@@ -86,10 +86,12 @@ _TERM_NANO_EXPR = (
     "log10(1+1/d); fabricated or truncated columns don't): first "
     "digit extracted from the exact cents integer's string form "
     "(no float log, so no 10^k boundary hazard), counted by one "
-    "map-side-combined groupBy; a 9-row digit spine left-joined "
-    "so absent digits count 0; expectations ppm-quantized from "
-    "LOG10 once, chi-square terms computed from exact integers "
-    "with plain-multiplication squaring and nano-quantized "
+    "map-side-combined groupBy; a 9-row digit spine full-outer-"
+    "joined so absent digits count 0 and the total counts every "
+    "observed digit (a sub-cent price has first digit 0); "
+    "expectations ppm-quantized from LOG10 once, chi-square "
+    "terms computed from exact integers with plain-"
+    "multiplication squaring and nano-quantized "
     "per-digit BEFORE the 9-term sum (FP-order-free), verdict vs "
     "the df=8 5% critical value in integer nanos. Scale: one "
     "aggregate over the column, 9-row metadata after — the audit "
@@ -121,17 +123,20 @@ def q477_benford_first_digit(
     # instead of separate aggregate branches — the old
     # tot-broadcast + chi-broadcast shape re-instantiated the orders
     # aggregation four times in one plan (4 scans in the r10 corpus).
-    # Every first digit of a positive price is 1-9, so summing the
-    # coalesced per-digit counts over the spine IS the grand total.
+    # The full outer join keeps digits outside 1-9 (a price below half
+    # a cent has first digit 0) long enough to count them in the grand
+    # total, as the oracle's tot does; only the spine's digits remain.
+    # bounded-domain: digit table: the 9-row spine plus observed digits
     w1 = Window.partitionBy(F.lit(1))
     terms = (
-        spine.join(F.broadcast(obs), "d", "left")
+        spine.join(obs, "d", "full")
         .select(
             "d",
             F.coalesce("cnt", F.lit(0)).alias("cnt"),
             "exp_ppm",
         )
         .withColumn("n", F.sum("cnt").over(w1))
+        .where(F.col("exp_ppm").isNotNull())
     )
     scored = terms.select(
         "*", F.expr(_TERM_NANO_EXPR).alias("term_nano")

@@ -112,6 +112,7 @@ def q515_mutual_information(
         "n_xy",
         F.sum("n_xy").over(Window.partitionBy("x")).alias("nx"),
         F.sum("n_xy").over(Window.partitionBy("y")).alias("ny"),
+        # bounded-domain: ≤15 (priority, status) cells
         F.sum("n_xy").over(Window.partitionBy(F.lit(1))).alias("n"),
         F.row_number()
         .over(Window.partitionBy("x").orderBy("y"))

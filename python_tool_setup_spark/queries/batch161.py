@@ -95,10 +95,6 @@ def q533_mann_whitney_u(
     # and the rank aggregate all read this same materialization,
     # instead of prefix_agg pinning a private copy while tie3
     # re-runs the pooled scan + groupBy from lineage.
-    # Routed through blockrank.pin (not a raw localCheckpoint) so the
-    # cluster-level spark.python_tool_setup.blockrank.pin conf applies
-    # uniformly; the histogram plan is deterministic (scan + groupBy),
-    # so persist mode is a safe recomputable pin here.
     hist = pin(
         pooled.groupBy("cents").agg(
             F.count(F.lit(1)).alias("c"),

@@ -259,10 +259,6 @@ def q536_kruskal_wallis(
     # prefix_agg (cache_input=False), tie3, and the rank join-back
     # all read this same materialization instead of prefix_agg
     # pinning a private copy while tie3 re-runs the scan + groupBy.
-    # Routed through blockrank.pin so the cluster-level
-    # spark.python_tool_setup.blockrank.pin conf applies uniformly;
-    # the histogram plan is deterministic (scan + groupBy), so persist
-    # mode is a safe recomputable pin here.
     hist = pin(pooled.groupBy("cents").agg(F.count(F.lit(1)).alias("c")))
     cum = prefix_agg(
         hist, [("cents", "asc")], {"bef": ("sum", "c")},

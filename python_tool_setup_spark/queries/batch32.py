@@ -201,6 +201,7 @@ def q261_psi_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(~F.col("is_new"), 1).otherwise(0)).alias("oc"),
         F.sum(F.when(F.col("is_new"), 1).otherwise(0)).alias("nc"),
     )
+    # bounded-domain: bucket table: at most _PSI_BUCKETS rows (grouped by b)
     w1 = Window.partitionBy(F.lit(1))
     j = base.select(
         "b",

@@ -102,6 +102,7 @@ def q294_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nxy",
         F.sum("nxy").over(Window.partitionBy("x")).alias("nx"),
         F.sum("nxy").over(Window.partitionBy("y")).alias("ny"),
+        # bounded-domain: ≤15 (priority, status) cells
         F.sum("nxy")
         .over(Window.partitionBy(F.lit(1)))
         .alias("n"),

@@ -201,6 +201,7 @@ def q311_multiclass_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # macro/micro totals as global window sums over the tiny
     # per-class table (q294 shape) — no second instantiation
+    # bounded-domain: per-class table: one row per class (lang)
     wall = Window.partitionBy(F.lit(1))
     return per_class.select(
         "*",

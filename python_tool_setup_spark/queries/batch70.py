@@ -64,6 +64,7 @@ def q344_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # take the grand total and the floor-quota leftover as window sums
     # over the tiny table instead of scalar crossJoins (q294 shape).
     strata = pin(d.groupBy("lang").agg(F.count(F.lit(1)).alias("n")))
+    # bounded-domain: strata table: one row per lang
     wall = Window.partitionBy(F.lit(1))
     quotas = strata.select(
         "lang", "n", F.sum("n").over(wall).alias("t")

@@ -170,6 +170,7 @@ def q347_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(~F.col("is_new"), 1).otherwise(0)).alias("oc"),
         F.sum(F.when(F.col("is_new"), 1).otherwise(0)).alias("nc"),
     )
+    # bounded-domain: bucket table: at most _JS_BUCKETS rows (grouped by b)
     w1 = Window.partitionBy(F.lit(1))
     pq = j.select(
         "b",

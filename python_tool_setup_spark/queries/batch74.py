@@ -188,6 +188,7 @@ def q353_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ap_micro"),
         )
     )
+    # bounded-domain: per-lang table: one row per lang
     w1 = Window.partitionBy(F.lit(1))
     return per_lang.withColumn(
         "map_micro",

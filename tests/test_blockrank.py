@@ -183,10 +183,7 @@ def test_no_cachemanager_leak(spark):
     """ADVICE r5: the pinned-range path must not register anything in
     the CacheManager (Dataset.persist leaks there until an explicit
     unpersist; localCheckpoint storage is ContextCleaner-managed)."""
-    import python_tool_setup_spark.operators.blockrank as br
-
     jcm = spark._jsparkSession.sharedState().cacheManager()
-    br.release_pins()
     spark.catalog.clearCache()
     assert jcm.isEmpty()
     df = spark.createDataFrame(
@@ -246,16 +243,16 @@ def test_prefix_agg_cached_input_consistent(spark):
 
 def test_nondeterministic_trivial_shape_is_pinned(spark):
     """ADVICE r6 (medium): a Project containing rand()/uuid()/... is
-    node-trivial but NOT re-execution-safe — _is_trivial must return
-    False so the default contract pins it, and the width path's three
+    node-trivial but NOT re-execution-safe — _pin_reason must give a
+    reason so the default contract pins it, and the width path's three
     passes must all see the SAME frozen rows."""
-    from python_tool_setup_spark.operators.blockrank import _is_trivial
+    from python_tool_setup_spark.operators.blockrank import _pin_reason
 
     det = spark.range(100).select("id", (F.col("id") * 3).alias("v"))
-    assert _is_trivial(det), "plain scan+project should stay trivial"
+    assert _pin_reason(det) is None, "plain scan+project should stay trivial"
     nondet = spark.range(100).select("id", F.rand(0).alias("x"))
-    assert not _is_trivial(nondet), "rand() projection must pin"
-    assert not _is_trivial(
+    assert _pin_reason(nondet), "rand() projection must pin"
+    assert _pin_reason(
         spark.range(10).select(F.shuffle(F.array(F.lit(1), F.lit(2))).alias("a"))
     )
 
@@ -302,200 +299,48 @@ def test_persisted_input_never_repinned(spark, monkeypatch):
         df.unpersist()
 
 
-def test_pin_strategy_persist_conf(spark):
-    """ADVICE r6 (low): on clusters where localCheckpoint's
-    non-recomputability is unacceptable (dynamic allocation), the pin
-    strategy is configurable to replicated-disk persist; semantics
-    must be identical."""
-    import python_tool_setup_spark.operators.blockrank as br
+def test_pin_is_an_eager_local_checkpoint(spark):
+    """pin() truncates lineage to an RDD scan, registers nothing in the
+    CacheManager, and keeps the input's rows."""
+    from python_tool_setup_spark.operators.blockrank import pin
 
-    key = "spark.python_tool_setup.blockrank.pin"
-    spark.conf.set(key, "persist")
-    try:
-        df = (
-            spark.range(400)
-            .select((F.col("id") % 37).alias("k"), F.col("id").alias("v"))
-            .groupBy("k")
-            .agg(F.sum("v").alias("s"))
-        )
-        got = br.prefix_agg(df, [("k", "asc")], {"p": ("sum", "s")})
-        w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
-        want = df.withColumn("p", F.coalesce(F.sum("s").over(w), F.lit(0)))
-        assert sorted(got.collect()) == sorted(want.collect())
-    finally:
-        spark.conf.unset(key)
-        spark.catalog.clearCache()
-
-
-def test_pin_conf_validation(spark):
-    """ADVICE r7 (low): a typo'd pin mode must raise, not silently
-    fall back to localCheckpoint on the very clusters that set it."""
-    import pytest
-
-    import python_tool_setup_spark.operators.blockrank as br
-
-    key = "spark.python_tool_setup.blockrank.pin"
-    for bad in ("Persist", "PERSIST", "chekpoint"):
-        spark.conf.set(key, bad)
-        try:
-            with pytest.raises(ValueError, match="blockrank.pin"):
-                br.pin(spark.range(3))
-        finally:
-            spark.conf.unset(key)
-
-
-def test_persist_mode_refuses_nondeterministic_pin(spark):
-    """ADVICE r7 (medium): persist is recomputable BY DESIGN, so a pin
-    that exists to freeze nondeterministic rows must not be served by
-    it — without a checkpoint dir it must warn and localCheckpoint
-    (nothing in the CacheManager), with one it must take a reliable
-    checkpoint (recomputation-free AND loss-tolerant)."""
-    import os
-    import warnings as w
-
-    import python_tool_setup_spark.operators.blockrank as br
-
-    key = "spark.python_tool_setup.blockrank.pin"
     jcm = spark._jsparkSession.sharedState().cacheManager()
-    # clean entry so the CacheManager assertions are never vacuous
-    # (ADVICE r9 low: a was_empty guard skipped them silently under
-    # unlucky test ordering)
-    br.release_pins()
     spark.catalog.clearCache()
-    assert jcm.isEmpty()
-    spark.conf.set(key, "persist")
-    try:
-        nondet = spark.range(200).select("id", F.rand(1).alias("x"))
-        with w.catch_warnings(record=True) as caught:
-            w.simplefilter("always")
-            out = br.pin(nondet, nondeterministic=True)
-        assert out.count() == 200
-        assert any("recomputable" in str(c.message) for c in caught), (
-            "no warning on persist-mode nondeterministic pin"
-        )
-        assert jcm.isEmpty(), "nondeterministic pin landed in CacheManager"
-
-        # Deterministic pin under the same conf: no warning, persisted,
-        # tracked, released by release_pins().
-        det = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
-        with w.catch_warnings(record=True) as caught:
-            w.simplefilter("always")
-            pinned = br.pin(det)
-        assert not caught
-        assert pinned.storageLevel.useDisk
-        assert br.release_pins() >= 1
-        assert not pinned.storageLevel.useDisk
-
-        # With a checkpoint dir: reliable checkpoint, silent, no cache.
-        ckpt = "/tmp/blockrank_ckpt_test"
-        spark.sparkContext.setCheckpointDir(ckpt)
-        with w.catch_warnings(record=True) as caught:
-            w.simplefilter("always")
-            out2 = br.pin(nondet, nondeterministic=True)
-        assert out2.count() == 200
-        assert not caught, "reliable checkpoint path should not warn"
-        assert any(os.scandir(ckpt)), "no checkpoint files written"
-        assert jcm.isEmpty()
-    finally:
-        spark.conf.unset(key)
-        spark.catalog.clearCache()
+    df = (
+        spark.range(300)
+        .groupBy((F.col("id") % 7).alias("k"))
+        .agg(F.sum("id").alias("s"))
+    )
+    out = pin(df)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert plan.lstrip().startswith("LogicalRDD"), plan
+    assert jcm.isEmpty(), "pin registered a CacheManager entry"
+    assert sorted(out.collect()) == sorted(df.collect())
 
 
-def test_pinned_range_path_never_persists_under_persist_conf(spark):
-    """The range-exchange pin is ALWAYS nondeterminism-triggered (the
-    sampling is unstable across executions), so persist mode must not
-    serve it even when configured."""
-    import warnings as w
+def test_pin_decision_is_logged(spark, caplog):
+    """Each prefix_agg call logs whether it pinned its input and why."""
+    import logging
 
-    import python_tool_setup_spark.operators.blockrank as br
+    logger = "python_tool_setup_spark.operators.blockrank"
 
-    key = "spark.python_tool_setup.blockrank.pin"
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    br.release_pins()
-    spark.catalog.clearCache()
-    assert jcm.isEmpty()
-    spark.conf.set(key, "persist")
-    try:
-        df = spark.createDataFrame(
-            [(str(i % 9), i) for i in range(500)], "g string, v long"
-        )
-        with w.catch_warnings(record=True):
-            w.simplefilter("always")
-            out = br.prefix_agg(
-                df, [("g", "asc"), ("v", "asc")], {"p": ("count", None)}
-            )
-            n = out.count()
-        assert n == 500
-        # the INPUT pin may persist (deterministic local rows are
-        # trivial -> no pin at all here); the range-layout pin must not
-        br.release_pins()
-        assert jcm.isEmpty(), "range-layout pin leaked into CacheManager"
-    finally:
-        spark.conf.unset(key)
-        spark.catalog.clearCache()
+    def decisions(df, order, aggs):
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger=logger):
+            prefix_agg(df, order, aggs)
+        return [r.getMessage() for r in caplog.records if r.name == logger]
 
-
-def test_gate_adapter_defers_persist_pin_release(spark):
-    """ADVICE r9 (medium): the r8 finally-release fired at gate RETURN,
-    before the returned DataFrame was ever materialized — so persist
-    mode paid every pin's eager materialization and then recomputed
-    the pinned subplan at action time (the q323 chained-recompute
-    class). The adapter now defers: gate N's pins stay cached through
-    gate N's materialization and are released at entry to gate N+1,
-    bounding the CacheManager to one gate's pins across a sweep.
-
-    Pins to assert (cache cleared at entry, so all unconditional):
-    1. after a persist-pinning gate returns, its pins ARE in the
-       CacheManager (available to the caller's action);
-    2. the action completes and the pins are still cached after it;
-    3. calling the NEXT registry gate releases them;
-    4. an explicit harness-side release_pins() empties the cache, and
-       the released result still recomputes the same row count (pin
-       contract: persist-tracked plans are deterministic)."""
-    import python_tool_setup_spark.operators.blockrank as br
-    from python_tool_setup_spark.queries import all_queries
-
-    key = "spark.python_tool_setup.blockrank.pin"
-    jcm = spark._jsparkSession.sharedState().cacheManager()
-    # clean entry regardless of test order (ADVICE r9 low: the old
-    # was_empty guard made these assertions vacuous after any test
-    # left a cached relation behind)
-    br.release_pins()
-    spark.catalog.clearCache()
-    assert jcm.isEmpty()
-    qs = all_queries()
-    spark.conf.set(key, "persist")
-    try:
-        df1 = qs["q533_mann_whitney_u"].spark_fn(spark, SF_DIR)
-        assert not jcm.isEmpty(), (
-            "q533: persist pins were released before the caller could "
-            "materialize (the r9-advice recompute regression)"
-        )
-        assert br._PERSISTED_PINS, "no tracked persist pins after q533"
-        pinned = br._PERSISTED_PINS[0]
-        assert pinned.storageLevel.useDisk
-        n1 = df1.count()
-        assert n1 > 0
-        assert pinned.storageLevel.useDisk, (
-            "q533: pins evaporated during the gate's own action"
-        )
-
-        # next registry call releases the previous gate's pins
-        df2 = qs["q475_rle_encoding_advisor"].spark_fn(spark, SF_DIR)
-        assert not pinned.storageLevel.useDisk, (
-            "q475 entry did not release q533's pins — CacheManager "
-            "would grow across a 551-gate sweep"
-        )
-        assert df2.count() > 0
-
-        # harness-side eager cleanup, then post-release recompute
-        br.release_pins()
-        assert jcm.isEmpty(), "release_pins left CacheManager entries"
-        assert df1.count() == n1, "post-release recompute changed rows"
-    finally:
-        spark.conf.unset(key)
-        br.release_pins()
-        spark.catalog.clearCache()
+    grouped = spark.range(200).groupBy((F.col("id") % 11).alias("v")).count()
+    assert decisions(grouped, [("v", "asc")], {"p": ("sum", "count")}) == [
+        "prefix_agg: pinned (non-trivial plan: Aggregate)"
+    ]
+    assert decisions(
+        spark.range(50), [("id", "asc")], {"p": ("count", None)}
+    ) == ["prefix_agg: skipped (trivial scan)"]
+    strings = spark.range(50).select(F.col("id").cast("string").alias("s"))
+    assert decisions(strings, [("s", "asc")], {"p": ("count", None)}) == [
+        "prefix_agg: range layout (leading key has no numeric proxy)"
+    ]
 
 
 def _skewed_df(spark, n=2000, hot_frac=0.7, seed=13):
@@ -535,19 +380,22 @@ def test_skewed_leading_key_width_path_correct(spark):
 
 
 def test_skewed_leading_key_range_path_balances(spark):
-    """persist=True (pinned range layout) is the documented skew
-    opt-in: the range partitioner keys on the FULL sort tuple, so the
-    hot leading value is split across blocks by the id tiebreaker —
-    block fan-out stays bounded — and the prefix stays exact."""
+    """A string leading key takes the pinned range layout: the range
+    partitioner keys on the FULL sort tuple, so the hot leading value
+    is split across blocks by the id tiebreaker — block fan-out stays
+    bounded — and the prefix stays exact. The zero-padded key ``ks``
+    sorts exactly like ``k``."""
     from python_tool_setup_spark.operators.blockrank import (
         _range_blocked,
         _sort_exprs,
     )
 
-    df = _skewed_df(spark)
+    df = _skewed_df(spark).withColumn(
+        "ks", F.lpad(F.col("k").cast("string"), 2, "0")
+    )
     n_blocks = 8
     blocked = _range_blocked(
-        df, _sort_exprs([("k", "asc"), ("id", "asc")]), n_blocks
+        df, _sort_exprs([("ks", "asc"), ("id", "asc")]), n_blocks
     )
     sizes = {
         r["_blk"]: r["n"]
@@ -563,10 +411,9 @@ def test_skewed_leading_key_range_path_balances(spark):
 
     got = prefix_agg(
         df,
-        [("k", "asc"), ("id", "asc")],
+        [("ks", "asc"), ("id", "asc")],
         {"pre": ("sum", "v")},
         n_blocks=n_blocks,
-        persist=True,
     )
     w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, -1)
     want = df.select(

@@ -1664,6 +1664,37 @@ def test_benford_audit_invariants(spark):
     assert rows[0]["benford_ok"] == (chi <= 15_507_310_000)
 
 
+
+def test_benford_total_counts_first_digit_zero(spark, tmp_path):
+    """A price below half a cent has cents 0, so first digit 0: the
+    total behind obs_ppm and the chi-square terms must still count it,
+    as the oracle's total over every observed digit does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_tool_setup_spark.queries import all_queries
+    from python_tool_setup_spark.tables import TABLE_NAMES, table_path
+    from python_tool_setup_spark.testing import (
+        compare_query,
+        oracle_connection,
+    )
+
+    sf = str(tmp_path)
+    for name in TABLE_NAMES:
+        if name != "orders":
+            os.symlink(table_path(SF_DIR, name), table_path(sf, name))
+    orders = pq.read_table(table_path(SF_DIR, "orders"))
+    zero = orders.slice(0, 1).to_pylist()[0]
+    zero.update(o_orderkey=10**9, o_totalprice=0.0)
+    pq.write_table(
+        pa.concat_tables(
+            [orders, pa.Table.from_pylist([zero], schema=orders.schema)]
+        ),
+        table_path(sf, "orders"),
+    )
+    q = all_queries()["q477_benford_first_digit"]
+    assert compare_query(spark, oracle_connection(sf), q, sf) is None
+
 def test_zone_map_depth_bounds(spark):
     from python_tool_setup_spark.queries.batch133 import (
         q478_zone_map_clustering_depth,

@@ -29,7 +29,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from python_tool_setup_spark.operators.blockrank import release_pins
 from python_tool_setup_spark.queries import all_queries
 from python_tool_setup_spark.session import get_spark, resolve_master
 from python_tool_setup_spark.testing import compare_query, oracle_connection
@@ -67,7 +66,9 @@ def main() -> int:
             failures.append(name)
             continue
         finally:
-            release_pins()
+            # gates that persist()/cache() without unpersisting must
+            # not keep their CacheManager entries for the whole sweep
+            spark.catalog.clearCache()
         if mismatch is not None:
             print(f"FAIL {name}: {mismatch}")
             failures.append(name)

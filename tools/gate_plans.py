@@ -286,9 +286,8 @@ def walk_gates(
 ) -> dict[str, object]:
     """Call ``visit(spark, query)`` for each named gate (default: every
     registered gate, sorted) and return {gate: result}; a gate that
-    raises maps to its exception. Each gate's pins and cache are
-    released before the next one is built."""
-    from python_tool_setup_spark.operators.blockrank import release_pins
+    raises maps to its exception. Each gate's cache is cleared before
+    the next one is built."""
     from python_tool_setup_spark.queries import all_queries
     from python_tool_setup_spark.session import get_spark
 
@@ -301,7 +300,6 @@ def walk_gates(
         except Exception as exc:  # noqa: BLE001
             out[name] = exc
         finally:
-            release_pins()
             spark.catalog.clearCache()
     return out
 
@@ -400,8 +398,6 @@ def lint(sf_dir: str, only: list[str] | None = None):
 
 
 def profile(sf_dir: str, only: list[str] | None) -> None:
-    from python_tool_setup_spark.operators.blockrank import release_pins
-
     def warm(spark, q):
         q.spark_fn(spark, sf_dir).limit(1).write.format("noop").mode(
             "overwrite"
@@ -420,7 +416,6 @@ def profile(sf_dir: str, only: list[str] | None) -> None:
             t0 = time.time()
             q.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             t_execs.append(round(time.time() - t0, 3))
-            release_pins()
             spark.catalog.clearCache()
         return {
             "gate": q.name,
