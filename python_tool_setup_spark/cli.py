@@ -8,13 +8,15 @@ Usage:
     spark-ingest --source /data/raw.json --target /lake/t [--format json]
                  [--mode append|overwrite|merge] [--merge-keys k1,k2]
                  [--partition-by c1,c2] [--database db --table t]
-                 [--dry-run]
+                 [--streaming --checkpoint /lake/_ckpt/t] [--dry-run]
 """
 
 from __future__ import annotations
 
 import argparse
 import sys
+
+from python_tool_setup_spark.config import IngestionConfig
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -54,24 +56,28 @@ def _csv(v: str | None) -> list[str] | None:
     return [s.strip() for s in v.split(",")] if v else None
 
 
-def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
-    from python_tool_setup_spark.config import IngestionConfig
-
-    cfg = IngestionConfig(
+def config_from_args(args: argparse.Namespace) -> IngestionConfig:
+    """The IngestionConfig a parsed ``spark-ingest`` command line asks for."""
+    return IngestionConfig(
         source_path=args.source,
         source_format=args.source_format,
         database=args.database,
         table=args.table,
         target_path=args.target,
         write_mode=args.write_mode,
-        ingest_mode="streaming" if args.streaming else "batch",
+        ingest_mode="stream" if args.streaming else "batch",
         merge_keys=_csv(args.merge_keys),
         partition_by=_csv(args.partition_by),
         zorder_by=_csv(args.zorder_by),
         checkpoint_path=args.checkpoint_path,
+        dry_run=args.dry_run,
     )
-    if args.dry_run:
+
+
+def main(argv: list[str] | None = None) -> int:
+    cfg = config_from_args(build_parser().parse_args(argv))
+    cfg.validate()
+    if cfg.dry_run:
         print(cfg.plan())
         return 0
     from python_tool_setup_spark.ingestion import make_ingestion

@@ -75,6 +75,8 @@ class IngestionConfig:
             raise IngestionError("write_mode='merge' requires merge_keys")
         if self.ingest_mode == "stream" and not self.checkpoint_path:
             raise IngestionError("ingest_mode='stream' requires checkpoint_path")
+        if self.ingest_mode == "stream" and self.write_mode == "overwrite":
+            raise IngestionError("write_mode='overwrite' is batch-only")
         if (
             self.ingest_mode == "stream"
             and self.write_mode == "merge"

@@ -3,7 +3,7 @@
 Parity with the reference's ``BaseIngestion.run()`` flow
 (framework.py:87-118): validate → plan (dry-run short-circuit) →
 namespace DDL → read → write (append / overwrite / merge | stream) →
-table registration + metadata → post-write optimize. The execution is
+table registration → post-write optimize → table metadata. The execution is
 all DataFrame-API; storage is Parquet-first with a Delta backend that
 activates automatically when delta-spark is importable (the build env
 does not ship it — SURVEY.md §7).
@@ -14,12 +14,12 @@ Scale notes:
 - merge without Delta is a staged rewrite: the merged relation, one full
   outer join of target and source on the merge keys (the target is
   scanned once; both sides shuffle on the keys, so the rewrite spreads
-  over every core and AQE sizes the output files), is written to a
-  staging dir, then promoted with a metadata-only rename. At 100 TB the
-  right backend is Delta/Iceberg (file-level rewrite); the staged
-  rewrite is the dependency-free fallback with identical semantics.
-  A target that holds data but cannot be read fails the merge; only an
-  absent or data-less target is bootstrapped by a plain write.
+  over every core and AQE sizes the output files), is committed by
+  ``overwrite_staged``, which optimize shares. At 100 TB the right
+  backend is Delta/Iceberg (file-level rewrite); the staged rewrite is
+  the dependency-free fallback with identical semantics. A target that
+  holds data but cannot be read fails the merge; only an absent or
+  data-less target is bootstrapped by a plain write.
 - streaming uses the file-source + availableNow trigger (OSS equivalent
   of Auto Loader's incremental listing, framework.py:177-209) with a
   schema registry for evolution.
@@ -36,7 +36,8 @@ from python_tool_setup_spark.config import IngestionConfig, IngestionError
 from python_tool_setup_spark.operators.merge import merge_upsert
 from python_tool_setup_spark.operators.relational import dedup_by_keys
 from python_tool_setup_spark.sources.files import read_batch
-from python_tool_setup_spark.sources.fs import has_data_files, replace_dir
+from python_tool_setup_spark.sources.fs import delete_path, has_data_files
+from python_tool_setup_spark.sources.fs import replace_dir, restore_backup
 
 try:  # optional Delta backend (not installed in the build env)
     from delta.tables import DeltaTable  # type: ignore
@@ -47,6 +48,39 @@ except Exception:  # noqa: BLE001
     _HAS_DELTA = False
 
 _log = logging.getLogger(__name__)
+
+
+def _writer(df: DataFrame, fmt: str, mode: str, partition_by: list[str] | None):
+    writer = df.write.format(fmt).mode(mode)
+    return writer.partitionBy(*partition_by) if partition_by else writer
+
+
+def overwrite_staged(
+    spark: SparkSession, df: DataFrame, fmt: str, path: str | None = None,
+    table: str | None = None, partition_by: list[str] | None = None,
+) -> None:
+    """Overwrite a target with ``df``, which may read that same target.
+
+    A path target (bare or an external table) is written to a staging
+    dir beside it and promoted with ``replace_dir``; then only the
+    target's cached plans are refreshed, other caches stay. A managed
+    table is staged under the warehouse and overwritten from the staged
+    copy, because Spark refuses to overwrite a table the plan reads."""
+    if path:
+        staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
+        _writer(df, fmt, "overwrite", partition_by).save(staging)
+        replace_dir(spark, staging, path)
+        spark.catalog.refreshByPath(path)
+        if table:
+            # external table metadata may cache old files
+            spark.sql(f"REFRESH TABLE {table}")
+        return
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "file:/tmp/spark-warehouse")
+    staging = f"{warehouse.rstrip('/')}/__merge_staging_{uuid.uuid4().hex[:8]}"
+    df.write.format(fmt).mode("overwrite").save(staging)
+    copy = _writer(spark.read.format(fmt).load(staging), fmt, "overwrite", partition_by)
+    copy.option("overwriteSchema", "true").saveAsTable(table)
+    delete_path(spark, staging)
 
 
 class IngestionPipeline:
@@ -80,9 +114,10 @@ class IngestionPipeline:
             df = self.read()
             self.write(df)
         self._register_table()
-        self._apply_table_metadata()
         if cfg.optimize_after_write:
             self._optimize_post_write()
+        # last: rewriting a managed table recreates it without metadata
+        self._apply_table_metadata()
         return plan
 
     # ------------------------------------------------------------ read --
@@ -99,18 +134,17 @@ class IngestionPipeline:
 
     # ----------------------------------------------------------- write --
     def write(self, df: DataFrame) -> None:
-        cfg = self.cfg
-        if cfg.write_mode == "merge":
+        if self.cfg.write_mode == "merge":
             self._merge_into(df)
-            return
-        writer = df.write.format(cfg.target_format).mode(cfg.write_mode)
-        if cfg.partition_by:
-            writer = writer.partitionBy(*cfg.partition_by)
-        if cfg.write_mode == "overwrite":
-            # keep evolving sources writable over existing targets
-            writer = writer.option("overwriteSchema", "true")
         else:
-            writer = writer.option("mergeSchema", "true")
+            self._save(df, self.cfg.write_mode)
+
+    def _save(self, df: DataFrame, mode: str) -> None:
+        cfg = self.cfg
+        # keep evolving sources writable over existing targets
+        evolve = "overwriteSchema" if mode == "overwrite" else "mergeSchema"
+        writer = _writer(df, cfg.target_format, mode, cfg.partition_by)
+        writer = writer.option(evolve, "true")
         if cfg.target_path:
             writer.save(cfg.target_path)
         else:
@@ -121,9 +155,11 @@ class IngestionPipeline:
         """The merge target, or None when there is none yet: a missing
         table, or a path that holds no data files. A target with data
         that cannot be read raises — bootstrapping over it would
-        replace the table with the source batch."""
+        replace the table with the source batch. A commit interrupted
+        mid-promote is finished first, so its old rows are found."""
         cfg = self.cfg
         if cfg.target_path:
+            restore_backup(self.spark, cfg.target_path)
             if not has_data_files(self.spark, cfg.target_path):
                 return None
             return self.spark.read.format(cfg.target_format).load(cfg.target_path)
@@ -139,82 +175,33 @@ class IngestionPipeline:
         cfg = self.cfg
         if cfg.dedup_order:
             source = dedup_by_keys(source, cfg.merge_keys, cfg.dedup_order)
-        if _HAS_DELTA and cfg.target_format == "delta":
-            self._merge_delta(source)
-            return
         target = self._target_df()
         if target is None:
             # bootstrap: first merge == plain write (framework.py:214-223)
-            self.write_initial(source)
-            return
-        # schema evolution: new source columns appear, old rows get nulls
-        merged = merge_upsert(
-            target, source, keys=cfg.merge_keys, evolve_schema=True
-        )
-        self._staged_overwrite(merged)
-
-    def _merge_delta(self, source: DataFrame) -> None:
-        cfg = self.cfg
-        target = self._target_df()
-        if target is None:
-            self.write_initial(source)
-            return
-        dt = (
-            DeltaTable.forPath(self.spark, cfg.target_path)
-            if cfg.target_path
-            else DeltaTable.forName(self.spark, cfg.full_table_name)
-        )
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in cfg.merge_keys)
-        (
-            dt.alias("t")
-            .merge(source.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def write_initial(self, df: DataFrame) -> None:
-        cfg = self.cfg
-        writer = df.write.format(cfg.target_format).mode("overwrite")
-        if cfg.partition_by:
-            writer = writer.partitionBy(*cfg.partition_by)
-        if cfg.target_path:
-            writer.save(cfg.target_path)
-        else:
-            writer.saveAsTable(cfg.full_table_name)
-
-    def _staged_overwrite(self, df: DataFrame) -> None:
-        """Safely overwrite a target we are also reading from: write the
-        new relation to a staging dir, then metadata-only promote."""
-        cfg = self.cfg
-        if cfg.target_path:
-            staging = f"{cfg.target_path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-            writer = df.write.format(cfg.target_format).mode("overwrite")
-            if cfg.partition_by:
-                writer = writer.partitionBy(*cfg.partition_by)
-            writer.save(staging)
-            replace_dir(self.spark, staging, cfg.target_path)
-            # re-read cached plans of the target only; other caches stay
-            self.spark.catalog.refreshByPath(cfg.target_path)
-            if cfg.table:
-                # external table metadata may cache old files
-                self.spark.sql(f"REFRESH TABLE {cfg.full_table_name}")
-        else:
-            # Managed table: Spark refuses to overwrite a table being read,
-            # so materialize to a scratch path first, then rewrite from it.
-            from python_tool_setup_spark.sources.fs import delete_path
-
-            warehouse = self.spark.conf.get(
-                "spark.sql.warehouse.dir", "file:/tmp/spark-warehouse"
+            self._save(source, "overwrite")
+        elif _HAS_DELTA and cfg.target_format == "delta":
+            dt = (
+                DeltaTable.forPath(self.spark, cfg.target_path)
+                if cfg.target_path
+                else DeltaTable.forName(self.spark, cfg.full_table_name)
             )
-            staging = f"{warehouse.rstrip('/')}/__merge_staging_{uuid.uuid4().hex[:8]}"
-            df.write.format(cfg.target_format).mode("overwrite").save(staging)
-            staged = self.spark.read.format(cfg.target_format).load(staging)
-            writer = staged.write.format(cfg.target_format).mode("overwrite")
-            if cfg.partition_by:
-                writer = writer.partitionBy(*cfg.partition_by)
-            writer.option("overwriteSchema", "true").saveAsTable(cfg.full_table_name)
-            delete_path(self.spark, staging)
+            cond = " AND ".join(f"t.{k} <=> s.{k}" for k in cfg.merge_keys)
+            (
+                dt.alias("t")
+                .merge(source.alias("s"), cond)
+                .whenMatchedUpdateAll()
+                .whenNotMatchedInsertAll()
+                .execute()
+            )
+        else:
+            # schema evolution: new source columns appear, old rows get nulls
+            merged = merge_upsert(
+                target, source, keys=cfg.merge_keys, evolve_schema=True
+            )
+            overwrite_staged(
+                self.spark, merged, cfg.target_format, cfg.target_path,
+                cfg.full_table_name, cfg.partition_by,
+            )
 
     # ------------------------------------------------------- streaming --
     def _run_stream(self) -> None:

@@ -13,17 +13,18 @@ delta-spark we implement the *intent*:
   space-filling curve only beats this for multi-column point lookups;
   documented divergence (SURVEY.md §7 hard-items #4).
 
-Both are staged rewrites promoted by a metadata-only rename, so a
-failure mid-rewrite never corrupts the live table.
+Both rewrites commit through ``ingestion.base.overwrite_staged``, the
+commit path merge uses too: a path target is staged beside itself and
+promoted by a metadata-only rename, so a failure mid-rewrite never
+corrupts the live table; a managed table is staged under the warehouse
+and overwritten from the staged copy.
 """
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import SparkSession
 
-from python_tool_setup_spark.sources.fs import replace_dir
+from python_tool_setup_spark.ingestion.base import overwrite_staged
 
 _TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -43,12 +44,9 @@ def optimize_layout(
         z = f" ZORDER BY ({', '.join(zorder_by)})" if zorder_by else ""
         spark.sql(f"OPTIMIZE {name}{z}")
         return
-    if path:
-        df = spark.read.format(fmt).load(path)
-    elif table:
-        df = spark.table(table)
-    else:
+    if not (path or table):
         raise ValueError("optimize_layout needs a path or table")
+    df = spark.read.format(fmt).load(path) if path else spark.table(table)
 
     n = max(1, _estimate_num_files(spark, df, target_file_bytes))
     if zorder_by:
@@ -56,33 +54,19 @@ def optimize_layout(
     else:
         # size-based compaction: estimate partition count from input bytes
         df = df.repartition(n)
-
-    if path:
-        staging = f"{path.rstrip('/')}__optimize_{uuid.uuid4().hex[:8]}"
-        writer = df.write.format(fmt).mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(staging)
-        replace_dir(spark, staging, path)
-        spark.catalog.clearCache()
-        if table:
-            spark.sql(f"REFRESH TABLE {table}")
-    else:
-        tmp = f"__optimize_{uuid.uuid4().hex[:8]}"
-        df.createOrReplaceTempView(tmp)
-        spark.sql(
-            f"CREATE OR REPLACE TABLE {table} USING {fmt} "
-            f"AS SELECT * FROM {tmp}"
-        )
-        spark.catalog.dropTempView(tmp)
+    overwrite_staged(spark, df, fmt, path=path, table=table, partition_by=partition_by)
 
 
 def _estimate_num_files(spark, df, target_file_bytes: int) -> int:
     try:
         size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return int(min(max(1, size // target_file_bytes), 100_000))
+        # a size at the default means unknown (e.g. a partitioned catalog
+        # table without statistics): fall back to one file per core
+        if size < spark._jsparkSession.sessionState().conf().defaultSizeInBytes():
+            return int(min(max(1, size // target_file_bytes), 100_000))
     except Exception:  # noqa: BLE001
-        return spark.sparkContext.defaultParallelism
+        pass
+    return spark.sparkContext.defaultParallelism
 
 
 # ------------------------------------------------- true Z-order (Morton) ----

@@ -12,9 +12,9 @@ AND-joined key-equality condition (reference ``framework.py:211-231``,
 source row — duplicate-key target rows each survive as one updated
 copy (SQL/Delta MERGE preserves target multiplicity; found by the
 hypothesis property suite).
-Delta raises on multiple source rows matching one target row; we expose
-``source_dedup_order`` to make the source unique per key first
-(deterministically), or raise like Delta when duplicates remain.
+Delta raises on multiple source rows matching one target row;
+``check_duplicate_source_keys=True`` raises the same. Callers make the
+source unique per key first with ``relational.dedup_by_keys``.
 
 Scale: one full outer join scans the target once and shuffles both
 sides once on the merge keys, spreading the rewrite over every core
@@ -25,10 +25,16 @@ rows are inserted and null-key target rows are kept.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from python_tool_setup_spark.operators.relational import dedup_by_keys
+from python_tool_setup_spark.sources.fs import (
+    delete_path, list_files, path_exists, replace_dir,
+)
 
 
 class MergeKeyError(ValueError):
@@ -48,7 +54,6 @@ def merge_upsert(
     target: DataFrame,
     source: DataFrame,
     keys: Sequence[str],
-    source_dedup_order: Sequence | None = None,
     check_duplicate_source_keys: bool = False,
     evolve_schema: bool = False,
 ) -> DataFrame:
@@ -60,8 +65,6 @@ def merge_upsert(
     column (null for pre-existing rows), then the merge proceeds on the
     widened schema. The source must carry every target column.
     """
-    from python_tool_setup_spark.operators.relational import dedup_by_keys
-
     keys = list(keys)
     if evolve_schema:
         missing = [c for c in target.columns if c not in source.columns]
@@ -75,13 +78,11 @@ def merge_upsert(
             for f in source.schema.fields if f.name not in target.columns
         })
 
-    if source_dedup_order is not None:
-        source = dedup_by_keys(source, keys, source_dedup_order)
-    elif check_duplicate_source_keys:
+    if check_duplicate_source_keys:
         if source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count():
             raise MergeKeyError(
                 f"source has multiple rows per merge key {keys}; "
-                "pass source_dedup_order or pre-aggregate"
+                "dedup it (dedup_by_keys) or pre-aggregate"
             )
 
     # Source values ride under names with the marker's prefix, which no
@@ -168,14 +169,6 @@ def merge_upsert_bucketed(
     the staging write and before any promote — a commit-hook seam for
     metrics and for deterministic conflict tests.
     """
-    import uuid
-
-    from python_tool_setup_spark.sources.fs import (
-        list_files,
-        path_exists,
-        replace_dir,
-    )
-
     def _fingerprint(bucket: int):
         bdir = f"{target_path}/{BUCKET_COL}={bucket}"
         if not path_exists(spark, bdir):
@@ -183,6 +176,8 @@ def merge_upsert_bucketed(
         return sorted((name, size) for name, size, _ in list_files(spark, bdir))
 
     keys = list(keys)
+    if source_dedup_order is not None:
+        source = dedup_by_keys(source, keys, source_dedup_order)
     src = source.withColumn(BUCKET_COL, bucket_of(keys, num_buckets))
     touched = sorted(
         r[0] for r in src.select(BUCKET_COL).distinct().collect()
@@ -195,22 +190,13 @@ def merge_upsert_bucketed(
             .option("basePath", target_path)
             .load([f"{target_path}/{BUCKET_COL}={b}" for b in existing])
         )
-        merged = merge_upsert(
-            tgt, src.select(*tgt.columns), keys,
-            source_dedup_order=source_dedup_order,
-        )
+        merged = merge_upsert(tgt, src.select(*tgt.columns), keys)
     else:
         merged = src
-        if source_dedup_order is not None:
-            from python_tool_setup_spark.operators.relational import dedup_by_keys
-
-            merged = dedup_by_keys(merged, keys, source_dedup_order)
     staging = f"{target_path.rstrip('/')}__mstage_{uuid.uuid4().hex[:8]}"
     merged.write.partitionBy(BUCKET_COL).mode("overwrite").format(fmt).save(staging)
     if on_staged is not None:
         on_staged()
-    from python_tool_setup_spark.sources.fs import delete_path
-
     conflicts = [b for b in touched if _fingerprint(b) != read_state[b]]
     if conflicts:
         delete_path(spark, staging)
@@ -261,8 +247,6 @@ def merge_apply_cdc(
     Callers quarantining bad batches must catch around the ACTION
     (write/collect), not around this call.
     """
-    from python_tool_setup_spark.operators.relational import dedup_by_keys
-
     keys = list(keys)
     # Fail fast on unknown or NULL ops: the anti-join removes EVERY
     # changed key from the target, so a typo'd op ('update', 'insert',

@@ -58,18 +58,52 @@ def has_data_files(spark: SparkSession, path: str) -> bool:
     return False
 
 
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise IOError(f"rename {src} -> {dst} failed")
+
+
+def _with_backup(spark: SparkSession, final: str):
+    """(fs, final, backup): the backup is the hidden sibling that
+    ``replace_dir`` parks the old ``final`` under, which Spark's file
+    index skips even when ``final`` is a ``k=v`` partition dir."""
+    fpath = _jpath(spark, final)
+    backup = _jvm(spark).org.apache.hadoop.fs.Path(
+        fpath.getParent(), f".{fpath.getName()}.replaced"
+    )
+    return hadoop_fs(spark, final), fpath, backup
+
+
+def restore_backup(spark: SparkSession, final: str) -> None:
+    """Finish a ``replace_dir`` that stopped between its renames: drop
+    the backup if ``final`` is in place, else rename the backup back."""
+    fs, fpath, bpath = _with_backup(spark, final)
+    if fs.exists(bpath):
+        if fs.exists(fpath):
+            fs.delete(bpath, True)
+        else:
+            _rename(fs, bpath, fpath)
+
+
 def replace_dir(spark: SparkSession, staging: str, final: str) -> None:
-    """Atomically-ish promote ``staging`` to ``final``: delete final,
-    rename staging. Metadata-only; no data rewrite."""
-    fs = hadoop_fs(spark, final)
-    fpath, spath = _jpath(spark, final), _jpath(spark, staging)
-    if fs.exists(fpath):
-        fs.delete(fpath, True)
-    parent = fpath.getParent()
-    if parent is not None and not fs.exists(parent):
-        fs.mkdirs(parent)
-    if not fs.rename(spath, fpath):
-        raise IOError(f"rename {staging} -> {final} failed")
+    """Promote ``staging`` to ``final`` with metadata-only renames: the
+    old ``final`` moves aside to a backup, ``staging`` moves in, the
+    backup is dropped. A failed promote renames the backup back; after
+    a crash between the renames, ``restore_backup`` does. Safe where a
+    directory rename is atomic (local, HDFS, ABFS with a namespace)."""
+    restore_backup(spark, final)
+    fs, fpath, bpath = _with_backup(spark, final)
+    had_final = fs.exists(fpath)
+    if had_final:
+        _rename(fs, fpath, bpath)
+    fs.mkdirs(fpath.getParent())
+    try:
+        _rename(fs, _jpath(spark, staging), fpath)
+    except Exception:
+        if had_final:
+            _rename(fs, bpath, fpath)
+        raise
+    fs.delete(bpath, True)
 
 
 def put_object(spark: SparkSession, path: str, data: bytes | str) -> None:

@@ -5,7 +5,8 @@ from __future__ import annotations
 
 import pytest
 
-from python_tool_setup_spark.cli import build_parser, main
+from python_tool_setup_spark.cli import build_parser, config_from_args, main
+from python_tool_setup_spark.config import IngestionError
 
 
 def test_dry_run_prints_plan(capsys):
@@ -37,6 +38,15 @@ def test_dry_run_prints_plan(capsys):
     assert "table analytics.events (external @ s3a://lake/silver/events)" in out
 
 
+def test_streaming_dry_run_validates_and_prints_plan(capsys):
+    argv = ["--source", "/s", "--target", "/t", "--streaming"]
+    assert main([*argv, "--checkpoint", "/c", "--dry-run"]) == 0
+    assert "mode         : stream / append" in capsys.readouterr().out
+    # dry runs validate too: a stream without a checkpoint is refused
+    with pytest.raises(IngestionError, match="checkpoint"):
+        main([*argv, "--dry-run"])
+
+
 def test_source_is_required():
     with pytest.raises(SystemExit):
         build_parser().parse_args(["--target", "/t"])
@@ -50,7 +60,6 @@ def test_mode_choices_are_validated():
 def test_cli_batch_roundtrip(spark, sf_dir, tmp_path):
     """End-to-end: the CLI path (minus its own get_spark) through the
     same IngestionConfig it builds."""
-    from python_tool_setup_spark.config import IngestionConfig
     from python_tool_setup_spark.ingestion import make_ingestion
     from python_tool_setup_spark.tables import table_path
 
@@ -67,11 +76,5 @@ def test_cli_batch_roundtrip(spark, sf_dir, tmp_path):
             "overwrite",
         ]
     )
-    cfg = IngestionConfig(
-        source_path=args.source,
-        source_format=args.source_format,
-        target_path=args.target,
-        write_mode=args.write_mode,
-    )
-    make_ingestion(spark, cfg).run()
+    make_ingestion(spark, config_from_args(args)).run()
     assert spark.read.parquet(target).count() == 5

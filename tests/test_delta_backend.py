@@ -131,7 +131,7 @@ def test_merge_delta_bootstrap_skips_merge(spark, fake_delta, monkeypatch, tmp_p
     pipe = LocalIngestion(spark, cfg)
     monkeypatch.setattr(pipe, "_target_df", lambda: None)
     written = {}
-    monkeypatch.setattr(pipe, "write_initial", lambda df: written.update(n=df.count()))
+    monkeypatch.setattr(pipe, "_save", lambda df, mode: written.update(n=df.count()))
     src = spark.createDataFrame([(1,), (2,)], "id long")
     pipe._merge_into(src)
     assert written == {"n": 2}

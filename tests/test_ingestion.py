@@ -66,6 +66,15 @@ def test_config_validation():
         IngestionConfig(source_path="/s", target_path="/t", ingest_mode="stream").validate()
     with pytest.raises(IngestionError, match="table / target_path"):
         IngestionConfig(source_path="/s").validate()
+    # a stream only appends or merges; it must not pass as an overwrite
+    with pytest.raises(IngestionError, match="batch-only"):
+        IngestionConfig(
+            source_path="/s",
+            target_path="/t",
+            ingest_mode="stream",
+            checkpoint_path="/c",
+            write_mode="overwrite",
+        ).validate()
 
 
 def test_dry_run_writes_nothing(spark, src_dir, tmp_path):
@@ -268,6 +277,79 @@ def test_merge_keeps_unrelated_cache_and_refreshes_target(spark, src_dir, tmp_pa
         spark.catalog.dropTempView("dim")
 
 
+def test_merge_survives_failed_promote(spark, src_dir, tmp_path, monkeypatch):
+    # Fault injection in the commit: the rename that promotes the
+    # staged rewrite fails after the old target was renamed aside.
+    import python_tool_setup_spark.sources.fs as fs
+
+    target = str(tmp_path / "promote")
+    write_json(
+        f"{src_dir}/b1.json",
+        [{"device_id": i, "reading_ts": "t1", "temp": 1.0} for i in range(3)],
+    )
+    make_ingestion(spark, _merge_cfg(src_dir, target)).run()
+    src2 = str(tmp_path / "src2")
+    write_json(
+        f"{src2}/b2.json",
+        [
+            {"device_id": 0, "reading_ts": "t1", "temp": 5.0},
+            {"device_id": 7, "reading_ts": "t1", "temp": 7.0},
+        ],
+    )
+    real_rename, calls = fs._rename, []
+
+    def second_rename_fails(*a):
+        calls.append(a)
+        if len(calls) == 2:
+            raise IOError("injected promote failure")
+        real_rename(*a)
+
+    monkeypatch.setattr(fs, "_rename", second_rename_fails)
+    with pytest.raises(IOError, match="injected"):
+        make_ingestion(spark, _merge_cfg(src2, target)).run()
+    monkeypatch.setattr(fs, "_rename", real_rename)
+    old = {(r["device_id"], r["temp"]) for r in spark.read.parquet(target).collect()}
+    assert old == {(0, 1.0), (1, 1.0), (2, 1.0)}
+    make_ingestion(spark, _merge_cfg(src2, target)).run()
+    got = {(r["device_id"], r["temp"]) for r in spark.read.parquet(target).collect()}
+    assert got == {(0, 5.0), (1, 1.0), (2, 1.0), (7, 7.0)}
+
+
+def test_merge_after_crash_mid_commit_keeps_old_rows(
+    spark, src_dir, tmp_path, monkeypatch
+):
+    # A crash after the old target was renamed aside and before the
+    # promote: every later rename fails, as if the process had died.
+    # The next merge must find the old rows, not bootstrap over them.
+    import python_tool_setup_spark.sources.fs as fs
+
+    target = str(tmp_path / "crash")
+    write_json(
+        f"{src_dir}/b1.json",
+        [{"device_id": i, "reading_ts": "t1", "temp": 1.0} for i in range(3)],
+    )
+    make_ingestion(spark, _merge_cfg(src_dir, target)).run()
+    src2 = str(tmp_path / "src2")
+    write_json(f"{src2}/b2.json", [{"device_id": 1, "reading_ts": "t1", "temp": 9.0}])
+    real_rename, calls = fs._rename, []
+
+    def crash_after_first_rename(*a):
+        calls.append(a)
+        if len(calls) > 1:
+            raise IOError("injected crash")
+        real_rename(*a)
+
+    monkeypatch.setattr(fs, "_rename", crash_after_first_rename)
+    with pytest.raises(IOError, match="injected"):
+        make_ingestion(spark, _merge_cfg(src2, target)).run()
+    monkeypatch.setattr(fs, "_rename", real_rename)
+    assert not os.path.exists(target)
+    make_ingestion(spark, _merge_cfg(src2, target)).run()
+    got = {(r["device_id"], r["temp"]) for r in spark.read.parquet(target).collect()}
+    assert got == {(0, 1.0), (1, 9.0), (2, 1.0)}
+    assert not os.path.exists(tmp_path / ".crash.replaced")
+
+
 def test_post_write_optimize_failure_logs_warning(
     spark, src_dir, tmp_path, monkeypatch, caplog
 ):
@@ -317,6 +399,46 @@ def test_merge_managed_table(spark, src_dir):
     ).run()
     got = spark.table("mergedb.readings").collect()
     assert len(got) == 1 and got[0]["reading_ts"] == "t2"
+
+
+@pytest.mark.parametrize("partition_by", [None, ["reading_ts"]])
+def test_optimize_after_write_compacts_managed_table(
+    spark, src_dir, caplog, partition_by
+):
+    import logging
+
+    name = f"optdb.readings_{'part' if partition_by else 'flat'}"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql("CREATE DATABASE IF NOT EXISTS optdb")
+    fragmented = spark.range(200).selectExpr(
+        "id AS device_id", "IF(id % 2 = 0, 't1', 't2') AS reading_ts", "1.0 AS temp"
+    ).repartition(8).write
+    if partition_by:
+        fragmented = fragmented.partitionBy(*partition_by)
+    fragmented.saveAsTable(name)
+    n_before = len(spark.table(name).inputFiles())
+    write_json(f"{src_dir}/b1.json", [{"device_id": 500, "reading_ts": "t1", "temp": 2.0}])
+    cfg = IngestionConfig(
+        source_path=src_dir,
+        database="optdb",
+        table=name.split(".")[1],
+        partition_by=partition_by,
+        table_comment="readings",
+        table_properties={"quality": "silver"},
+        optimize_after_write=True,
+    )
+    with caplog.at_level(logging.WARNING, logger="python_tool_setup_spark.ingestion.base"):
+        make_ingestion(spark, cfg).run()
+    assert not [r for r in caplog.records if "post-write optimize failed" in r.getMessage()]
+    back = spark.table(name)
+    assert len(back.inputFiles()) < n_before
+    assert back.count() == 201 and back.agg(F.sum("device_id")).first()[0] == 19900 + 500
+    assert set(back.columns) == {"device_id", "reading_ts", "temp"}
+    parts = [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
+    assert parts == (partition_by or [])
+    props = {r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()}
+    assert props.get("quality") == "silver"
+    assert spark.catalog.getTable(name).description == "readings"
 
 
 # ---------------------------------------------------- latest-file (S12) ----
@@ -372,6 +494,21 @@ def test_optimize_zorder_clusters(spark, tmp_path):
         .first()[0]
     )
     assert stats < 99  # unclustered would give ~99 per file
+
+
+def test_optimize_keeps_unrelated_cache(spark, tmp_path):
+    target = str(tmp_path / "optcache")
+    spark.range(100).repartition(4).write.parquet(target)
+    dim = spark.range(3)
+    dim.createOrReplaceTempView("optdim")
+    spark.catalog.cacheTable("optdim")
+    try:
+        optimize_layout(spark, path=target)
+        assert spark.catalog.isCached("optdim")
+        assert spark.read.parquet(target).count() == 100
+    finally:
+        spark.catalog.uncacheTable("optdim")
+        spark.catalog.dropTempView("optdim")
 
 
 # ---------------------------------------------------------- cloud auth ----
