@@ -50,9 +50,6 @@ class IngestionConfig:
     ingest_mode: IngestMode = "batch"
     merge_keys: list[str] | None = None
     dedup_order: list[str] | None = None  # make merge source unique per key
-    # hash-bucket-partition the merge target so each merge rewrites only
-    # touched buckets (O(touched) not O(table)); None = plain rewrite
-    merge_bucket_count: int | None = None
 
     partition_by: list[str] | None = None
     zorder_by: list[str] | None = None

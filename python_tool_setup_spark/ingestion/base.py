@@ -15,11 +15,12 @@ Scale notes:
   outer join of target and source on the merge keys (the target is
   scanned once; both sides shuffle on the keys, so the rewrite spreads
   over every core and AQE sizes the output files), is committed by
-  ``overwrite_staged``, which optimize shares. At 100 TB the right
-  backend is Delta/Iceberg (file-level rewrite); the staged rewrite is
-  the dependency-free fallback with identical semantics. A target that
-  holds data but cannot be read fails the merge; only an absent or
-  data-less target is bootstrapped by a plain write.
+  ``overwrite_staged``, which optimize shares: written once beside the
+  target (a named table's catalog location) and promoted by rename, so
+  a table keeps its catalog entry. At 100 TB the right backend is
+  Delta/Iceberg (file-level rewrite). A target that holds data but
+  cannot be read fails the merge; only an absent or data-less target is
+  bootstrapped by a plain write.
 - streaming uses the file-source + availableNow trigger (OSS equivalent
   of Auto Loader's incremental listing, framework.py:177-209) with a
   schema registry for evolution.
@@ -31,6 +32,7 @@ import logging
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from python_tool_setup_spark.config import IngestionConfig, IngestionError
 from python_tool_setup_spark.operators.merge import merge_upsert
@@ -55,32 +57,52 @@ def _writer(df: DataFrame, fmt: str, mode: str, partition_by: list[str] | None):
     return writer.partitionBy(*partition_by) if partition_by else writer
 
 
+def table_location(spark: SparkSession, table: str) -> str:
+    """The catalog location of ``table``."""
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return next(r["data_type"] for r in rows if r["col_name"] == "Location")
+
+
+def sync_table(spark: SparkSession, table: str, schema: StructType) -> None:
+    """Sync ``table``'s catalog entry with its files: add the columns of
+    ``schema`` it lacks, find new partitions, drop cached listings."""
+    cols = spark.catalog.listColumns(table)
+    have = {c.name.lower() for c in cols}
+    new = [f for f in schema.fields if f.name.lower() not in have]
+    if new:
+        ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in new)
+        spark.sql(f"ALTER TABLE {table} ADD COLUMNS ({ddl})")
+    if any(c.isPartition for c in cols):
+        spark.sql(f"MSCK REPAIR TABLE {table}")
+    spark.sql(f"REFRESH TABLE {table}")
+
+
 def overwrite_staged(
     spark: SparkSession, df: DataFrame, fmt: str, path: str | None = None,
     table: str | None = None, partition_by: list[str] | None = None,
 ) -> None:
     """Overwrite a target with ``df``, which may read that same target.
 
-    A path target (bare or an external table) is written to a staging
-    dir beside it and promoted with ``replace_dir``; then only the
-    target's cached plans are refreshed, other caches stay. A managed
-    table is staged under the warehouse and overwritten from the staged
-    copy, because Spark refuses to overwrite a table the plan reads."""
-    if path:
-        staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
+    ``df`` is staged beside the target (an existing named table's catalog
+    location and partitioning, else ``path`` and ``partition_by``) and
+    promoted with ``replace_dir``; only the target's cached plans are
+    refreshed and a table's catalog entry is kept and synced."""
+    if table and spark.catalog.tableExists(table):
+        path = table_location(spark, table)
+        cols = spark.catalog.listColumns(table)
+        partition_by = [c.name for c in cols if c.isPartition]
+    else:
+        table = None
+    staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
+    try:
         _writer(df, fmt, "overwrite", partition_by).save(staging)
         replace_dir(spark, staging, path)
-        spark.catalog.refreshByPath(path)
-        if table:
-            # external table metadata may cache old files
-            spark.sql(f"REFRESH TABLE {table}")
-        return
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "file:/tmp/spark-warehouse")
-    staging = f"{warehouse.rstrip('/')}/__merge_staging_{uuid.uuid4().hex[:8]}"
-    df.write.format(fmt).mode("overwrite").save(staging)
-    copy = _writer(spark.read.format(fmt).load(staging), fmt, "overwrite", partition_by)
-    copy.option("overwriteSchema", "true").saveAsTable(table)
-    delete_path(spark, staging)
+    except Exception:
+        delete_path(spark, staging)
+        raise
+    spark.catalog.refreshByPath(path)
+    if table:
+        sync_table(spark, table, df.schema)
 
 
 class IngestionPipeline:
@@ -109,14 +131,14 @@ class IngestionPipeline:
         self.configure_auth()
         self._ensure_namespace()
         if cfg.ingest_mode == "stream":
-            self._run_stream()
+            written = self._run_stream()
         else:
             df = self.read()
             self.write(df)
-        self._register_table()
+            written = df.schema
+        self._register_table(written)
         if cfg.optimize_after_write:
             self._optimize_post_write()
-        # last: rewriting a managed table recreates it without metadata
         self._apply_table_metadata()
         return plan
 
@@ -141,10 +163,11 @@ class IngestionPipeline:
 
     def _save(self, df: DataFrame, mode: str) -> None:
         cfg = self.cfg
-        # keep evolving sources writable over existing targets
-        evolve = "overwriteSchema" if mode == "overwrite" else "mergeSchema"
         writer = _writer(df, cfg.target_format, mode, cfg.partition_by)
-        writer = writer.option(evolve, "true")
+        if cfg.target_format == "delta":
+            # keep evolving sources writable over existing targets
+            evolve = "overwriteSchema" if mode == "overwrite" else "mergeSchema"
+            writer = writer.option(evolve, "true")
         if cfg.target_path:
             writer.save(cfg.target_path)
         else:
@@ -154,9 +177,9 @@ class IngestionPipeline:
     def _target_df(self) -> DataFrame | None:
         """The merge target, or None when there is none yet: a missing
         table, or a path that holds no data files. A target with data
-        that cannot be read raises — bootstrapping over it would
-        replace the table with the source batch. A commit interrupted
-        mid-promote is finished first, so its old rows are found."""
+        that cannot be read raises — bootstrapping over it would replace
+        it with the source batch. A commit interrupted mid-promote (path
+        or table location) is finished first, so its old rows are found."""
         cfg = self.cfg
         if cfg.target_path:
             restore_backup(self.spark, cfg.target_path)
@@ -164,6 +187,7 @@ class IngestionPipeline:
                 return None
             return self.spark.read.format(cfg.target_format).load(cfg.target_path)
         if self.spark.catalog.tableExists(cfg.full_table_name):
+            restore_backup(self.spark, table_location(self.spark, cfg.full_table_name))
             return self.spark.table(cfg.full_table_name)
         return None
 
@@ -204,10 +228,10 @@ class IngestionPipeline:
             )
 
     # ------------------------------------------------------- streaming --
-    def _run_stream(self) -> None:
+    def _run_stream(self) -> StructType:
         from python_tool_setup_spark.streaming.autoloader import run_autoloader
 
-        run_autoloader(self.spark, self.cfg)
+        return run_autoloader(self.spark, self.cfg)
 
     # ------------------------------------------------------------- DDL --
     def _ensure_namespace(self) -> None:
@@ -230,7 +254,7 @@ class IngestionPipeline:
         if cfg.database:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {cfg.database}")
 
-    def _register_table(self) -> None:
+    def _register_table(self, written: StructType) -> None:
         """External-table registration (framework.py:240-246)."""
         cfg = self.cfg
         if not (cfg.table and cfg.target_path):
@@ -239,10 +263,7 @@ class IngestionPipeline:
             f"CREATE TABLE IF NOT EXISTS {cfg.full_table_name} "
             f"USING {cfg.target_format.upper()} LOCATION '{cfg.target_path}'"
         )
-        if cfg.partition_by:
-            # hive-style partition dirs need explicit discovery
-            self.spark.sql(f"MSCK REPAIR TABLE {cfg.full_table_name}")
-        self.spark.sql(f"REFRESH TABLE {cfg.full_table_name}")
+        sync_table(self.spark, cfg.full_table_name, written)
 
     def _apply_table_metadata(self) -> None:
         """COMMENT + TBLPROPERTIES passthrough (framework.py:248-254)."""

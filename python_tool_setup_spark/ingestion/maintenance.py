@@ -14,10 +14,10 @@ delta-spark we implement the *intent*:
   documented divergence (SURVEY.md §7 hard-items #4).
 
 Both rewrites commit through ``ingestion.base.overwrite_staged``, the
-commit path merge uses too: a path target is staged beside itself and
-promoted by a metadata-only rename, so a failure mid-rewrite never
-corrupts the live table; a managed table is staged under the warehouse
-and overwritten from the staged copy.
+commit path merge uses too: every target, a named table at its catalog
+location, is staged beside itself and promoted by a metadata-only
+rename, so a failure mid-rewrite never corrupts the live table and a
+table keeps its catalog entry.
 """
 
 from __future__ import annotations

@@ -141,7 +141,6 @@ def merge_upsert_bucketed(
     keys: Sequence[str],
     num_buckets: int,
     fmt: str = "parquet",
-    source_dedup_order: Sequence | None = None,
     on_staged=None,
 ) -> list[int]:
     """MERGE into a bucket-partitioned target touching ONLY the buckets
@@ -176,8 +175,6 @@ def merge_upsert_bucketed(
         return sorted((name, size) for name, size, _ in list_files(spark, bdir))
 
     keys = list(keys)
-    if source_dedup_order is not None:
-        source = dedup_by_keys(source, keys, source_dedup_order)
     src = source.withColumn(BUCKET_COL, bucket_of(keys, num_buckets))
     touched = sorted(
         r[0] for r in src.select(BUCKET_COL).distinct().collect()

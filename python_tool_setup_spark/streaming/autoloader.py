@@ -85,30 +85,16 @@ def _merge_microbatch(cfg: IngestionConfig):
     identical values), so the sink is effectively idempotent as long as
     merge keys are unique per batch (enforce with cfg.dedup_order)."""
     from python_tool_setup_spark.ingestion.base import IngestionPipeline
-    from python_tool_setup_spark.operators.merge import merge_upsert_bucketed
 
     def apply(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if cfg.merge_bucket_count:
-            # O(touched buckets) per micro-batch instead of O(table)
-            merge_upsert_bucketed(
-                spark,
-                cfg.target_path,
-                batch_df,
-                cfg.merge_keys,
-                cfg.merge_bucket_count,
-                fmt=cfg.target_format,
-                source_dedup_order=cfg.dedup_order,
-            )
-            return
-        IngestionPipeline(spark, cfg)._merge_into(batch_df)
+        IngestionPipeline(batch_df.sparkSession, cfg)._merge_into(batch_df)
 
     return apply
 
 
-def run_autoloader(spark: SparkSession, cfg: IngestionConfig) -> None:
+def run_autoloader(spark: SparkSession, cfg: IngestionConfig) -> StructType:
     """One drain-everything-available streaming run (T1-T3; merge mode
-    runs the upsert per micro-batch via foreachBatch)."""
+    runs the upsert per micro-batch via foreachBatch); returns its schema."""
     schema = load_or_evolve_schema(spark, cfg)
     reader = (
         spark.readStream.format(cfg.source_format)
@@ -117,30 +103,22 @@ def run_autoloader(spark: SparkSession, cfg: IngestionConfig) -> None:
     )
     if cfg.source_format == "csv":
         reader = reader.option("header", "true")
-    stream = reader.load(cfg.source_path)
-
-    if cfg.write_mode == "merge":
-        query = (
-            stream.writeStream.foreachBatch(_merge_microbatch(cfg))
-            .outputMode("append")
-            .option("checkpointLocation", cfg.checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        return
-
     writer = (
-        stream.writeStream.format(cfg.target_format)
-        .outputMode("append")
+        reader.load(cfg.source_path).writeStream.outputMode("append")
         .option("checkpointLocation", cfg.checkpoint_path)
-        .option("mergeSchema", "true")
         .trigger(availableNow=True)
     )
-    if cfg.partition_by:
-        writer = writer.partitionBy(*cfg.partition_by)
-    if cfg.target_path:
-        query = writer.start(cfg.target_path)
+    if cfg.write_mode == "merge":
+        query = writer.foreachBatch(_merge_microbatch(cfg)).start()
     else:
-        query = writer.toTable(cfg.full_table_name)
+        writer = writer.format(cfg.target_format)
+        if cfg.target_format == "delta":
+            writer = writer.option("mergeSchema", "true")
+        if cfg.partition_by:
+            writer = writer.partitionBy(*cfg.partition_by)
+        if cfg.target_path:
+            query = writer.start(cfg.target_path)
+        else:
+            query = writer.toTable(cfg.full_table_name)
     query.awaitTermination()
+    return schema

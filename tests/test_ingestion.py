@@ -308,6 +308,7 @@ def test_merge_survives_failed_promote(spark, src_dir, tmp_path, monkeypatch):
     with pytest.raises(IOError, match="injected"):
         make_ingestion(spark, _merge_cfg(src2, target)).run()
     monkeypatch.setattr(fs, "_rename", real_rename)
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("promote__staging_")]
     old = {(r["device_id"], r["temp"]) for r in spark.read.parquet(target).collect()}
     assert old == {(0, 1.0), (1, 1.0), (2, 1.0)}
     make_ingestion(spark, _merge_cfg(src2, target)).run()
@@ -315,22 +316,12 @@ def test_merge_survives_failed_promote(spark, src_dir, tmp_path, monkeypatch):
     assert got == {(0, 5.0), (1, 1.0), (2, 1.0), (7, 7.0)}
 
 
-def test_merge_after_crash_mid_commit_keeps_old_rows(
-    spark, src_dir, tmp_path, monkeypatch
-):
-    # A crash after the old target was renamed aside and before the
-    # promote: every later rename fails, as if the process had died.
-    # The next merge must find the old rows, not bootstrap over them.
+def _crash_after_first_rename(monkeypatch):
+    """A crash after the old target was renamed aside and before the
+    promote: every later rename fails, as if the process had died.
+    Returns the undo."""
     import python_tool_setup_spark.sources.fs as fs
 
-    target = str(tmp_path / "crash")
-    write_json(
-        f"{src_dir}/b1.json",
-        [{"device_id": i, "reading_ts": "t1", "temp": 1.0} for i in range(3)],
-    )
-    make_ingestion(spark, _merge_cfg(src_dir, target)).run()
-    src2 = str(tmp_path / "src2")
-    write_json(f"{src2}/b2.json", [{"device_id": 1, "reading_ts": "t1", "temp": 9.0}])
     real_rename, calls = fs._rename, []
 
     def crash_after_first_rename(*a):
@@ -340,14 +331,57 @@ def test_merge_after_crash_mid_commit_keeps_old_rows(
         real_rename(*a)
 
     monkeypatch.setattr(fs, "_rename", crash_after_first_rename)
+    return lambda: monkeypatch.setattr(fs, "_rename", real_rename)
+
+
+def test_merge_after_crash_mid_commit_keeps_old_rows(
+    spark, src_dir, tmp_path, monkeypatch
+):
+    # The next merge must find the old rows, not bootstrap over them.
+    target = str(tmp_path / "crash")
+    write_json(
+        f"{src_dir}/b1.json",
+        [{"device_id": i, "reading_ts": "t1", "temp": 1.0} for i in range(3)],
+    )
+    make_ingestion(spark, _merge_cfg(src_dir, target)).run()
+    src2 = str(tmp_path / "src2")
+    write_json(f"{src2}/b2.json", [{"device_id": 1, "reading_ts": "t1", "temp": 9.0}])
+    undo = _crash_after_first_rename(monkeypatch)
     with pytest.raises(IOError, match="injected"):
         make_ingestion(spark, _merge_cfg(src2, target)).run()
-    monkeypatch.setattr(fs, "_rename", real_rename)
+    undo()
     assert not os.path.exists(target)
     make_ingestion(spark, _merge_cfg(src2, target)).run()
     got = {(r["device_id"], r["temp"]) for r in spark.read.parquet(target).collect()}
     assert got == {(0, 1.0), (1, 9.0), (2, 1.0)}
     assert not os.path.exists(tmp_path / ".crash.replaced")
+
+
+def test_managed_merge_after_crash_mid_commit_keeps_old_rows(
+    spark, src_dir, tmp_path, monkeypatch
+):
+    # a managed table commits at its catalog location, so a crash there
+    # is finished the same way before the next merge reads the table
+    name = "onebranch.crash"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    cfg = _merge_cfg(src_dir, None, database="onebranch", table="crash")
+    write_json(
+        f"{src_dir}/b1.json",
+        [{"device_id": i, "reading_ts": "t1", "temp": 1.0} for i in range(3)],
+    )
+    make_ingestion(spark, cfg).run()
+    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+    location = next(r[1] for r in desc if r[0] == "Location").removeprefix("file:")
+    write_json(f"{src_dir}/b1.json", [{"device_id": 1, "reading_ts": "t1", "temp": 9.0}])
+    undo = _crash_after_first_rename(monkeypatch)
+    with pytest.raises(IOError, match="injected"):
+        make_ingestion(spark, cfg).run()
+    undo()
+    assert not os.path.exists(location)
+    make_ingestion(spark, cfg).run()
+    got = {(r["device_id"], r["temp"]) for r in spark.table(name).collect()}
+    assert got == {(0, 1.0), (1, 9.0), (2, 1.0)}
+    assert not os.path.exists(os.path.join(os.path.dirname(location), ".crash.replaced"))
 
 
 def test_post_write_optimize_failure_logs_warning(
@@ -439,6 +473,94 @@ def test_optimize_after_write_compacts_managed_table(
     props = {r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()}
     assert props.get("quality") == "silver"
     assert spark.catalog.getTable(name).description == "readings"
+
+
+def _props(spark, name):
+    return {r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()}
+
+
+def test_managed_merge_and_optimize_keep_outside_metadata(
+    spark, src_dir, tmp_path, caplog
+):
+    # metadata set outside the config survives a merge and an optimize
+    import logging
+
+    name = "onebranch.meta"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    write_json(f"{src_dir}/b1.json", [{"device_id": 1, "reading_ts": "t1", "temp": 1.0}])
+    make_ingestion(spark, _merge_cfg(src_dir, None, database="onebranch", table="meta")).run()
+    spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES ('steward' = 'ops')")
+    spark.sql(f"COMMENT ON TABLE {name} IS 'set outside'")
+    src2 = str(tmp_path / "src2")
+    write_json(f"{src2}/b2.json", [{"device_id": 2, "reading_ts": "t1", "temp": 2.0}])
+    for optimize in (False, True):
+        cfg = _merge_cfg(
+            src2, None, database="onebranch", table="meta", optimize_after_write=optimize
+        )
+        with caplog.at_level(logging.WARNING, logger="python_tool_setup_spark.ingestion.base"):
+            make_ingestion(spark, cfg).run()
+        assert not [r for r in caplog.records if "optimize failed" in r.getMessage()]
+        props = _props(spark, name)
+        assert props.get("steward") == "ops"
+        assert not [k for k in props if k.startswith("option.")]
+        assert spark.catalog.getTable(name).description == "set outside"
+    got = {(r["device_id"], r["temp"]) for r in spark.table(name).collect()}
+    assert got == {(1, 1.0), (2, 2.0)}
+
+
+def test_managed_merge_keeps_catalog_partitioning(spark, src_dir):
+    # the partition columns come from the catalog, not from partition_by
+    name = "onebranch.parted"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql("CREATE DATABASE IF NOT EXISTS onebranch")
+    spark.createDataFrame(
+        [(1, "t1", 1.0), (2, "t2", 2.0)], "device_id long, reading_ts string, temp double"
+    ).write.partitionBy("reading_ts").saveAsTable(name)
+    write_json(
+        f"{src_dir}/b1.json",
+        [
+            {"device_id": 1, "reading_ts": "t1", "temp": 9.0},
+            {"device_id": 3, "reading_ts": "t3", "temp": 3.0},
+        ],
+    )
+    make_ingestion(spark, _merge_cfg(src_dir, None, database="onebranch", table="parted")).run()
+    assert [c.name for c in spark.catalog.listColumns(name) if c.isPartition] == ["reading_ts"]
+    parts = {r[0] for r in spark.sql(f"SHOW PARTITIONS {name}").collect()}
+    assert parts == {"reading_ts=t1", "reading_ts=t2", "reading_ts=t3"}
+    got = {(r["device_id"], r["reading_ts"], r["temp"]) for r in spark.table(name).collect()}
+    assert got == {(1, "t1", 9.0), (2, "t2", 2.0), (3, "t3", 3.0)}
+
+
+def test_external_table_merge_adds_column_to_catalog(spark, src_dir, tmp_path):
+    name = "onebranch.ext"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    target = str(tmp_path / "ext")
+    write_json(f"{src_dir}/b1.json", [{"device_id": 1, "reading_ts": "t1", "temp": 1.0}])
+    make_ingestion(spark, _merge_cfg(src_dir, target, database="onebranch", table="ext")).run()
+    src2 = str(tmp_path / "src2")
+    write_json(
+        f"{src2}/b2.json",
+        [{"device_id": 2, "reading_ts": "t1", "temp": 2.0, "humidity": 0.5}],
+    )
+    make_ingestion(spark, _merge_cfg(src2, target, database="onebranch", table="ext")).run()
+    back = spark.table(name)
+    assert "humidity" in back.columns
+    assert {r["device_id"]: r["humidity"] for r in back.collect()} == {1: None, 2: 0.5}
+
+
+def test_parquet_table_has_no_write_option_properties(spark, src_dir):
+    # overwriteSchema / mergeSchema are Delta options; on parquet they
+    # only leaked into the table's properties
+    name = "onebranch.plain"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    write_json(f"{src_dir}/b1.json", [{"device_id": 1, "reading_ts": "t1", "temp": 1.0}])
+    for mode in ("overwrite", "append"):
+        cfg = IngestionConfig(
+            source_path=src_dir, database="onebranch", table="plain", write_mode=mode
+        )
+        make_ingestion(spark, cfg).run()
+        assert not [k for k in _props(spark, name) if k.startswith("option.")]
+    assert spark.table(name).count() == 2
 
 
 # ---------------------------------------------------- latest-file (S12) ----

@@ -224,29 +224,6 @@ def test_bucketed_merge_bootstrap_empty_target(spark, tmp_path):
     assert got == {(1, "a"), (2, "b")}
 
 
-def test_bucketed_merge_dedups_source_once(spark, tmp_path):
-    # the source is made unique per key before bucketing, for a bucket
-    # that exists (merge) and for a new target (bootstrap) alike
-    from python_tool_setup_spark.operators.merge import (
-        merge_upsert_bucketed,
-        read_bucketed_target,
-    )
-
-    schema = "k long, v string, seq long"
-    src = spark.createDataFrame(
-        [(1, "old", 1), (1, "new", 2), (2, "b", 1), (2, "B", 3)], schema
-    )
-    order = [F.col("seq").desc()]
-    target = str(tmp_path / "btd")
-    merge_upsert_bucketed(spark, target, src, ["k"], 4, source_dedup_order=order)
-    got = {(r["k"], r["v"]) for r in read_bucketed_target(spark, target).collect()}
-    assert got == {(1, "new"), (2, "B")}
-    src2 = spark.createDataFrame([(1, "x", 5), (1, "y", 4), (3, "c", 1)], schema)
-    merge_upsert_bucketed(spark, target, src2, ["k"], 4, source_dedup_order=order)
-    got = {(r["k"], r["v"]) for r in read_bucketed_target(spark, target).collect()}
-    assert got == {(1, "x"), (2, "B"), (3, "c")}
-
-
 def test_resample_gapfill_locf(spark):
     from python_tool_setup_spark.operators.timeseries import resample_gapfill
 

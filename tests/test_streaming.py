@@ -335,29 +335,6 @@ def test_streaming_merge_keeps_new_column(spark, tmp_path):
     assert got == {1: None, 2: "x"}
 
 
-def test_streaming_merge_bucketed_target(spark, tmp_path):
-    from python_tool_setup_spark.operators.merge import read_bucketed_target
-
-    src = str(tmp_path / "bm_in")
-    target = str(tmp_path / "bm_out")
-    write_json(f"{src}/f1.json", [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}])
-    cfg = _stream_cfg(
-        src,
-        target,
-        str(tmp_path / "bm_ckpt"),
-        write_mode="merge",
-        merge_keys=["k"],
-        merge_bucket_count=4,
-        schema="k long, v string",
-    )
-    make_ingestion(spark, cfg).run()
-    write_json(f"{src}/f2.json", [{"k": 2, "v": "B"}, {"k": 3, "v": "C"}])
-    make_ingestion(spark, cfg).run()
-    got = {(r["k"], r["v"])
-           for r in read_bucketed_target(spark, target).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "C")}
-
-
 def test_python_stream_source_resume(spark, tmp_path):
     """The custom Python stream source is exactly-once across a
     stop/restart: a second availableNow run from the same checkpoint
