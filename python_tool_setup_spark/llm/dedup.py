@@ -9,16 +9,23 @@ Scale design:
 - SimHash pairs use pigeonhole blocking: hamming(a,b) ≤ 3 over 64 bits
   guarantees at least one of 4 16-bit chunks is identical, so a
   4-way chunk equi-join finds every such pair exactly;
-- candidate buckets are capped (``max_bucket``) so a degenerate key
-  (e.g. the empty document) cannot create a quadratic hot spot.
+- candidate buckets are capped at the module constant ``_MAX_BUCKET``
+  (1000 members, not a parameter) so a degenerate key (e.g. the empty
+  document) cannot create a quadratic hot spot;
+- MinHash-LSH, SimHash and n-gram Jaccard share one candidate-pair
+  generator (``_bucket_pairs``): bucket the rows, emit every in-bucket
+  pair with ``id_a < id_b``, then verify each pair exactly.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+# Candidate buckets with more members than this are skipped.
+_MAX_BUCKET = 1000
 
 
 # ----------------------------------------------------------- exact (L1) ----
@@ -115,30 +122,22 @@ def minhash_signature(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_size: int = 5,
-    threshold: float = 0.5,
-    max_bucket: int = 1000,
+def _minhash_base(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_size: int
 ) -> DataFrame:
-    """Near-duplicate pairs: MinHash signature → band buckets →
-    candidate equi-join → exact Jaccard verification over shingle sets.
-
-    Returns (id_a, id_b, jaccard) with id_a < id_b and
-    jaccard >= threshold. Recall is the standard LSH S-curve at
-    (bands, rows-per-band); precision is exact (verified)."""
-    rows_per_band = num_hashes // bands
-    base = df.select(
+    """(__id, __sh, __sig): each row's shingle set and MinHash signature."""
+    return df.select(
         F.col(id_col).alias("__id"),
         shingles(text_col, shingle_size).alias("__sh"),
         minhash_signature(text_col, num_hashes, shingle_size).alias("__sig"),
     )
 
-    banded = base.select(
+
+def _bands(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(__id, band, bucket): one row per LSH band, keyed by the hash of
+    that band's slice of the signature."""
+    rows_per_band = num_hashes // bands
+    return base.select(
         "__id",
         F.explode(
             F.array(
@@ -155,28 +154,75 @@ def minhash_lsh_pairs(
         ).alias("bb"),
     ).select("__id", "bb.band", "bb.bucket")
 
-    # cap degenerate buckets so one hot key can't go quadratic
-    capped = (
-        banded.groupBy("band", "bucket")
+
+def _bucket_pairs(
+    buckets: DataFrame,
+    members: str,
+    pair: Callable[[Column, Column], Column],
+    ids: tuple[str, str] = ("id_a", "id_b"),
+    cap: int | None = None,
+    keep: Sequence[str] = (),
+) -> DataFrame:
+    """Every pair inside each bucket, exploded to one struct column
+    ``p`` next to the ``keep`` columns.
+
+    ``members`` names the array column of a bucket's members and
+    ``pair(a, b)`` builds the pair struct; a pair is kept when its
+    ``ids`` fields are ordered ``ids[0] < ids[1]``. Buckets of one
+    member are dropped, and so are buckets over ``cap`` members."""
+    n = F.size(members)
+    return buckets.filter((n > 1) & (n <= cap) if cap else n > 1).select(
+        *keep,
+        F.explode(
+            F.filter(
+                F.flatten(
+                    F.transform(
+                        F.col(members),
+                        lambda a: F.transform(F.col(members), lambda b: pair(a, b)),
+                    )
+                ),
+                lambda p: p[ids[0]] < p[ids[1]],
+            )
+        ).alias("p"),
+    )
+
+
+def _jaccard(sh_a: str, sh_b: str) -> Column:
+    """Exact |A ∩ B| / |A ∪ B| of two shingle-set columns, rounded to 6
+    places scale first: int/int ratios are decimal-reachable ties at
+    scale 6 (q208 class)."""
+    inter = F.size(F.array_intersect(sh_a, sh_b))
+    return F.round(1000000 * (inter / F.size(F.array_union(sh_a, sh_b)))) / 1000000.0
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_size: int = 5,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Near-duplicate pairs: MinHash signature → band buckets →
+    candidate equi-join → exact Jaccard verification over shingle sets.
+
+    Returns (id_a, id_b, jaccard) with id_a < id_b and
+    jaccard >= threshold. Recall is the standard LSH S-curve at
+    (bands, rows-per-band); precision is exact (verified)."""
+    base = _minhash_base(df, id_col, text_col, num_hashes, shingle_size)
+    buckets = (
+        _bands(base, num_hashes, bands)
+        .groupBy("band", "bucket")
         .agg(F.collect_list("__id").alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
     )
     pairs = (
-        capped.select(
-            F.explode(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            F.col("ids"),
-                            lambda a: F.transform(
-                                F.col("ids"),
-                                lambda b: F.struct(a.alias("a"), b.alias("b")),
-                            ),
-                        )
-                    ),
-                    lambda p: p["a"] < p["b"],
-                )
-            ).alias("p")
+        _bucket_pairs(
+            buckets,
+            "ids",
+            lambda a, b: F.struct(a.alias("a"), b.alias("b")),
+            ids=("a", "b"),
+            cap=_MAX_BUCKET,
         )
         .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
@@ -184,26 +230,13 @@ def minhash_lsh_pairs(
 
     sh_a = base.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
     sh_b = base.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
-    verified = (
+    return (
         pairs.join(sh_a, "id_a")
         .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            # scale-first round: int/int ratios are decimal-
-            # reachable ties at scale 6 (q208 class)
-            F.round(
-                1000000
-                * (
-                    F.size(F.array_intersect("sh_a", "sh_b"))
-                    / F.size(F.array_union("sh_a", "sh_b"))
-                )
-            )
-            / 1000000.0,
-        )
+        .withColumn("jaccard", _jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return verified
 
 
 def minhash_lsh_probe(
@@ -215,7 +248,6 @@ def minhash_lsh_probe(
     bands: int = 16,
     shingle_size: int = 5,
     threshold: float = 0.5,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """INCREMENTAL near-dup: probe new arrivals against an existing
     corpus without re-pairing the corpus with itself.
@@ -231,48 +263,17 @@ def minhash_lsh_probe(
     existing-side buckets are capped (same guard as minhash_lsh_pairs)
     so a boilerplate bucket can't go quadratic.
     """
-    rows_per_band = num_hashes // bands
-
-    def prep(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("__id"),
-            shingles(text_col, shingle_size).alias("__sh"),
-            minhash_signature(text_col, num_hashes, shingle_size).alias(
-                "__sig"
-            ),
-        )
-
-    def banded(base: DataFrame) -> DataFrame:
-        return base.select(
-            "__id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.hash(
-                                F.slice(
-                                    F.col("__sig"),
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                )
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("__id", "bb.band", "bb.bucket")
-
-    ex_base, new_base = prep(existing), prep(new)
-    ex_bands = banded(ex_base)
+    ex_base = _minhash_base(existing, id_col, text_col, num_hashes, shingle_size)
+    new_base = _minhash_base(new, id_col, text_col, num_hashes, shingle_size)
     # cap hot buckets on the (large) existing side
     wcnt = Window.partitionBy("band", "bucket")
-    ex_bands = ex_bands.withColumn("__n", F.count(F.lit(1)).over(wcnt)).filter(
-        F.col("__n") <= max_bucket
+    ex_bands = (
+        _bands(ex_base, num_hashes, bands)
+        .withColumn("__n", F.count(F.lit(1)).over(wcnt))
+        .filter(F.col("__n") <= _MAX_BUCKET)
     )
     cand = (
-        banded(new_base)
+        _bands(new_base, num_hashes, bands)
         .withColumnRenamed("__id", "new_id")
         .join(
             ex_bands.withColumnRenamed("__id", "existing_id"),
@@ -288,18 +289,7 @@ def minhash_lsh_probe(
     return (
         cand.join(sh_n, "new_id")
         .join(sh_e, "existing_id")
-        .withColumn(
-            "jaccard",
-            # scale-first round (q208 class)
-            F.round(
-                1000000
-                * (
-                    F.size(F.array_intersect("sh_n", "sh_e"))
-                    / F.size(F.array_union("sh_n", "sh_e"))
-                )
-            )
-            / 1000000.0,
-        )
+        .withColumn("jaccard", _jaccard("sh_n", "sh_e"))
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "existing_id", "jaccard")
     )
@@ -349,7 +339,6 @@ def simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     shingle_size: int = 2,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """All pairs with hamming(simhash) <= max_hamming, found EXACTLY via
     pigeonhole chunk blocking (4 chunks of 16 bits: distance ≤ 3 forces
@@ -375,32 +364,20 @@ def simhash_pairs(
         ).alias("cc"),
     ).select("__id", "__sim", "cc.chunk_id", "cc.chunk")
 
-    buckets = (
-        chunked.groupBy("chunk_id", "chunk")
-        .agg(F.collect_list(F.struct("__id", "__sim")).alias("members"))
-        .filter((F.size("members") > 1) & (F.size("members") <= max_bucket))
+    buckets = chunked.groupBy("chunk_id", "chunk").agg(
+        F.collect_list(F.struct("__id", "__sim")).alias("members")
     )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            F.col("members"),
-                            lambda a: F.transform(
-                                F.col("members"),
-                                lambda b: F.struct(
-                                    a["__id"].alias("id_a"),
-                                    b["__id"].alias("id_b"),
-                                    a["__sim"].alias("sim_a"),
-                                    b["__sim"].alias("sim_b"),
-                                ),
-                            ),
-                        )
-                    ),
-                    lambda p: p["id_a"] < p["id_b"],
-                )
-            ).alias("p")
+    return (
+        _bucket_pairs(
+            buckets,
+            "members",
+            lambda a, b: F.struct(
+                a["__id"].alias("id_a"),
+                b["__id"].alias("id_b"),
+                a["__sim"].alias("sim_a"),
+                b["__sim"].alias("sim_b"),
+            ),
+            cap=_MAX_BUCKET,
         )
         .select("p.*")
         .distinct()
@@ -410,7 +387,6 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    return pairs
 
 
 # ------------------------------------------------- n-gram Jaccard (L2) ----
@@ -456,32 +432,20 @@ def ngram_jaccard_pairs(
     # bucket per (block, shingle) then emit pairs — a self-join would
     # evaluate the (interpreted, HOF-heavy) shingle expression twice and
     # shuffle both sides; this evaluates once and shuffles once.
-    members = F.collect_list(F.struct("__id", "__n")).alias("ms")
+    buckets = ex.groupBy(*blocks, "__s").agg(
+        F.collect_list(F.struct("__id", "__n")).alias("ms")
+    )
     shared = (
-        ex.groupBy(*blocks, "__s")
-        .agg(members)
-        .filter(F.size("ms") > 1)
-        .select(
-            *blocks,
-            F.explode(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            F.col("ms"),
-                            lambda a: F.transform(
-                                F.col("ms"),
-                                lambda b: F.struct(
-                                    a["__id"].alias("id_a"),
-                                    b["__id"].alias("id_b"),
-                                    a["__n"].alias("__na"),
-                                    b["__n"].alias("__nb"),
-                                ),
-                            ),
-                        )
-                    ),
-                    lambda p: p["id_a"] < p["id_b"],
-                )
-            ).alias("p"),
+        _bucket_pairs(
+            buckets,
+            "ms",
+            lambda a, b: F.struct(
+                a["__id"].alias("id_a"),
+                b["__id"].alias("id_b"),
+                a["__n"].alias("__na"),
+                b["__n"].alias("__nb"),
+            ),
+            keep=blocks,
         )
         .select(*blocks, "p.*")
         .groupBy("id_a", "id_b", *blocks, "__na", "__nb")

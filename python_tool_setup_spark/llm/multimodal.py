@@ -5,11 +5,11 @@ frame-sample plumbing over Arrow-batched ``mapInPandas``.
 PNG decode is REAL — a pure-stdlib codec (``llm/png.py``: zlib inflate
 + scanline unfilter) runs inside the mapInPandas workers, so q44's
 features come from actual pixel data. Formats with no codec in the
-container (JPEG, audio, video) remain STUBS behind
-``use_fake_decoder``: the real-Spark parts — schema, binaryFile
-ingestion, batch iteration shape, partitioning — are real and tested;
-only the non-PNG pixel math is a clearly-marked deterministic fake (or
-``NotImplementedError`` when ``use_fake_decoder=False``).
+container (JPEG, audio, video) remain STUBS: the real-Spark parts —
+schema, binaryFile ingestion, batch iteration shape, partitioning — are
+real and tested; only the non-PNG pixel math of ``decode_image_features``
+(behind ``use_fake_decoder``) and the frame slicing of ``sample_frames``
+are clearly-marked deterministic fakes.
 
 At 100 TB: media bytes stay in executor-local Arrow batches end to end
 (binaryFile scan → mapInPandas); nothing is collected; per-file rows
@@ -154,22 +154,17 @@ def decode_image_stats(df: DataFrame) -> DataFrame:
     return df.select("path", "content").mapInPandas(_decode, IMAGE_STATS_SCHEMA)
 
 
-def sample_frames(
-    df: DataFrame, every_n_bytes: int = 1024, use_fake_decoder: bool = True
-) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled "frame" (a
-    byte-offset slice in the fake decoder; a real decoder would emit
-    decoded frames at a time stride). Demonstrates the 1→N mapInPandas
-    shape video pipelines need."""
+def sample_frames(df: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
+    """Frame-sampling plumbing: one output row per sampled "frame", a
+    fake byte-offset slice of ``every_n_bytes`` (a real decoder would
+    need ffmpeg, which is not in the container, and would emit decoded
+    frames at a time stride). Demonstrates the 1→N mapInPandas shape
+    video pipelines need."""
 
     schema = "path string, frame_index int, frame_offset long, frame_digest string"
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not use_fake_decoder:
-                raise NotImplementedError(
-                    "real frame sampling requires ffmpeg; not in container"
-                )
             rows = {"path": [], "frame_index": [], "frame_offset": [], "frame_digest": []}
             for path, content in zip(pdf["path"], pdf["content"]):
                 data = bytes(content)

@@ -11,7 +11,7 @@ from python_tool_setup_spark.operators.relational import (
     anti_join,
     top_k,
 )
-from python_tool_setup_spark.operators.asof import asof_join, range_join
+from python_tool_setup_spark.operators.asof import asof_join
 from python_tool_setup_spark.operators.merge import merge_upsert
 from python_tool_setup_spark.operators.skew import (
     salted_join,
@@ -25,7 +25,6 @@ __all__ = [
     "anti_join",
     "top_k",
     "asof_join",
-    "range_join",
     "merge_upsert",
     "salted_join",
     "create_bucketed_table",

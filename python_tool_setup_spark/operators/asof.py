@@ -9,15 +9,16 @@ of events, unlike a naive ``left.join(right, cond)`` which Spark would
 plan as a broadcast-nested-loop or a sort-merge with an inequality
 residual scanning every right row per key.
 
-Range joins keep an equality key so Spark plans a hash/sort-merge join
-and applies the band predicate as a residual filter per key group.
+Interval joins with no equality key are binned
+(``binned_interval_join``) so Spark plans an equi-join on the bin and
+applies the exact BETWEEN predicate as a residual filter per bin.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -100,26 +101,6 @@ def asof_join(
     return carried.filter(F.col("__side") == 1).drop("__ts", "__side")
 
 
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    condition: Column,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join on ``on`` with an extra non-equi ``condition`` residual
-    (e.g. ``right.ts BETWEEN left.start AND left.end``). The equality
-    keys make this a plain shuffled hash join at scale; the band
-    predicate filters within each key group.
-    """
-    eq = None
-    for k in on:
-        clause = left[k] == right[k]
-        eq = clause if eq is None else (eq & clause)
-    cond = condition if eq is None else (eq & condition)
-    return left.join(right, on=cond, how=how)
-
-
 def binned_interval_join(
     points: DataFrame,
     intervals: DataFrame,
@@ -146,8 +127,8 @@ def binned_interval_join(
     Only ``how='inner'`` is supported: the explode-then-residual-filter
     shape would drop unmatched outer rows (null residual) and emit
     duplicate bin rows for matched ones, so outer modes are rejected
-    rather than silently wrong. Use :func:`range_join` when an outer
-    interval join is needed and one side is broadcastable.
+    rather than silently wrong. For an outer interval join, join on the
+    BETWEEN condition directly and broadcast the smaller side.
     """
     if how != "inner":
         raise ValueError(

@@ -22,9 +22,8 @@ from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.queries.batch90 import (
     _jacc_sql,
     _K_MH,
+    _pair_jaccard_minhash,
     _pair_shingles_sql,
-    _spark_shingles,
-    _SLICE,
 )
 from python_tool_setup_spark.tables import load_table
 
@@ -138,83 +137,9 @@ def q408_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pair table.",
 )
 def q409_neardup_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _SLICE
-    )
-    sh = _spark_shingles(d, 3)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ids = sh.select("doc_id").distinct()
-    pairs = (
-        ids.filter(F.col("doc_id") % 2 == 0)
-        .select(F.col("doc_id").alias("da"), (F.col("doc_id") + 1).alias("db"))
-        .join(ids.select(F.col("doc_id").alias("db")), "db")
-    )
-    sha = sh.select(F.col("doc_id").alias("da"), "sh")
-    shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb"))
-    inter = (
-        pairs.join(sha, "da")
-        .join(shb, "db")
-        .where(F.col("sh") == F.col("shb"))
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("c"))
-    )
-    jacc = (
-        pairs.join(inter, ["da", "db"], "left")
-        .join(
-            sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("n1")),
-            "da",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("n2")),
-            "db",
-        )
-        .select(
-            "da",
-            "db",
-            F.round(
-                F.coalesce(F.col("c"), F.lit(0)).cast("double")
-                / (
-                    F.col("n1")
-                    + F.col("n2")
-                    - F.coalesce(F.col("c"), F.lit(0))
-                )
-                * F.lit(1000000.0)
-            )
-            .cast("long")
-            .alias("j_micro"),
-        )
-    )
-    mins = (
-        sh.crossJoin(
-            F.broadcast(
-                spark.range(_K_MH).select(F.col("id").alias("j"))
-            )
-        )
-        .groupBy("doc_id", "j")
-        .agg(
-            F.min(
-                F.md5(
-                    F.concat(
-                        F.col("j").cast("string"), F.lit("|"), F.col("sh")
-                    )
-                )
-            ).alias("mh")
-        )
-    )
+    jacc, hashes = _pair_jaccard_minhash(spark, sf_dir)
     est = (
-        pairs.join(
-            mins.select(F.col("doc_id").alias("da"), "j", "mh"), "da"
-        )
-        .join(
-            mins.select(
-                F.col("doc_id").alias("db"),
-                F.col("j").alias("jb"),
-                F.col("mh").alias("mhb"),
-            ),
-            "db",
-        )
-        .where(F.col("j") == F.col("jb"))
-        .groupBy("da", "db")
+        hashes.groupBy("da", "db")
         .agg(
             F.round(
                 F.sum(F.when(F.col("mh") == F.col("mhb"), 1).otherwise(0))

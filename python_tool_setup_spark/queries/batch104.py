@@ -18,9 +18,8 @@ from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.queries.batch90 import (
     _jacc_sql,
     _K_MH,
+    _pair_jaccard_minhash,
     _pair_shingles_sql,
-    _spark_shingles,
-    _SLICE,
 )
 from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
@@ -113,72 +112,15 @@ def _pow_col(x, n: int):
     "fixed-slice audit family; per-pair work is k x |configs|.",
 )
 def q414_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < _SLICE)
-    sh = _spark_shingles(d, 3)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ids = sh.select("doc_id").distinct()
-    pairs = (
-        ids.filter(F.col("doc_id") % 2 == 0)
-        .select(F.col("doc_id").alias("da"), (F.col("doc_id") + 1).alias("db"))
-        .join(ids.select(F.col("doc_id").alias("db")), "db")
-    )
-    sha = sh.select(F.col("doc_id").alias("da"), "sh")
-    shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb"))
-    inter = (
-        pairs.join(sha, "da")
-        .join(shb, "db")
-        .where(F.col("sh") == F.col("shb"))
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("c"))
-    )
-    c0 = F.coalesce(F.col("c"), F.lit(0))
-    jacc = (
-        pairs.join(inter, ["da", "db"], "left")
-        .join(sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("n1")), "da")
-        .join(sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("n2")), "db")
-        .select(
-            "da",
-            "db",
-            F.round(
-                c0.cast("double")
-                / (F.col("n1") + F.col("n2") - c0)
-                * F.lit(1000000.0)
-            )
-            .cast("long")
-            .alias("j_micro"),
-        )
-    )
-    mins = (
-        sh.crossJoin(
-            F.broadcast(spark.range(_K_MH).select(F.col("id").alias("j")))
-        )
-        .groupBy("doc_id", "j")
-        .agg(
-            F.min(
-                F.md5(F.concat(F.col("j").cast("string"), F.lit("|"), F.col("sh")))
-            ).alias("mh")
-        )
-    )
+    jacc, hashes = _pair_jaccard_minhash(spark, sf_dir)
     cfg = F.broadcast(
         spark.createDataFrame(_CONFIGS, ["b", "r"])
     )
-    matches = (
-        pairs.join(mins.select(F.col("doc_id").alias("da"), "j", "mh"), "da")
-        .join(
-            mins.select(
-                F.col("doc_id").alias("db"),
-                F.col("j").alias("jb"),
-                F.col("mh").alias("mhb"),
-            ),
-            "db",
-        )
-        .where(F.col("j") == F.col("jb"))
-        .select(
-            "da",
-            "db",
-            "j",
-            F.when(F.col("mh") == F.col("mhb"), 1).otherwise(0).alias("m"),
-        )
+    matches = hashes.select(
+        "da",
+        "db",
+        "j",
+        F.when(F.col("mh") == F.col("mhb"), 1).otherwise(0).alias("m"),
     )
     bandhits = (
         matches.crossJoin(cfg)

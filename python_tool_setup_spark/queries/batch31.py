@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
+from python_tool_setup_spark.queries.llm import _docs_with_copies
 from python_tool_setup_spark.tables import load_table
 
 
@@ -401,11 +402,3 @@ def q259_cross_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("split_a") != F.col("split_b"))
         .select("id_a", "id_b", "split_a", "split_b", "jaccard")
     )
-
-
-def _docs_with_copies(spark, sf_dir, limit, mutate=" zz qq"):
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < limit)
-    copies = d.withColumn("doc_id", F.col("doc_id") + 100000).withColumn(
-        "text", F.concat(F.col("text"), F.lit(mutate))
-    )
-    return d.unionByName(copies)

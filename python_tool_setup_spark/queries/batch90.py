@@ -58,6 +58,75 @@ def _spark_shingles(d: DataFrame, n: int) -> DataFrame:
     ).select("doc_id", F.explode(grams).alias("sh"))
 
 
+def _pair_jaccard_minhash(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The q409/q414 audit subtree over the doc slice's 3-gram sets, for
+    the pairs (da, db) of every even doc_id whose successor exists:
+    ``jacc`` (da, db, j_micro) their exact Jaccard in micro units, and
+    ``hashes`` (da, db, j, mh, jb, mhb) the two docs' k=_K_MH md5
+    MinHash values side by side, one row per hash j (= jb)."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < _SLICE)
+    sh = _spark_shingles(d, 3)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    ids = sh.select("doc_id").distinct()
+    pairs = (
+        ids.filter(F.col("doc_id") % 2 == 0)
+        .select(F.col("doc_id").alias("da"), (F.col("doc_id") + 1).alias("db"))
+        .join(ids.select(F.col("doc_id").alias("db")), "db")
+    )
+    sha = sh.select(F.col("doc_id").alias("da"), "sh")
+    shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("shb"))
+    inter = (
+        pairs.join(sha, "da")
+        .join(shb, "db")
+        .where(F.col("sh") == F.col("shb"))
+        .groupBy("da", "db")
+        .agg(F.count("*").alias("c"))
+    )
+    c0 = F.coalesce(F.col("c"), F.lit(0))
+    jacc = (
+        pairs.join(inter, ["da", "db"], "left")
+        .join(sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("n1")), "da")
+        .join(sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("n2")), "db")
+        .select(
+            "da",
+            "db",
+            F.round(
+                c0.cast("double")
+                / (F.col("n1") + F.col("n2") - c0)
+                * F.lit(1000000.0)
+            )
+            .cast("long")
+            .alias("j_micro"),
+        )
+    )
+    mins = (
+        sh.crossJoin(
+            F.broadcast(spark.range(_K_MH).select(F.col("id").alias("j")))
+        )
+        .groupBy("doc_id", "j")
+        .agg(
+            F.min(
+                F.md5(F.concat(F.col("j").cast("string"), F.lit("|"), F.col("sh")))
+            ).alias("mh")
+        )
+    )
+    hashes = (
+        pairs.join(mins.select(F.col("doc_id").alias("da"), "j", "mh"), "da")
+        .join(
+            mins.select(
+                F.col("doc_id").alias("db"),
+                F.col("j").alias("jb"),
+                F.col("mh").alias("mhb"),
+            ),
+            "db",
+        )
+        .where(F.col("j") == F.col("jb"))
+    )
+    return jacc, hashes
+
+
 def _jacc_sql(sh: str) -> str:
     return f"""
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM {sh} GROUP BY doc_id),

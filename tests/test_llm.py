@@ -19,6 +19,7 @@ from python_tool_setup_spark.llm import (
     simhash_pairs,
     token_count_bpeish,
 )
+from python_tool_setup_spark.llm.dedup import minhash_lsh_probe
 
 
 @pytest.fixture(scope="module")
@@ -80,6 +81,41 @@ def test_ngram_jaccard_blocked(spark, docs):
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
     assert got[(0, 2)] == 1.0
     assert (0, 3) not in got         # cross-block pair excluded by blocking
+
+
+_HOT = "the same boilerplate cookie banner text repeated on every single page"
+_TWIN = (
+    "a planted near duplicate pair about parquet row groups and shuffle "
+    "partitions that share all but the final word of their text while the "
+    "rest of the corpus is one hot boilerplate key that the bucket cap must "
+    "skip in every operator"
+)
+
+
+def test_bucket_cap_skips_hot_key_keeps_planted_pair(spark):
+    # 1001 identical documents put 1001 members in every one of their
+    # buckets: one over the 1000-member cap, so none of them is paired.
+    hot = spark.range(1001).select(
+        F.col("id").alias("doc_id"), F.lit(_HOT).alias("text")
+    )
+    twins = spark.createDataFrame(
+        [(2000, _TWIN), (2001, _TWIN + " today")],
+        "doc_id long, text string",
+    )
+    corpus = hot.unionByName(twins)
+    lsh = minhash_lsh_pairs(corpus, "doc_id", "text", shingle_size=3)
+    assert [(r["id_a"], r["id_b"]) for r in lsh.collect()] == [(2000, 2001)]
+    sim = simhash_pairs(corpus, "doc_id", "text")
+    assert [(r["id_a"], r["id_b"]) for r in sim.collect()] == [(2000, 2001)]
+
+    existing = hot.unionByName(twins.filter(F.col("doc_id") == 2000))
+    new = spark.createDataFrame(
+        [(3000, _HOT), (3001, _TWIN + " today")], "doc_id long, text string"
+    )
+    probe = minhash_lsh_probe(existing, new, "doc_id", shingle_size=3)
+    assert [(r["new_id"], r["existing_id"]) for r in probe.collect()] == [
+        (3001, 2000)
+    ]
 
 
 def test_language_id_handcrafted(spark):

@@ -16,6 +16,13 @@
 - ``profile``: split each gate's cost into DataFrame construction
   (Python + analysis) and physical planning; with named gates, also
   time three executions into a noop sink.
+- ``diff``: compare two ``capture`` directories. ``_summary.json``
+  must match byte for byte; each ``<gate>.txt`` must match once the
+  run-specific parts are normalised (``#N`` expression ids,
+  ``[plan_id=N]``, uuids with or without dashes, 8-hex staging/table
+  suffixes, temp dir names, the checkout path). Prints the byte-identical,
+  normalised-identical and differing counts, names each differing
+  gate, and exits 1 if anything differs.
 
 Lint rules:
 
@@ -50,6 +57,7 @@ Usage:
   python tools/gate_plans.py triage <plan_dir> [--json out.json]
   python tools/gate_plans.py lint <sf_dir> [gate ...] [--json out.json]
   python tools/gate_plans.py profile <sf_dir> [gate ...]
+  python tools/gate_plans.py diff <dir_a> <dir_b>
 """
 
 from __future__ import annotations
@@ -59,6 +67,7 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
 from collections.abc import Callable
 
@@ -444,6 +453,65 @@ def profile(sf_dir: str, only: list[str] | None) -> None:
         )
     )
 
+_RUN_SPECIFIC = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"[0-9a-f]{8}(-?[0-9a-f]{4}){3}-?[0-9a-f]{12}"), "<uuid>"),
+    (re.compile(r"(?<=_)[0-9a-f]{8}\b"), "<hex>"),
+    # everything before a capture's own spark-warehouse is its checkout
+    (re.compile(r"(?<=file:)/[^\s,\])]*?(?=/spark-warehouse\b)"), "<checkout>"),
+]
+_TEMP_PATH = re.compile(re.escape(tempfile.gettempdir()) + r"/[^\s,\])]*")
+# mkdtemp names end in 8 random characters after the caller's prefix
+_TEMP_NAME = re.compile(r"^(.*_)[a-z0-9_]{8}$")
+
+
+def normalise_plan(text: str) -> str:
+    """A plan text with the parts that change from run to run replaced
+    by fixed placeholders."""
+    for pat, repl in _RUN_SPECIFIC:
+        text = pat.sub(repl, text)
+    return _TEMP_PATH.sub(
+        lambda m: "/".join(_TEMP_NAME.sub(r"\1*", c) for c in m[0].split("/")),
+        text,
+    )
+
+
+def diff(dir_a: str, dir_b: str) -> int:
+    """Compare two capture directories; return the number of differences
+    (the summary counts as one, each differing or one-sided gate as one)."""
+
+    def read(d: str, name: str) -> str | None:
+        try:
+            with open(os.path.join(d, name)) as fh:
+                return fh.read()
+        except FileNotFoundError:
+            return None
+
+    def gates(d: str) -> set[str]:
+        return {f[:-4] for f in os.listdir(d) if f.endswith(".txt")}
+
+    summary_a, summary_b = read(dir_a, "_summary.json"), read(dir_b, "_summary.json")
+    summary_same = summary_a is not None and summary_a == summary_b
+    print(f"_summary.json: {'byte-identical' if summary_same else 'DIFFERS'}")
+    same = normalised = 0
+    differing = []
+    for gate in sorted(gates(dir_a) | gates(dir_b)):
+        a, b = read(dir_a, f"{gate}.txt"), read(dir_b, f"{gate}.txt")
+        if a is not None and a == b:
+            same += 1
+        elif a is not None and b is not None and normalise_plan(a) == normalise_plan(b):
+            normalised += 1
+        else:
+            differing.append(gate)
+    print(
+        f"{same} byte-identical, {normalised} normalised-identical, "
+        f"{len(differing)} differing"
+    )
+    for gate in differing:
+        print("DIFFERS", gate)
+    return len(differing) + (not summary_same)
+
 
 def main() -> None:
     ap = argparse.ArgumentParser(description="Plan tools over the gate registry.")
@@ -462,6 +530,9 @@ def main() -> None:
     p = sub.add_parser("profile", help="time construction and planning per gate")
     p.add_argument("sf_dir")
     p.add_argument("gates", nargs="*")
+    p = sub.add_parser("diff", help="compare two captured plan directories")
+    p.add_argument("dir_a")
+    p.add_argument("dir_b")
     args = ap.parse_args()
 
     if args.cmd == "capture":
@@ -470,6 +541,8 @@ def main() -> None:
         triage(args.plan_dir, args.out_json)
     elif args.cmd == "profile":
         profile(args.sf_dir, args.gates)
+    elif args.cmd == "diff":
+        sys.exit(1 if diff(args.dir_a, args.dir_b) else 0)
     else:
         report, fails = lint(args.sf_dir, args.gates)
         if args.out_json:
