@@ -74,7 +74,7 @@ def config_from_args(args: argparse.Namespace) -> IngestionConfig:
     )
 
 
-def main(argv: list[str] | None = None) -> int:
+def main(argv: list[str] | None = None) -> int:  # kept: the console entry point
     cfg = config_from_args(build_parser().parse_args(argv))
     cfg.validate()
     if cfg.dry_run:

@@ -36,7 +36,6 @@ def optimize_layout(
     fmt: str = "parquet",
     zorder_by: list[str] | None = None,
     partition_by: list[str] | None = None,
-    target_file_bytes: int = _TARGET_FILE_BYTES,
 ) -> None:
     """OPTIMIZE-equivalent over a path or managed table."""
     if fmt == "delta":
@@ -48,7 +47,7 @@ def optimize_layout(
         raise ValueError("optimize_layout needs a path or table")
     df = spark.read.format(fmt).load(path) if path else spark.table(table)
 
-    n = max(1, _estimate_num_files(spark, df, target_file_bytes))
+    n = max(1, _estimate_num_files(spark, df))
     if zorder_by:
         df = df.repartitionByRange(n, *zorder_by).sortWithinPartitions(*zorder_by)
     else:
@@ -57,13 +56,13 @@ def optimize_layout(
     overwrite_staged(spark, df, fmt, path=path, table=table, partition_by=partition_by)
 
 
-def _estimate_num_files(spark, df, target_file_bytes: int) -> int:
+def _estimate_num_files(spark, df) -> int:
     try:
         size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         # a size at the default means unknown (e.g. a partitioned catalog
         # table without statistics): fall back to one file per core
         if size < spark._jsparkSession.sessionState().conf().defaultSizeInBytes():
-            return int(min(max(1, size // target_file_bytes), 100_000))
+            return int(min(max(1, size // _TARGET_FILE_BYTES), 100_000))
     except Exception:  # noqa: BLE001
         pass
     return spark.sparkContext.defaultParallelism
@@ -97,11 +96,10 @@ def zorder_by_morton(
     col_a: str,
     col_b: str,
     num_files: int,
-    bits: int = 16,
 ):
     """Cluster rows along a real space-filling curve over two columns.
 
-    Each column is min/max-scaled to `bits` bits (two tiny aggregate
+    Each column is min/max-scaled to 16 bits (two tiny aggregate
     scalars — no data is collected), bit-interleaved into a Morton
     code, then range-partitioned + sorted by the code. Unlike the
     lexicographic `repartitionByRange(a, b)` fallback, BOTH columns
@@ -111,7 +109,7 @@ def zorder_by_morton(
     """
     from pyspark.sql import functions as F
 
-    top = (1 << bits) - 1
+    top = (1 << 16) - 1
     stats = df.agg(
         F.min(col_a).alias("a_lo"),
         F.max(col_a).alias("a_hi"),
@@ -129,7 +127,6 @@ def zorder_by_morton(
         morton_code(
             scaled(col_a, stats["a_lo"], stats["a_hi"]),
             scaled(col_b, stats["b_lo"], stats["b_hi"]),
-            bits,
         ),
     )
     return (

@@ -12,7 +12,9 @@ plain Spark lacks. Layout:
 - **Writes are copy-on-write and atomic**: a new snapshot dir is fully
   written, then the manifest is swapped — readers of version N never
   see a partial write (same staged-rewrite discipline as merge/
-  compaction).
+  compaction). The manifest itself is committed by rename from a
+  hidden staged sibling (``commit_object``), so a crash mid-swap
+  leaves the previous manifest readable.
 - **Time travel** = read the snapshot dir for version N; zero extra
   cost over a plain read.
 - **Change feed** between versions = a full-outer join of the two
@@ -35,10 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.sources.fs import (
+    commit_object,
     delete_path,
-    get_object,
-    path_exists,
-    put_object,
+    read_committed,
 )
 
 
@@ -47,10 +48,8 @@ def _manifest_path(table_path: str) -> str:
 
 
 def list_versions(spark: SparkSession, table_path: str) -> list[int]:
-    mp = _manifest_path(table_path)
-    if not path_exists(spark, mp):
-        return []
-    return json.loads(get_object(spark, mp).decode("utf-8"))["versions"]
+    manifest = read_committed(spark, _manifest_path(table_path))
+    return [] if manifest is None else json.loads(manifest)["versions"]
 
 
 def _version_dir(table_path: str, version: int) -> str:
@@ -61,14 +60,13 @@ def write_version(
     spark: SparkSession,
     df: DataFrame,
     table_path: str,
-    fmt: str = "parquet",
 ) -> int:
     """Write `df` as the next version of the table; returns the new
     version id. Snapshot first, manifest swap last (atomic commit)."""
     versions = list_versions(spark, table_path)
     new_v = (versions[-1] + 1) if versions else 0
-    df.write.format(fmt).mode("overwrite").save(_version_dir(table_path, new_v))
-    put_object(
+    df.write.mode("overwrite").parquet(_version_dir(table_path, new_v))
+    commit_object(
         spark,
         _manifest_path(table_path),
         json.dumps({"versions": versions + [new_v]}),
@@ -80,7 +78,6 @@ def read_version(
     spark: SparkSession,
     table_path: str,
     version: int | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Time travel: read snapshot `version` (default: latest)."""
     versions = list_versions(spark, table_path)
@@ -90,7 +87,7 @@ def read_version(
         version = versions[-1]
     if version not in versions:
         raise ValueError(f"version {version} not in {versions}")
-    return spark.read.format(fmt).load(_version_dir(table_path, version))
+    return spark.read.parquet(_version_dir(table_path, version))
 
 
 def vacuum_versions(spark: SparkSession, table_path: str, keep: int) -> list[int]:
@@ -99,7 +96,7 @@ def vacuum_versions(spark: SparkSession, table_path: str, keep: int) -> list[int
     kept, dropped = versions[-keep:], versions[:-keep]
     for v in dropped:
         delete_path(spark, _version_dir(table_path, v))
-    put_object(spark, _manifest_path(table_path), json.dumps({"versions": kept}))
+    commit_object(spark, _manifest_path(table_path), json.dumps({"versions": kept}))
     return kept
 
 
@@ -159,7 +156,6 @@ def publish_tables(
     spark: SparkSession,
     root: str,
     tables: dict[str, DataFrame],
-    fmt: str = "parquet",
 ) -> int:
     """MULTI-table atomic publish: write a new snapshot of every table
     in ``tables``, then commit ONE root manifest referencing all of
@@ -174,18 +170,17 @@ def publish_tables(
     ``{"version": N, "tables": {name: snapshot_version}}``. Snapshot
     writes happen first; the root-manifest swap is the commit point —
     a writer crash before it leaves invisible orphans only.
-    Returns the new publish version.
+    Only a missing root manifest means a first publish; an unreadable
+    one raises. Returns the new publish version.
     """
     pub_path = f"{root.rstrip('/')}/_PUBLISH.json"
-    try:
-        current = json.loads(get_object(spark, pub_path))
-    except Exception:  # noqa: BLE001 — first publish
-        current = {"version": -1, "tables": {}}
+    current = read_committed(spark, pub_path)
+    version = -1 if current is None else json.loads(current)["version"]
     refs = {}
     for name, df in tables.items():
-        refs[name] = write_version(spark, df, f"{root.rstrip('/')}/{name}", fmt=fmt)
-    new_v = current["version"] + 1
-    put_object(
+        refs[name] = write_version(spark, df, f"{root.rstrip('/')}/{name}")
+    new_v = version + 1
+    commit_object(
         spark, pub_path, json.dumps({"version": new_v, "tables": refs})
     )
     return new_v
@@ -195,22 +190,16 @@ def read_published(
     spark: SparkSession,
     root: str,
     name: str,
-    publish_version: int | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
-    """Read table ``name`` as of a multi-table publish (default:
-    latest). All tables read at the same ``publish_version`` are
-    mutually consistent by construction."""
+    """Read table ``name`` as of the latest multi-table publish. All
+    tables read at the same publish are mutually consistent by
+    construction."""
     pub_path = f"{root.rstrip('/')}/_PUBLISH.json"
-    manifest = json.loads(get_object(spark, pub_path))
-    if publish_version is not None and manifest["version"] != publish_version:
-        raise ValueError(
-            f"publish version {publish_version} is not current "
-            f"({manifest['version']}); snapshot pinning requires keeping "
-            "historical manifests (single-table time travel: read_version)"
-        )
-    v = manifest["tables"][name]
-    return read_version(spark, f"{root.rstrip('/')}/{name}", v, fmt=fmt)
+    manifest = read_committed(spark, pub_path)
+    if manifest is None:
+        raise FileNotFoundError(f"nothing published at {root}")
+    v = json.loads(manifest)["tables"][name]
+    return read_version(spark, f"{root.rstrip('/')}/{name}", v)
 
 
 def clean_orphans(spark: SparkSession, table_path: str) -> list[str]:
@@ -252,7 +241,6 @@ def forget_keys(
     table_path: str,
     key_col: str,
     keys: list,
-    fmt: str = "parquet",
 ) -> dict:
     """Right-to-be-forgotten purge: physically remove every row whose
     ``key_col`` is in ``keys`` from the WHOLE table — current version
@@ -273,28 +261,22 @@ def forget_keys(
     """
     import os
 
-    latest = read_version(spark, table_path, fmt=fmt)
+    latest = read_version(spark, table_path)
     # Null-safe keep predicate: a bare ~isin(keys) is NULL (dropped by
     # filter) for NULL-keyed rows, silently purging rows nobody asked
     # to forget. NULL never equals a subject key, so it is always kept.
     scrubbed = latest.filter(
         F.col(key_col).isNull() | ~F.col(key_col).isin(keys)
     )
-    write_version(spark, scrubbed, table_path, fmt=fmt)
+    write_version(spark, scrubbed, table_path)
     vacuum_versions(spark, table_path, keep=1)
     clean_orphans(spark, table_path)
 
-    # Audit every data file of the configured format, not just parquet
-    # (fmt is caller-chosen; a hardcoded .parquet suffix would scan
-    # nothing for orc/json/csv and report a vacuous purge_complete).
-    ext = {"parquet": ".parquet", "orc": ".orc", "json": ".json", "csv": ".csv"}.get(
-        fmt, f".{fmt}"
-    )
     files = []
     for root, _dirs, names in os.walk(table_path):
-        files += [os.path.join(root, f) for f in names if f.endswith(ext)]
+        files += [os.path.join(root, f) for f in names if f.endswith(".parquet")]
     residual = (
-        spark.read.format(fmt).load(files).filter(F.col(key_col).isin(keys)).count()
+        spark.read.parquet(*files).filter(F.col(key_col).isin(keys)).count()
         if files
         else 0
     )

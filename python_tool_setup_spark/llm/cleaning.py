@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.llm.dedup import content_hash
+from python_tool_setup_spark.llm.text import tokenize
 
 # deliberately simple patterns that parse identically under Java regex
 # (Spark) and RE2 (DuckDB): character classes + bounded repetition only
@@ -37,7 +38,6 @@ def contamination_report(
     test: DataFrame,
     train_id: str,
     test_id: str,
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact train/test overlap by content hash: one row per
     contaminated test doc with the matching train doc ids.
@@ -48,11 +48,11 @@ def contamination_report(
     """
     t = train.select(
         F.col(train_id).alias("train_id"),
-        content_hash(text_col).alias("__h"),
+        content_hash("text").alias("__h"),
     )
     e = test.select(
         F.col(test_id).alias("test_id"),
-        content_hash(text_col).alias("__h"),
+        content_hash("text").alias("__h"),
     )
     return (
         t.join(F.broadcast(e), "__h")
@@ -64,28 +64,19 @@ def contamination_report(
     )
 
 
-def redact_pii(
-    df: DataFrame,
-    text_col: str = "text",
-    patterns: dict[str, str] | None = None,
-    token: str = "[REDACTED_{kind}]",
-) -> DataFrame:
-    """Replace every PII pattern occurrence with a typed placeholder.
-    A chained regexp_replace per pattern, fused into one projection."""
-    out = F.col(text_col)
-    for kind, pat in (patterns or PII_PATTERNS).items():
-        out = F.regexp_replace(out, pat, token.format(kind=kind.upper()))
-    return df.withColumn(text_col, out)
-
-
-def _tokens(text_col: str) -> Column:
-    return F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+def redact_pii(df: DataFrame) -> DataFrame:
+    """Replace every PII pattern occurrence in ``text`` with a typed
+    placeholder ``[REDACTED_<KIND>]``. A chained regexp_replace per
+    pattern, fused into one projection."""
+    out = F.col("text")
+    for kind, pat in PII_PATTERNS.items():
+        out = F.regexp_replace(out, pat, f"[REDACTED_{kind.upper()}]")
+    return df.withColumn("text", out)
 
 
 def chunk_documents(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
     window: int = 64,
     stride: int = 48,
 ) -> DataFrame:
@@ -94,7 +85,7 @@ def chunk_documents(
     [i*stride, i*stride + window). Emits (id, chunk_id, chunk_text,
     n_tokens); short documents produce exactly one chunk."""
     toks = df.select(
-        F.col(id_col), _tokens(text_col).alias("__toks")
+        F.col(id_col), tokenize("text").alias("__toks")
     ).withColumn("__n", F.size("__toks"))
     starts = F.sequence(
         F.lit(0),
@@ -124,13 +115,12 @@ def chunk_documents(
 def repetition_score(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
-    ngram: int = 3,
 ) -> DataFrame:
     """Boilerplate/template-spam signal: the fraction of a document's
-    n-grams occupied by its single most-repeated n-gram. Near-1.0 ⇒
-    the doc is one phrase repeated; clean prose scores low."""
-    toks = df.select(F.col(id_col), _tokens(text_col).alias("__t"))
+    word trigrams occupied by its single most-repeated trigram. Near-1.0
+    ⇒ the doc is one phrase repeated; clean prose scores low."""
+    ngram = 3
+    toks = df.select(F.col(id_col), tokenize("text").alias("__t"))
     grams = toks.select(
         id_col,
         F.explode(
@@ -163,8 +153,6 @@ def segment_word_lines(
     takes the segmented array, not raw text). Executor-side array ops
     only; no Python, no shuffle.
     """
-    from python_tool_setup_spark.llm.text import tokenize
-
     toks = tokenize(text_col)
     n = F.size(toks)
     n_lines = F.ceil(n / F.lit(words_per_line)).cast("int")
@@ -184,7 +172,6 @@ def remove_boilerplate_lines(
     text_col: str = "text",
     min_docs: int = 2,
     words_per_line: int = 10,
-    broadcast_boiler: bool = True,
 ) -> DataFrame:
     """C4/RefinedWeb-style line-level boilerplate removal: drop every
     line that occurs verbatim in >= ``min_docs`` distinct documents
@@ -199,8 +186,7 @@ def remove_boilerplate_lines(
     - the boilerplate SET is small by construction (<= total_lines /
       min_docs entries, in practice tiny), so the removal join is a
       broadcast LEFT ANTI — the corpus itself never shuffles for the
-      filter. ``broadcast_boiler=False`` falls back to a shuffle
-      anti-join for pathological thresholds.
+      filter.
     - reassembly is the one unavoidable wide shuffle (groupBy doc).
     """
     lines = df.select(
@@ -217,9 +203,7 @@ def remove_boilerplate_lines(
         .filter(F.col("__df") >= min_docs)
         .select("__line")
     )
-    if broadcast_boiler:
-        boiler = F.broadcast(boiler)
-    kept = lines.join(boiler, "__line", "left_anti")
+    kept = lines.join(F.broadcast(boiler), "__line", "left_anti")
     reassembled = (
         kept.groupBy(id_col)
         .agg(
@@ -259,21 +243,19 @@ def normalize_text(text_col: Column | str) -> Column:
     return F.trim(c)
 
 
-def normalized_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def normalized_dedup(df: DataFrame) -> DataFrame:
     """Near-exact dedup on the canonical key: documents equal after
     :func:`normalize_text` collapse to one group. Returns one row per
-    group: (survivor id = min id, n_variants, norm_len), the same
+    group: (survivor id = min doc_id, n_variants, norm_len), the same
     hash-groupBy shape as exact_dedup but case/space/accent-blind.
     """
     norm = df.select(
-        F.col(id_col), normalize_text(text_col).alias("__norm")
+        F.col("doc_id"), normalize_text("text").alias("__norm")
     )
     return (
         norm.groupBy("__norm")
         .agg(
-            F.min(id_col).alias("survivor_id"),
+            F.min("doc_id").alias("survivor_id"),
             F.count(F.lit(1)).cast("bigint").alias("n_variants"),
         )
         .select(

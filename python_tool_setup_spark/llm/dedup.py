@@ -24,15 +24,19 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from python_tool_setup_spark.llm.text import tokenize
+from python_tool_setup_spark.operators.blockrank import pin
+
 # Candidate buckets with more members than this are skipped.
 _MAX_BUCKET = 1000
 
 
 # ----------------------------------------------------------- exact (L1) ----
-def content_hash(text: Column | str, num_bits: int = 256) -> Column:
-    """Collision-safe content hash for exact dedup at corpus scale."""
+def content_hash(text: Column | str) -> Column:
+    """Collision-safe content hash (SHA-256) for exact dedup at corpus
+    scale."""
     col = F.col(text) if isinstance(text, str) else text
-    return F.sha2(col, num_bits)
+    return F.sha2(col, 256)
 
 
 def exact_dedup(
@@ -51,9 +55,14 @@ def exact_dedup(
 
 
 # ------------------------------------------------------------- shingles ----
-def shingles(text: Column | str, size: int = 5) -> Column:
-    """Word n-gram shingles of lowercased text → array<string>.
-    Documents shorter than ``size`` tokens yield one whole-text shingle.
+def shingles(tokens: Column | str, size: int = 5) -> Column:
+    """Word n-gram shingles of a token array (``llm.text.tokenize``) →
+    array<string>. Documents shorter than ``size`` tokens yield one
+    whole-text shingle.
+
+    The expression references the token array ``2 * size + 2`` times,
+    so pass a column a projection already holds: Spark does not share
+    the work of identical expressions that contain lambda functions.
 
     Built from ``size - 1`` chained ``zip_with`` concats over shifted
     token arrays: O(size) array ops per row. The transform-over-indices
@@ -61,9 +70,7 @@ def shingles(text: Column | str, size: int = 5) -> Column:
     the token array per element inside an interpreted HOF and was ~6x
     slower at 5k docs — shingling feeds MinHash, SimHash, and Jaccard,
     so this expression is the hottest path in the dedup family."""
-    from python_tool_setup_spark.llm.text import tokenize
-
-    toks = tokenize(text)
+    toks = F.col(tokens) if isinstance(tokens, str) else tokens
     n = F.size(toks)
     whole = F.array(F.concat_ws(" ", toks))
     grams = toks
@@ -75,15 +82,12 @@ def shingles(text: Column | str, size: int = 5) -> Column:
 
 
 # ------------------------------------- engine-independent md5 hashes ----
-def md5_hash32(col: Column | str, seed: int = 0) -> Column:
+def md5_hash32(col: Column | str) -> Column:
     """Stable 32-bit hash in [0, 2^32) from md5 of UTF-8 text.
 
     Engine-independent (unlike xxhash64), so a DuckDB oracle can
-    reproduce it: ``CAST('0x' || substr(md5(x || '#seed'), 1, 8) AS
-    BIGINT)``. Seed 0 omits the suffix."""
+    reproduce it: ``CAST('0x' || substr(md5(x), 1, 8) AS BIGINT)``."""
     c = F.col(col) if isinstance(col, str) else col
-    if seed:
-        c = F.concat(c, F.lit(f"#{seed}"))
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
 
 
@@ -100,12 +104,11 @@ def md5_hash64(col: Column | str) -> Column:
 
 
 # -------------------------------------------------------- MinHash (L2) ----
-def minhash_signature(
-    text: Column | str, num_hashes: int = 64, shingle_size: int = 5
-) -> Column:
-    """MinHash signature: array of ``num_hashes`` min-over-shingles of
-    seeded xxhash64. Per-row expression — zero shuffle at any scale."""
-    sh = shingles(text, shingle_size)
+def minhash_signature(sh: Column | str, num_hashes: int = 64) -> Column:
+    """MinHash signature of a shingle array (``shingles``): array of
+    ``num_hashes`` min-over-shingles of seeded xxhash64. Per-row
+    expression — zero shuffle at any scale."""
+    sh = F.col(sh) if isinstance(sh, str) else sh
     # Single pass over the shingle array: fold with a num_hashes-wide
     # accumulator (min per seed). The naive form — num_hashes separate
     # array_min(transform(...)) projections — re-evaluates the shingle
@@ -125,11 +128,13 @@ def minhash_signature(
 def _minhash_base(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_size: int
 ) -> DataFrame:
-    """(__id, __sh, __sig): each row's shingle set and MinHash signature."""
-    return df.select(
-        F.col(id_col).alias("__id"),
-        shingles(text_col, shingle_size).alias("__sh"),
-        minhash_signature(text_col, num_hashes, shingle_size).alias("__sig"),
+    """(__id, __sh, __sig): each row's shingle set and MinHash signature,
+    one projection per step, so each document is tokenized and shingled
+    once."""
+    return (
+        df.select(F.col(id_col).alias("__id"), tokenize(text_col).alias("__tk"))
+        .select("__id", shingles("__tk", shingle_size).alias("__sh"))
+        .select("__id", "__sh", minhash_signature("__sh", num_hashes).alias("__sig"))
     )
 
 
@@ -296,10 +301,10 @@ def minhash_lsh_probe(
 
 
 # -------------------------------------------------------- SimHash (L2) ----
-def simhash(text: Column | str, num_bits: int = 64, shingle_size: int = 2) -> Column:
-    """64-bit SimHash over word shingles, pure built-ins: per bit i,
-    sign of Σ_tokens (±1 by hash bit i), packed into a bigint."""
-    sh = shingles(text, shingle_size)
+def simhash(text: Column | str, num_bits: int = 64) -> Column:
+    """64-bit SimHash over word bigram shingles, pure built-ins: per bit
+    i, sign of Σ_tokens (±1 by hash bit i), packed into a bigint."""
+    sh = shingles(tokenize(text), 2)
     hashes = F.transform(sh, md5_hash64)
     # Single pass: fold the hash array into a num_bits-wide vote vector
     # (±1 per bit), then pack sign bits into one long. shiftleft(1L, 63)
@@ -338,13 +343,12 @@ def simhash_pairs(
     id_col: str,
     text_col: str = "text",
     max_hamming: int = 3,
-    shingle_size: int = 2,
 ) -> DataFrame:
     """All pairs with hamming(simhash) <= max_hamming, found EXACTLY via
     pigeonhole chunk blocking (4 chunks of 16 bits: distance ≤ 3 forces
     an identical chunk), then verified with bit_count(a XOR b)."""
     base = df.select(
-        F.col(id_col).alias("__id"), simhash(text_col, 64, shingle_size).alias("__sim")
+        F.col(id_col).alias("__id"), simhash(text_col, 64).alias("__sim")
     )
     chunked = base.select(
         "__id",
@@ -421,11 +425,15 @@ def ngram_jaccard_pairs(
         raise ValueError("threshold must be > 0 (pairs with no shared "
                          "shingle are never materialized)")
     blocks = list(block_cols)
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        *[F.col(c) for c in blocks],
-        shingles(text_col, shingle_size).alias("__sh"),
-    ).withColumn("__n", F.size("__sh"))
+    base = (
+        df.select(
+            F.col(id_col).alias("__id"),
+            *[F.col(c) for c in blocks],
+            tokenize(text_col).alias("__tk"),
+        )
+        .select("__id", *blocks, shingles("__tk", shingle_size).alias("__sh"))
+        .withColumn("__n", F.size("__sh"))
+    )
     ex = base.select(
         *blocks, "__id", "__n", F.explode("__sh").alias("__s")
     )
@@ -468,9 +476,9 @@ def ngram_jaccard_pairs(
 
 
 # --------------------------------------------- cluster resolution (L2) ----
-def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                 max_iter: int = 20) -> DataFrame:
-    """Resolve near-dup PAIRS into CLUSTERS: every id gets the minimum
+def dup_clusters(pairs: DataFrame) -> DataFrame:
+    """Resolve near-dup PAIRS (``id_a``, ``id_b``) into CLUSTERS: every
+    id gets the minimum
     id reachable through the pair graph (`cluster_id`), so "keep one
     per cluster" is a single dropDuplicates downstream.
 
@@ -478,18 +486,17 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     each round joins current labels through the edge list and keeps the
     per-node minimum; converges in O(log(diameter)) rounds for dup
     graphs (near-clique components -> typically 2-3 rounds). Each round
-    is one shuffle on node id; `localCheckpoint` truncates the plan so
-    lineage doesn't grow per iteration. The previous label rides along
+    is one shuffle on node id, at most 20 rounds; a pin truncates the
+    plan so lineage doesn't grow per iteration. The previous label rides along
     inside the same groupBy, so the convergence probe is a short-circuit
     scan (``limit(1).count``) over the checkpointed round output — no
     extra join or full count per round. The driver sees only that 0/1,
     never row data.
     """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+    edges = pin(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -497,7 +504,7 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         .withColumn("cluster_id", F.col("node"))
     )
     id_type = dict(labels.dtypes)["cluster_id"]
-    for _ in range(max_iter):
+    for _ in range(20):
         prop = edges.join(labels, edges["dst"] == labels["node"]).select(
             F.col("src").alias("node"),
             F.col("cluster_id").alias("cand"),
@@ -508,7 +515,7 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             F.col("cluster_id").alias("cand"),
             F.col("cluster_id").alias("old"),
         )
-        new = (
+        new = pin(
             cur.unionByName(prop)
             .groupBy("node")
             .agg(
@@ -516,7 +523,6 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                 # every node has exactly one non-null old label
                 F.max("old").alias("old"),
             )
-            .localCheckpoint()
         )
         changed = (
             new.filter(F.col("cluster_id") != F.col("old")).limit(1).count()
@@ -532,32 +538,28 @@ def incremental_dedup(
     batch: DataFrame,
     store: DataFrame,
     id_col: str,
-    text_col: str = "text",
-    hash_col: str = "content_sha",
 ) -> DataFrame:
-    """Cross-run exact dedup: drop batch rows whose content hash already
-    exists in a persisted hash store, keeping the min-id row per hash
-    within the batch.
+    """Cross-run exact dedup: drop batch rows whose ``text`` hash
+    (``content_sha``) already exists in a persisted hash store, keeping
+    the min-id row per hash within the batch.
 
     This is how 100 TB pipelines dedup INCREMENTALLY — each crawl batch
     is checked against the accumulated index instead of re-clustering
     the full corpus. Both the in-batch winner window and the anti join
-    hash-partition on ``hash_col``, so Spark reuses one exchange; at
-    scale, persist the store bucketed by ``hash_col`` and the anti join
+    hash-partition on ``content_sha``, so Spark reuses one exchange; at
+    scale, persist the store bucketed by ``content_sha`` and the anti join
     prunes to touched buckets. Survivors' hashes appended to the store
     complete the cycle.
     """
-    from pyspark.sql import Window
-
-    hashed = batch.withColumn(hash_col, F.sha2(F.col(text_col), 256))
-    w = Window.partitionBy(hash_col).orderBy(id_col)
+    hashed = batch.withColumn("content_sha", F.sha2(F.col("text"), 256))
+    w = Window.partitionBy("content_sha").orderBy(id_col)
     firsts = (
         hashed.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    seen = store.select(hash_col).distinct()
-    return firsts.join(seen, hash_col, "left_anti")
+    seen = store.select("content_sha").distinct()
+    return firsts.join(seen, "content_sha", "left_anti")
 
 
 def edit_distance_pairs(
@@ -616,8 +618,6 @@ def edit_distance_pairs(
 
 def repeated_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_len: int = 8,
     min_docs: int = 2,
 ) -> DataFrame:
@@ -634,16 +634,16 @@ def repeated_spans(
     windows) key on high-cardinality columns.
 
     Returns one row per document that contains at least one duplicated
-    span: (id, n_dup_spans, dup_tokens, n_tokens, dup_fraction).
+    span: (doc_id, n_dup_spans, dup_tokens, n_tokens, dup_fraction).
     """
     from python_tool_setup_spark.sources.files import fan_out
 
     L = int(shingle_len)
     toks = (
         fan_out(df).select(
-            F.col(id_col).alias("__id"),
+            F.col("doc_id").alias("__id"),
             F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+"),
+                F.split(F.lower(F.col("text")), "[^a-z]+"),
                 lambda t: t != F.lit(""),
             ).alias("__tk"),
         )
@@ -705,7 +705,7 @@ def repeated_spans(
             .alias("dup_tokens"),
         )
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("doc_id"),
             "n_dup_spans",
             "dup_tokens",
             F.col("__n_tokens").cast("bigint").alias("n_tokens"),

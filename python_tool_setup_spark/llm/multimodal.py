@@ -8,8 +8,8 @@ features come from actual pixel data. Formats with no codec in the
 container (JPEG, audio, video) remain STUBS: the real-Spark parts —
 schema, binaryFile ingestion, batch iteration shape, partitioning — are
 real and tested; only the non-PNG pixel math of ``decode_image_features``
-(behind ``use_fake_decoder``) and the frame slicing of ``sample_frames``
-are clearly-marked deterministic fakes.
+and the frame slicing of ``sample_frames`` are clearly-marked
+deterministic fakes.
 
 At 100 TB: media bytes stay in executor-local Arrow batches end to end
 (binaryFile scan → mapInPandas); nothing is collected; per-file rows
@@ -66,26 +66,27 @@ def with_media_metadata(df: DataFrame) -> DataFrame:
     )
 
 
-def _band_means(pixels: bytes, feature_dim: int) -> list[float]:
-    """Feature vector: mean intensity of ``feature_dim`` equal byte
+# Length of the feature vector ``decode_image_features`` extracts.
+_FEATURE_DIM = 8
+
+
+def _band_means(pixels: bytes) -> list[float]:
+    """Feature vector: mean intensity of ``_FEATURE_DIM`` equal byte
     bands — deterministic, resolution-independent, vectorized."""
     import numpy as np
 
     arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64) / 255.0
-    return [float(b.mean()) if b.size else 0.0 for b in np.array_split(arr, feature_dim)]
+    return [float(b.mean()) if b.size else 0.0 for b in np.array_split(arr, _FEATURE_DIM)]
 
 
-def decode_image_features(
-    df: DataFrame, feature_dim: int = 8, use_fake_decoder: bool = True
-) -> DataFrame:
+def decode_image_features(df: DataFrame) -> DataFrame:
     """Decode images and extract a feature vector via mapInPandas.
 
     PNG content (by signature) is decoded for REAL with the stdlib
     codec in ``llm/png.py``; features are band means over the actual
-    pixel bytes. Non-PNG content falls back to a deterministic
-    digest-derived fake when ``use_fake_decoder=True`` (the honest stub
-    boundary — no JPEG/audio/video codecs in this container), or
-    raises NotImplementedError when False.
+    pixel bytes. Non-PNG content gets a deterministic digest-derived
+    fake (the honest stub boundary — no JPEG/audio/video codecs in
+    this container).
     """
     from python_tool_setup_spark.llm.png import _SIGNATURE, decode_png
 
@@ -103,19 +104,15 @@ def decode_image_features(
                     out["width"].append(w)
                     out["height"].append(h)
                     out["n_channels"].append(ch)
-                    out["feature"].append(_band_means(pixels, feature_dim))
+                    out["feature"].append(_band_means(pixels))
                     continue
-                if not use_fake_decoder:
-                    raise NotImplementedError(
-                        "non-PNG decode requires PIL/opencv; not in container"
-                    )
                 digest = hashlib.sha256(data).digest()
                 out["path"].append(path)
                 out["width"].append(16 + digest[0] % 64)       # fake decode
                 out["height"].append(16 + digest[1] % 64)      # fake decode
                 out["n_channels"].append(3)
                 out["feature"].append(
-                    [b / 255.0 for b in digest[:feature_dim]]  # fake features
+                    [b / 255.0 for b in digest[:_FEATURE_DIM]]  # fake features
                 )
             yield pd.DataFrame(out)
 

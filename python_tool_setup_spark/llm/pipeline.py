@@ -30,8 +30,8 @@ HASH_MOD = 10_000
 
 
 # ------------------------------------------------- deterministic hash ----
-def hash_bucket(key: Column | str, modulus: int = HASH_MOD) -> Column:
-    """Stable [0, modulus) bucket from md5 of the key's string form.
+def hash_bucket(key: Column | str) -> Column:
+    """Stable [0, HASH_MOD) bucket from md5 of the key's string form.
 
     Engine-independent (md5 of UTF-8 text), unlike xxhash64/crc32, so
     samples match across Spark, DuckDB, or any downstream system.
@@ -40,7 +40,7 @@ def hash_bucket(key: Column | str, modulus: int = HASH_MOD) -> Column:
     return (
         F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
         .cast("bigint")
-        % F.lit(modulus)
+        % F.lit(HASH_MOD)
     )
 
 
@@ -49,10 +49,10 @@ def stratified_sample(
     strata_col: str,
     rates: dict[str, float],
     key_col: str,
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Deterministic per-stratum sampling: keep a row iff its hash
-    bucket falls below rate*HASH_MOD for its stratum.
+    bucket falls below rate*HASH_MOD for its stratum; rows of a stratum
+    missing from ``rates`` are dropped.
 
     `rates` is a small dict (strata cardinality ~ languages/domains),
     inlined as a literal map — evaluated per row with zero shuffle and
@@ -61,7 +61,7 @@ def stratified_sample(
     entries = [x for k, v in rates.items() for x in (F.lit(k), F.lit(float(v)))]
     rate = F.coalesce(
         F.element_at(F.create_map(*entries), F.col(strata_col)),
-        F.lit(float(default_rate)),
+        F.lit(0.0),
     )
     return df.filter(hash_bucket(key_col) < rate * HASH_MOD)
 
@@ -117,17 +117,12 @@ def pack_shards(
 
 
 # -------------------------------------------------------- mix weights ----
-def mix_weights(
-    df: DataFrame,
-    group_col: str,
-    target_shares: dict[str, float] | None = None,
-) -> DataFrame:
-    """Per-group resampling weight = target_share / actual_share.
-
-    With no target, the target is uniform across observed groups. The
-    output is one row per group (broadcast-sized) — join it back to
-    rows and feed the weight into `stratified_sample` rates to
-    rebalance a corpus toward the target mix.
+def mix_weights(df: DataFrame, group_col: str) -> DataFrame:
+    """Per-group resampling weight = target_share / actual_share, with
+    the target uniform across observed groups. The output is one row
+    per group (broadcast-sized) — join it back to rows and feed the
+    weight into `stratified_sample` rates to rebalance a corpus toward
+    the uniform mix.
     """
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("group_rows"))
     tots = counts.agg(
@@ -136,15 +131,7 @@ def mix_weights(
     counts = counts.crossJoin(F.broadcast(tots)).withColumn(
         "actual_share", F.col("group_rows") / F.col("_tot")
     )
-    if target_shares:
-        entries = [
-            x for k, v in target_shares.items() for x in (F.lit(k), F.lit(float(v)))
-        ]
-        tgt = F.coalesce(
-            F.element_at(F.create_map(*entries), F.col(group_col)), F.lit(0.0)
-        )
-    else:
-        tgt = F.lit(1.0) / F.col("_ng")
+    tgt = F.lit(1.0) / F.col("_ng")
     return counts.withColumn("weight", tgt / F.col("actual_share")).select(
         group_col,
         "group_rows",
@@ -162,9 +149,9 @@ def train_val_test_split(
     key_col: str,
     val_frac: float = 0.01,
     test_frac: float = 0.01,
-    split_col: str = "split",
 ) -> DataFrame:
-    """Deterministic train/val/test assignment by content-hash bucket.
+    """Deterministic train/val/test assignment (column ``split``) by
+    content-hash bucket.
 
     The md5 bucket of the KEY decides the split, so membership is
     stable across runs, machines, and engines (reproducible evals), a
@@ -176,7 +163,7 @@ def train_val_test_split(
     val_hi = int(val_frac * HASH_MOD)
     test_hi = val_hi + int(test_frac * HASH_MOD)
     return df.withColumn(
-        split_col,
+        "split",
         F.when(b < val_hi, "val")
         .when(b < test_hi, "test")
         .otherwise("train"),
@@ -188,7 +175,6 @@ def cap_per_group(
     group_cols,
     order_cols,
     max_rows: int,
-    rank_col: str = "__rank",
 ) -> DataFrame:
     """Frequency capping: keep at most ``max_rows`` rows per group
     (e.g. per domain / source), preferring rows by ``order_cols``.
@@ -200,9 +186,9 @@ def cap_per_group(
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= max_rows)
-        .drop(rank_col)
+        df.withColumn("__rank", F.row_number().over(w))
+        .filter(F.col("__rank") <= max_rows)
+        .drop("__rank")
     )
 
 
@@ -363,10 +349,10 @@ def assign_global_ids(
     df: DataFrame,
     order_col: str,
     chunk_size: int = 100_000,
-    id_name: str = "global_id",
 ) -> DataFrame:
-    """Contiguous 0..N-1 ids in ``order_col`` order without a global
-    sort (the zipWithIndex primitive, kept in the DataFrame API).
+    """Contiguous 0..N-1 ids (column ``global_id``) in ``order_col``
+    order without a global sort (the zipWithIndex primitive, kept in
+    the DataFrame API).
 
     Same two-level decomposition as :func:`pack_shards`: the chunk key
     ``order_col // chunk_size`` is monotone in the order column, so
@@ -388,7 +374,7 @@ def assign_global_ids(
     return (
         chunked.join(F.broadcast(offsets), "_chunk")
         .withColumn(
-            id_name, F.col("_off") + F.row_number().over(w_in) - 1
+            "global_id", F.col("_off") + F.row_number().over(w_in) - 1
         )
         .drop("_chunk", "_cn", "_off")
     )

@@ -25,28 +25,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 TOKEN_SPLIT = "[^a-z]+"
-
-
-def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(all input columns) + exploded lowercase alpha ``term``."""
-    return (
-        df.withColumn(
-            "term", F.explode(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT))
-        )
-        .filter(F.col("term") != "")
-    )
+# BM25's tf saturation and length normalization (the usual defaults).
+_K1 = 1.2
+_B = 0.75
 
 
 def bm25_topk(
     docs: DataFrame,
     query_terms: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
-    """Top-``k`` documents per query by BM25.
+    """Top-``k`` documents per query by BM25 over ``docs`` (doc_id, text).
 
     ``query_terms``: (qid, term) — one row per query keyword; scoring
     uses the Robertson/Sparck-Jones idf ``ln(1 + (N - df + .5)/(df + .5))``
@@ -61,23 +50,23 @@ def bm25_topk(
     from python_tool_setup_spark.sources.files import fan_out
 
     arr = fan_out(docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
+            F.split(F.lower(F.col("text")), TOKEN_SPLIT),
             lambda t: t != F.lit(""),
         ).alias("__tk"),
     )
     toks = arr.select(
-        id_col,
+        "doc_id",
         F.size("__tk").alias("dl"),
         F.explode("__tk").alias("term"),
     )
     postings = (
-        toks.groupBy(id_col, "dl", "term")
+        toks.groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
         .persist()
     )
-    doc_len = postings.select(id_col, "dl").distinct()
+    doc_len = postings.select("doc_id", "dl").distinct()
     n_and_avg = doc_len.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.avg("dl").alias("avg_dl"),
@@ -92,7 +81,7 @@ def bm25_topk(
     idf = (
         postings.join(F.broadcast(query_terms.select("term").distinct()), "term")
         .groupBy("term")
-        .agg(F.countDistinct(id_col).alias("df"))
+        .agg(F.countDistinct("doc_id").alias("df"))
         .crossJoin(F.broadcast(n_and_avg.select("n_docs")))
         .select(
             "term",
@@ -109,13 +98,13 @@ def bm25_topk(
         .withColumn(
             "w",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
+            * (F.col("tf") * (_K1 + 1.0))
             / (
                 F.col("tf")
-                + k1 * (1.0 - b + b * F.col("dl") / F.col("avg_dl"))
+                + _K1 * (1.0 - _B + _B * F.col("dl") / F.col("avg_dl"))
             ),
         )
-        .groupBy("qid", id_col)
+        .groupBy("qid", "doc_id")
         # scale-first round: kills the per-engine ROUND(x, 6) tie
         # class. Residual (documented floor): idf is ln()-derived
         # (libm-bound, ulp-identical at best across engines) and the
@@ -125,10 +114,10 @@ def bm25_topk(
         .agg((F.round(1000000 * F.sum("w")) / 1000000.0).alias("score"))
     )
     w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col(id_col)
+        F.col("score").desc(), F.col("doc_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("qid", id_col, "score", "rank")
+        .select("qid", "doc_id", "score", "rank")
     )

@@ -52,7 +52,6 @@ def cosine_topk(
     corpus_id: str,
     vec_col: str = "embedding",
     k: int = 10,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact brute-force top-k cosine neighbors for each query vector.
     Queries are broadcast; the corpus is scanned once. Ranking uses the
@@ -78,7 +77,7 @@ def cosine_topk(
             F.round(
                 dot(F.col("__qvec"), F.col("__cvec"))
                 / (F.col("__qnorm") * F.col("__cnorm")),
-                round_digits,
+                6,
             ),
         )
     )
@@ -96,14 +95,13 @@ def cosine_topk(
 
 
 # ----------------------------------------------------------- LSH bucket ----
-def lsh_bucket_signature(
-    vec_col: str, dim: int, num_planes: int = 16, seed: int = 42
-):
-    """Random-hyperplane sign signature as an int bucket id. Vectorized
-    Arrow/pandas UDF: one numpy matmul per batch. Deterministic (seeded).
+def lsh_bucket_signature(vec_col: str, dim: int):
+    """Random-hyperplane sign signature over 8 planes as an int bucket
+    id. Vectorized Arrow/pandas UDF: one numpy matmul per batch.
+    Deterministic (seed 42).
     """
-    planes = np.random.default_rng(seed).standard_normal((dim, num_planes))
-    powers = (1 << np.arange(num_planes)).astype(np.int64)
+    planes = np.random.default_rng(42).standard_normal((dim, 8))
+    powers = (1 << np.arange(8)).astype(np.int64)
 
     @pandas_udf("long")
     def _sig(vecs: pd.Series) -> pd.Series:
@@ -115,12 +113,13 @@ def lsh_bucket_signature(
 
 
 def lsh_multitable_signatures(
-    vec_col: str, dim: int, num_planes: int, num_tables: int, seed: int = 42
+    vec_col: str, dim: int, num_planes: int, num_tables: int
 ):
     """Bucket ids for ALL hash tables in one Arrow pass (array<long>,
     one entry per table) — one matmul against the stacked plane tensor
-    instead of num_tables separate UDF invocations."""
-    rngs = [np.random.default_rng(seed + t) for t in range(num_tables)]
+    instead of num_tables separate UDF invocations. Table t's planes
+    come from seed 42 + t."""
+    rngs = [np.random.default_rng(42 + t) for t in range(num_tables)]
     planes = np.concatenate(
         [r.standard_normal((dim, num_planes)) for r in rngs], axis=1
     )  # dim x (tables*planes)
@@ -207,19 +206,22 @@ def ann_lsh_topk(
 
 
 # ------------------------------------------------------------- IVF ANN ----
+# The IVF quantizer is fitted on at most this many sampled vectors.
+_IVF_FIT_ROWS = 100_000
+
+
 def ivf_index(
     corpus: DataFrame,
     vec_col: str = "embedding",
     num_cells: int = 16,
-    seed: int = 42,
-    max_fit_rows: int = 100_000,
 ):
     """Train an IVF coarse quantizer (distributed k-means via
-    pyspark.ml) and return (assigned_corpus, model): the corpus with a
-    ``__cell`` column — at scale you'd write it partitioned by cell.
+    pyspark.ml, seed 42) and return (assigned_corpus, model): the
+    corpus with a ``__cell`` column — at scale you'd write it
+    partitioned by cell.
 
     The quantizer is fitted on a bounded deterministic sample
-    (``max_fit_rows``): coarse cells only need the density SHAPE, so
+    (``_IVF_FIT_ROWS``): coarse cells only need the density SHAPE, so
     fitting on 100 TB of vectors buys nothing over ~1e5 of them — the
     standard FAISS-style train-on-sample. Cell ASSIGNMENT still covers
     the full corpus (one model.transform pass)."""
@@ -229,13 +231,13 @@ def ivf_index(
     feat = corpus.withColumn("__features", array_to_vector(F.col(vec_col)))
     n = feat.count()
     fit_set = (
-        feat.sample(fraction=min(1.0, max_fit_rows / n), seed=seed)
-        if n > max_fit_rows
+        feat.sample(fraction=min(1.0, _IVF_FIT_ROWS / n), seed=42)
+        if n > _IVF_FIT_ROWS
         else feat
     )
     model = KMeans(
         k=num_cells,
-        seed=seed,
+        seed=42,
         maxIter=5,  # coarse quantizer: rough cells are fine (recall
         # is governed by nprobe, not centroid polish — halves the
         # build time with no measured recall change)
@@ -318,13 +320,12 @@ def embedding_neardup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     block_cols=(),
-    dim: int = 64,
-    num_planes: int = 8,
 ) -> DataFrame:
     """Pairs with cosine >= threshold. With ``block_cols`` the join is
-    exact within blocks (oracle-checkable); otherwise LSH buckets prune
-    candidates (near-exact for high thresholds: similar vectors share
-    sign bits with high probability).
+    exact within blocks (oracle-checkable); otherwise LSH buckets over
+    8 hyperplanes of 64-dim vectors prune candidates (near-exact for
+    high thresholds: similar vectors share sign bits with high
+    probability).
 
     The pairwise scoring runs as ONE BLAS matmul per block/bucket
     (grouped applyInPandas, Arrow-batched): a JVM join producing
@@ -342,7 +343,7 @@ def embedding_neardup_pairs(
         keys = list(block_cols)
     else:
         base = base.withColumn(
-            "__bucket", lsh_bucket_signature("__vec", dim, num_planes)
+            "__bucket", lsh_bucket_signature("__vec", 64)
         )
         keys = ["__bucket"]
 
@@ -426,9 +427,6 @@ def filtered_topk(
     corpus_id: str,
     vec_col: str = "embedding",
     k: int = 10,
-    assigned_corpus: DataFrame | None = None,
-    model=None,
-    nprobe: int = 4,
 ) -> DataFrame:
     """Vector search under a metadata predicate (the retrieval-with-
     filters shape: "nearest docs WHERE lang = 'en' AND date > ...").
@@ -436,23 +434,10 @@ def filtered_topk(
     The predicate is applied to the corpus BEFORE the similarity work —
     pre-filtering, the Spark-natural strategy: the filter pushes down
     to the (partitioned/bucketed) scan, and the search cost scales with
-    the filtered subset, not the corpus. With an IVF index attached
-    (``assigned_corpus``/``model``), the probe joins cells of the
-    filtered subset only; otherwise exact brute-force over the subset.
-    Post-filtering (search first, filter the top-k after) loses recall
+    the filtered subset, not the corpus: exact brute-force over the
+    subset. Post-filtering (search first, filter the top-k after) loses recall
     when the filter is selective — not what we want as the default.
     """
-    if assigned_corpus is not None and model is not None:
-        return ivf_topk(
-            queries,
-            assigned_corpus.filter(predicate),
-            model,
-            query_id,
-            corpus_id,
-            vec_col,
-            k=k,
-            nprobe=nprobe,
-        )
     return cosine_topk(
         queries, corpus.filter(predicate), query_id, corpus_id, vec_col, k=k
     )
@@ -467,9 +452,8 @@ def hybrid_topk(
     vec_col: str = "embedding",
     text_col: str = "text",
     k: int = 10,
-    alpha: float = 0.5,
 ) -> DataFrame:
-    """Hybrid retrieval: ``alpha * cosine + (1-alpha) * token-Jaccard``.
+    """Hybrid retrieval: ``0.5 * cosine + 0.5 * token-Jaccard``.
 
     The lexical leg (token-set Jaccard) catches exact keyword matches
     that embedding geometry can miss; the vector leg catches paraphrase.
@@ -522,8 +506,8 @@ def hybrid_topk(
             F.round(
                 1000000
                 * (
-                    F.lit(alpha) * F.col("cosine")
-                    + F.lit(1 - alpha) * F.col("lexical")
+                    F.lit(0.5) * F.col("cosine")
+                    + F.lit(0.5) * F.col("lexical")
                 )
             )
             / 1000000.0,

@@ -106,16 +106,14 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("lang_pred", pred)
 
 
-def token_count_bpeish(text: Column | str, pattern: str = BPEISH_PATTERN) -> Column:
+def token_count_bpeish(text: Column | str) -> Column:
     """Token count under a BPE-style pre-tokenizer regex — the cheap
     stand-in for exact tokenizer counts when sizing training corpora."""
     col = F.col(text) if isinstance(text, str) else text
-    return F.regexp_count(col, F.lit(pattern))
+    return F.regexp_count(col, F.lit(BPEISH_PATTERN))
 
 
-def fingerprint_minhash(
-    text: Column | str, shingle_size: int = 5, seed: int = 0
-) -> Column:
+def fingerprint_minhash(text: Column | str, shingle_size: int = 5) -> Column:
     """Document fingerprint: min rolling-hash over word shingles
     (winnowing-style min-sampling, k=1). Equal fingerprints ⇒ documents
     very likely share a shingle; used for cheap first-pass clustering.
@@ -123,8 +121,8 @@ def fingerprint_minhash(
     values, not just row counts."""
     from python_tool_setup_spark.llm.dedup import md5_hash32, shingles
 
-    sh = shingles(text, shingle_size)
-    return F.array_min(F.transform(sh, lambda s: md5_hash32(s, seed)))
+    sh = shingles(tokenize(text), shingle_size)
+    return F.array_min(F.transform(sh, md5_hash32))
 
 
 def unigram_logprob(

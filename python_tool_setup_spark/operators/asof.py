@@ -29,11 +29,11 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: Sequence[str] | None = None,
-    suffix: str = "_right",
     direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach the nearest right row within the same
-    ``on`` key: ``direction="backward"`` (default) takes the greatest
+    ``on`` key, its columns suffixed ``_right``:
+    ``direction="backward"`` (default) takes the greatest
     ``right_ts <= left_ts`` (the quote in force at event time);
     ``direction="forward"`` takes the smallest ``right_ts >= left_ts``
     (the next arrival after the event — the time-to-next-action
@@ -55,7 +55,7 @@ def asof_join(
     keys = list(on)
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in keys and c != right_ts]
-    value_cols = [f"{c}{suffix}" for c in right_cols]
+    value_cols = [f"{c}_right" for c in right_cols]
 
     l_tag = left.select(
         *[F.col(c) for c in left.columns],
@@ -108,9 +108,8 @@ def binned_interval_join(
     start_col: str,
     end_col: str,
     bin_width: int,
-    how: str = "inner",
 ) -> DataFrame:
-    """Interval-containment join with NO equality key, made shuffle-
+    """Inner interval-containment join with NO equality key, made shuffle-
     joinable by binning (the technique behind Databricks' range-join
     hint and Flink's interval join).
 
@@ -124,18 +123,12 @@ def binned_interval_join(
     numeric (cast timestamps to epoch units first); pick ``bin_width``
     near the typical interval length so explode fan-out stays small.
 
-    Only ``how='inner'`` is supported: the explode-then-residual-filter
-    shape would drop unmatched outer rows (null residual) and emit
-    duplicate bin rows for matched ones, so outer modes are rejected
-    rather than silently wrong. For an outer interval join, join on the
-    BETWEEN condition directly and broadcast the smaller side.
+    The explode-then-residual-filter shape cannot express an outer
+    join: it would drop unmatched rows (null residual) and emit
+    duplicate bin rows for matched ones. For an outer interval join,
+    join on the BETWEEN condition directly and broadcast the smaller
+    side.
     """
-    if how != "inner":
-        raise ValueError(
-            "binned_interval_join supports only how='inner' "
-            f"(got {how!r}); outer semantics are not expressible in the "
-            "bin-explode + residual-filter plan"
-        )
     p = points.withColumn(
         "_bin", F.floor(F.col(point_col) / bin_width).cast("bigint")
     )
@@ -151,4 +144,4 @@ def binned_interval_join(
     residual = (F.col(point_col) >= F.col(start_col)) & (
         F.col(point_col) <= F.col(end_col)
     )
-    return i.join(p, on=["_bin"], how=how).filter(residual).drop("_bin")
+    return i.join(p, on=["_bin"], how="inner").filter(residual).drop("_bin")

@@ -7,7 +7,7 @@ the job.  This module provides the same semantics as a three-step
 distributed decomposition:
 
 1. assign every row a BLOCK id that respects the sort order;
-2. aggregate per block (tiny: ``n_blocks`` rows), then compute each
+2. aggregate per block (tiny: ``_N_BLOCKS`` rows), then compute each
    block's *prior-blocks* aggregate with a triangular broadcast
    self-join — no window at all on the metadata table;
 3. join the prior-block offsets back (broadcast) and finish with a
@@ -52,17 +52,16 @@ for anything with a join/aggregate/window upstream — and especially
 for CHAINED prefix calls — re-execution multiplies upstream work
 ~3x per link (the q323 RFM incident: three chained calls -> ~4^3
 recompute explosion, 62 s for a 5 s query). So by default
-(``cache_input=None``) the input is pinned with an eager
+(``cache_input=True``) the input is pinned with an eager
 ``localCheckpoint`` whenever its analyzed plan is anything beyond
 scan/filter/project OR contains a nondeterministic expression
 (rand/uuid/monotonically_increasing_id/shuffle/... — a Project over
 rand() is node-trivial but re-executes to DIFFERENT rows; limit
 without total order and sample are non-trivial NODES and pin that
 way), closing the corrupt-prefix risk of re-executed nondeterminism.
-An already-persisted input is never re-pinned (checked for both the
-default and ``cache_input=True``). Pass ``cache_input=False`` only
-when the caller has already materialized the input some other way or
-accepts trivial-scan re-reads; ``True`` forces pinning a trivial scan.
+An already-persisted input is never re-pinned. Pass
+``cache_input=False`` only when the caller has already materialized
+the input some other way or accepts trivial-scan re-reads.
 
 Every pin is an eager ``localCheckpoint`` (see :func:`pin`). Each
 :func:`prefix_agg` call logs its input-pin decision and the reason at
@@ -108,6 +107,10 @@ _NUMERIC_TYPES = (
 _FLOAT_TYPES = (T.FloatType, T.DoubleType)
 
 _log = logging.getLogger(__name__)
+
+# Blocks per prefix computation: the per-block metadata table and the
+# triangular broadcast self-join stay this small at any input size.
+_N_BLOCKS = 32
 
 # Analyzed-plan node names whose re-execution is cheap AND
 # deterministic: a pruned scan plus row-local transforms. Anything
@@ -274,8 +277,7 @@ def prefix_agg(
     df: DataFrame,
     order: list[tuple],
     aggs: dict[str, tuple],
-    n_blocks: int = 32,
-    cache_input: bool | None = None,
+    cache_input: bool = True,
 ) -> DataFrame:
     """Attach EXCLUSIVE ordered-prefix aggregates to every row.
 
@@ -290,13 +292,14 @@ def prefix_agg(
     NULL (matching ``rowsBetween(unboundedPreceding, -1)``).
 
     ``cache_input``: lineage contract — see the module docstring.
-    None (default) pins non-trivial inputs once via eager
-    localCheckpoint; True always pins; False never does (caller
-    asserts the input is already persisted or a cheap scan).
+    True (default) pins non-trivial inputs once via eager
+    localCheckpoint; False never pins (caller asserts the input is
+    already persisted or a cheap scan).
 
     ``_blk``, ``_p_<alias>``, ``_brk_mn``, ``_brk_mx`` are reserved
     column names.
     """
+    n_blocks = _N_BLOCKS
     sort = _sort_exprs(order)
     proxy = _proxy(df, order)
     # The width path reads the input three times (bounds, totals,
@@ -307,10 +310,8 @@ def prefix_agg(
         decision, reason = "range layout", "leading key has no numeric proxy"
     elif _is_persisted(df):
         decision, reason = "skipped", "input already persisted"
-    elif cache_input is False:
+    elif not cache_input:
         decision, reason = "skipped", "cache_input=False"
-    elif cache_input is True:
-        decision, reason = "pinned", "cache_input=True"
     else:
         reason = _pin_reason(df)
         decision = "pinned" if reason else "skipped"
@@ -409,14 +410,11 @@ def prefix_rank(
     df: DataFrame,
     order: list[tuple],
     alias: str = "rk",
-    n_blocks: int = 32,
-    cache_input: bool | None = None,
+    cache_input: bool = True,
 ) -> DataFrame:
     """1-based ``ROW_NUMBER() OVER (ORDER BY ...)`` equivalent under a
     total order, with no unpartitioned window anywhere in the plan.
     See :func:`prefix_agg` for the block-assignment determinism and
     input-lineage (``cache_input``) contracts."""
-    out = prefix_agg(
-        df, order, {alias: ("count", None)}, n_blocks, cache_input=cache_input
-    )
+    out = prefix_agg(df, order, {alias: ("count", None)}, cache_input=cache_input)
     return out.withColumn(alias, (F.col(alias) + 1).cast("long"))

@@ -46,9 +46,12 @@ from pyspark.sql import functions as F
 
 _MIN_BITS = 8192
 _MAX_BITS = 1 << 23
+# Bits set per key (k); with ~12 bits per key the false-positive rate
+# stays under 1%.
+_NUM_HASHES = 3
 
 
-def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
+def _positions(key: Column, num_bits: int) -> list[Column]:
     """k bit positions for a key via Kirsch-Mitzenmacher double
     hashing: pos_i = (h1 + i*h2) mod m from two seeded xxhash64 calls,
     instead of k independent digests. Two hash evaluations per row
@@ -58,7 +61,7 @@ def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
     h2 = F.pmod(F.xxhash64(F.lit(0x9E3779B9), key), F.lit(num_bits))
     return [
         F.pmod(h1 + F.lit(i) * h2, F.lit(num_bits))
-        for i in range(num_hashes)
+        for i in range(_NUM_HASHES)
     ]
 
 
@@ -71,12 +74,7 @@ def sized_bits(n_keys: int) -> int:
     return bits
 
 
-def bloom_bitmask(
-    build: DataFrame,
-    key_col: str,
-    num_bits: int = _MIN_BITS,
-    num_hashes: int = 3,
-) -> list[int]:
+def bloom_bitmask(build: DataFrame, key_col: str, num_bits: int) -> list[int]:
     """Aggregate the build side's keys into a bitmask of
     ``num_bits / 64`` longs. The heavy part (explode k positions,
     bit_or per word slot) is a distributed partial aggregation over
@@ -93,7 +91,7 @@ def bloom_bitmask(
     num_words = (num_bits + 63) // 64
     pos = build.select(
         F.explode(
-            F.array(*_positions(F.col(key_col), num_bits, num_hashes))
+            F.array(*_positions(F.col(key_col), num_bits))
         ).alias("p")
     )
     words = (
@@ -113,26 +111,19 @@ def bloom_bitmask(
     return mask
 
 
-def bloom_prefilter(
-    probe: DataFrame,
-    key_col: str,
-    mask: list[int],
-    num_bits: int | None = None,
-    num_hashes: int = 3,
-) -> DataFrame:
+def bloom_prefilter(probe: DataFrame, key_col: str, mask: list[int]) -> DataFrame:
     """Keep only probe rows whose key *may* be in the build set: every
     one of the k hashed bits is set in the broadcast mask. The mask
     words attach as a ONE-ROW locally-materialized DataFrame via
     BroadcastNestedLoopJoin (the scalar-attach shape — no shuffle of
     the probe side); the probes are codegen'd element_at/getbit reads
     of the shared broadcast ArrayData, with zero per-row allocation."""
-    if num_bits is None:
-        num_bits = 64 * len(mask)
+    num_bits = 64 * len(mask)
     mask_df = probe.sparkSession.createDataFrame(
         [([int(w) for w in mask],)], "mask: array<bigint>"
     )
     cond = F.lit(True)
-    for p in _positions(F.col(key_col), num_bits, num_hashes):
+    for p in _positions(F.col(key_col), num_bits):
         word = F.element_at(F.col("mask"), (p / 64).cast("int") + 1)
         cond = cond & (F.getbit(word, F.pmod(p, F.lit(64))) == 1)
     return probe.crossJoin(F.broadcast(mask_df)).filter(cond).drop("mask")
@@ -143,24 +134,20 @@ def bloom_semi_join(
     build: DataFrame,
     probe_key: str,
     build_key: str,
-    num_bits: int | None = None,
-    num_hashes: int = 3,
 ) -> DataFrame:
     """Exactly ``probe ⋉ build`` (LEFT SEMI), with a bloom prefilter so
     only candidate rows reach the exact join's shuffle/broadcast.
 
-    ``num_bits=None`` (default) auto-sizes the mask from the build
-    side's distinct-key count — one cheap count() on the SMALL side —
+    The mask is sized from the build side's distinct-key count — one
+    cheap count() on the SMALL side —
     so a build set that outgrows a fixed mask can't silently saturate
     it into a no-op filter."""
     # persist: the distinct key set is read three times (sizing count,
     # mask build, final exact join) and is small by contract.
     keys = build.select(F.col(build_key).alias(probe_key)).distinct()
     keys.persist()
-    if num_bits is None:
-        num_bits = sized_bits(keys.count())
-    mask = bloom_bitmask(keys, probe_key, num_bits, num_hashes)
-    pre = bloom_prefilter(probe, probe_key, mask, num_bits, num_hashes)
+    mask = bloom_bitmask(keys, probe_key, sized_bits(keys.count()))
+    pre = bloom_prefilter(probe, probe_key, mask)
     return pre.join(keys, on=probe_key, how="left_semi")
 
 
@@ -168,8 +155,6 @@ def build_file_bloom(
     spark,
     path: str,
     key_col: str,
-    num_bits: int = 8192,
-    num_hashes: int = 3,
 ) -> dict[str, list[int]]:
     """Per-FILE bloom filters over ``key_col`` — the point-lookup
     complement of the zone map (operators/zonemap.py): min/max stats
@@ -180,7 +165,7 @@ def build_file_bloom(
     One distributed pass groups hashed bit positions by
     (_metadata.file_path, word) and bit_ORs them; only the sparse
     (file, word, mask) rows reach the driver (bounded: files x
-    num_bits/64 words — at real scale this table is PERSISTED next to
+    _MIN_BITS/64 words — at real scale this table is PERSISTED next to
     the data like Parquet bloom metadata, not collected; the dict form
     is the bounded-fixture convenience).
     """
@@ -188,7 +173,7 @@ def build_file_bloom(
     pos = src.select(
         F.col("_metadata.file_path").alias("file"),
         F.explode(
-            F.array(*_positions(F.col(key_col), num_bits, num_hashes))
+            F.array(*_positions(F.col(key_col), _MIN_BITS))
         ).alias("p"),
     )
     rows = (
@@ -203,7 +188,7 @@ def build_file_bloom(
         .agg(F.bit_or("m").alias("mask"))
         .collect()
     )
-    num_words = (num_bits + 63) // 64
+    num_words = (_MIN_BITS + 63) // 64
     index: dict[str, list[int]] = {}
     for r in rows:
         index.setdefault(r["file"], [0] * num_words)[r["w"]] |= r["mask"]
@@ -215,8 +200,6 @@ def bloom_pruned_point_read(
     index: dict[str, list[int]],
     key_col: str,
     value,
-    num_bits: int = 8192,
-    num_hashes: int = 3,
 ):
     """Point lookup through the file-bloom index: keep only files whose
     bloom has ALL k bits of ``value`` set (sound: a bloom never drops a
@@ -228,9 +211,7 @@ def bloom_pruned_point_read(
         spark.range(1)
         .select(
             F.array(
-                *_positions(
-                    F.lit(value).cast("long"), num_bits, num_hashes
-                )
+                *_positions(F.lit(value).cast("long"), _MIN_BITS)
             ).alias("ps")
         )
         .collect()[0]["ps"]

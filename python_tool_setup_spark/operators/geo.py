@@ -51,13 +51,11 @@ def haversine_m(lat1: F.Column, lon1: F.Column, lat2: F.Column, lon2: F.Column) 
 def radius_join_mm(
     points: DataFrame,
     radius_m: float,
-    id_col: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     min_cos_lat: float = 0.5,
 ) -> DataFrame:
-    """Self-join: all unordered pairs of points within ``radius_m``
-    meters, with the distance as integer millimeters (``dist_mm``).
+    """Self-join: all unordered pairs of points (``id``, ``lat``,
+    ``lon``) within ``radius_m`` meters, with the distance as integer
+    millimeters (``dist_mm``).
 
     Grid: cell edge >= radius in both axes (lon edge sized for the
     worst-case ``min_cos_lat`` in the data's latitude range, so
@@ -74,11 +72,11 @@ def radius_join_mm(
     cell_lat = radius_m / M_PER_DEG_LAT
     cell_lon = radius_m / (M_PER_DEG_LON_EQ * min_cos_lat)
     base = points.select(
-        F.col(id_col).alias("_pid"),
-        F.col(lat_col).alias("_plat"),
-        F.col(lon_col).alias("_plon"),
-        F.floor(F.col(lat_col) / cell_lat).alias("_cx"),
-        F.floor(F.col(lon_col) / cell_lon).alias("_cy"),
+        F.col("id").alias("_pid"),
+        F.col("lat").alias("_plat"),
+        F.col("lon").alias("_plon"),
+        F.floor(F.col("lat") / cell_lat).alias("_cx"),
+        F.floor(F.col("lon") / cell_lon).alias("_cy"),
     )
     offs = F.expr(
         "explode(array("

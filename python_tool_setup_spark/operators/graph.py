@@ -11,8 +11,8 @@ a groupBy(dst) sum — a single shuffle keyed by node per round, which
 is the minimum any message-passing formulation needs. The dangling
 mass (rank held by nodes with no out-links) is a 1-row aggregate
 attached via broadcast cross join, never collected per-node.
-`localCheckpoint` truncates the growing lineage each round (same
-pattern as llm/dedup.py::dup_clusters).
+A pin (``blockrank.pin``, an eager ``localCheckpoint``) truncates the
+growing lineage each round (same pattern as llm/dedup.py::dup_clusters).
 
 At 100 TB / billions of edges this plan holds: pre-partition edges and
 ranks on the node key so the per-round join co-locates (bucketing
@@ -28,29 +28,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from python_tool_setup_spark.operators.blockrank import pin
+
 RANK_SCALE = 12  # per-iteration rounding, mirrored in the SQL oracle
 
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
     damping: float = 0.85,
 ) -> DataFrame:
-    """Fixed-iteration PageRank. Returns (node, rank) with ``rank``
-    rounded to ``RANK_SCALE`` decimals.
+    """Fixed-iteration PageRank over (``src``, ``dst``) edges. Returns
+    (node, rank) with ``rank`` rounded to ``RANK_SCALE`` decimals.
 
     ``edges`` is treated as a set (duplicates removed); node set is
     src ∪ dst; dangling nodes redistribute their mass uniformly.
     """
     # materialize the deduped edge set once — every iteration joins it,
-    # and without the checkpoint each round would re-scan + re-distinct
-    # the source lineage
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint()
+    # and without the pin each round would re-scan + re-distinct the
+    # source lineage
+    e = pin(
+        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst")).distinct()
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -63,11 +61,10 @@ def pagerank(
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
 
     # degree-annotated node table is reused every round
-    base = (
+    base = pin(
         nodes.join(outdeg, "node", "left")
         .crossJoin(F.broadcast(n_nodes))
         .select("node", "deg", "n")
-        .localCheckpoint()
     )
     ranks = base.select(
         "node", F.round(F.lit(1.0) / F.col("n"), RANK_SCALE).alias("r")
@@ -88,7 +85,7 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("r") / F.col("deg")).alias("contrib"))
         )
-        ranks = (
+        ranks = pin(
             base.join(contrib, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -103,7 +100,6 @@ def pagerank(
                     RANK_SCALE,
                 ).alias("r"),
             )
-            .localCheckpoint()
         )
 
     return ranks.select("node", F.col("r").alias("rank"))

@@ -31,7 +31,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from python_tool_setup_spark.operators.relational import dedup_by_keys
 from python_tool_setup_spark.sources.fs import (
     delete_path, list_files, path_exists, replace_dir,
 )
@@ -54,6 +53,7 @@ def merge_upsert(
     target: DataFrame,
     source: DataFrame,
     keys: Sequence[str],
+    # kept: rejects malformed input from outside
     check_duplicate_source_keys: bool = False,
     evolve_schema: bool = False,
 ) -> DataFrame:
@@ -116,9 +116,8 @@ def write_bucketed_target(
     path: str,
     keys: Sequence[str],
     num_buckets: int,
-    fmt: str = "parquet",
 ) -> None:
-    """Lay a merge target out as hash-bucket partition dirs
+    """Lay a merge target out as parquet hash-bucket partition dirs
     (``__bucket=N/``) so future merges rewrite only touched buckets.
 
     Rows are shuffled onto their bucket before the write so each task
@@ -131,7 +130,7 @@ def write_bucketed_target(
     bucketed = df.withColumn(BUCKET_COL, bucket_of(keys, num_buckets))
     bucketed.repartition(num_buckets, F.col(BUCKET_COL)).write.partitionBy(
         BUCKET_COL
-    ).mode("overwrite").format(fmt).save(path)
+    ).mode("overwrite").parquet(path)
 
 
 def merge_upsert_bucketed(
@@ -140,8 +139,7 @@ def merge_upsert_bucketed(
     source: DataFrame,
     keys: Sequence[str],
     num_buckets: int,
-    fmt: str = "parquet",
-    on_staged=None,
+    on_staged=None,  # kept: the commit seam the conflict tests substitute
 ) -> list[int]:
     """MERGE into a bucket-partitioned target touching ONLY the buckets
     the source hashes into; returns the rewritten bucket ids.
@@ -182,16 +180,14 @@ def merge_upsert_bucketed(
     read_state = {b: _fingerprint(b) for b in touched}
     existing = [b for b in touched if read_state[b] is not None]
     if existing:
-        tgt = (
-            spark.read.format(fmt)
-            .option("basePath", target_path)
-            .load([f"{target_path}/{BUCKET_COL}={b}" for b in existing])
+        tgt = spark.read.option("basePath", target_path).parquet(
+            *[f"{target_path}/{BUCKET_COL}={b}" for b in existing]
         )
         merged = merge_upsert(tgt, src.select(*tgt.columns), keys)
     else:
         merged = src
     staging = f"{target_path.rstrip('/')}__mstage_{uuid.uuid4().hex[:8]}"
-    merged.write.partitionBy(BUCKET_COL).mode("overwrite").format(fmt).save(staging)
+    merged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(staging)
     if on_staged is not None:
         on_staged()
     conflicts = [b for b in touched if _fingerprint(b) != read_state[b]]
@@ -211,9 +207,9 @@ def merge_upsert_bucketed(
     return touched
 
 
-def read_bucketed_target(spark, target_path: str, fmt: str = "parquet") -> DataFrame:
+def read_bucketed_target(spark, target_path: str) -> DataFrame:
     """Read a bucketed merge target (bucket col dropped)."""
-    return spark.read.format(fmt).load(target_path).drop(BUCKET_COL)
+    return spark.read.parquet(target_path).drop(BUCKET_COL)
 
 
 def merge_apply_cdc(
@@ -221,16 +217,15 @@ def merge_apply_cdc(
     changes: DataFrame,
     keys: Sequence[str],
     op_col: str = "_op",
-    order_col: str | None = None,
 ) -> DataFrame:
     """Apply a CDC log onto a snapshot: each change row carries
-    ``op_col`` ∈ {'upsert', 'delete'}; the latest change per key wins
-    (by ``order_col`` if given, else the log is assumed pre-compacted
-    to one row per key), upserts replace-or-append exactly like
+    ``op_col`` ∈ {'upsert', 'delete'}; the log must be compacted to
+    one row per key (``dedup_by_keys`` on the change order keeps the
+    latest), upserts replace-or-append exactly like
     :func:`merge_upsert`, and deletes REMOVE matching target rows —
     the whenMatchedDelete arm a plain upsert merge lacks.
 
-    One window (if compaction is needed) + one anti-join and a union:
+    One anti-join and a union:
     the anti-join keeps target rows whose key has no change, surviving
     upserts append. O(target + changes) with shuffles only
     on the merge key — CDC volume, not table size, drives the cost of
@@ -269,8 +264,6 @@ def merge_apply_cdc(
             )
         ),
     )
-    if order_col is not None:
-        changes = dedup_by_keys(changes, keys, [F.col(order_col).desc()])
     untouched = target.join(
         changes.select(*keys), on=keys, how="left_anti"
     )

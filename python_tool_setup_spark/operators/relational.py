@@ -72,13 +72,9 @@ def top_k(
     )
 
 
-def last_to_ship(
-    lines: DataFrame,
-    order_col: str = "l_orderkey",
-    supp_col: str = "l_suppkey",
-    ship_col: str = "l_shipdate",
-) -> DataFrame:
-    """Suppliers that were last to ship in multi-supplier orders.
+def last_to_ship(lines: DataFrame) -> DataFrame:
+    """Suppliers that were last to ship in multi-supplier orders, over
+    lineitem columns (``l_orderkey``, ``l_suppkey``, ``l_shipdate``).
 
     The TPC-H Q21 kernel: for each order with >= 2 distinct suppliers,
     the supplier(s) for which NO other supplier shipped strictly later
@@ -97,13 +93,13 @@ def last_to_ship(
     One hash aggregate on (order, supplier) + one window over order —
     O(|lines|) with two key-local shuffles, versus the naive plan's
     two correlated re-scans of the fact. Returns distinct
-    (order, supplier) pairs.
+    (l_orderkey, l_suppkey) pairs.
     """
-    per = lines.groupBy(order_col, supp_col).agg(
-        F.max(ship_col).alias("__smax"),  # max ignores NULLs
-        F.max(F.col(ship_col).isNull()).alias("__has_null"),
+    per = lines.groupBy("l_orderkey", "l_suppkey").agg(
+        F.max("l_shipdate").alias("__smax"),  # max ignores NULLs
+        F.max(F.col("l_shipdate").isNull()).alias("__has_null"),
     )
-    w = Window.partitionBy(order_col)
+    w = Window.partitionBy("l_orderkey")
     return (
         per.withColumn("__omax", F.max("__smax").over(w))
         .withColumn("__nsupp", F.count("*").over(w))
@@ -114,7 +110,7 @@ def last_to_ship(
                 | (F.col("__smax") == F.col("__omax"))
             )
         )
-        .select(order_col, supp_col)
+        .select("l_orderkey", "l_suppkey")
     )
 
 

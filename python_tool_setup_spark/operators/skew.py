@@ -21,17 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def advise_salt_buckets(
-    big: DataFrame,
-    on: Sequence[str],
-    skew_threshold: float = 4.0,
-    max_buckets: int = 64,
-) -> int:
+def advise_salt_buckets(big: DataFrame, on: Sequence[str]) -> int:
     """Pick a salt bucket count from the big side's key histogram:
-    skew factor = hottest-key rows / mean rows per key. Below
-    ``skew_threshold`` the shuffle is safe and the answer is 1 (no
-    salting); above, the hot key needs ~skew-factor-way spreading,
-    capped at ``max_buckets``. One map-side-combined aggregate + a
+    skew factor = hottest-key rows / mean rows per key. Below 4 the
+    shuffle is safe and the answer is 1 (no salting); above, the hot
+    key needs ~skew-factor-way spreading, capped at 64 buckets. One
+    map-side-combined aggregate + a
     3-scalar collect — safe to point at the full fact table (the same
     shape as :func:`skew_report`).
     """
@@ -45,67 +40,51 @@ def advise_salt_buckets(
     if not row["__nkeys"]:
         return 1
     skew_factor = row["__hot"] / (row["__total"] / row["__nkeys"])
-    if skew_factor < skew_threshold:
+    if skew_factor < 4.0:
         return 1
     import math
 
-    return min(max_buckets, max(2, math.ceil(skew_factor)))
+    return min(64, max(2, math.ceil(skew_factor)))
 
 
 def salted_join(
     big: DataFrame,
     small: DataFrame,
     on: Sequence[str],
-    how: str = "inner",
     salt_buckets: int | None = 8,
-    seed: int = 42,
     auto: bool = False,
-    skew_threshold: float = 4.0,
 ) -> DataFrame:
-    """Equi-join with the big side's hot keys spread over
+    """Inner equi-join with the big side's hot keys spread over
     ``salt_buckets`` shuffle partitions.
 
     The big side gets a uniform random salt per ROW (never key-derived —
     that would re-concentrate the hot key); the small side is exploded
     ``salt_buckets``-fold so every (key, salt) combination exists. The
-    join result is identical to ``big.join(small, on, how)``; only the
+    join result is identical to ``big.join(small, on)``; only the
     shuffle distribution changes. Cost: small side × salt_buckets —
     use for big⋈small only; for big⋈big prefer AQE skew splitting.
-
-    ``how`` is restricted to the big-side-preserving joins: with the
-    small side exploded ``salt_buckets``-fold, a right/full outer join
-    would emit each unmatched small-side row once PER SALT — silently
-    wrong. Use a plain ``join`` (or salt the other way around) there.
+    A right/full outer join would emit each unmatched small-side row
+    once PER SALT, so use a plain ``join`` (or salt the other way
+    around) there.
 
     With ``auto=True`` the bucket count is measured, not guessed:
     :func:`advise_salt_buckets` samples the big side's key histogram
-    and salting engages only when the skew factor crosses
-    ``skew_threshold`` (1 bucket -> plain join, zero overhead on
-    well-distributed keys).
+    and salting engages only when the skew factor crosses 4 (1 bucket
+    -> plain join, zero overhead on well-distributed keys).
     """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
-               "leftsemi", "left_anti", "leftanti", "cross"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports {sorted(allowed)} joins; got {how!r} "
-            "(right/full outer would duplicate unmatched small-side rows "
-            "salt_buckets times)"
-        )
     if auto:
-        salt_buckets = advise_salt_buckets(
-            big, on, skew_threshold=skew_threshold
-        )
+        salt_buckets = advise_salt_buckets(big, on)
     if salt_buckets is None or salt_buckets <= 1:
-        return big.join(small, list(on), how)
+        return big.join(small, list(on), "inner")
     keys = list(on)
     salted_big = big.withColumn(
-        "__salt", (F.rand(seed) * salt_buckets).cast("int")
+        "__salt", (F.rand(42) * salt_buckets).cast("int")
     )
     salted_small = small.withColumn(
         "__salt",
         F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))),
     )
-    return salted_big.join(salted_small, [*keys, "__salt"], how).drop("__salt")
+    return salted_big.join(salted_small, [*keys, "__salt"], "inner").drop("__salt")
 
 
 def create_bucketed_table(
@@ -142,15 +121,14 @@ def bucketed_join(
     left_table: str,
     right_table: str,
     on: Sequence[str],
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two tables bucketed on the join key: the MERGE hint forces
+    """Inner-join two tables bucketed on the join key: the MERGE hint forces
     sort-merge so neither side exchanges (bucket layout satisfies the
     distribution requirement). Verify with .explain(): no Exchange
     above either scan."""
     left = spark.table(left_table).hint("merge")
     right = spark.table(right_table)
-    return left.join(right, list(on), how)
+    return left.join(right, list(on), "inner")
 
 
 def skew_report(

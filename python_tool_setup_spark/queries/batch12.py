@@ -13,6 +13,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.queries.exactcast import cents_sql
 from python_tool_setup_spark.staging import staging_dir
@@ -106,9 +107,7 @@ def q190_default_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(
             f"INSERT INTO {tbl} (n_name) SELECT n_name FROM nation_src"
         )
-        return spark.table(tbl).select(
-            "n_name", "quality_tier", "review_count"
-        ).localCheckpoint()
+        return pin(spark.table(tbl).select("n_name", "quality_tier", "review_count"))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.queries.exactcast import cents_sql
 from python_tool_setup_spark.tables import load_table
@@ -102,12 +103,8 @@ def q529_graph_distance_metrics(
     # is pinned once, and each round's frontier is checkpointed —
     # otherwise round k re-executes the lineitem distinct k times and
     # the union-join plan tree doubles per round.
-    e2 = e.select(
-        F.col("u").alias("fv"), F.col("v").alias("nv")
-    ).localCheckpoint(eager=True)
-    dist = verts.select(
-        F.col("v").alias("src"), F.col("v"), F.lit(0).alias("d")
-    ).localCheckpoint(eager=True)
+    e2 = pin(e.select(F.col("u").alias("fv"), F.col("v").alias("nv")))
+    dist = pin(verts.select(F.col("v").alias("src"), F.col("v"), F.lit(0).alias("d")))
     for _ in range(_BFS_ROUNDS):
         step = (
             dist.join(F.broadcast(e2), dist.v == e2.fv)
@@ -118,9 +115,10 @@ def q529_graph_distance_metrics(
             .groupBy("src", "v")
             .agg(F.min("d").alias("d"))
             # vertex-domain metadata (<= V^2 rows): cheap to pin,
-            # keeps the next round's plan flat. Lazy: the rounds
-            # materialize as a cascade inside the final action instead
-            # of 6 separate driver-submitted jobs.
+            # keeps the next round's plan flat. The one lazy checkpoint
+            # in the package, so not ``pin``: the rounds materialize as
+            # a cascade inside the final action instead of 6 separate
+            # driver-submitted jobs.
             .localCheckpoint(eager=False)
         )
     return (

@@ -65,6 +65,7 @@ def q275_ml_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     from python_tool_setup_spark.llm.dedup import shingles
+    from python_tool_setup_spark.llm.text import tokenize
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
     base = d.select("doc_id", "text").unionByName(
@@ -74,7 +75,7 @@ def q275_ml_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sh = base.select(
-        "doc_id", shingles("text", 5).alias("sh")
+        "doc_id", shingles(tokenize("text"), 5).alias("sh")
     ).filter(F.size("sh") > 0)
     tf = HashingTF(
         inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True

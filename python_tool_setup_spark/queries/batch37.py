@@ -164,7 +164,7 @@ def q280_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(edges, reached["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
         )
-        reached = reached.unionByName(frontier).distinct().localCheckpoint()
+        reached = pin(reached.unionByName(frontier).distinct())
         counts.append(reached.count())
     from python_tool_setup_spark.staging import local_rows_df
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_tool_setup_spark.operators.blockrank import prefix_agg
+from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.tables import load_table
 
@@ -229,7 +229,9 @@ def q322_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = toks.alias("a")
     b = toks.alias("b")
-    pairs = (
+    # pinned: both `tot` and `top` consume the pair counts — an unpinned
+    # lineage would run the positional self-join twice
+    pairs = pin(
         a.join(
             b,
             (F.col("a.doc_id") == F.col("b.doc_id"))
@@ -242,9 +244,6 @@ def q322_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(F.col("a.w"), F.col("b.w")).alias("y"),
         )
         .agg(F.count(F.lit(1)).alias("nxy"))
-        # pinned: both `tot` and `top` consume the pair counts — an
-        # unpinned lineage would run the positional self-join twice
-        .localCheckpoint(eager=True)
     )
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     tot = pairs.agg(F.sum("nxy").alias("tp"))

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from python_tool_setup_spark.operators.blockrank import prefix_agg
+from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
 from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.queries.exactcast import dd_duck
 from python_tool_setup_spark.tables import load_table
@@ -73,7 +73,7 @@ def q323_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for a 5 s query — the round-5 scale-killer); all three scores
     # are independent functions of per_user, so they are now derived
     # from the same pinned frame and attached in one pass.
-    per_user = ev.groupBy("user_id").agg(
+    per_user = pin(ev.groupBy("user_id").agg(
         F.datediff(
             F.lit("2024-01-30").cast("date"), F.max(F.col("ts").cast("date"))
         )
@@ -83,7 +83,7 @@ def q323_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("value") * 100).cast("long"))
         .cast("long")
         .alias("monetary"),
-    ).localCheckpoint(eager=True)
+    ))
     n_tot = per_user.count()  # scalar off the pinned frame
 
     scored = per_user

@@ -29,6 +29,7 @@ from python_tool_setup_spark.llm import (
     text_stats,
     token_count_bpeish,
 )
+from python_tool_setup_spark.operators.blockrank import pin
 from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.tables import load_table
 from python_tool_setup_spark.staging import staging_dir
@@ -467,9 +468,9 @@ def _exact_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if sf_dir not in _EXACT_TOP1:
         e = load_table(spark, sf_dir, "embeddings")
-        _EXACT_TOP1[sf_dir] = cosine_topk(
-            _planted_queries(e), e, "vec_id", "vec_id", "embedding", k=1
-        ).localCheckpoint()
+        _EXACT_TOP1[sf_dir] = pin(
+            cosine_topk(_planted_queries(e), e, "vec_id", "vec_id", "embedding", k=1)
+        )
     return _EXACT_TOP1[sf_dir]
 
 

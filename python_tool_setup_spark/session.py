@@ -66,7 +66,7 @@ def resolve_master(master: str | None = None) -> str:
 
 def get_spark(
     app_name: str = "python_tool_setup_spark",
-    master: str | None = None,
+    master: str | None = None,  # kept: a deployment setting
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults on the

@@ -8,20 +8,16 @@ Parity targets:
 The latest-file operator is re-expressed relationally: list file
 metadata through Spark's ``binaryFile`` source (distributed, scales to
 millions of objects — the reference paginates sequentially in one
-process) and take argmax(modificationTime). Reader options
-``modifiedAfter``/``pathGlobFilter`` push the time/pattern filter into
-file listing itself.
+process) and take argmax(modificationTime).
 """
 
 from __future__ import annotations
-
-import datetime as _dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Raise scan parallelism before a CPU-heavy per-row stage.
 
     A parquet scan yields one task per file split, and a parquet file
@@ -35,8 +31,7 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     gratuitous shuffle. (The durable fix is layout: keep file sizes
     near maxPartitionBytes, as PLANS.md §sf1 notes; this guards the
     pathological-layout case.)"""
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -64,51 +59,22 @@ def read_batch(
     return reader.load(path)
 
 
-def _file_metadata(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    modified_after: _dt.datetime | None = None,
-) -> DataFrame:
-    """File-metadata relation (path, length, modificationTime) without
-    reading file contents (binaryFile scan pruned to metadata columns)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if modified_after is not None:
-        reader = reader.option(
-            "modifiedAfter", modified_after.strftime("%Y-%m-%dT%H:%M:%S")
-        )
-    return reader.load(path).select("path", "length", "modificationTime")
-
-
-def latest_file(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    modified_after: _dt.datetime | None = None,
-) -> str | None:
+def latest_file(spark: SparkSession, path: str) -> str | None:
     """Key of the most recently modified file under ``path`` (S12) —
-    argmax by mtime, computed as an aggregate, not a driver loop."""
-    meta = _file_metadata(spark, path, glob, modified_after)
+    argmax by mtime, computed as an aggregate over a binaryFile scan
+    pruned to its metadata columns, not a driver loop."""
+    meta = spark.read.format("binaryFile").load(path)
     row = meta.agg(F.max_by("path", "modificationTime").alias("p")).first()
     return row["p"] if row else None
 
 
-def read_latest_file(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "json",
-    options: dict[str, str] | None = None,
-    glob: str | None = None,
-    modified_after: _dt.datetime | None = None,
-) -> DataFrame:
-    """Read only the latest file under a prefix — the reference's
+def read_latest_file(spark: SparkSession, path: str) -> DataFrame:
+    """Read only the latest JSON file under a prefix — the reference's
     "download latest" flow (test.py:60-92) as a DataFrame source."""
-    target = latest_file(spark, path, glob, modified_after)
+    target = latest_file(spark, path)
     if target is None:
         raise FileNotFoundError(f"no files under {path}")
-    return read_batch(spark, target, fmt, options)
+    return read_batch(spark, target)
 
 
 def read_binary_files(

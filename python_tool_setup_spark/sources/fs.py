@@ -118,6 +118,27 @@ def put_object(spark: SparkSession, path: str, data: bytes | str) -> None:
         out.close()
 
 
+def commit_object(spark: SparkSession, path: str, data: bytes | str) -> None:
+    """Commit one small object that readers depend on (a manifest, a
+    schema registry): write a hidden staged sibling, then promote it
+    with ``replace_dir``, so a crash leaves the old or the new bytes,
+    never a truncated object. Read it back with ``read_committed``."""
+    fpath = _jpath(spark, path)
+    staged = _jvm(spark).org.apache.hadoop.fs.Path(
+        fpath.getParent(), f".{fpath.getName()}.staged"
+    )
+    put_object(spark, staged.toString(), data)
+    replace_dir(spark, staged.toString(), path)
+
+
+def read_committed(spark: SparkSession, path: str) -> bytes | None:
+    """The bytes ``commit_object`` last committed at ``path``, or None if
+    there are none; first finishes a commit a crash stopped between its
+    renames (``restore_backup``)."""
+    restore_backup(spark, path)
+    return get_object(spark, path) if path_exists(spark, path) else None
+
+
 def get_object(spark: SparkSession, path: str) -> bytes:
     """Read one small object fully (parity: s3_get_file, test.py:60-92)."""
     jvm = _jvm(spark)

@@ -29,7 +29,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
 from python_tool_setup_spark.config import IngestionConfig
-from python_tool_setup_spark.sources.fs import get_object, path_exists, put_object
+from python_tool_setup_spark.sources.fs import commit_object, read_committed
 
 
 def _registry_file(cfg: IngestionConfig) -> str:
@@ -42,11 +42,8 @@ def load_or_evolve_schema(spark: SparkSession, cfg: IngestionConfig) -> StructTy
     schemas to the registry (additive evolution: new columns appended,
     existing column types keep their registered type)."""
     reg_path = _registry_file(cfg)
-    registered: StructType | None = None
-    if path_exists(spark, reg_path):
-        registered = StructType.fromJson(
-            json.loads(get_object(spark, reg_path).decode("utf-8"))
-        )
+    stored = read_committed(spark, reg_path)
+    registered = None if stored is None else StructType.fromJson(json.loads(stored))
 
     if cfg.schema is not None:
         inferred = StructType.fromDDL(cfg.schema)
@@ -71,7 +68,7 @@ def load_or_evolve_schema(spark: SparkSession, cfg: IngestionConfig) -> StructTy
             if f.name not in have:
                 merged = merged.add(f)
     if registered is None or merged.jsonValue() != registered.jsonValue():
-        put_object(spark, reg_path, json.dumps(merged.jsonValue()))
+        commit_object(spark, reg_path, json.dumps(merged.jsonValue()))
     return merged
 
 

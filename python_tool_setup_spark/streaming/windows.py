@@ -42,15 +42,10 @@ def sliding_window_agg(
     ts_col: str,
     duration: str,
     slide: str,
-    group_cols: Sequence[str] = (),
-    aggs: Sequence[Column] = (),
-    watermark: str | None = None,
+    aggs: Sequence[Column],
 ) -> DataFrame:
     """Overlapping windows: each event lands in duration/slide windows."""
-    src = _with_watermark(df, ts_col, watermark)
-    return src.groupBy(
-        F.window(ts_col, duration, slide).alias("window"), *group_cols
-    ).agg(*aggs)
+    return df.groupBy(F.window(ts_col, duration, slide).alias("window")).agg(*aggs)
 
 
 def session_window_agg(

@@ -354,14 +354,3 @@ def test_image_neardup_blocking_complete_for_hamming_2(spark):
     assert got.filter(F.col("a_id") == 0).count() == 32
     with pytest.raises(ValueError, match="complete only"):
         image_neardup_pairs(hashes, id_col="i", max_hamming=3)
-
-
-def test_binned_interval_join_rejects_outer(spark):
-    import pytest
-
-    from python_tool_setup_spark.operators.asof import binned_interval_join
-
-    pts = spark.createDataFrame([(5,)], "p long")
-    ivs = spark.createDataFrame([(0, 9)], "s long, e long")
-    with pytest.raises(ValueError, match="only how='inner'"):
-        binned_interval_join(pts, ivs, "p", "s", "e", bin_width=4, how="left")

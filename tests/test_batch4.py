@@ -132,16 +132,18 @@ def test_merge_apply_cdc_deletes_and_upserts(spark):
 
 
 def test_merge_apply_cdc_latest_change_wins(spark):
+    # an uncompacted log is compacted to its latest change per key
+    # first, as the merge_apply_cdc docstring prescribes
     from python_tool_setup_spark.operators.merge import merge_apply_cdc
+    from python_tool_setup_spark.operators.relational import dedup_by_keys
 
     target = spark.createDataFrame([(1, "a")], "k long, v string")
     log = spark.createDataFrame(
         [(1, "delete", None, 1), (1, "upsert", "a2", 2)],
         "k long, _op string, v string, seq long",
     )
-    out = merge_apply_cdc(
-        target, log, ["k"], order_col="seq"
-    ).collect()
+    latest = dedup_by_keys(log, ["k"], [F.col("seq").desc()])
+    out = merge_apply_cdc(target, latest, ["k"]).collect()
     assert [(r.k, r.v) for r in out] == [(1, "a2")]
 
 

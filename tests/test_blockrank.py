@@ -6,12 +6,21 @@ from __future__ import annotations
 import os
 import random
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from python_tool_setup_spark.operators import blockrank
 from python_tool_setup_spark.operators.blockrank import prefix_agg, prefix_rank
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def blocks(monkeypatch):
+    """Set the block count of the calls that follow (the engine uses a
+    fixed count; a small one puts the test's rows in several blocks)."""
+    return lambda n: monkeypatch.setattr(blockrank, "_N_BLOCKS", n)
 
 
 def _rows(n, seed=7):
@@ -25,10 +34,11 @@ def _df(spark, n, seed=7):
     return spark.createDataFrame(_rows(n, seed), "id long, k long, v long")
 
 
-def test_prefix_sum_matches_global_window(spark):
+def test_prefix_sum_matches_global_window(spark, blocks):
+    blocks(7)
     df = _df(spark, 500)
     got = prefix_agg(
-        df, [("k", "asc"), ("id", "asc")], {"pre": ("sum", "v")}, n_blocks=7
+        df, [("k", "asc"), ("id", "asc")], {"pre": ("sum", "v")}
     )
     w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, -1)
     want = df.withColumn("pre", F.coalesce(F.sum("v").over(w), F.lit(0)))
@@ -37,13 +47,13 @@ def test_prefix_sum_matches_global_window(spark):
     )
 
 
-def test_prefix_min_desc_matches_global_window(spark):
+def test_prefix_min_desc_matches_global_window(spark, blocks):
+    blocks(5)
     df = _df(spark, 300, seed=11)
     got = prefix_agg(
         df,
         [("k", "desc"), ("id", "asc")],
         {"pmin": ("min", "v"), "pmax": ("max", "v"), "cnt": ("count", None)},
-        n_blocks=5,
     )
     w = Window.orderBy(F.col("k").desc(), "id").rowsBetween(
         Window.unboundedPreceding, -1
@@ -92,9 +102,10 @@ def test_no_unpartitioned_window_in_plan(spark):
             assert "_blk" in line, line
 
 
-def test_null_leading_keys_are_kept_and_ordered(spark):
+def test_null_leading_keys_are_kept_and_ordered(spark, blocks):
     """ADVICE r5: a NULL leading sort value must land in the
     null-ordering end block, not silently drop out of the result."""
+    blocks(6)
     rows = [(i, None if i % 7 == 0 else (i * 13) % 40, 1) for i in range(200)]
     df = spark.createDataFrame(rows, "id long, k long, v long")
     for direction in ("asc", "desc"):
@@ -102,7 +113,6 @@ def test_null_leading_keys_are_kept_and_ordered(spark):
             df,
             [("k", direction), ("id", "asc")],
             {"pre": ("sum", "v")},
-            n_blocks=6,
         )
         sort_col = F.col("k").desc() if direction == "desc" else F.col("k").asc()
         w = Window.orderBy(sort_col, "id").rowsBetween(
@@ -117,10 +127,11 @@ def test_null_leading_keys_are_kept_and_ordered(spark):
         )
 
 
-def test_nan_and_null_double_keys(spark):
+def test_nan_and_null_double_keys(spark, blocks):
     """NaN double keys sort greater than everything in Spark; they
     must land in the matching end block (and NULLs at the other end),
     with no row lost and prefixes identical to the global window."""
+    blocks(5)
     rows = []
     for i in range(150):
         if i % 11 == 0:
@@ -136,7 +147,6 @@ def test_nan_and_null_double_keys(spark):
             df,
             [("k", direction), ("id", "asc")],
             {"pre": ("count", None)},
-            n_blocks=5,
         )
         sort_col = F.col("k").desc() if direction == "desc" else F.col("k").asc()
         w = Window.orderBy(sort_col, "id").rowsBetween(
@@ -241,11 +251,12 @@ def test_prefix_agg_cached_input_consistent(spark):
         df.unpersist()
 
 
-def test_nondeterministic_trivial_shape_is_pinned(spark):
+def test_nondeterministic_trivial_shape_is_pinned(spark, blocks):
     """ADVICE r6 (medium): a Project containing rand()/uuid()/... is
     node-trivial but NOT re-execution-safe — _pin_reason must give a
     reason so the default contract pins it, and the width path's three
     passes must all see the SAME frozen rows."""
+    blocks(6)
     from python_tool_setup_spark.operators.blockrank import _pin_reason
 
     det = spark.range(100).select("id", (F.col("id") * 3).alias("v"))
@@ -263,7 +274,6 @@ def test_nondeterministic_trivial_shape_is_pinned(spark):
         spark.range(500).select("id", F.rand(42).alias("x")),
         [("x", "asc"), ("id", "asc")],
         {"cnt": ("count", None)},
-        n_blocks=6,
     ).collect()
     assert sorted(r["cnt"] for r in got) == list(range(500))
     by_x = sorted(got, key=lambda r: (r["x"], r["id"]))
@@ -271,9 +281,8 @@ def test_nondeterministic_trivial_shape_is_pinned(spark):
 
 
 def test_persisted_input_never_repinned(spark, monkeypatch):
-    """ADVICE r6 (low): cache_input=True on an already-persisted input
-    must NOT double-materialize it (the docstring's 'never re-pinned'
-    claim now holds for True as well as the default)."""
+    """ADVICE r6 (low): the default pin contract on an
+    already-persisted input must NOT double-materialize it."""
     import python_tool_setup_spark.operators.blockrank as br
 
     calls = []
@@ -357,16 +366,16 @@ def _skewed_df(spark, n=2000, hot_frac=0.7, seed=13):
     return spark.createDataFrame(rows, "id long, k long, v long")
 
 
-def test_skewed_leading_key_width_path_correct(spark):
+def test_skewed_leading_key_width_path_correct(spark, blocks):
     """Default width buckets under a 70%-hot leading key: balance
     degrades (the hot value maps to ONE block) but every prefix value
     stays exact — skew must never be a correctness event."""
+    blocks(8)
     df = _skewed_df(spark)
     got = prefix_agg(
         df,
         [("k", "asc"), ("id", "asc")],
         {"pre": ("sum", "v"), "cnt": ("count", None)},
-        n_blocks=8,
     )
     w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, -1)
     want = df.select(
@@ -379,12 +388,13 @@ def test_skewed_leading_key_width_path_correct(spark):
     )
 
 
-def test_skewed_leading_key_range_path_balances(spark):
+def test_skewed_leading_key_range_path_balances(spark, blocks):
     """A string leading key takes the pinned range layout: the range
     partitioner keys on the FULL sort tuple, so the hot leading value
     is split across blocks by the id tiebreaker — block fan-out stays
     bounded — and the prefix stays exact. The zero-padded key ``ks``
     sorts exactly like ``k``."""
+    blocks(8)
     from python_tool_setup_spark.operators.blockrank import (
         _range_blocked,
         _sort_exprs,
@@ -393,10 +403,7 @@ def test_skewed_leading_key_range_path_balances(spark):
     df = _skewed_df(spark).withColumn(
         "ks", F.lpad(F.col("k").cast("string"), 2, "0")
     )
-    n_blocks = 8
-    blocked = _range_blocked(
-        df, _sort_exprs([("ks", "asc"), ("id", "asc")]), n_blocks
-    )
+    blocked = _range_blocked(df, _sort_exprs([("ks", "asc"), ("id", "asc")]), 8)
     sizes = {
         r["_blk"]: r["n"]
         for r in blocked.groupBy("_blk").agg(F.count("*").alias("n")).collect()
@@ -413,7 +420,6 @@ def test_skewed_leading_key_range_path_balances(spark):
         df,
         [("ks", "asc"), ("id", "asc")],
         {"pre": ("sum", "v")},
-        n_blocks=n_blocks,
     )
     w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, -1)
     want = df.select(

@@ -85,8 +85,8 @@ def test_edit_distance_pairs_blocked(spark):
 def test_bloom_no_false_negatives_and_prunes(spark):
     probe = spark.range(0, 5000).select(F.col("id").alias("k"))
     build = spark.range(0, 5000, 50).select(F.col("id").alias("bk"))  # 100 keys
-    mask = bloom_bitmask(build, "bk", num_bits=8192, num_hashes=3)
-    pre = bloom_prefilter(probe, "k", mask, num_bits=8192, num_hashes=3)
+    mask = bloom_bitmask(build, "bk", num_bits=8192)
+    pre = bloom_prefilter(probe, "k", mask)
     passed = {r["k"] for r in pre.collect()}
     truth = {r["bk"] for r in build.collect()}
     assert truth <= passed  # no false negatives

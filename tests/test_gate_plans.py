@@ -94,17 +94,20 @@ def test_diff_normalises_run_specific_parts(tmp_path):
         "+- Exchange (2)\n"
         "Output [2]: [k#{k}, v#{v}]\n"
         "Arguments: hashpartitioning(k#{k}, 8), ENSURE_REQUIREMENTS, [plan_id={p}]\n"
+        "Input [1]: [filter(split(t#{k}, ,, -1), lambdafunction(NOT (lambda x_{x}#{v} = ), "
+        "lambda x_{x}#{v}, false))]\n"
+        "Arguments: [k#{k}], MapPartitionsRDD[{r}] at localCheckpoint at <unknown>:0\n"
         "Location: InMemoryFileIndex "
         "[file:{tmp}/pts_spark_staging_{t}/out_{t}/part-{f}.jsonl]\n"
         "Location: InMemoryFileIndex [file:{root}/spark-warehouse/gate.db/t]\n"
         "Table: spark_catalog.default.orders_b_{h} {u}\n"
     )
     run_a = dict(
-        k=12, v=13, p=40, t="ab1_cd2e", f="f5c866d86d634871b5b834701df15f07",
+        k=12, v=13, p=40, x=7, r=3611, t="ab1_cd2e", f="f5c866d86d634871b5b834701df15f07",
         root="/src/one", h="d7387927", u="0c6f4a1e-6a0b-4d6e-9f0e-2b7f3d1c9a11",
     )
     run_b = dict(
-        k=812, v=9, p=3, t="zz9_q0x1", f="e892565a39634f45804d5d73f2021bad",
+        k=812, v=9, p=3, x=269, r=3612, t="zz9_q0x1", f="e892565a39634f45804d5d73f2021bad",
         root="/work/two", h="0a1b2c3d", u="f00dbabe-0000-4111-8222-333344445555",
     )
     tmp = tempfile.gettempdir()

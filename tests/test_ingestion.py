@@ -573,8 +573,7 @@ def test_latest_file_selection(spark, tmp_path):
         t = time.time() - 3600 * (3 - i)
         os.utime(f"{d}/{name}", (t, t))
     assert latest_file(spark, d).endswith("new.json")
-    assert latest_file(spark, d, glob="old*").endswith("old.json")
-    df = read_latest_file(spark, d, fmt="json")
+    df = read_latest_file(spark, d)
     assert df.collect()[0]["which"] == "new.json"
 
 
@@ -601,10 +600,14 @@ def test_optimize_compaction_reduces_files(spark, tmp_path):
     assert back.agg(F.sum("v")).first()[0] == 999 * 1000
 
 
-def test_optimize_zorder_clusters(spark, tmp_path):
+def test_optimize_zorder_clusters(spark, tmp_path, monkeypatch):
+    from python_tool_setup_spark.ingestion import maintenance
+
+    # small files, so 10k rows span several of them
+    monkeypatch.setattr(maintenance, "_TARGET_FILE_BYTES", 16 * 1024)
     target = str(tmp_path / "zorder")
     spark.range(10000).withColumn("key", F.col("id") % 100).write.parquet(target)
-    optimize_layout(spark, path=target, zorder_by=["key"], target_file_bytes=16 * 1024)
+    optimize_layout(spark, path=target, zorder_by=["key"])
     back = spark.read.parquet(target)
     assert back.count() == 10000
     # clustering effect: each file covers a narrow key range

@@ -203,31 +203,13 @@ def test_multimodal_plumbing(spark, tmp_path):
     assert got["c.wav"]["media_type"] == "audio"
     assert got["b.jpg"]["length"] == 500
 
-    feats = decode_image_features(read_media(spark, d, glob="*.png"), feature_dim=4)
+    feats = decode_image_features(read_media(spark, d, glob="*.png"))
     row = feats.collect()[0]
-    assert len(row["feature"]) == 4 and 16 <= row["width"] < 80
+    assert len(row["feature"]) == 8 and 16 <= row["width"] < 80
 
     frames = sample_frames(read_media(spark, d, glob="a.png"), every_n_bytes=1000)
     assert frames.count() == 3       # 3000 bytes / 1000 -> 3 "frames"
     assert [r["frame_index"] for r in frames.orderBy("frame_index").collect()] == [0, 1, 2]
-
-
-def test_multimodal_stub_raises_without_fake(spark, tmp_path):
-    import os
-
-    from python_tool_setup_spark.llm.multimodal import (
-        decode_image_features,
-        read_media,
-    )
-
-    d = str(tmp_path / "media2")
-    os.makedirs(d)
-    with open(os.path.join(d, "a.png"), "wb") as f:
-        f.write(b"data")
-    with pytest.raises(Exception, match="NotImplementedError|real image decode"):
-        decode_image_features(
-            read_media(spark, d), use_fake_decoder=False
-        ).collect()
 
 
 # ----------------------------------------------------------- png codec ----
@@ -314,10 +296,10 @@ def test_decode_image_features_real_png(spark, tmp_path):
     with open(os.path.join(d, "img.png"), "wb") as f:
         f.write(encode_png(4, 4, px, channels=3))
 
-    feats = decode_image_features(read_media(spark, d), feature_dim=2)
+    feats = decode_image_features(read_media(spark, d))
     row = feats.collect()[0]
     assert (row["width"], row["height"], row["n_channels"]) == (4, 4, 3)
-    assert row["feature"][0] == 0.0 and row["feature"][1] == 1.0
+    assert row["feature"] == [0.0] * 4 + [1.0] * 4
 
     stats = decode_image_stats(read_media(spark, d)).collect()[0]
     assert stats["n_pixel_bytes"] == 48
@@ -326,16 +308,12 @@ def test_decode_image_features_real_png(spark, tmp_path):
     assert stats["pixel_sha256"] == _h.sha256(px).hexdigest()
 
 
-def test_filtered_topk_with_ivf(spark):
-    """Filtered search through the IVF path returns the planted
-    neighbor when it satisfies the predicate, and never returns
-    filtered-out ids."""
+def test_filtered_topk_finds_planted_under_predicate(spark):
+    """Filtered search returns the planted neighbor when it satisfies
+    the predicate, and never returns filtered-out ids."""
     import random
 
-    from python_tool_setup_spark.llm.similarity import (
-        filtered_topk,
-        ivf_index,
-    )
+    from python_tool_setup_spark.llm.similarity import filtered_topk
 
     rng = random.Random(3)
     rows = []
@@ -349,15 +327,13 @@ def test_filtered_topk_with_ivf(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
     corpus = df.filter(F.col("vec_id") < 1000)
     queries = df.filter(F.col("vec_id") >= 1000)
-    assigned, model = ivf_index(corpus, "embedding", num_cells=4)
     out = filtered_topk(
-        queries, corpus, F.col("label") == 0, "vec_id", "vec_id",
-        "embedding", k=1, assigned_corpus=assigned, model=model, nprobe=2,
+        queries, corpus, F.col("label") == 0, "vec_id", "vec_id", "embedding", k=1
     )
     got = {r["vec_id"]: r["neighbor_id"] for r in out.collect()}
     # even-labeled queries (sources 0,2,4,..) must find their source
     hits = sum(got.get(1100 + i) == i for i in range(0, 10, 2))
-    assert hits >= 4
+    assert hits == 5
     # nothing with label 1 may appear
     labels = {r[0]: r[2] for r in rows}
     assert all(labels[n] == 0 for n in got.values())

@@ -46,10 +46,14 @@ def test_crash_before_manifest_swap_is_invisible(spark, tmp_path):
     assert _rows(read_published(spark, root, "b")) == [(9, "v0")]
 
 
-def test_read_published_rejects_stale_pin(spark, tmp_path):
+def test_corrupt_publish_manifest_raises(spark, tmp_path):
+    # A torn root manifest is not a first publish: restarting at
+    # version 0 would hide every table published so far.
+    from python_tool_setup_spark.sources.fs import put_object
+
     root = str(tmp_path / "pub")
     df = spark.createDataFrame([(1,)], "k long")
     publish_tables(spark, root, {"a": df})
-    publish_tables(spark, root, {"a": df})
+    put_object(spark, f"{root}/_PUBLISH.json", '{"version": 0, "tab')
     with pytest.raises(ValueError):
-        read_published(spark, root, "a", publish_version=0)
+        publish_tables(spark, root, {"a": df})

@@ -27,7 +27,7 @@ def test_stratified_sample_deterministic_and_rate(spark):
         F.count(F.lit(1)).alias("n")).collect()}
     assert abs(got["en"] / 2500 - 0.5) < 0.08
     assert abs(got["de"] / 7500 - 0.1) < 0.04
-    # unknown stratum with default_rate=0 is dropped entirely
+    # a stratum missing from the rates is dropped entirely
     extra = df.withColumn("lang", F.lit("xx"))
     assert stratified_sample(extra, "lang", {"en": 0.5}, "id").count() == 0
 
@@ -35,8 +35,8 @@ def test_stratified_sample_deterministic_and_rate(spark):
 def test_hash_bucket_matches_md5(spark):
     import hashlib
 
-    row = spark.range(42, 43).select(hash_bucket("id", 1000).alias("b")).first()
-    expect = int(hashlib.md5(b"42").hexdigest()[:8], 16) % 1000
+    row = spark.range(42, 43).select(hash_bucket("id").alias("b")).first()
+    expect = int(hashlib.md5(b"42").hexdigest()[:8], 16) % 10_000
     assert row["b"] == expect
 
 
@@ -74,11 +74,6 @@ def test_mix_weights_uniform_and_target(spark):
     uni = {r["lang"]: r["weight"] for r in mix_weights(df, "lang").collect()}
     # en is 60% of rows but target 1/3 -> weight < 1; de/fr upweighted
     assert uni["en"] < 1 < uni["de"] == uni["fr"]
-    tgt = {
-        r["lang"]: r["weight"]
-        for r in mix_weights(df, "lang", {"en": 0.8, "de": 0.1, "fr": 0.1}).collect()
-    }
-    assert tgt["en"] > 1 and tgt["de"] < 1
 
 
 def test_dup_clusters_chain_and_isolated(spark):

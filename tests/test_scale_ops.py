@@ -60,13 +60,6 @@ def test_auto_salted_join_engages_only_on_skew(spark):
         assert got == expected
 
 
-def test_salted_join_left_outer(spark):
-    big = spark.createDataFrame([(1, 10), (2, 20), (99, 0)], "k int, v int")
-    small = spark.createDataFrame([(1, "a"), (2, "b")], "k int, d string")
-    got = rows(salted_join(big, small, ["k"], how="left", salt_buckets=3))
-    assert got == rows(big.join(small, ["k"], "left"))
-
-
 # ------------------------------------------------------------- buckets ----
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
     run = uuid.uuid4().hex[:8]
@@ -112,13 +105,15 @@ def test_compaction_reduces_files_preserves_rows(spark, sf_dir):
     assert spark.read.parquet(target).count() == n_rows
 
 
-def test_zorder_clusters_ranges_per_file(spark, sf_dir):
+def test_zorder_clusters_ranges_per_file(spark, sf_dir, monkeypatch):
+    from python_tool_setup_spark.ingestion import maintenance
+
+    # small files, so the fixture's orders table spans many of them
+    monkeypatch.setattr(maintenance, "_TARGET_FILE_BYTES", 64 * 1024)
     target = tempfile.mkdtemp(prefix="zorder_t_")
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     orders.repartition(8).write.mode("overwrite").parquet(target)
-    optimize_layout(
-        spark, path=target, zorder_by=["o_custkey"], target_file_bytes=64 * 1024
-    )
+    optimize_layout(spark, path=target, zorder_by=["o_custkey"])
     files = _parquet_files(target)
     # clustering ⇒ per-file key ranges are (near-)disjoint, so the sum of
     # per-file distinct spans ≈ global span; fragmented layout gives ~N×.
@@ -160,7 +155,7 @@ def test_morton_zorder_skips_on_both_columns(spark, sf_dir):
     linear = li.repartitionByRange(n_files, "l_partkey").sortWithinPartitions(
         "l_partkey"
     )
-    morton = zorder_by_morton(li, "l_partkey", "l_suppkey", n_files, bits=10)
+    morton = zorder_by_morton(li, "l_partkey", "l_suppkey", n_files)
 
     glob = li.agg(
         (F.max("l_partkey") - F.min("l_partkey")).alias("a"),
@@ -186,14 +181,3 @@ def test_skew_report_flags_hot_key(spark):
     assert rep[0]["row_share"] == 0.9
     # 100 rows / 11 keys -> mean ~9.09 -> skew factor ~9.9
     assert 9.0 < rep[0]["skew_factor"] < 11.0
-
-
-def test_salted_join_rejects_outer(spark):
-    import pytest as _pytest
-
-    from python_tool_setup_spark.operators.skew import salted_join
-
-    a = spark.createDataFrame([(1, "x")], "k long, v string")
-    b = spark.createDataFrame([(1, "y")], "k long, w string")
-    with _pytest.raises(ValueError, match="salted_join supports"):
-        salted_join(a, b, ["k"], how="full_outer")

@@ -132,7 +132,7 @@ def test_sliding_window_batch(spark):
         "ts",
         "10 minutes",
         "5 minutes",
-        aggs=[F.count("*").alias("n")],
+        [F.count("*").alias("n")],
     )
     # event at 00:00:30 belongs to windows [23:55,00:05) and [00:00,00:10)
     spans = sorted(

@@ -35,6 +35,35 @@ def test_write_read_versions_and_vacuum(spark, tmp_path):
     assert write_version(spark, v0, path) == 2
 
 
+def test_crash_mid_manifest_commit_keeps_previous_version(
+    spark, tmp_path, monkeypatch
+):
+    # Fault injection: the process dies after the old manifest was
+    # renamed aside and before the new one was promoted. The next
+    # reader finds the previous version, and the next writer goes on.
+    import python_tool_setup_spark.sources.fs as fs
+
+    path = str(tmp_path / "t")
+    write_version(spark, spark.createDataFrame([(1, "a")], "k long, v string"), path)
+    real_rename, calls = fs._rename, []
+
+    def crash_after_first_rename(*a):
+        calls.append(a)
+        if len(calls) > 1:
+            raise IOError("injected crash")
+        real_rename(*a)
+
+    monkeypatch.setattr(fs, "_rename", crash_after_first_rename)
+    with pytest.raises(IOError, match="injected"):
+        write_version(
+            spark, spark.createDataFrame([(2, "b")], "k long, v string"), path
+        )
+    monkeypatch.setattr(fs, "_rename", real_rename)
+    assert list_versions(spark, path) == [0]
+    assert _rows(read_version(spark, path)) == [(1, "a")]
+    assert write_version(spark, read_version(spark, path), path) == 1
+
+
 def test_clean_orphans_removes_real_crash_layout(spark, tmp_path):
     # A writer that crashes between snapshot and manifest swap leaves a
     # dir in the REAL 'v=<N>' layout (what _version_dir writes); orphan
@@ -149,27 +178,6 @@ def test_forget_keys_keeps_null_keyed_rows(spark, tmp_path):
     write_version(spark, df, table2)
     forget_keys(spark, table2, "owner", [])
     assert read_version(spark, table2).count() == 4
-
-
-def test_forget_keys_audit_follows_fmt(spark, tmp_path):
-    # Regression (round-4 ADVICE): the physical-absence audit used a
-    # hardcoded .parquet suffix, so for any other fmt it scanned zero
-    # files and reported residual 0 / purge_complete False. With the
-    # extension derived from fmt, an orc table gets a real audit.
-    from python_tool_setup_spark.ingestion.versioned import (
-        forget_keys,
-        read_version,
-        write_version,
-    )
-
-    table = str(tmp_path / "t")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, owner string")
-    write_version(spark, df, table, fmt="orc")
-    audit = forget_keys(spark, table, "owner", ["a"], fmt="orc")
-    assert audit["files_remaining"] > 0
-    assert audit["residual_key_rows"] == 0
-    assert audit["purge_complete"]
-    assert read_version(spark, table, fmt="orc").count() == 1
 
 
 def test_forget_keys_all_rows(spark, tmp_path):

@@ -456,6 +456,10 @@ def profile(sf_dir: str, only: list[str] | None) -> None:
 _RUN_SPECIFIC = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    # lambda variables and RDDs are numbered by JVM-wide counters, so a
+    # gate's numbers shift whenever an earlier gate builds or runs more
+    (re.compile(r"(?<=lambda )([xyz])_\d+(?=#)"), r"\1_N"),
+    (re.compile(r"(?<=RDD)\[\d+\]"), "[N]"),
     (re.compile(r"[0-9a-f]{8}(-?[0-9a-f]{4}){3}-?[0-9a-f]{12}"), "<uuid>"),
     (re.compile(r"(?<=_)[0-9a-f]{8}\b"), "<hex>"),
     # everything before a capture's own spark-warehouse is its checkout
