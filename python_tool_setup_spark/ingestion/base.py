@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from python_tool_setup_spark.config import IngestionConfig, IngestionError
-from python_tool_setup_spark.operators.merge import merge_upsert
+from python_tool_setup_spark.operators.merge import merge_key_errors, merge_upsert
 from python_tool_setup_spark.operators.relational import dedup_by_keys
 from python_tool_setup_spark.sources.files import read_batch
 from python_tool_setup_spark.sources.fs import delete_path, has_data_files
@@ -195,7 +195,9 @@ class IngestionPipeline:
         """Upsert semantics of Delta ``whenMatchedUpdateAll /
         whenNotMatchedInsertAll`` (reference framework.py:211-231).
         ``cfg.dedup_order`` makes the source unique per key on every
-        path, the bootstrap write included."""
+        path, the bootstrap write included. Without it, two source rows
+        that match one target row raise ``MergeKeyError`` and leave the
+        target as it was."""
         cfg = self.cfg
         if cfg.dedup_order:
             source = dedup_by_keys(source, cfg.merge_keys, cfg.dedup_order)
@@ -222,10 +224,11 @@ class IngestionPipeline:
             merged = merge_upsert(
                 target, source, keys=cfg.merge_keys, evolve_schema=True
             )
-            overwrite_staged(
-                self.spark, merged, cfg.target_format, cfg.target_path,
-                cfg.full_table_name, cfg.partition_by,
-            )
+            with merge_key_errors():
+                overwrite_staged(
+                    self.spark, merged, cfg.target_format, cfg.target_path,
+                    cfg.full_table_name, cfg.partition_by,
+                )
 
     # ------------------------------------------------------- streaming --
     def _run_stream(self) -> StructType:

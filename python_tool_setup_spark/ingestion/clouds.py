@@ -17,7 +17,6 @@ from python_tool_setup_spark.ingestion.base import IngestionPipeline
 
 _AZURE_SCHEMES = ("abfss://", "abfs://", "wasbs://", "wasb://", "adl://")
 _S3_SCHEMES = ("s3://", "s3a://", "s3n://")
-_LOCAL_SCHEMES = ("file://", "/", "./", "hdfs://")
 
 # Convenience credential keys accepted in cfg.source_options, mapped to
 # the standard hadoop-aws conf names. Anything already prefixed "fs."

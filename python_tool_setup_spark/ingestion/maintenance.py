@@ -89,48 +89,3 @@ def morton_code(a, b, bits: int = 16):
             F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i)
         )
     return code
-
-
-def zorder_by_morton(
-    df,
-    col_a: str,
-    col_b: str,
-    num_files: int,
-):
-    """Cluster rows along a real space-filling curve over two columns.
-
-    Each column is min/max-scaled to 16 bits (two tiny aggregate
-    scalars — no data is collected), bit-interleaved into a Morton
-    code, then range-partitioned + sorted by the code. Unlike the
-    lexicographic `repartitionByRange(a, b)` fallback, BOTH columns
-    get tight per-file min/max ranges, so parquet row-group stats
-    prune point/range predicates on either column (the multi-column
-    data-skipping Delta's OPTIMIZE ZORDER provides).
-    """
-    from pyspark.sql import functions as F
-
-    top = (1 << 16) - 1
-    stats = df.agg(
-        F.min(col_a).alias("a_lo"),
-        F.max(col_a).alias("a_hi"),
-        F.min(col_b).alias("b_lo"),
-        F.max(col_b).alias("b_hi"),
-    ).first()
-
-    def scaled(c, lo, hi):
-        if hi == lo:
-            return F.lit(0)
-        return ((F.col(c) - F.lit(lo)) * top / F.lit(hi - lo)).cast("long")
-
-    coded = df.withColumn(
-        "__z",
-        morton_code(
-            scaled(col_a, stats["a_lo"], stats["a_hi"]),
-            scaled(col_b, stats["b_lo"], stats["b_hi"]),
-        ),
-    )
-    return (
-        coded.repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )

@@ -434,9 +434,12 @@ def ngram_jaccard_pairs(
         .select("__id", *blocks, shingles("__tk", shingle_size).alias("__sh"))
         .withColumn("__n", F.size("__sh"))
     )
+    # explode_outer, then drop the empty-set rows: Spark infers
+    # ``size(__sh) > 0`` from a plain explode and pushes it below the
+    # shingle Project, re-tokenizing every row inside that Filter.
     ex = base.select(
-        *blocks, "__id", "__n", F.explode("__sh").alias("__s")
-    )
+        *blocks, "__id", "__n", F.explode_outer("__sh").alias("__s")
+    ).filter(F.col("__s").isNotNull())
     # bucket per (block, shingle) then emit pairs — a self-join would
     # evaluate the (interpreted, HOF-heavy) shingle expression twice and
     # shuffle both sides; this evaluates once and shuffles once.

@@ -1,15 +1,14 @@
 """Multimodal columns (L5): image/audio/video as opaque ``binary``
-columns with typed metadata, plus decode / feature-extract / resize /
-frame-sample plumbing over Arrow-batched ``mapInPandas``.
+columns with typed metadata, plus decode / hash / resize / frame-sample
+plumbing over Arrow-batched ``mapInPandas``.
 
 PNG decode is REAL — a pure-stdlib codec (``llm/png.py``: zlib inflate
 + scanline unfilter) runs inside the mapInPandas workers, so q44's
-features come from actual pixel data. Formats with no codec in the
+stats come from actual pixel data. Formats with no codec in the
 container (JPEG, audio, video) remain STUBS: the real-Spark parts —
 schema, binaryFile ingestion, batch iteration shape, partitioning — are
-real and tested; only the non-PNG pixel math of ``decode_image_features``
-and the frame slicing of ``sample_frames`` are clearly-marked
-deterministic fakes.
+real and tested; only the frame slicing of ``sample_frames`` is a
+clearly-marked deterministic fake.
 
 At 100 TB: media bytes stay in executor-local Arrow batches end to end
 (binaryFile scan → mapInPandas); nothing is collected; per-file rows
@@ -25,16 +24,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
-MEDIA_META_SCHEMA = (
-    "path string, media_type string, length long, sha256 string, content binary"
-)
-IMAGE_FEATURES_SCHEMA = (
-    "path string, width int, height int, n_channels int, feature array<float>"
-)
 
 _EXT_TO_TYPE = {
     "jpg": "image", "jpeg": "image", "png": "image", "gif": "image",
@@ -64,59 +53,6 @@ def with_media_metadata(df: DataFrame) -> DataFrame:
         F.sha2("content", 256).alias("sha256"),
         "content",
     )
-
-
-# Length of the feature vector ``decode_image_features`` extracts.
-_FEATURE_DIM = 8
-
-
-def _band_means(pixels: bytes) -> list[float]:
-    """Feature vector: mean intensity of ``_FEATURE_DIM`` equal byte
-    bands — deterministic, resolution-independent, vectorized."""
-    import numpy as np
-
-    arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64) / 255.0
-    return [float(b.mean()) if b.size else 0.0 for b in np.array_split(arr, _FEATURE_DIM)]
-
-
-def decode_image_features(df: DataFrame) -> DataFrame:
-    """Decode images and extract a feature vector via mapInPandas.
-
-    PNG content (by signature) is decoded for REAL with the stdlib
-    codec in ``llm/png.py``; features are band means over the actual
-    pixel bytes. Non-PNG content gets a deterministic digest-derived
-    fake (the honest stub boundary — no JPEG/audio/video codecs in
-    this container).
-    """
-    from python_tool_setup_spark.llm.png import _SIGNATURE, decode_png
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "path": [], "width": [], "height": [], "n_channels": [],
-                "feature": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                if data[:8] == _SIGNATURE:
-                    w, h, ch, pixels = decode_png(data)  # real decode
-                    out["path"].append(path)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_channels"].append(ch)
-                    out["feature"].append(_band_means(pixels))
-                    continue
-                digest = hashlib.sha256(data).digest()
-                out["path"].append(path)
-                out["width"].append(16 + digest[0] % 64)       # fake decode
-                out["height"].append(16 + digest[1] % 64)      # fake decode
-                out["n_channels"].append(3)
-                out["feature"].append(
-                    [b / 255.0 for b in digest[:_FEATURE_DIM]]  # fake features
-                )
-            yield pd.DataFrame(out)
-
-    return df.select("path", "content").mapInPandas(_decode, IMAGE_FEATURES_SCHEMA)
 
 
 IMAGE_STATS_SCHEMA = (

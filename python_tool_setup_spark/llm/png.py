@@ -12,7 +12,7 @@ non-interlaced. Anything else raises NotImplementedError — the honest
 stub boundary for exotic formats.
 
 Scale note: the codec runs inside Arrow-batched ``mapInPandas`` workers
-(see ``multimodal.decode_image_features``); nothing here touches the
+(see ``multimodal.decode_image_stats``); nothing here touches the
 driver.
 """
 

@@ -12,9 +12,14 @@ AND-joined key-equality condition (reference ``framework.py:211-231``,
 source row — duplicate-key target rows each survive as one updated
 copy (SQL/Delta MERGE preserves target multiplicity; found by the
 hypothesis property suite).
-Delta raises on multiple source rows matching one target row;
-``check_duplicate_source_keys=True`` raises the same. Callers make the
-source unique per key first with ``relational.dedup_by_keys``.
+Like Delta, two or more source rows that match one target row abort
+the merge: each source row carries its key's source row count, and a
+``raise_error`` fires on a matched row whose count is above one. The
+count is a window over the source's own key shuffle, so the check adds
+no job; ``merge_key_errors`` turns the failed action into
+:class:`MergeKeyError`. Duplicate source keys that match nothing are
+inserted, as Delta inserts them. Callers make the source unique per key
+first with ``relational.dedup_by_keys``.
 
 Scale: one full outer join scans the target once and shuffles both
 sides once on the merge keys, spreading the rewrite over every core
@@ -27,8 +32,10 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Sequence
+from contextlib import contextmanager
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.sources.fs import (
@@ -38,6 +45,25 @@ from python_tool_setup_spark.sources.fs import (
 
 class MergeKeyError(ValueError):
     """Duplicate merge keys in source (Delta would raise the same)."""
+
+
+_DUPLICATE_MATCH = "two or more source rows match one target row"
+
+
+@contextmanager
+def merge_key_errors():
+    """Run a merged relation's action, raising :class:`MergeKeyError`
+    where its duplicate-key check fired (Spark reports the check as the
+    ``USER_RAISED_EXCEPTION`` of the failed job)."""
+    try:
+        yield
+    except Exception as exc:
+        if _DUPLICATE_MATCH in str(exc):
+            raise MergeKeyError(
+                f"merge source: {_DUPLICATE_MATCH}; dedup it "
+                "(dedup_by_keys) or pre-aggregate"
+            ) from exc
+        raise
 
 
 class ConcurrentMergeError(RuntimeError):
@@ -53,12 +79,12 @@ def merge_upsert(
     target: DataFrame,
     source: DataFrame,
     keys: Sequence[str],
-    # kept: rejects malformed input from outside
-    check_duplicate_source_keys: bool = False,
     evolve_schema: bool = False,
 ) -> DataFrame:
     """Return the merged relation: matched targets replaced by their
     source row, unmatched source rows appended, unmatched targets kept.
+    An action on it fails if two source rows match one target row; run
+    the action inside :func:`merge_key_errors` to get a MergeKeyError.
 
     ``evolve_schema=True`` is the Delta ``mergeSchema``/autoMerge
     behavior for a source that ADDS columns: the target gains each new
@@ -78,27 +104,31 @@ def merge_upsert(
             for f in source.schema.fields if f.name not in target.columns
         })
 
-    if check_duplicate_source_keys:
-        if source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count():
-            raise MergeKeyError(
-                f"source has multiple rows per merge key {keys}; "
-                "dedup it (dedup_by_keys) or pre-aggregate"
-            )
-
     # Source values ride under names with the marker's prefix, which no
     # target column starts with, so nothing on the joined row collides.
     marker = "__merge_src"
     while any(c.lower().startswith(marker) for c in target.columns):
         marker += "_"
     vals = {c: f"{marker}{i}" for i, c in enumerate(target.columns) if c not in keys}
+    # The marker is the number of source rows with the row's key.
     src = source.select(
-        *keys, *[F.col(c).alias(v) for c, v in vals.items()], F.lit(True).alias(marker)
+        *keys,
+        *[F.col(c).alias(v) for c, v in vals.items()],
+        F.count(F.lit(1)).over(Window.partitionBy(*keys)).alias(marker),
     )
     # A matched NULL source value still overwrites (no coalesce).
+    out = {
+        c: F.when(F.col(marker).isNotNull(), F.col(v)).otherwise(F.col(c))
+        for c, v in vals.items()
+    }
+    # The duplicate check rides the first key column, once per row.
+    matched = reduce(lambda a, b: a & b, [target[k].isNotNull() for k in keys])
+    out[keys[0]] = F.when(
+        matched & (F.col(marker) > 1),
+        F.raise_error(F.lit(f"merge on {keys}: {_DUPLICATE_MATCH}")),
+    ).otherwise(F.col(keys[0]))
     return target.join(src, on=keys, how="full_outer").select(*[
-        F.when(F.col(marker), F.col(vals[c])).otherwise(F.col(c)).alias(c)
-        if c in vals else c
-        for c in target.columns
+        out[c].alias(c) if c in out else c for c in target.columns
     ])
 
 
@@ -187,7 +217,12 @@ def merge_upsert_bucketed(
     else:
         merged = src
     staging = f"{target_path.rstrip('/')}__mstage_{uuid.uuid4().hex[:8]}"
-    merged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(staging)
+    try:
+        with merge_key_errors():
+            merged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(staging)
+    except Exception:
+        delete_path(spark, staging)
+        raise
     if on_staged is not None:
         on_staged()
     conflicts = [b for b in touched if _fingerprint(b) != read_state[b]]

@@ -90,11 +90,3 @@ def scd2_apply(
         F.lit(True).alias("is_current"),
     )
     return closed.unionByName(kept_cur).unionByName(fresh)
-
-
-def scd2_as_of(history: DataFrame, t: str | Column) -> DataFrame:
-    """Reconstruct the dimension as of time `t` from an SCD2 history."""
-    t_col = (F.lit(t) if isinstance(t, str) else t).cast("timestamp")
-    return history.filter(
-        (F.col("valid_from") <= t_col) & (t_col < F.col("valid_to"))
-    )

@@ -26,7 +26,6 @@ from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.queries.exactcast import cents
 from python_tool_setup_spark.tables import load_table
 
-_CONF_LEVEL = 0.9
 _COVER_MIN_PPM = 880_000  # empirical coverage must stay near 90%
 
 

@@ -50,8 +50,8 @@ from python_tool_setup_spark.tables import load_table
     "surrogate key plus the validity-interval predicate, so it "
     "shuffles once on user_id and the interval check is a residual "
     "filter — the exact shape that attributes 100 TB of facts to "
-    "historically-correct dimension versions (joining to "
-    "scd2_as_of(now) instead silently rewrites history). Validity "
+    "historically-correct dimension versions (joining to the "
+    "current rows instead silently rewrites history). Validity "
     "boundaries are integer epoch-microseconds on both engines.",
 )
 def q207_temporal_dimension_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,8 +14,6 @@ from python_tool_setup_spark.operators.geo import radius_join_mm
 from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.tables import load_table
 
-_RAD = 3.141592653589793 / 180.0
-
 
 def _hash_coord(prefix: str, key: F.Column) -> F.Column:
     """Deterministic pseudo-coordinate from an md5 of the key —

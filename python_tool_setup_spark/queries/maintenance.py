@@ -205,10 +205,9 @@ _MORTON_SQL = """
     doc="True Z-order (Morton) clustering: bit-interleave two key "
     "columns into a space-filling-curve code (pure shift/mask integer "
     "math, whole-stage codegen), bucket rows by coarse curve cell. "
-    "zorder_by_morton range-partitions + sorts on this code so BOTH "
-    "columns get tight per-file min/max ranges (multi-column data "
-    "skipping); test_scale_ops asserts the skipping effect vs "
-    "single-column ordering.",
+    "Ordering rows by this code gives BOTH columns tight per-file "
+    "min/max ranges (multi-column data skipping); the engine's "
+    "OPTIMIZE ZORDER path (q62) clusters by range instead.",
 )
 def q80_morton_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from python_tool_setup_spark.ingestion.maintenance import morton_code

@@ -236,10 +236,6 @@ def _planted_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _LABELS[sf_dir]
 
 
-def q72_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _planted_labels(spark, sf_dir)
-
-
 @register(
     "q91_dedup_keep_best",
     f"""

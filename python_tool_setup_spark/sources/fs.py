@@ -14,21 +14,43 @@ explicitly materializes (configs, schema registries, small artifacts).
 
 from __future__ import annotations
 
+import weakref
+from types import SimpleNamespace
+
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+# Per-SparkContext memo of the JVM handles these helpers use. A JVMView
+# lookup such as ``jvm.org.apache.hadoop.fs.Path`` costs one py4j round
+# trip per name part, and a manifest read did several per call. Keyed
+# weakly, as ``tables._TABLE_MEMO`` is, so a stopped context is
+# collectable and a new one resolves its own handles.
+_JVM_MEMO: "weakref.WeakKeyDictionary[SparkContext, SimpleNamespace]" = (
+    weakref.WeakKeyDictionary()
+)
 
-def _jvm(spark: SparkSession):
-    return spark.sparkContext._jvm
+
+def _handles(spark: SparkSession) -> SimpleNamespace:
+    sc = spark.sparkContext
+    h = _JVM_MEMO.get(sc)
+    if h is None:
+        jvm = sc._jvm
+        h = _JVM_MEMO[sc] = SimpleNamespace(
+            Path=jvm.org.apache.hadoop.fs.Path,
+            conf=sc._jsc.hadoopConfiguration(),
+            ByteArrayOutputStream=jvm.java.io.ByteArrayOutputStream,
+            IOUtils=jvm.org.apache.hadoop.io.IOUtils,
+        )
+    return h
 
 
 def _jpath(spark: SparkSession, path: str):
-    return _jvm(spark).org.apache.hadoop.fs.Path(path)
+    return _handles(spark).Path(path)
 
 
 def hadoop_fs(spark: SparkSession, path: str):
     """FileSystem instance for the scheme of ``path``."""
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    return _jpath(spark, path).getFileSystem(conf)
+    return _jpath(spark, path).getFileSystem(_handles(spark).conf)
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -68,9 +90,7 @@ def _with_backup(spark: SparkSession, final: str):
     ``replace_dir`` parks the old ``final`` under, which Spark's file
     index skips even when ``final`` is a ``k=v`` partition dir."""
     fpath = _jpath(spark, final)
-    backup = _jvm(spark).org.apache.hadoop.fs.Path(
-        fpath.getParent(), f".{fpath.getName()}.replaced"
-    )
+    backup = _handles(spark).Path(fpath.getParent(), f".{fpath.getName()}.replaced")
     return hadoop_fs(spark, final), fpath, backup
 
 
@@ -124,9 +144,7 @@ def commit_object(spark: SparkSession, path: str, data: bytes | str) -> None:
     with ``replace_dir``, so a crash leaves the old or the new bytes,
     never a truncated object. Read it back with ``read_committed``."""
     fpath = _jpath(spark, path)
-    staged = _jvm(spark).org.apache.hadoop.fs.Path(
-        fpath.getParent(), f".{fpath.getName()}.staged"
-    )
+    staged = _handles(spark).Path(fpath.getParent(), f".{fpath.getName()}.staged")
     put_object(spark, staged.toString(), data)
     replace_dir(spark, staged.toString(), path)
 
@@ -141,12 +159,12 @@ def read_committed(spark: SparkSession, path: str) -> bytes | None:
 
 def get_object(spark: SparkSession, path: str) -> bytes:
     """Read one small object fully (parity: s3_get_file, test.py:60-92)."""
-    jvm = _jvm(spark)
+    h = _handles(spark)
     fs = hadoop_fs(spark, path)
     stream = fs.open(_jpath(spark, path))
     try:
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, False)
+        baos = h.ByteArrayOutputStream()
+        h.IOUtils.copyBytes(stream, baos, 65536, False)
         return bytes(baos.toByteArray())
     finally:
         stream.close()

@@ -7,7 +7,6 @@ from python_tool_setup_spark.streaming.autoloader import (
 )
 from python_tool_setup_spark.streaming.windows import (
     tumbling_window_agg,
-    sliding_window_agg,
     session_window_agg,
     streaming_dedup,
 )
@@ -16,7 +15,6 @@ __all__ = [
     "run_autoloader",
     "load_or_evolve_schema",
     "tumbling_window_agg",
-    "sliding_window_agg",
     "session_window_agg",
     "streaming_dedup",
 ]

@@ -79,8 +79,9 @@ def _merge_microbatch(cfg: IngestionConfig):
 
     foreachBatch is at-least-once; replaying the SAME micro-batch
     through the merge is a fixpoint (matched rows are replaced with
-    identical values), so the sink is effectively idempotent as long as
-    merge keys are unique per batch (enforce with cfg.dedup_order)."""
+    identical values), so the sink is effectively idempotent. A batch
+    with two rows on one target row's key fails the merge with
+    ``MergeKeyError`` unless ``cfg.dedup_order`` makes it unique."""
     from python_tool_setup_spark.ingestion.base import IngestionPipeline
 
     def apply(batch_df, batch_id: int) -> None:

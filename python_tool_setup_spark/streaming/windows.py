@@ -37,17 +37,6 @@ def tumbling_window_agg(
     )
 
 
-def sliding_window_agg(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    slide: str,
-    aggs: Sequence[Column],
-) -> DataFrame:
-    """Overlapping windows: each event lands in duration/slide windows."""
-    return df.groupBy(F.window(ts_col, duration, slide).alias("window")).agg(*aggs)
-
-
 def session_window_agg(
     df: DataFrame,
     ts_col: str,

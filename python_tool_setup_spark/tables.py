@@ -27,10 +27,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in star joins.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

@@ -33,8 +33,6 @@ from python_tool_setup_spark.tables import TABLE_NAMES, table_path
 # fetch coerces DECIMAL/HUGEINT to float64 while Spark's toPandas keeps
 # Decimal objects, so equal values hash differently on the driver.
 BANNED_SPARK_TYPES = ("decimal", "interval")
-# Same class on the oracle side (DESCRIBE type names).
-BANNED_ORACLE_TYPES = ("DECIMAL", "HUGEINT", "INTERVAL")
 
 
 def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

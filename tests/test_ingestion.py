@@ -19,6 +19,7 @@ from python_tool_setup_spark.ingestion import (
     make_ingestion,
 )
 from python_tool_setup_spark.ingestion.maintenance import optimize_layout
+from python_tool_setup_spark.operators.merge import MergeKeyError
 from python_tool_setup_spark.sources import (
     get_object,
     latest_file,
@@ -241,6 +242,32 @@ def test_merge_into_unreadable_target_raises_and_keeps_it(spark, src_dir, tmp_pa
     with pytest.raises(Exception):
         make_ingestion(spark, _merge_cfg(src_dir, target)).run()
     assert _tree_bytes(target) == before
+
+
+def test_merge_duplicate_key_arrival_raises_and_keeps_target(spark, src_dir, tmp_path):
+    # Fault injection: an arrival with two rows on one existing key fails
+    # the merge (Delta's rule), leaves the target byte-identical and
+    # leaves no staging directory beside it.
+    target = str(tmp_path / "silver")
+    write_json(
+        f"{src_dir}/b1.json",
+        [{"device_id": i, "reading_ts": "t1", "temp": 1.0} for i in range(3)],
+    )
+    make_ingestion(spark, _merge_cfg(src_dir, target)).run()
+    before = _tree_bytes(target)
+    src2 = str(tmp_path / "src2")
+    write_json(
+        f"{src2}/b2.json",
+        [
+            {"device_id": 1, "reading_ts": "t1", "temp": 8.0},
+            {"device_id": 1, "reading_ts": "t1", "temp": 9.0},
+            {"device_id": 5, "reading_ts": "t1", "temp": 5.0},
+        ],
+    )
+    with pytest.raises(MergeKeyError):
+        make_ingestion(spark, _merge_cfg(src2, target)).run()
+    assert _tree_bytes(target) == before
+    assert sorted(os.listdir(tmp_path)) == ["silver", "src", "src2"]
 
 
 def test_merge_bootstraps_target_without_data_files(spark, src_dir, tmp_path):

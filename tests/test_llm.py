@@ -184,7 +184,6 @@ def test_multimodal_plumbing(spark, tmp_path):
     import os
 
     from python_tool_setup_spark.llm.multimodal import (
-        decode_image_features,
         read_media,
         sample_frames,
         with_media_metadata,
@@ -202,10 +201,6 @@ def test_multimodal_plumbing(spark, tmp_path):
     assert got["a.png"]["media_type"] == "image"
     assert got["c.wav"]["media_type"] == "audio"
     assert got["b.jpg"]["length"] == 500
-
-    feats = decode_image_features(read_media(spark, d, glob="*.png"))
-    row = feats.collect()[0]
-    assert len(row["feature"]) == 8 and 16 <= row["width"] < 80
 
     frames = sample_frames(read_media(spark, d, glob="a.png"), every_n_bytes=1000)
     assert frames.count() == 3       # 3000 bytes / 1000 -> 3 "frames"
@@ -279,29 +274,21 @@ def test_png_rejects_unsupported():
         encode_png(2, 2, b"\x00" * 8, channels=2)  # gray+alpha unsupported
 
 
-def test_decode_image_features_real_png(spark, tmp_path):
+def test_decode_image_stats_real_png(spark, tmp_path):
     import os
 
-    from python_tool_setup_spark.llm.multimodal import (
-        decode_image_features,
-        decode_image_stats,
-        read_media,
-    )
+    from python_tool_setup_spark.llm.multimodal import decode_image_stats, read_media
     from python_tool_setup_spark.llm.png import encode_png
 
     d = str(tmp_path / "real_png")
     os.makedirs(d)
-    # 4x4 RGB: top half black, bottom half white -> band means split 0/1
+    # 4x4 RGB: top half black, bottom half white
     px = b"\x00" * 24 + b"\xff" * 24
     with open(os.path.join(d, "img.png"), "wb") as f:
         f.write(encode_png(4, 4, px, channels=3))
 
-    feats = decode_image_features(read_media(spark, d))
-    row = feats.collect()[0]
-    assert (row["width"], row["height"], row["n_channels"]) == (4, 4, 3)
-    assert row["feature"] == [0.0] * 4 + [1.0] * 4
-
     stats = decode_image_stats(read_media(spark, d)).collect()[0]
+    assert (stats["width"], stats["height"], stats["n_channels"]) == (4, 4, 3)
     assert stats["n_pixel_bytes"] == 48
     import hashlib as _h
 

@@ -9,7 +9,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark import operators as ops
-from python_tool_setup_spark.operators.merge import MergeKeyError
+from python_tool_setup_spark.operators.merge import MergeKeyError, merge_key_errors
 
 
 def rows(df):
@@ -48,12 +48,20 @@ def test_merge_null_keys_never_match(spark):
 
 
 def test_merge_duplicate_source_keys_raises(spark):
+    # Delta's rule: two source rows matching one target row abort the
+    # merge; repeated keys that match nothing (null keys included) insert.
     target = spark.createDataFrame([(1, "a")], "k int, v string")
     source = spark.createDataFrame([(1, "A"), (1, "B")], "k int, v string")
-    with pytest.raises(MergeKeyError):
-        ops.merge_upsert(
-            target, source, keys=["k"], check_duplicate_source_keys=True
-        )
+    with pytest.raises(MergeKeyError), merge_key_errors():
+        ops.merge_upsert(target, source, keys=["k"]).collect()
+    # a target of keys only has no value column, and still raises
+    with pytest.raises(MergeKeyError), merge_key_errors():
+        ops.merge_upsert(target.select("k"), source.select("k"), keys=["k"]).collect()
+    source = spark.createDataFrame(
+        [(1, "A"), (2, "B"), (2, "C"), (None, "x"), (None, "y")], "k int, v string"
+    )
+    out = sorted(rows(ops.merge_upsert(target, source, keys=["k"])), key=str)
+    assert out == [(1, "A"), (2, "B"), (2, "C"), (None, "x"), (None, "y")]
 
 
 def test_merge_duplicate_source_dedup_order(spark):

@@ -12,7 +12,6 @@ from python_tool_setup_spark.operators.quality import (
 from python_tool_setup_spark.operators.scd import (
     OPEN_END,
     scd2_apply,
-    scd2_as_of,
     scd2_init,
 )
 
@@ -45,21 +44,6 @@ def test_scd2_change_new_key_and_no_news(spark):
     # replaying the same batch is a fixpoint (idempotent)
     again = scd2_apply(out, b2, ["k"], ["v"], T3)
     assert _hist_rows(again) == got
-
-
-def test_scd2_as_of_reconstruction(spark):
-    b1 = spark.createDataFrame([(1, "a")], ["k", "v"])
-    hist = scd2_apply(
-        scd2_init(b1, ["k"], T1),
-        spark.createDataFrame([(1, "A")], ["k", "v"]),
-        ["k"],
-        ["v"],
-        T2,
-    )
-    at_t1 = scd2_as_of(hist, "2024-01-15 00:00:00").collect()
-    assert [(r["k"], r["v"]) for r in at_t1] == [(1, "a")]
-    at_t2 = scd2_as_of(hist, "2024-02-15 00:00:00").collect()
-    assert [(r["k"], r["v"]) for r in at_t2] == [(1, "A")]
 
 
 def test_expectation_report_counts_and_null_fail_closed(spark):

@@ -135,42 +135,6 @@ def test_zorder_clusters_ranges_per_file(spark, sf_dir, monkeypatch):
     assert spark.read.parquet(target).count() == orders.count()
 
 
-def test_morton_zorder_skips_on_both_columns(spark, sf_dir):
-    from python_tool_setup_spark.ingestion.maintenance import zorder_by_morton
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
-        "l_partkey", "l_suppkey"
-    )
-    n_files = 16
-
-    def avg_span(df, col):
-        tgt = tempfile.mkdtemp(prefix="morton_")
-        df.write.mode("overwrite").parquet(tgt)
-        spans = []
-        for f in _parquet_files(tgt):
-            mn, mx = spark.read.parquet(f).agg(F.min(col), F.max(col)).collect()[0]
-            spans.append(mx - mn)
-        return sum(spans) / len(spans)
-
-    linear = li.repartitionByRange(n_files, "l_partkey").sortWithinPartitions(
-        "l_partkey"
-    )
-    morton = zorder_by_morton(li, "l_partkey", "l_suppkey", n_files)
-
-    glob = li.agg(
-        (F.max("l_partkey") - F.min("l_partkey")).alias("a"),
-        (F.max("l_suppkey") - F.min("l_suppkey")).alias("b"),
-    ).collect()[0]
-
-    # single-column ordering: tight on partkey, but suppkey files span
-    # ~the whole domain; morton: BOTH materially tighter than global
-    assert avg_span(morton, "l_partkey") < 0.55 * glob["a"]
-    assert avg_span(morton, "l_suppkey") < 0.55 * glob["b"]
-    assert avg_span(linear, "l_suppkey") > 0.9 * glob["b"]
-    # clustering never changes the data
-    assert morton.count() == li.count()
-
-
 def test_skew_report_flags_hot_key(spark):
     from python_tool_setup_spark.operators.skew import skew_report
 

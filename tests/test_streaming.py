@@ -13,7 +13,6 @@ from python_tool_setup_spark.config import IngestionConfig
 from python_tool_setup_spark.ingestion import make_ingestion
 from python_tool_setup_spark.streaming import (
     session_window_agg,
-    sliding_window_agg,
     streaming_dedup,
     tumbling_window_agg,
 )
@@ -124,22 +123,6 @@ def test_tumbling_window_batch(spark):
     assert got[("u1", "2024-01-01 00:00:00")] == (3.0, 2)
     assert got[("u1", "2024-01-01 00:05:00")] == (3.0, 1)
     assert got[("u2", "2024-01-01 00:20:00")] == (5.0, 1)
-
-
-def test_sliding_window_batch(spark):
-    out = sliding_window_agg(
-        _events_df(spark),
-        "ts",
-        "10 minutes",
-        "5 minutes",
-        [F.count("*").alias("n")],
-    )
-    # event at 00:00:30 belongs to windows [23:55,00:05) and [00:00,00:10)
-    spans = sorted(
-        (str(r["window"]["start"]), r["n"]) for r in out.collect()
-    )
-    assert ("2023-12-31 23:55:00", 3) in spans
-    assert ("2024-01-01 00:00:00", 4) in spans
 
 
 def test_session_window_batch(spark):
