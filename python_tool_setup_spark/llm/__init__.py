@@ -21,9 +21,7 @@ from python_tool_setup_spark.llm.dedup import (
     ngram_jaccard_pairs,
 )
 from python_tool_setup_spark.llm.similarity import (
-    cosine_similarity,
     cosine_topk,
-    lsh_bucket_signature,
     ann_lsh_topk,
     embedding_neardup_pairs,
 )
@@ -42,9 +40,7 @@ __all__ = [
     "simhash",
     "simhash_pairs",
     "ngram_jaccard_pairs",
-    "cosine_similarity",
     "cosine_topk",
-    "lsh_bucket_signature",
     "ann_lsh_topk",
     "embedding_neardup_pairs",
 ]

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from python_tool_setup_spark.llm.text import tokenize
 from python_tool_setup_spark.operators.blockrank import pin
+from python_tool_setup_spark.operators.relational import dedup_by_keys
 
 # Candidate buckets with more members than this are skipped.
 _MAX_BUCKET = 1000
@@ -46,8 +47,6 @@ def exact_dedup(
 ) -> DataFrame:
     """One row per distinct content (hash-groupBy). ``keep_order``
     makes the survivor deterministic (e.g. lowest id)."""
-    from python_tool_setup_spark.operators.relational import dedup_by_keys
-
     h = F.sha2(F.concat_ws("\x1f", *content_cols), 256).alias("__h")
     with_h = df.withColumn("__h", h)
     out = dedup_by_keys(with_h, ["__h"], keep_order or [])
@@ -555,12 +554,7 @@ def incremental_dedup(
     complete the cycle.
     """
     hashed = batch.withColumn("content_sha", F.sha2(F.col("text"), 256))
-    w = Window.partitionBy("content_sha").orderBy(id_col)
-    firsts = (
-        hashed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    firsts = dedup_by_keys(hashed, ["content_sha"], [id_col])
     seen = store.select("content_sha").distinct()
     return firsts.join(seen, "content_sha", "left_anti")
 

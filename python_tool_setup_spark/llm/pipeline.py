@@ -170,28 +170,6 @@ def train_val_test_split(
     )
 
 
-def cap_per_group(
-    df: DataFrame,
-    group_cols,
-    order_cols,
-    max_rows: int,
-) -> DataFrame:
-    """Frequency capping: keep at most ``max_rows`` rows per group
-    (e.g. per domain / source), preferring rows by ``order_cols``.
-
-    The standard anti-spam/diversity gate for web corpora: one window
-    per group partition — a single shuffle on the group key. Skewed
-    groups (one giant domain) are exactly the rows this drops, so the
-    post-cap distribution is also the balanced one.
-    """
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= max_rows)
-        .drop("__rank")
-    )
-
-
 def quantile_quality_filter(
     df: DataFrame,
     score_col,

@@ -22,7 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from python_tool_setup_spark.operators.relational import ranked_top_k
 
 TOKEN_SPLIT = "[^a-z]+"
 # BM25's tf saturation and length normalization (the usual defaults).
@@ -113,11 +114,6 @@ def bm25_topk(
         # the transcendental input rules out exact quantization.
         .agg((F.round(1000000 * F.sum("w")) / 1000000.0).alias("score"))
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "score", "rank")
-    )
+    return ranked_top_k(
+        scored, k, [F.col("score").desc(), F.col("doc_id")], ["qid"], "rank"
+    ).select("qid", "doc_id", "score", "rank")

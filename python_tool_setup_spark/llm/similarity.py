@@ -7,6 +7,10 @@ Scale design:
   — no Python, no UDF in the exact path;
 - exact top-k broadcasts the (small) query set against the corpus:
   one scan, no shuffle except the final per-query top-k window;
+- every search ranks on a 6-decimal score (the cosine; hybrid's
+  blend) with a corpus-id tie-break (``_ranked``), so exact and ANN
+  results agree on ties and the per-query cut is
+  ``relational.ranked_top_k``;
 - LSH ANN buckets by random-hyperplane sign bits so each query only
   scans its probe buckets; hyperplanes come from a seeded RNG inside a
   vectorized Arrow-batched pandas UDF (numpy matmul per batch);
@@ -18,9 +22,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from python_tool_setup_spark.operators.relational import ranked_top_k
 
 
 # --------------------------------------------------------- exact cosine ----
@@ -41,8 +47,44 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, tag: str, *extra: Column | str
+) -> DataFrame:
+    """One side of a search join: ``(__{tag}id, __{tag}vec,
+    __{tag}norm, *extra)``, tag ``q`` for queries and ``c`` for the
+    corpus. The L2 norm is computed once per row, not once per pair."""
+    return df.select(
+        F.col(id_col).alias(f"__{tag}id"),
+        F.col(vec_col).alias(f"__{tag}vec"),
+        l2_norm(F.col(vec_col)).alias(f"__{tag}norm"),
+        *extra,
+    )
+
+
+def _rounded_cosine() -> Column:
+    """Cosine of a (query, corpus) pair from the per-row norms, rounded
+    to 6 decimals: the score every search ranks on."""
+    return F.round(
+        dot(F.col("__qvec"), F.col("__cvec"))
+        / (F.col("__qnorm") * F.col("__cnorm")),
+        6,
+    )
+
+
+def _ranked(
+    scored: DataFrame, score: str, k: int, query_id: str, *cols: str
+) -> DataFrame:
+    """Top-``k`` per query by the (rounded) ``score`` desc, then corpus
+    id — one tie rule for every search, so a 6-decimal tie at rank k is
+    never a recall miss — as ``(query_id, neighbor_id, *cols, rank)``."""
+    return ranked_top_k(
+        scored, k, [F.col(score).desc(), F.col("__cid")], ["__qid"], "rank"
+    ).select(
+        F.col("__qid").alias(query_id),
+        F.col("__cid").alias("neighbor_id"),
+        *cols,
+        "rank",
+    )
 
 
 def cosine_topk(
@@ -57,61 +99,17 @@ def cosine_topk(
     Queries are broadcast; the corpus is scanned once. Ranking uses the
     ROUNDED cosine (+ id tie-break) so results are reproducible across
     engines/runs. Returns (query_id, neighbor_id, cosine, rank)."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id).alias("__qid"),
-            F.col(vec_col).alias("__qvec"),
-            l2_norm(F.col(vec_col)).alias("__qnorm"),
-        )
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("__cid"),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-    )
+    q = F.broadcast(_side(queries, query_id, vec_col, "q"))
+    c = _side(corpus, corpus_id, vec_col, "c")
     scored = (
         q.crossJoin(c)
         .filter(F.col("__qid") != F.col("__cid"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnorm") * F.col("__cnorm")),
-                6,
-            ),
-        )
+        .withColumn("cosine", _rounded_cosine())
     )
-    w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
-    )
+    return _ranked(scored, "cosine", k, query_id, "cosine")
 
 
 # ----------------------------------------------------------- LSH bucket ----
-def lsh_bucket_signature(vec_col: str, dim: int):
-    """Random-hyperplane sign signature over 8 planes as an int bucket
-    id. Vectorized Arrow/pandas UDF: one numpy matmul per batch.
-    Deterministic (seed 42).
-    """
-    planes = np.random.default_rng(42).standard_normal((dim, 8))
-    powers = (1 << np.arange(8)).astype(np.int64)
-
-    @pandas_udf("long")
-    def _sig(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())
-        bits = (mat @ planes) > 0
-        return pd.Series(bits @ powers)
-
-    return _sig(F.col(vec_col))
-
-
 def lsh_multitable_signatures(
     vec_col: str, dim: int, num_planes: int, num_tables: int
 ):
@@ -157,52 +155,22 @@ def ann_lsh_topk(
     single equi-join on (table, bucket) — one shuffle total, never a
     cross product. Exact cosine + top-k window over candidates only."""
 
-    def _tagged(df, id_name, vec_name, norm_name):
-        sigs = lsh_multitable_signatures(vec_name, dim, num_planes, num_tables)
-        return (
-            df.withColumn("__sigs", sigs)
-            .select(
-                id_name,
-                vec_name,
-                norm_name,
-                F.posexplode("__sigs").alias("__table", "__bucket"),
-            )
+    def _tagged(side, tag):
+        sigs = lsh_multitable_signatures(f"__{tag}vec", dim, num_planes, num_tables)
+        return side.withColumn("__sigs", sigs).select(
+            *side.columns, F.posexplode("__sigs").alias("__table", "__bucket")
         )
 
-    q = queries.select(
-        F.col(query_id).alias("__qid"),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qnorm"),
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("__cid"),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
-    )
-    qt = _tagged(q, "__qid", "__qvec", "__qnorm")
-    ct = _tagged(c, "__cid", "__cvec", "__cnorm")
+    qt = _tagged(_side(queries, query_id, vec_col, "q"), "q")
+    ct = _tagged(_side(corpus, corpus_id, vec_col, "c"), "c")
     cand = (
         qt.join(ct, ["__table", "__bucket"])
         .drop("__table", "__bucket")
         .filter(F.col("__qid") != F.col("__cid"))
         .dropDuplicates(["__qid", "__cid"])
     )
-    scored = cand.withColumn(
-        "cosine",
-        dot(F.col("__qvec"), F.col("__cvec"))
-        / (F.col("__qnorm") * F.col("__cnorm")),
-    )
-    w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    scored = cand.withColumn("cosine", _rounded_cosine())
+    return _ranked(scored, "cosine", k, query_id, "cosine")
 
 
 # ------------------------------------------------------------- IVF ANN ----
@@ -269,48 +237,28 @@ def ivf_topk(
             "__cell int, __center array<double>",
         )
     )
-    q = queries.select(F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec"))
+    q = _side(queries, query_id, vec_col, "q")
     # nprobe nearest centroids per query (tiny crossJoin: |Q| × cells),
     # ranked by TRUE euclidean proximity: argmin |q-c|² == argmax
     # (q·c - ½|c|²) since |q|² is constant per query. Ranking by raw
     # dot product alone is NOT the k-means assignment metric — a
     # query's own cell could drop out of its probe list (caught by the
     # q185 incremental-update gate at nprobe=2).
-    qc = (
-        q.crossJoin(centers_df)
-        .withColumn(
-            "__d",
-            dot(F.col("__qvec"), F.col("__center"))
-            - 0.5 * dot(F.col("__center"), F.col("__center")),
-        )
-        .withColumn(
-            "__r",
-            F.row_number().over(
-                Window.partitionBy("__qid").orderBy(F.col("__d").desc())
-            ),
-        )
-        .filter(F.col("__r") <= nprobe)
-        .select("__qid", "__qvec", "__cell")
+    probes = q.crossJoin(centers_df).withColumn(
+        "__d",
+        dot(F.col("__qvec"), F.col("__center"))
+        - 0.5 * dot(F.col("__center"), F.col("__center")),
     )
-    c = assigned_corpus.select(
-        F.col(corpus_id).alias("__cid"), F.col(vec_col).alias("__cvec"), "__cell"
-    )
+    qc = ranked_top_k(
+        probes, nprobe, [F.col("__d").desc()], ["__qid"], "__r"
+    ).select("__qid", "__qvec", "__qnorm", "__cell")
+    c = _side(assigned_corpus, corpus_id, vec_col, "c", "__cell")
     scored = (
         qc.join(c, "__cell")
         .filter(F.col("__qid") != F.col("__cid"))
-        .withColumn("cosine", cosine_similarity(F.col("__qvec"), F.col("__cvec")))
+        .withColumn("cosine", _rounded_cosine())
     )
-    w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _ranked(scored, "cosine", k, query_id, "cosine")
 
 
 # ------------------------------------------------- embedding near-dup ----
@@ -319,33 +267,25 @@ def embedding_neardup_pairs(
     id_col: str,
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    block_cols=(),
+    *,
+    block_cols,
 ) -> DataFrame:
-    """Pairs with cosine >= threshold. With ``block_cols`` the join is
-    exact within blocks (oracle-checkable); otherwise LSH buckets over
-    8 hyperplanes of 64-dim vectors prune candidates (near-exact for
-    high thresholds: similar vectors share sign bits with high
-    probability).
+    """Pairs with cosine >= threshold, exact within the blocks of
+    ``block_cols`` (oracle-checkable): only rows sharing every block
+    value are compared, so the blocking key is the pruning (a label, or
+    an IVF cell as in q163's SemDeDup).
 
-    The pairwise scoring runs as ONE BLAS matmul per block/bucket
+    The pairwise scoring runs as ONE BLAS matmul per block
     (grouped applyInPandas, Arrow-batched): a JVM join producing
     |block|² rows with an interpreted per-pair array fold was ~10x
     slower at 10k vectors. One shuffle on the block key; a block must
     fit one task's memory (|block| x dim doubles + |block|² scores) —
-    for larger blocks, subdivide via additional block cols or use the
-    LSH path."""
+    for larger blocks, subdivide via additional block cols."""
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__vec"),
         *[F.col(c) for c in block_cols],
     )
-    if block_cols:
-        keys = list(block_cols)
-    else:
-        base = base.withColumn(
-            "__bucket", lsh_bucket_signature("__vec", 64)
-        )
-        keys = ["__bucket"]
 
     out_fields = ["id_a bigint", "id_b bigint"]
     for c in block_cols:
@@ -369,7 +309,7 @@ def embedding_neardup_pairs(
         out["cosine"] = cos[keep]
         return pd.DataFrame(out, columns=["id_a", "id_b", *block_cols, "cosine"])
 
-    return base.groupBy(*keys).applyInPandas(pairs, schema)
+    return base.groupBy(*block_cols).applyInPandas(pairs, schema)
 
 
 # --------------------------------------------------- ANN recall gate ----
@@ -418,31 +358,6 @@ def ann_recall_report(
     )
 
 
-# ------------------------------------------------- filtered search ----
-def filtered_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    predicate,
-    query_id: str,
-    corpus_id: str,
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Vector search under a metadata predicate (the retrieval-with-
-    filters shape: "nearest docs WHERE lang = 'en' AND date > ...").
-
-    The predicate is applied to the corpus BEFORE the similarity work —
-    pre-filtering, the Spark-natural strategy: the filter pushes down
-    to the (partitioned/bucketed) scan, and the search cost scales with
-    the filtered subset, not the corpus: exact brute-force over the
-    subset. Post-filtering (search first, filter the top-k after) loses recall
-    when the filter is selective — not what we want as the default.
-    """
-    return cosine_topk(
-        queries, corpus.filter(predicate), query_id, corpus_id, vec_col, k=k
-    )
-
-
 # ------------------------------------------------- hybrid retrieval ----
 def hybrid_topk(
     queries: DataFrame,
@@ -459,23 +374,19 @@ def hybrid_topk(
     that embedding geometry can miss; the vector leg catches paraphrase.
     Both legs are JVM expressions over one broadcast(queries) × corpus
     scan — same single-pass cost shape as ``cosine_topk``; at scale the
-    corpus side comes pre-filtered (``filtered_topk``) or bucketed.
+    corpus side comes pre-filtered (as in q102) or bucketed.
     Scores are rounded before ranking so ordering is engine-stable.
     """
     from python_tool_setup_spark.llm.text import tokenize
 
     q = F.broadcast(
-        queries.select(
-            F.col(query_id).alias("__qid"),
-            F.col(vec_col).alias("__qvec"),
-            l2_norm(F.col(vec_col)).alias("__qnorm"),
+        _side(
+            queries, query_id, vec_col, "q",
             F.array_distinct(tokenize(text_col)).alias("__qtoks"),
         )
     )
-    c = corpus.select(
-        F.col(corpus_id).alias("__cid"),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cnorm"),
+    c = _side(
+        corpus, corpus_id, vec_col, "c",
         F.array_distinct(tokenize(text_col)).alias("__ctoks"),
     )
     inter = F.size(F.array_intersect("__qtoks", "__ctoks"))
@@ -483,14 +394,7 @@ def hybrid_topk(
     scored = (
         q.crossJoin(c)
         .filter(F.col("__qid") != F.col("__cid"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnorm") * F.col("__cnorm")),
-                6,
-            ),
-        )
+        .withColumn("cosine", _rounded_cosine())
         .withColumn(
             "lexical",
             # scale-first round (q208 class): int/int ratio with
@@ -513,19 +417,7 @@ def hybrid_topk(
             / 1000000.0,
         )
     )
-    w = Window.partitionBy("__qid").orderBy(F.col("score").desc(), F.col("__cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(query_id),
-            F.col("__cid").alias("neighbor_id"),
-            "cosine",
-            "lexical",
-            "score",
-            "rank",
-        )
-    )
+    return _ranked(scored, "score", k, query_id, "cosine", "lexical", "score")
 
 
 def embedding_minmax(df: DataFrame, vec_col: str = "embedding") -> tuple[list, list]:

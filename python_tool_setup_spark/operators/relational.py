@@ -28,12 +28,7 @@ def dedup_by_keys(
     """
     if not order_by:
         return df.dropDuplicates(list(keys))
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_k(df, 1, order_by, keys)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:
@@ -59,16 +54,33 @@ def top_k(
     before a single k-row merge on the driver side of the exchange; no
     full sort, safe at any scale.
 
-    Grouped top-k: row_number over a key-partitioned window — one
-    shuffle on the group keys.
+    Grouped top-k: ``ranked_top_k`` with the rank dropped.
     """
     if not partition_by:
         return df.orderBy(*order_by).limit(k)
+    return ranked_top_k(df, k, order_by, partition_by, "__rn").drop("__rn")
+
+
+def ranked_top_k(
+    df: DataFrame,
+    k: int,
+    order_by: Sequence,
+    partition_by: Sequence[str],
+    rank_col: str,
+) -> DataFrame:
+    """The first ``k`` rows of each ``partition_by`` group under
+    ``order_by``, numbered 1..k in ``rank_col`` — the one per-group
+    "number the rows, cut at k" of the package (retrieval top-k,
+    frequency caps and keep-first dedup all reduce to it).
+
+    row_number over a key-partitioned window: one shuffle on the group
+    keys, a local sort per partition, never a global sort. Ties under
+    ``order_by`` break arbitrarily, so callers that need a reproducible
+    cut end ``order_by`` with a unique column.
+    """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
     )
 
 

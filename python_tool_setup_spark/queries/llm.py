@@ -307,8 +307,8 @@ def q37_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE cosine >= 0.95
     """,
     doc="Embedding-cosine near-dup (L2/L3): planted scaled copies (cosine=1) "
-    "found by exact blocked pairing on label; LSH-bucketed variant is "
-    "q41/tests.",
+    "found by exact blocked pairing on label; q163 blocks on IVF cells "
+    "instead.",
 )
 def q38_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
@@ -659,12 +659,10 @@ def q100_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cells of the subset only).",
 )
 def q102_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from python_tool_setup_spark.llm.similarity import filtered_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
-    return filtered_topk(
-        q, e, F.col("label") < 5, "vec_id", "vec_id", "embedding", k=3
+    return cosine_topk(
+        q, e.filter(F.col("label") < 5), "vec_id", "vec_id", "embedding", k=3
     )
 
 

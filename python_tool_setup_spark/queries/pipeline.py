@@ -381,11 +381,11 @@ def q95_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "group key; the skewed groups are exactly where rows drop.",
 )
 def q96_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from python_tool_setup_spark.llm.pipeline import cap_per_group
+    from python_tool_setup_spark.operators.relational import top_k
 
     d = load_table(spark, sf_dir, "documents")
-    return cap_per_group(
-        d, ["source"], [F.col("n_chars").desc(), F.col("doc_id")], max_rows=20
+    return top_k(
+        d, 20, [F.col("n_chars").desc(), F.col("doc_id")], ["source"]
     ).select("doc_id", "source")
 
 

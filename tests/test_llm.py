@@ -179,6 +179,40 @@ def test_ivf_finds_planted(spark, vectors):
     assert sum(got.get(i) == 100 + i for i in range(10)) >= 8
 
 
+def test_retrieval_ties_break_on_rounded_cosine(spark):
+    """Exact, LSH and IVF search rank on the same 6-decimal cosine with
+    the same id tie-break: two corpus vectors whose cosines to the query
+    differ by < 5e-7 tie, and k=1 keeps the lower id even though the
+    higher id has the larger raw cosine."""
+    import math
+
+    from python_tool_setup_spark.llm.similarity import ivf_index, ivf_topk
+
+    def at(cos):
+        return [cos, math.sqrt(1.0 - cos * cos), 0.0, 0.0]
+
+    corpus = spark.createDataFrame(
+        [(1, at(0.9999991)), (2, at(0.9999994))],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    exact = cosine_topk(queries, corpus, "vec_id", "vec_id", "embedding", k=1)
+    ann = ann_lsh_topk(
+        queries, corpus, "vec_id", "vec_id", "embedding",
+        dim=4, k=1, num_planes=4, num_tables=2,
+    )
+    assigned, model = ivf_index(corpus, "embedding", num_cells=2)
+    ivf = ivf_topk(
+        queries, assigned, model, "vec_id", "vec_id", "embedding", k=1, nprobe=2
+    )
+    for out in (exact, ann, ivf):
+        assert [(r["neighbor_id"], r["cosine"]) for r in out.collect()] == [
+            (1, 0.999999)
+        ]
+
+
 # ---------------------------------------------------------- multimodal ----
 def test_multimodal_plumbing(spark, tmp_path):
     import os
@@ -300,8 +334,6 @@ def test_filtered_topk_finds_planted_under_predicate(spark):
     the predicate, and never returns filtered-out ids."""
     import random
 
-    from python_tool_setup_spark.llm.similarity import filtered_topk
-
     rng = random.Random(3)
     rows = []
     for i in range(200):
@@ -314,8 +346,9 @@ def test_filtered_topk_finds_planted_under_predicate(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
     corpus = df.filter(F.col("vec_id") < 1000)
     queries = df.filter(F.col("vec_id") >= 1000)
-    out = filtered_topk(
-        queries, corpus, F.col("label") == 0, "vec_id", "vec_id", "embedding", k=1
+    out = cosine_topk(
+        queries, corpus.filter(F.col("label") == 0), "vec_id", "vec_id",
+        "embedding", k=1,
     )
     got = {r["vec_id"]: r["neighbor_id"] for r in out.collect()}
     # even-labeled queries (sources 0,2,4,..) must find their source

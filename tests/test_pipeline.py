@@ -102,13 +102,15 @@ def test_train_val_test_split_stable(spark):
 
 
 def test_cap_per_group(spark):
-    from python_tool_setup_spark.llm.pipeline import cap_per_group
+    # q96's frequency cap is grouped top_k: two order columns (score ties
+    # broken by id), and a group below the cap keeps every row
+    from python_tool_setup_spark.operators.relational import top_k
 
     df = spark.createDataFrame(
-        [("a", i, 100 - i) for i in range(10)] + [("b", 99, 1)],
+        [("a", i, 100 - i // 2) for i in range(10)] + [("b", 99, 1)],
         "g string, id long, score long",
     )
-    out = cap_per_group(df, ["g"], [F.col("score").desc(), "id"], max_rows=3)
+    out = top_k(df, 3, [F.col("score").desc(), "id"], ["g"])
     got = {(r["g"], r["id"]) for r in out.collect()}
     assert got == {("a", 0), ("a", 1), ("a", 2), ("b", 99)}
 

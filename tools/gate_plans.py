@@ -13,9 +13,6 @@
 - ``lint``: audit each gate's (initial, pre-AQE) executed plan for
   joins that would not survive a 100x scale-up and for row-at-a-time
   Python UDFs (rules below). Exit code 1 on any unexplained hit.
-- ``profile``: split each gate's cost into DataFrame construction
-  (Python + analysis) and physical planning; with named gates, also
-  time three executions into a noop sink.
 - ``diff``: compare two ``capture`` directories. ``_summary.json``
   must match byte for byte; each ``<gate>.txt`` must match once the
   run-specific parts are normalised (``#N`` expression ids,
@@ -23,6 +20,9 @@
   suffixes, temp dir names, the checkout path). Prints the byte-identical,
   normalised-identical and differing counts, names each differing
   gate, and exits 1 if anything differs.
+
+Per-gate timing is not here: ``perfbench/run.py --trace 1`` splits a
+gate's cost by layer (construction, Catalyst, jobs, executor).
 
 Lint rules:
 
@@ -56,7 +56,6 @@ Usage:
   python tools/gate_plans.py capture <out_dir> <sf_dir> [gate ...]
   python tools/gate_plans.py triage <plan_dir> [--json out.json]
   python tools/gate_plans.py lint <sf_dir> [gate ...] [--json out.json]
-  python tools/gate_plans.py profile <sf_dir> [gate ...]
   python tools/gate_plans.py diff <dir_a> <dir_b>
 """
 
@@ -68,7 +67,6 @@ import os
 import re
 import sys
 import tempfile
-import time
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -406,53 +404,6 @@ def lint(sf_dir: str, only: list[str] | None = None):
     return report, fails
 
 
-def profile(sf_dir: str, only: list[str] | None) -> None:
-    def warm(spark, q):
-        q.spark_fn(spark, sf_dir).limit(1).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def visit(spark, q):
-        t0 = time.time()
-        df = q.spark_fn(spark, sf_dir)
-        t_build = time.time() - t0
-        # full analysis + optimization + physical planning, no execution
-        t0 = time.time()
-        _explain(spark, df)
-        t_plan = time.time() - t0
-        t_execs = []
-        for _ in range(3 if only else 0):
-            t0 = time.time()
-            q.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t_execs.append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
-        return {
-            "gate": q.name,
-            "build_s": round(t_build, 3),
-            "plan_s": round(t_plan, 3),
-            "exec_s": t_execs,
-        }
-
-    walk_gates("profile-gates", ["q01_pricing_summary"], warm)
-    rows = []
-    for name, res in walk_gates("profile-gates", only, visit).items():
-        if isinstance(res, Exception):
-            print(f"{name}: FAILED {res}")
-        else:
-            rows.append(res)
-    rows.sort(key=lambda r: -(r["build_s"] + r["plan_s"]))
-    for r in rows[: 40 if not only else len(rows)]:
-        print(json.dumps(r))
-    print(
-        json.dumps(
-            {
-                "n": len(rows),
-                "total_build_s": round(sum(r["build_s"] for r in rows), 1),
-                "total_plan_s": round(sum(r["plan_s"] for r in rows), 1),
-            }
-        )
-    )
-
 _RUN_SPECIFIC = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
@@ -531,9 +482,6 @@ def main() -> None:
     p.add_argument("sf_dir")
     p.add_argument("gates", nargs="*")
     p.add_argument("--json", dest="out_json", help="also write the report here")
-    p = sub.add_parser("profile", help="time construction and planning per gate")
-    p.add_argument("sf_dir")
-    p.add_argument("gates", nargs="*")
     p = sub.add_parser("diff", help="compare two captured plan directories")
     p.add_argument("dir_a")
     p.add_argument("dir_b")
@@ -543,8 +491,6 @@ def main() -> None:
         capture(args.out_dir, args.sf_dir, args.gates)
     elif args.cmd == "triage":
         triage(args.plan_dir, args.out_json)
-    elif args.cmd == "profile":
-        profile(args.sf_dir, args.gates)
     elif args.cmd == "diff":
         sys.exit(1 if diff(args.dir_a, args.dir_b) else 0)
     else:
