@@ -59,9 +59,9 @@ scan/filter/project OR contains a nondeterministic expression
 rand() is node-trivial but re-executes to DIFFERENT rows; limit
 without total order and sample are non-trivial NODES and pin that
 way), closing the corrupt-prefix risk of re-executed nondeterminism.
-An already-persisted input is never re-pinned. Pass
-``cache_input=False`` only when the caller has already materialized
-the input some other way or accepts trivial-scan re-reads.
+An already-persisted or pinned input is never re-pinned (a pin's
+analyzed plan is a bare ``LogicalRDD``). Pass ``cache_input=False``
+only to re-read a non-trivial input that is cheap to re-execute.
 
 Every pin is an eager ``localCheckpoint`` (see :func:`pin`). Each
 :func:`prefix_agg` call logs its input-pin decision and the reason at
@@ -410,11 +410,10 @@ def prefix_rank(
     df: DataFrame,
     order: list[tuple],
     alias: str = "rk",
-    cache_input: bool = True,
 ) -> DataFrame:
     """1-based ``ROW_NUMBER() OVER (ORDER BY ...)`` equivalent under a
     total order, with no unpartitioned window anywhere in the plan.
     See :func:`prefix_agg` for the block-assignment determinism and
-    input-lineage (``cache_input``) contracts."""
-    out = prefix_agg(df, order, {alias: ("count", None)}, cache_input=cache_input)
+    input-lineage contracts; the input is pinned by default."""
+    out = prefix_agg(df, order, {alias: ("count", None)})
     return out.withColumn(alias, (F.col(alias) + 1).cast("long"))

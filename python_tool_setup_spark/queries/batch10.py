@@ -59,7 +59,6 @@ def q176_ntile_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
         base,
         [("o_totalprice", "asc"), ("o_orderkey", "asc")],
         alias="rk",
-        cache_input=False,  # base is pinned above
     )
     n_tot = base.agg(F.count(F.lit(1)).alias("n"))
     deciled = ranked.crossJoin(F.broadcast(n_tot)).withColumn(

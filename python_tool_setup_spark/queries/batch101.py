@@ -151,7 +151,10 @@ def q406_hierarchical_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q407_approx_percentile_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
+    from python_tool_setup_spark.operators.blockrank import pin
+    from python_tool_setup_spark.operators.percentiles import (
+        grouped_exact_percentiles,
+    )
 
     li = load_table(spark, sf_dir, "lineitem")
     # Single value column read by the sketch, the rank check and the
@@ -172,29 +175,10 @@ def q407_approx_percentile_audit(
         rank_win["below"] <= target + tol
         and rank_win["at_or_below"] >= target - tol
     )
-    # Exact interpolated median from the distinct-value histogram with
-    # an EXCLUSIVE blockrank prefix (quantile_cont semantics; the
-    # grouped-percentile operator's single-group case would fold its
-    # constant partition key into a global window — this path has none).
-    hist = vals.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    pre = prefix_agg(hist, [("v", "asc")], {"before": ("sum", "cnt")})
-    k = (n - 1) * 0.5
-    lo_i, hi_i = int(k), min(n - 1, int(k) + 1)
-    covers = lambda i: (F.col("before") <= i) & (
-        F.lit(i) < F.col("before") + F.col("cnt")
-    )
-    stat = pre.agg(
-        F.max(F.when(covers(lo_i), F.col("v"))).alias("v_lo"),
-        F.max(F.when(covers(hi_i), F.col("v"))).alias("v_hi"),
-    )
-    frac = k - lo_i
-    return stat.select(
-        F.lit(n).cast("long").alias("n"),
-        F.round(
-            F.col("v_lo") + F.lit(frac) * (F.col("v_hi") - F.col("v_lo")), 4
-        )
-        .cast("double")
-        .alias("exact_p50"),
+    exact = grouped_exact_percentiles(vals, [], "v", {"p50": 0.5})
+    return exact.select(
+        F.col("n").cast("long").alias("n"),
+        F.round("p50", 4).cast("double").alias("exact_p50"),
         F.lit(tol).cast("long").alias("rank_tolerance"),
         F.lit(bool(within)).alias("within_bound"),
     )

@@ -55,15 +55,18 @@ _BUDGET = 10_000
     "this gate clocks them, the number an SLA or a retargeting "
     "window is actually set from): first-view via conditional "
     "min per user, first qualifying purchase via a filtered "
-    "re-join + min (no window at all), exact p50/p90 via the "
-    "distinct-value histogram order statistics (quantile_cont "
-    "semantics, blockrank prefix — no global sort). Latencies "
+    "re-join + min (no window at all), exact p50/p90 and the "
+    "max (the p = 1 order statistic) from the shared "
+    "histogram-percentile operator with no groups (quantile_cont "
+    "semantics, no global sort). Latencies "
     "are integer seconds so the percentile interpolation is "
     "engine-exact under ROUND(4). Scale: two user-key "
     "aggregates and one user-key join.",
 )
 def q411_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from python_tool_setup_spark.operators.blockrank import pin, prefix_agg
+    from python_tool_setup_spark.operators.percentiles import (
+        grouped_exact_percentiles,
+    )
 
     e = load_table(spark, sf_dir, "events")
     firsts = (
@@ -92,48 +95,16 @@ def q411_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lat_s")
         )
     )
-    # exact interpolated percentiles from the latency histogram
-    # (single group -> inline blockrank prefix, same as q407)
-    hist = pin(conv.groupBy("lat_s").agg(F.count(F.lit(1)).alias("cnt")))
-    pre = prefix_agg(
-        hist,
-        [("lat_s", "asc")],
-        {"before": ("sum", "cnt")},
-        cache_input=False,  # hist is pinned above
+    # exact interpolated percentiles from the latency histogram; the
+    # max is the p = 1 order statistic
+    stat = grouped_exact_percentiles(
+        conv, [], "lat_s", {"p50": 0.5, "p90": 0.9, "mx": 1.0}
     )
-    tot = hist.agg(F.sum("cnt").alias("n"))
-    pre = pre.crossJoin(F.broadcast(tot))
-
-    def pct(p: float, alias: str):
-        k = (F.col("n") - 1).cast("double") * F.lit(p)
-        lo = F.floor(k).cast("long")
-        hi = F.least(F.col("n") - 1, lo + 1)
-        covers = lambda i: (F.col("before") <= i) & (
-            i < F.col("before") + F.col("cnt")
-        )
-        return [
-            F.max(F.when(covers(lo), F.col("lat_s"))).alias(f"_lo_{alias}"),
-            F.max(F.when(covers(hi), F.col("lat_s"))).alias(f"_hi_{alias}"),
-        ]
-
-    stat = pre.groupBy("n").agg(
-        *pct(0.5, "p50"), *pct(0.9, "p90"), F.max("lat_s").alias("max_s")
-    )
-
-    def interp(p: float, alias: str):
-        k = (F.col("n") - 1).cast("double") * F.lit(p)
-        frac = k - F.floor(k)
-        return F.round(
-            F.col(f"_lo_{alias}")
-            + frac * (F.col(f"_hi_{alias}") - F.col(f"_lo_{alias}")),
-            4,
-        ).cast("double")
-
     return stat.select(
         F.col("n").cast("long").alias("n_converted"),
-        interp(0.5, "p50").alias("p50_s"),
-        interp(0.9, "p90").alias("p90_s"),
-        F.col("max_s").cast("long").alias("max_s"),
+        F.round("p50", 4).cast("double").alias("p50_s"),
+        F.round("p90", 4).cast("double").alias("p90_s"),
+        F.col("mx").cast("long").alias("max_s"),
     )
 
 

@@ -97,7 +97,6 @@ def q436_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist,
         [("b", "asc")],
         {"p_old": ("sum", "c_old"), "p_new": ("sum", "c_new")},
-        cache_input=False,  # hist is pinned above
     )
     cdf = pre.select(
         "b",

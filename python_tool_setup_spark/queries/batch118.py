@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_tool_setup_spark.operators.percentiles import (
-    grouped_exact_percentiles,
+    grouped_exact_percentiles_frac,
 )
 from python_tool_setup_spark.queries import register
 from python_tool_setup_spark.queries.exactcast import dd_duck
@@ -172,7 +172,9 @@ def _moments_sql(tbl: str) -> str:
     "shape; a heavy right tail shows as skewness collapsing "
     "toward 0 after capping): dollar-quantized integers, exact "
     "HUGEINT/DECIMAL power sums (cast BEFORE multiply), the "
-    "p01/p99 bounds floor/ceil-quantized to integers so the "
+    "p01/p99 bounds (exact-rational numerators from the shared "
+    "histogram-percentile operator, no groups) "
+    "floor/ceil-quantized to integers so the "
     "capped column is identical in both engines, skewness "
     "assembled in identical double shape (pow(x, 1.5) on the "
     "same double). Scale: two conditional-moment passes; the "
@@ -181,43 +183,17 @@ def _moments_sql(tbl: str) -> str:
 def q446_tail_treatment_moments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from python_tool_setup_spark.operators.blockrank import prefix_agg
-
     o = load_table(spark, sf_dir, "orders")
     vals = o.select(F.round(F.col("o_totalprice")).cast("long").alias("v"))
-    # p01/p99 via the inline single-group blockrank histogram (q407)
-    hist = vals.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    pre = prefix_agg(hist, [("v", "asc")], {"before": ("sum", "cnt")})
-    tot = hist.agg(F.sum("cnt").alias("n"))
-    pre = pre.crossJoin(F.broadcast(tot)).select(
-        "v", "cnt", F.coalesce("before", F.lit(0)).alias("before"), "n"
-    )
-
     # exact-rational p01/p99: see the oracle comment. All integer
     # arithmetic; the final /100 divisions are exact (the numerators
     # are first snapped to multiples of 100).
-    def q_sel(a: int, b: int, tag: str):
-        kt = (F.col("n") - 1) * a
-        lo = ((kt - kt % b) / b).cast("long")
-        hi = F.least(F.col("n") - 1, lo + 1)
-        covers = lambda i: (F.col("before") <= i) & (  # noqa: E731
-            i < F.col("before") + F.col("cnt")
-        )
-        return [
-            F.max(F.when(covers(lo), F.col("v"))).alias(f"_l{tag}"),
-            F.max(F.when(covers(hi), F.col("v"))).alias(f"_h{tag}"),
-        ]
-
-    b = pre.groupBy("n").agg(*q_sel(1, 100, "lo"), *q_sel(99, 100, "hi"))
-
-    def q_num(a: int, b: int, tag: str):
-        kt = (F.col("n") - 1) * a
-        r = kt % b
-        return F.col(f"_l{tag}") * (b - r) + F.col(f"_h{tag}") * r
-
-    n1 = q_num(1, 100, "lo")
-    n99 = q_num(99, 100, "hi") + 99
-    bounds = b.select(
+    pct = grouped_exact_percentiles_frac(
+        vals, [], "v", {"lo": (1, 100), "hi": (99, 100)}
+    )
+    n1 = F.col("lo_num")
+    n99 = F.col("hi_num") + 99
+    bounds = pct.select(
         ((n1 - n1 % 100) / 100).cast("long").alias("lo"),
         ((n99 - n99 % 100) / 100).cast("long").alias("hi"),
     )

@@ -245,7 +245,6 @@ def q470_compaction_bin_packing(
         daily,
         [("day", "asc")],
         {"off": ("sum", "bytes")},
-        cache_input=False,  # daily is pinned above
     ).select(
         "day",
         "bytes",

@@ -235,7 +235,6 @@ def q528_monetary_unit_sampling(
         x,
         [("o_orderkey", "asc")],
         {"bef": ("sum", "cents")},
-        cache_input=False,  # x is pinned above
     )
     hits = cum.crossJoin(F.broadcast(itv)).select(
         "o_orderpriority",

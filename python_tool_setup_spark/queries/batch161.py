@@ -91,20 +91,17 @@ def q533_mann_whitney_u(
     # cents are near-distinct, so the histogram is close to
     # table-sized: the prefix runs through the block-offset
     # decomposition, not a single-task global window. Pin the
-    # histogram ONCE here — prefix_agg (cache_input=False), tie3,
-    # and the rank aggregate all read this same materialization,
-    # instead of prefix_agg pinning a private copy while tie3
-    # re-runs the pooled scan + groupBy from lineage.
+    # histogram ONCE here — prefix_agg (which does not re-pin a pinned
+    # input), tie3 and the rank aggregate all read this same
+    # materialization, instead of prefix_agg pinning a private copy
+    # while tie3 re-runs the pooled scan + groupBy from lineage.
     hist = pin(
         pooled.groupBy("cents").agg(
             F.count(F.lit(1)).alias("c"),
             F.sum(F.col("is_a").cast("long")).alias("ca"),
         )
     )
-    cum = prefix_agg(
-        hist, [("cents", "asc")], {"bef": ("sum", "c")},
-        cache_input=False,
-    )
+    cum = prefix_agg(hist, [("cents", "asc")], {"bef": ("sum", "c")})
     tie3 = hist.agg(
         F.sum(
             F.col("c").cast("decimal(38,0)") * F.col("c") * F.col("c")

@@ -256,14 +256,12 @@ def q536_kruskal_wallis(
     )
     # cents are near-distinct (histogram ~ table-sized): block-offset
     # prefix, no single-task global window. Pin the histogram ONCE —
-    # prefix_agg (cache_input=False), tie3, and the rank join-back
-    # all read this same materialization instead of prefix_agg
-    # pinning a private copy while tie3 re-runs the scan + groupBy.
+    # prefix_agg (which does not re-pin a pinned input), tie3, and
+    # the rank join-back all read this same materialization instead
+    # of prefix_agg pinning a private copy while tie3 re-runs the
+    # scan + groupBy.
     hist = pin(pooled.groupBy("cents").agg(F.count(F.lit(1)).alias("c")))
-    cum = prefix_agg(
-        hist, [("cents", "asc")], {"bef": ("sum", "c")},
-        cache_input=False,
-    )
+    cum = prefix_agg(hist, [("cents", "asc")], {"bef": ("sum", "c")})
     ranked = pooled.join(cum, "cents").select(
         "grp", (2 * F.col("bef") + F.col("c") + 1).alias("r2")
     )

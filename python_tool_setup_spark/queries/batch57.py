@@ -156,7 +156,6 @@ def q320_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist,
         [("s", "desc")],
         {"cnt_gt": ("sum", "cnt")},
-        cache_input=False,  # hist is pinned above
     ).select("s", "cnt_gt")
     n_tot = hist.agg(F.sum("cnt").alias("n"))
     joined = scored.join(F.broadcast(offsets), "s").crossJoin(

@@ -82,7 +82,6 @@ def q346_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist,
         [("v", "asc")],
         {"b1": ("sum", "c1"), "b2": ("sum", "c2")},
-        cache_input=False,  # hist is pinned above
     )
     cum = pre.select(
         (F.col("b1") + F.col("c1")).alias("cum1"),

@@ -176,7 +176,6 @@ def q359_gini_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist,
         [("v", "asc")],
         {"nb": ("sum", "cnt"), "pb": ("sum", "pos")},
-        cache_input=False,  # hist is pinned above
     )
     cum = pre.select(
         "v",

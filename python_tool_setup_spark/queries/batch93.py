@@ -206,7 +206,6 @@ def q391_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         freq,
         [("n", "desc"), ("tok", "asc")],
         alias="rk",
-        cache_input=False,  # freq is pinned above
     )
     tot = freq.agg(F.sum("n").alias("mass"), F.count(F.lit(1)).alias("v"))
     cov_row = ranked.agg(

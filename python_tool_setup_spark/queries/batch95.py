@@ -161,7 +161,6 @@ def q395_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         spend,
         [("cents", "desc"), ("c", "asc")],
         alias="rk",
-        cache_input=False,  # spend is pinned above
     )
     tot = spend.agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("total")

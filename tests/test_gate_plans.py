@@ -101,14 +101,17 @@ def test_diff_normalises_run_specific_parts(tmp_path):
         "[file:{tmp}/pts_spark_staging_{t}/out_{t}/part-{f}.jsonl]\n"
         "Location: InMemoryFileIndex [file:{root}/spark-warehouse/gate.db/t]\n"
         "Table: spark_catalog.default.orders_b_{h} {u}\n"
+        "Location: InMemoryFileIndex [file:{tmp}/media_resize_{m}/part-0.parquet]\n"
     )
     run_a = dict(
         k=12, v=13, p=40, x=7, r=3611, t="ab1_cd2e", f="f5c866d86d634871b5b834701df15f07",
         root="/src/one", h="d7387927", u="0c6f4a1e-6a0b-4d6e-9f0e-2b7f3d1c9a11",
+        m="9c04e1ab",  # an all-hex mkdtemp suffix
     )
     run_b = dict(
         k=812, v=9, p=3, x=269, r=3612, t="zz9_q0x1", f="e892565a39634f45804d5d73f2021bad",
         root="/work/two", h="0a1b2c3d", u="f00dbabe-0000-4111-8222-333344445555",
+        m="k2_zq7xp",
     )
     tmp = tempfile.gettempdir()
     _write_capture(tmp_path / "a", plan.format(tmp=tmp, **run_a))

@@ -244,7 +244,7 @@ def test_converted_gates_keep_the_recipe_on_both_sides():
         "q524_nested_percentiles": ("// 2", "grouped_exact_percentiles_frac"),
         "q497_conformal_calibration": ("// 10", "grouped_exact_percentiles_frac"),
         "q393_interarrival_percentiles": ("// 10", "grouped_exact_percentiles_frac"),
-        "q446_tail_treatment_moments": ("// 100", "q_num"),
+        "q446_tail_treatment_moments": ("// 100", "grouped_exact_percentiles_frac"),
         # scale-first quotient finals
         "q113_weighted_sample": ("ROUND(1000000 *", "1000000"),
         "q121_temperature_resample": ("ROUND(1000000 *", "temperature_resample"),

@@ -320,3 +320,70 @@ def test_bucketed_merge_concurrent_disjoint_and_conflict(spark, tmp_path):
     merge_upsert_bucketed(spark, target, src_c, ["k"], num_buckets=8)
     got = {r["k"]: r["v"] for r in read_bucketed_target(spark, target).collect()}
     assert got[k1] == 333 and got[k1b] == 444
+
+
+# ------------------------------------------------------- percentiles ----
+def test_exact_percentiles_match_duckdb_on_both_paths(spark):
+    """Both exact-quantile functions, per group and with no groups,
+    against DuckDB quantile_cont: more distinct values than blockrank
+    has blocks, tie runs that straddle the lo/hi picks, and NULLs,
+    which quantile_cont ignores (group a is {NULL, NULL, 10, 20, 30},
+    so its median is 20 over n = 3)."""
+    import random
+
+    import duckdb
+
+    from python_tool_setup_spark.operators.percentiles import (
+        grouped_exact_percentiles,
+        grouped_exact_percentiles_frac,
+    )
+
+    rng = random.Random(14)
+    data = [("a", v) for v in (None, None, 10, 20, 30)]
+    data += [("b", rng.randrange(-40, 60)) for _ in range(150)] + [("b", None)] * 4
+    data += [("c", 7)] * 6 + [("c", 9)] * 5  # n = 11: p50 picks 7 and 9
+    fracs = [(0, 1), (1, 4), (1, 2), (9, 10), (1, 1)]
+    pcts = {f"q{i}": a / b for i, (a, b) in enumerate(fracs)}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(g VARCHAR, v BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", data)
+    sel = ", ".join(f"quantile_cont(v, {p}) AS {t}" for t, p in pcts.items())
+    ref = {
+        r[0]: r[1:]
+        for r in con.execute(
+            f"SELECT g, {sel}, count(v) FROM t GROUP BY g"
+            f" UNION ALL SELECT NULL, {sel}, count(v) FROM t"
+        ).fetchall()
+    }
+    assert len(set(v for _, v in data)) > 40
+
+    df = spark.createDataFrame(data, "g string, v long")
+    for group_cols in (["g"], []):
+        flt = grouped_exact_percentiles(df, group_cols, "v", pcts)
+        num = grouped_exact_percentiles_frac(
+            df, group_cols, "v", dict(zip(pcts, fracs))
+        )
+        got_f = {r["g"] if group_cols else None: r for r in flt.collect()}
+        got_n = {r["g"] if group_cols else None: r for r in num.collect()}
+        want = {g: q for g, q in ref.items() if (g is None) != bool(group_cols)}
+        assert set(got_f) == set(got_n) == set(want), group_cols
+        for g, (*qs, n) in want.items():
+            assert got_f[g]["n"] == got_n[g]["n"] == n, (group_cols, g)
+            for (t, (_, b)), q in zip(zip(pcts, fracs), qs):
+                assert got_f[g][t] == pytest.approx(q, rel=1e-12), (g, t)
+                assert got_n[g][f"{t}_num"] == round(q * b), (g, t)
+    # the no-group path keeps every window partitioned (by blockrank's
+    # block id), so no task holds the whole histogram
+    flt = grouped_exact_percentiles(df, [], "v", pcts)
+    plan = flt._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    partitioned, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window":
+            partitioned.append(not node.partitionSpec().isEmpty())
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    assert partitioned and all(partitioned), plan.toString()

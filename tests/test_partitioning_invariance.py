@@ -61,18 +61,19 @@ def test_percentiles_frac_invariant(spark):
         ],
         "id long, g string, v long",
     )
-    ref = None
-    for layout in _layouts(base):
-        got = sorted(
-            (r["g"], r["p90_num"], r["p50_num"], r["n"])
-            for r in grouped_exact_percentiles_frac(
-                layout, ["g"], "v", {"p50": (1, 2), "p90": (9, 10)}
-            ).collect()
-        )
-        if ref is None:
-            ref = got
-        else:
-            assert got == ref, "quantile numerators changed under layout"
+    for group_cols in (["g"], []):
+        ref = None
+        for layout in _layouts(base):
+            got = sorted(
+                tuple(r)
+                for r in grouped_exact_percentiles_frac(
+                    layout, group_cols, "v", {"p50": (1, 2), "p90": (9, 10)}
+                ).collect()
+            )
+            if ref is None:
+                ref = got
+            else:
+                assert got == ref, (group_cols, "numerators changed under layout")
 
 
 def test_cent_sum_invariant(spark):

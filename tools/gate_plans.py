@@ -114,9 +114,6 @@ ALLOW.update({
         "rank-range join against the global VALUE HISTOGRAM (distinct "
         "n_chars values + prefix bounds) — bounded by the value domain, "
         "orders smaller than row count",
-    ("BroadcastNestedLoopJoin", "q446_tail_treatment_moments"):
-        "build side grouped on the global row count n (single group -> "
-        "1 row of percentile bounds)",
     ("BroadcastNestedLoopJoin", "q478_zone_map_clustering_depth"):
         "zone-map block overlap join: both sides are <=64 block "
         "summaries by construction (FLOOR(bef*64/n))",
@@ -423,13 +420,15 @@ _TEMP_NAME = re.compile(r"^(.*_)[a-z0-9_]{8}$")
 
 def normalise_plan(text: str) -> str:
     """A plan text with the parts that change from run to run replaced
-    by fixed placeholders."""
-    for pat, repl in _RUN_SPECIFIC:
-        text = pat.sub(repl, text)
-    return _TEMP_PATH.sub(
+    by fixed placeholders. Temp dir names go first: an all-hex
+    ``mkdtemp`` suffix would otherwise read as a ``<hex>`` suffix."""
+    text = _TEMP_PATH.sub(
         lambda m: "/".join(_TEMP_NAME.sub(r"\1*", c) for c in m[0].split("/")),
         text,
     )
+    for pat, repl in _RUN_SPECIFIC:
+        text = pat.sub(repl, text)
+    return text
 
 
 def diff(dir_a: str, dir_b: str) -> int:
